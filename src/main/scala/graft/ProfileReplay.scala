@@ -39,7 +39,7 @@ object ProfileReplay {
     Bench.replay(spark, 500000L, 1, 128, warm)
     Bench.deleteRecursively(warm)
     // each entry is "<foldStrategy>" or "<foldStrategy>:<foldAlignment>"
-    val foldVariants = sys.env.getOrElse("PROF_FOLDS", "join,agg").split(",").map(_.trim)
+    val foldVariants = sys.env.getOrElse("PROF_FOLDS", "window,agg").split(",").map(_.trim)
     val strategies = sys.env.getOrElse("PROF_STRATEGIES", "mor").split(",").map(_.trim)
     val nBatches = sys.env.getOrElse("PROF_BATCHES", "2").toInt
     (1 to sys.env.getOrElse("PROF_REPEATS", "1").toInt).foreach { rep =>

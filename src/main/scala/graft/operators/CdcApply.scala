@@ -340,15 +340,21 @@ object CdcApply {
           // broadcast — measured, that shuffle is the regression). Use a
           // dedicated MINIMAL count: three narrow envelope columns, no
           // `after` access, overlapped with the planning scan. A delete
-          // is a wipe candidate iff its key is sound and deletes are
-          // admitted — exactly tagErrors' rule for op=delete.
+          // is a wipe candidate iff its key is sound, deletes are
+          // admitted and its payload extraction (when configured) did not
+          // fail — exactly tagErrors' rule for op=delete. Only the
+          // extraction check reads the payload, and only when configured.
+          val wipeable =
+            if (events0.columns.contains("_extract_error"))
+              col("conv_id").isNotNull && col("_extract_error").isNull
+            else col("conv_id").isNotNull
           val nWipes =
             if (!spec.deleteEnabled) 0L
             else Await.result(
               Future {
                 spark.sparkContext.setJobDescription("cdc: wipe count")
-                try events0.filter(col("op") === "delete" && col("turn_idx").isNull &&
-                  col("conv_id").isNotNull).count()
+                try events0.filter(col("op") === "delete" && col("turn_idx").isNull && wipeable)
+                  .count()
                 finally spark.sparkContext.setJobDescription(null)
               },
               Duration.Inf)
@@ -367,15 +373,16 @@ object CdcApply {
                   org.apache.spark.sql.types.StructField("wipe_off", org.apache.spark.sql.types.LongType))))
             else
               // narrow equivalent of seriesWipes(valid): an op=delete row
-              // is valid iff conv_id is non-null (the after-null and
+              // is valid iff it is `wipeable` (the after-null and
               // turn-null rules never apply to deletes, and deletes are
               // admitted on this path — nWipes > 0 implies deleteEnabled),
               // so filtering events0 directly keeps the wipe scan off the
               // payload struct (seriesWipes(valid) read it via _error).
-              // parts=8: see seriesWipes — the persisted frame otherwise
+              // parts: see seriesWipes — the persisted frame otherwise
               // pins a shuffle.partitions-wide layout whose near-empty
               // cached partitions cost scheduling wall in every consumer.
-              MergeEngine.seriesWipes(events0.filter(col("conv_id").isNotNull), parts = Some(8))
+              MergeEngine.seriesWipes(events0.filter(wipeable),
+                parts = Some(MergeEngine.wipePartitions(nWipes)))
                 .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           try {
             // the broadcast hint goes ONLY to the join consumers (the fold);

@@ -87,24 +87,32 @@ object MergeEngine {
     * event of the conversation irrelevant (state is known-Absent at D),
     * so intermediate wipes are subsumed. Tiny output — broadcastable.
     *
-    * `parts`: explicit partition count for the aggregation exchange.
+    * `parts`: narrow the aggregated output to this many partitions.
     * The caller that PERSISTS this frame (CdcApply's MOR path) wants it:
     * persist pins the plan's output partitioning (AQE coalescing is off
     * under caching — `canChangeCachedPlanOutputPartitioning` defaults
     * false), so the default `spark.sql.shuffle.partitions`-wide exchange
     * materializes and is re-read as ~100 near-empty cached partitions —
     * measured as three ~96-task/near-zero-work stages costing ~0.5-0.8s
-    * of pure scheduling wall EACH per epoch. The wipe set is
-    * deletion-sized (independent of corpus scale), and its two consumers
-    * are a broadcast build and a marker projection (the bulk-wipe join
-    * path re-exchanges at the session's shuffle parallelism regardless),
-    * so a small fixed width loses nothing at any scale. */
+    * of pure scheduling wall EACH per epoch. The narrowing is a coalesce
+    * AFTER the aggregation, so the exchange still carries map-side
+    * partials; size it with [[wipePartitions]]. */
   def seriesWipes(events: DataFrame, parts: Option[Int] = None): DataFrame = {
-    val deletes = events.filter(col("op") === "delete" && col("turn_idx").isNull)
-    val d = parts.map(p => deletes.repartition(p, col("conv_id"))).getOrElse(deletes)
-    d.groupBy("conv_id")
+    val wipes = events.filter(col("op") === "delete" && col("turn_idx").isNull)
+      .groupBy("conv_id")
       .agg(max("offset").as("wipe_off"))
+    parts.fold(wipes)(p => wipes.coalesce(p))
   }
+
+  /** Series wipes per partition of a persisted wipe set. */
+  val WipesPerPartition: Long = 50000L
+
+  /** Partitions for a batch of `nWipes` series deletes: one per
+    * [[WipesPerPartition]], at least one — the wipe set is
+    * deletion-sized, independent of corpus scale.
+    */
+  def wipePartitions(nWipes: Long): Int =
+    math.max(1L, (nWipes + WipesPerPartition - 1) / WipesPerPartition).toInt
 
   /** Per-(conv_id, turn_idx) net action of the batch.
     *

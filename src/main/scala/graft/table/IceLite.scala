@@ -205,7 +205,10 @@ final class IceLiteTable(val dir: String) {
     * the current table schema — older files missing later-added columns
     * surface them as nulls (ALTER-ADD semantics for free from the parquet
     * reader) — merged at read time with any outstanding MOR delta files
-    * (see [[MorRead.merged]]; a no-op pass-through when there are none).
+    * (a no-op pass-through when there are none). A read that names
+    * exactly one bucket merges inside a single task with no exchange
+    * ([[MorRead.mergedInBucket]]); any other read takes the
+    * broadcast-pruned multi-bucket merge ([[MorRead.merged]]).
     */
   def read(spark: SparkSession, buckets: Option[Set[Int]] = None): DataFrame =
     readSnapshotState(spark, current, buckets)
@@ -534,22 +537,21 @@ final class IceLiteTable(val dir: String) {
   private def readSnapshotState(
       spark: SparkSession, s: Snapshot, buckets: Option[Set[Int]]): DataFrame = {
     val sch = schemaOf(s)
-    val files = resolve(s.files, buckets)
-    val base =
-      if (files.isEmpty) spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), sch)
-      else spark.read.schema(sch).parquet(files: _*)
+    val base = readFiles(spark, sch, resolve(s.files, buckets))
     val deltaPaths = resolve(s.deltas, buckets)
     if (deltaPaths.isEmpty) base
+    else if (buckets.exists(_.size == 1)) MorRead.mergedInBucket(spark, sch, base, deltaPaths)
     else MorRead.merged(spark, sch, base, deltaPaths)
   }
 
   /** Base files only — MOR deltas NOT applied (compaction + COW internals). */
-  def readBase(spark: SparkSession, buckets: Option[Set[Int]] = None): DataFrame = {
-    val files = dataFiles(buckets)
-    val sch = schema
+  def readBase(spark: SparkSession, buckets: Option[Set[Int]] = None): DataFrame =
+    readFiles(spark, schema, dataFiles(buckets))
+
+  /** `files` under `sch`; an empty frame when there are none. */
+  private def readFiles(spark: SparkSession, sch: StructType, files: Seq[String]): DataFrame =
     if (files.isEmpty) spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), sch)
     else spark.read.schema(sch).parquet(files: _*)
-  }
 
   private def schemaOf(s: Snapshot): StructType =
     org.apache.spark.sql.types.DataType.fromJson(s.schemaJson).asInstanceOf[StructType]
@@ -912,7 +914,10 @@ final class IceLiteTable(val dir: String) {
   /** Fold outstanding MOR delta files back into base files for buckets
     * holding more than `maxDeltasPerBucket` of them — the copy-on-write
     * moment, amortized (Iceberg's rewrite_data_files + delete-file
-    * removal). Returns the number of buckets compacted.
+    * removal). Returns the number of buckets compacted. Each bucket is
+    * rewritten by its own one-task job — merged, sorted by
+    * `(conv_id, turn_idx)`, written as one zstd + bloom file — and the
+    * jobs run side by side.
     *
     * Bounded-work mode (`maxBuckets`): compact at most that many buckets
     * per call, most-backlogged first. Uniformly-filling buckets would
@@ -930,7 +935,6 @@ final class IceLiteTable(val dir: String) {
       maxDeltasPerBucket: Int = 0,
       maxBuckets: Int = Int.MaxValue,
       stagger: Int = 0): Int = {
-    import org.apache.spark.sql.functions.col
     val cur = current
     // stagger never halves a bucket's threshold (a small-threshold table
     // would otherwise degrade to compact-every-epoch for some buckets)
@@ -945,18 +949,37 @@ final class IceLiteTable(val dir: String) {
       .map(_._1).toSet
     if (targets.isEmpty) return 0
     val sch = schemaOf(cur)
-    val merged = MorRead.merged(spark, sch,
-      readBase(spark, Some(targets)), resolve(cur.deltas, Some(targets)))
     val stage = newStageDir()
-    merged
-      .withColumn("bucket", IceLite.bucketOf(col("conv_id"), cur.numBuckets))
-      .hint("rebalance", "bucket")
-      .sortWithinPartitions("bucket", "conv_id", "turn_idx")
-      .write.mode("overwrite")
-      .option("compression", "zstd")
-      .option("parquet.bloom.filter.enabled#conv_id", "true")
-      .partitionBy("bucket")
-      .parquet(stage.toString)
+    // one single-task job per bucket: the bucket's merge needs no
+    // exchange (MorRead.mergedInBucket), and the jobs run side by side.
+    // A union of per-bucket merges would run as ONE task (the union keeps
+    // its children's single partition), hence separate jobs. The pool's
+    // threads are created here, so they inherit this thread's job
+    // description and scheduler properties.
+    def rewrite(b: Int): Unit =
+      MorRead.mergedInBucket(spark, sch, readFiles(spark, sch, resolve(cur.files, Some(Set(b)))),
+        resolve(cur.deltas, Some(Set(b))))
+        .sortWithinPartitions("conv_id", "turn_idx")
+        .write.mode("overwrite")
+        .option("compression", "zstd")
+        .option("parquet.bloom.filter.enabled#conv_id", "true")
+        .parquet(s"$stage/bucket=$b")
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(targets.size, math.max(1, spark.sparkContext.defaultParallelism)))
+    val failures =
+      try targets.toSeq.sorted
+        .map(b => pool.submit(new java.util.concurrent.Callable[Unit] { def call(): Unit = rewrite(b) }))
+        // wait for EVERY job before cleaning up: a failed bucket must not
+        // drop the stage dir under a sibling that is still writing
+        .flatMap(f => scala.util.Try(f.get()).failed.toOption)
+      finally pool.shutdown()
+    if (failures.nonEmpty) {
+      dropStageDir(stage)
+      throw failures.head match {
+        case e: java.util.concurrent.ExecutionException if e.getCause != null => e.getCause
+        case e => e
+      }
+    }
     val staged = stagedFilesByBucket(stage)
     Option(IceLite.testOnCompactStaged.getAndSet(null)).foreach(_.apply())
     val snap =

@@ -2,7 +2,7 @@ package graft.table
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -32,24 +32,39 @@ import graft.model.NetAction
   *    dropped events at or before the wipe offset).
   *
   * Read amplification is O(deltas + touched base rows), NOT O(touched
-  * bucket): base rows whose key no delta touches take a shuffle-free
-  * pass-through (broadcast anti-join against the delta key set), and only
-  * the touched subset enters the fold aggregation. Deltas are O(changes)
-  * and bounded per bucket by the compaction threshold, so the touched-key
-  * set is broadcastable by construction; a defensive size gate
-  * ([[PrunedReadMaxDeltaBytes]]) falls back to the full-bucket fold —
-  * correct at any scale, just the pre-pruning shuffle shape. The
-  * reference analogue: reads against an indexed table never rescan it
-  * (`/root/reference/README.md:19-24`); Iceberg's equality-delete reads
+  * bucket): base rows whose key no delta touches pass through an
+  * anti-join against the (O(changes)) delta key set and are never
+  * sorted, aggregated or shuffled. Two plan shapes serve reads:
+  *
+  *  - [[mergedInBucket]] — a read that names exactly ONE bucket (point
+  *    lookups, per-bucket compaction). A bucket holds every row of its
+  *    keys, so the whole merge runs inside a single task: the base and
+  *    delta scans are coalesced to one partition and every join is a
+  *    hash join built on the delta side — no exchange, no broadcast job.
+  *  - [[merged]] — reads that span several buckets. The touched-key set
+  *    is broadcast, untouched base rows pass through shuffle-free, and
+  *    only the touched subset enters the hash-partitioned fold.
+  *
+  * Deltas are bounded per bucket by the compaction threshold, so both
+  * hash builds are small by construction; a defensive size gate
+  * ([[PrunedReadMaxDeltaBytes]]) falls back to the full fold (one
+  * spillable aggregation over base ∪ deltas) — correct at any
+  * scale, just the pre-pruning shuffle shape. Both shapes take
+  * `conv_id`/`turn_idx` from the fold's grouping key, so a key predicate
+  * on the result reaches every base and delta scan. The reference
+  * analogue: reads against an indexed table never rescan it
+  * (reference `README.md:19-24`); Iceberg's equality-delete reads
   * use the same anti-join-against-delete-keys shape.
   */
 object MorRead {
 
   /** Above this many total delta BYTES (across the buckets being read),
-    * the touched-key set is no longer assumed broadcastable and the read
-    * falls back to the full fold (one hash aggregation over base ∪
-    * deltas). Compaction keeps per-bucket deltas far below this; the gate
-    * only matters for compaction-disabled tables.
+    * the touched-key set is no longer assumed small enough to hash —
+    * neither as a broadcast ([[merged]]) nor as an in-task build
+    * ([[mergedInBucket]]) — and the read falls back to the full fold (one
+    * aggregation over base ∪ deltas, which spills). Compaction keeps
+    * per-bucket deltas far below this; the gate only matters for
+    * compaction-disabled tables.
     */
   val PrunedReadMaxDeltaBytes: Long = 256L << 20
 
@@ -64,8 +79,9 @@ object MorRead {
     StructField("row", tableSchema),
     StructField("seq", LongType)))
 
-  /** Current state of (a bucket subset of) the table: `base` rows merged
-    * with the net actions in `deltaPaths`.
+  /** Current state of a bucket subset of the table: `base` rows merged
+    * with the net actions in `deltaPaths`. Serves reads that span
+    * several buckets; a one-bucket read takes [[mergedInBucket]].
     */
   def merged(
       spark: SparkSession,
@@ -85,12 +101,7 @@ object MorRead {
       .agg(max("seq").as("wipe_seq"))
 
     // driver-side metadata only: decides the plan shape, runs no job
-    val deltaBytes = deltaPaths.iterator.map { p =>
-      val f = Paths.get(p)
-      if (Files.exists(f)) Files.size(f) else 0L
-    }.sum
-
-    if (deltaBytes <= maxPrunedDeltaBytes) {
+    if (deltaBytes(deltaPaths) <= maxPrunedDeltaBytes) {
       // ---- pruned formulation: untouched base rows never shuffle ----
       // touched keys (point actions) and wiped conversations are both
       // O(changes); broadcast them so the base scan splits narrowly into
@@ -112,6 +123,89 @@ object MorRead {
       fold(base, deltas, wipes, cols)
     }
   }
+
+  /** Current state of ONE bucket, merged inside a single task: `base`
+    * must hold only that bucket's base rows and `deltaPaths` only its
+    * delta files. An IceLite bucket holds every row of its conversations,
+    * so nothing needs redistributing — the base and delta scans are
+    * coalesced to one partition, the fold aggregates in place, and every
+    * join is a shuffle-hash join whose build side is delta-derived (both
+    * sides already sit in a single partition, so the planner adds no
+    * exchange, and the hints keep it from broadcasting).
+    *
+    * The deltas fold once per key — a window over each conversation
+    * finds its last wipe, so the fold needs no join — and the base rows
+    * stream past that fold and the wipe set in two hash joins, never
+    * sorted: an untouched base row passes through, an update-only key
+    * takes the delta value where its base row exists, and anchor Puts
+    * come straight from the fold. Above `maxPrunedDeltaBytes` of deltas
+    * the in-task hash builds are no longer assumed small and the read
+    * takes [[merged]]'s spillable full fold instead.
+    */
+  def mergedInBucket(
+      spark: SparkSession,
+      tableSchema: StructType,
+      base: DataFrame,
+      deltaPaths: Seq[String],
+      maxPrunedDeltaBytes: Long = PrunedReadMaxDeltaBytes): DataFrame = {
+    if (deltaPaths.isEmpty) return base
+    if (deltaBytes(deltaPaths) > maxPrunedDeltaBytes)
+      return merged(spark, tableSchema, base, deltaPaths, maxPrunedDeltaBytes)
+    import org.apache.spark.sql.expressions.Window
+    val cols = tableSchema.fieldNames.toSeq
+    val key = Seq("conv_id", "turn_idx")
+    val deltas = spark.read.schema(deltaSchema(tableSchema)).parquet(deltaPaths: _*).coalesce(1)
+    // one row per touched key: its existence anchor and value winner
+    // among the actions at or after the conversation's last wipe. The
+    // window sorts by (conv_id, turn_idx), which is also the order the
+    // aggregation needs, and a key predicate passes below it (conv_id is
+    // its partition key).
+    val conv = Window.partitionBy("conv_id").orderBy("turn_idx")
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val aSeq = when(col("action").isin(NetAction.Put, NetAction.Del), col("seq"))
+    val vSeq = when(col("action").isin(NetAction.Put, NetAction.UpdateIfExists), col("seq"))
+    val folded = deltas
+      .withColumn("_wipe_seq", max(when(col("action") === NetAction.Wipe, col("seq"))).over(conv))
+      .filter(col("turn_idx").isNotNull && col("seq") >= coalesce(col("_wipe_seq"), lit(0L)))
+      .groupBy("conv_id", "turn_idx")
+      .agg(
+        max(aSeq).as("_a_seq"),
+        max_by(col("action"), aSeq).as("_a_action"),
+        max_by(col("row"), vSeq).as("_v_row"))
+    val wiped = deltas.filter(col("action") === NetAction.Wipe)
+      .select(col("conv_id"), lit(true).as("_wiped")).distinct()
+    // Base rows: untouched ones pass through; a touched key survives here
+    // only as an update-only key (no anchor) of an unwiped conversation,
+    // with the delta value. Outer joins + null tests, not semi/anti
+    // joins: the optimizer pushes those below the base's coalesce, which
+    // would leave the base side multi-partition and bring exchanges back.
+    val onBase = base.coalesce(1)
+      .join(folded.withColumn("_f", lit(true)).hint("shuffle_hash"), key, "left")
+      .join(wiped.hint("shuffle_hash"), Seq("conv_id"), "left")
+      .filter(col("_wiped").isNull && (col("_f").isNull || col("_a_seq").isNull))
+      .select(cols.map(c =>
+        if (key.contains(c)) col(c)
+        else when(col("_f").isNull, col(c)).otherwise(col(s"_v_row.$c")).as(c)): _*)
+    // anchor Put: present with the delta value, whatever the base held
+    onBase
+      .union(folded.filter(col("_a_action") === NetAction.Put).select(stateCols(cols, "_v_row"): _*))
+      .coalesce(1)
+  }
+
+  /** Total size of the delta files — driver-side metadata, runs no job. */
+  private def deltaBytes(deltaPaths: Seq[String]): Long =
+    deltaPaths.iterator.map { p =>
+      val f = Paths.get(p)
+      if (Files.exists(f)) Files.size(f) else 0L
+    }.sum
+
+  /** State columns in table order out of a folded `row` struct, the key
+    * taken from the fold's grouping columns: a key predicate above the
+    * fold then pushes through the aggregation into the scans below it
+    * (a `row.conv_id` reference would stop it at the aggregate).
+    */
+  private def stateCols(cols: Seq[String], row: String): Seq[Column] =
+    cols.map(c => if (c == "conv_id" || c == "turn_idx") col(c) else col(s"$row.$c").as(c))
 
   /** Fold an explicit base-state DataFrame with an explicit delta-action
     * DataFrame into the resulting state — the feed consumer's
@@ -157,6 +251,6 @@ object MorRead {
         max_by(col("action"), aSeq).as("a_action"),
         max_by(col("row"), vSeq).as("v_row"))
       .filter(col("a_seq").isNotNull && col("a_action") === NetAction.Put)
-      .select(cols.map(c => col(s"v_row.$c").as(c)): _*)
+      .select(stateCols(cols, "v_row"): _*)
   }
 }

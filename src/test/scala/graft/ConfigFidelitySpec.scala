@@ -84,6 +84,30 @@ class ConfigFidelitySpec extends SparkSuite {
     assert(rej.head.getAs[String]("conv_id") == "c1")
   }
 
+  test("an extract-errored series delete is quarantined and wipes nothing") {
+    Seq("mor", "cow").foreach { strategy =>
+      val dir = tmpDir("extract-wipe")
+      val table = IceLite.create(s"$dir/t", turnSchema, 4)
+      val spec = MergeSpec(mergeStrategy = strategy,
+        extractFields = Seq(ExtractField("score", "$.score", "int")), extractSource = "text")
+      CdcApply.applyBatch(spark, table, eventsDF(spark, Seq(
+        ins(0L, "c1", 0, """{"score":1}"""), ins(1L, "c1", 1, """{"score":2}"""),
+        ins(2L, "c2", 0, """{"score":3}"""))), spec)
+      // series deletes carrying a payload: c1's fails extraction (quarantined,
+      // must not wipe), c2's extracts cleanly (wipes)
+      val malformed = graft.model.ChangeEvent(0, 3L, ts(3L), "delete", "c1", None,
+        Some(turn("c1", 0, """{"score":"not-a-number"}""", 3L)), 2)
+      val sound = graft.model.ChangeEvent(0, 4L, ts(4L), "delete", "c2", None,
+        Some(turn("c2", 0, """{"score":4}""", 4L)), 2)
+      val r = CdcApply.applyBatch(spark, table, eventsDF(spark, Seq(malformed, sound)), spec,
+        rejectedDir = Some(s"$dir/rej"))
+      assert(r.rejected == 1L, strategy)
+      val rows = table.read(spark).select("conv_id", "turn_idx").collect()
+        .map(r => (r.getString(0), r.getInt(1))).toSeq.sorted
+      assert(rows == Seq(("c1", 0), ("c1", 1)), s"$strategy: $rows")
+    }
+  }
+
   test("multi-schema classification: two JSON shapes on one topic get their own extract columns") {
     val dir = tmpDir("multischema")
     val table = IceLite.create(s"$dir/t", turnSchema, 4)

@@ -175,5 +175,7 @@ object TestHelpers {
     // aggregate fold (the heavy-duplication alternative), both alignments
     MergeSpec(mergeStrategy = "mor", foldStrategy = "agg"),
     MergeSpec(mergeStrategy = "mor", foldStrategy = "agg", foldAlignment = "bucket"),
+    // narrow-agg + deciding-row fetch fold (its own rejected-count path)
+    MergeSpec(mergeStrategy = "mor", foldStrategy = "join"),
     MergeSpec(mergeStrategy = "cow"))
 }

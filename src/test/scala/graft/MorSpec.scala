@@ -184,6 +184,57 @@ class MorSpec extends SparkSuite {
     assert(stateMap() == expected, "state changed across drift compaction")
   }
 
+  test("compaction rewrites each bucket in one task, into one sorted zstd base file") {
+    val dir = tmpDir("mor-compact-task") + "/t"
+    val t = IceLite.create(dir, turnSchema, 4)
+    val spec = MergeSpec(mergeStrategy = "mor", morCompactThreshold = 1000)
+    val log = randomLog(new Random(41), 400, 24, 5)
+    log.grouped(100).zipWithIndex.foreach { case (b, i) =>
+      CdcApply.applyBatch(spark, t, eventsDF(spark, b), spec = spec, epoch = Some(("ct", i.toLong)))
+      // the second compaction merges base files with newer deltas
+      if (i == 1) assert(t.compactDeltas(spark, 0) > 0)
+    }
+    val targets = t.current.deltas.keySet
+    assert(targets.size > 1 && targets.exists(b => t.dataFiles(Some(Set(b))).nonEmpty))
+
+    val tasks = new java.util.concurrent.atomic.AtomicInteger()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        tasks.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val compacted =
+      try {
+        val n = t.compactDeltas(spark, 0)
+        Thread.sleep(1000) // listener bus drain
+        n
+      } finally spark.sparkContext.removeSparkListener(listener)
+    assert(compacted == targets.size)
+    assert(jobs.get == compacted && tasks.get == compacted,
+      s"${jobs.get} jobs / ${tasks.get} tasks for $compacted compacted buckets")
+
+    assert(t.current.deltas.isEmpty)
+    targets.foreach { b =>
+      val files = t.dataFiles(Some(Set(b)))
+      assert(files.size == 1, s"bucket $b has ${files.size} base files")
+      val keys = spark.read.parquet(files.head).select("conv_id", "turn_idx").collect()
+        .map(r => (r.getString(0), r.getInt(1))).toSeq
+      assert(keys == keys.sorted, s"bucket $b base file is not sorted by (conv_id, turn_idx)")
+      val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(files.head), new org.apache.hadoop.conf.Configuration()))
+      try footer.getFooter.getBlocks.forEach(_.getColumns.forEach { c =>
+        assert(c.getCodec == org.apache.parquet.hadoop.metadata.CompressionCodecName.ZSTD)
+      }) finally footer.close()
+    }
+    val want = OracleFold.rows(OracleFold.finalState(log))
+    assert(readTable(spark, t).map(x => (x.conv_id, x.turn_idx, x.text)) ==
+      want.map(x => (x.conv_id, x.turn_idx, x.text)))
+  }
+
   test("cow batch on top of outstanding mor deltas folds them (strategy hand-off)") {
     val dir = tmpDir("mor-handoff") + "/t"
     val t = IceLite.create(dir, turnSchema, 4)

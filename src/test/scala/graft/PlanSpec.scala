@@ -140,6 +140,54 @@ class PlanSpec extends SparkSuite {
     assert(scanned < allFiles, s"scanned $scanned of $allFiles")
   }
 
+  test("one-bucket MOR point read: no exchange, no broadcast, key filter in every scan") {
+    import TestHelpers._
+    val d = tmpDir("planspec-mor") + "/t"
+    val t = graft.table.IceLite.create(d, turnSchema, 4)
+    val mor = graft.model.MergeSpec(mergeStrategy = "mor", morCompactThreshold = 1000)
+    val seed = (0 until 40).map(i => ins(i.toLong, f"c$i%02d", i % 3, s"v$i"))
+    graft.operators.CdcApply.applyBatch(spark, t, eventsDF(spark, seed), spec = mor)
+    assert(t.compactDeltas(spark) > 0)
+    graft.operators.CdcApply.applyBatch(spark, t, eventsDF(spark, Seq(
+      // an update of c07's base row, a new c07 turn, a wipe in another conv
+      upd(100, "c07", 1, "u"), ins(101, "c07", 5, "n"), del(102, "c11", None))), spec = mor)
+    val b = spark.range(1)
+      .select(graft.operators.MergeEngine.bucketOf(lit("c07"), 4)).collect()(0).getInt(0)
+    assert(t.dataFiles(Some(Set(b))).nonEmpty && t.deltaFiles(Some(Set(b))).nonEmpty)
+    val df = t.read(spark, Some(Set(b))).filter(col("conv_id") === "c07")
+    assert(df.select("turn_idx", "text").collect().map(r => (r.getInt(0), r.getString(1))).toSet ==
+      Set((1, "u"), (5, "n")))
+    def nodes(df: org.apache.spark.sql.DataFrame) = {
+      val plan = df.queryExecution.executedPlan
+      plan.collect { case p => p } ++ plan.collect {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      }.flatMap(_.collect { case p => p })
+    }
+    // every base and delta scan carries the key predicate
+    def assertKeyInScans(df: org.apache.spark.sql.DataFrame): Unit = {
+      val scans = nodes(df).collect { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
+      val (deltaScans, baseScans) = scans.partition(_.requiredSchema.fieldNames.contains("action"))
+      assert(baseScans.nonEmpty && deltaScans.nonEmpty, df.queryExecution.executedPlan.toString)
+      scans.foreach { s =>
+        assert(s.dataFilters.exists(f => f.references.exists(_.name == "conv_id") &&
+          f.toString.contains("c07")),
+          s"conv_id filter missing from a scan:\n${df.queryExecution.executedPlan}")
+      }
+    }
+    val all = nodes(df)
+    assert(!all.exists(_.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec]),
+      df.queryExecution.executedPlan.toString)
+    assert(!all.exists(_.isInstanceOf[org.apache.spark.sql.execution.exchange.BroadcastExchangeExec]),
+      df.queryExecution.executedPlan.toString)
+    assertKeyInScans(df)
+    // the multi-bucket (broadcast-pruned) merge keys its fold output on
+    // the grouping columns too, so the predicate reaches its scans as well
+    val multi = t.read(spark, Some(Set(b, (b + 1) % 4))).filter(col("conv_id") === "c07")
+    assert(multi.select("turn_idx", "text").collect().map(r => (r.getInt(0), r.getString(1))).toSet ==
+      Set((1, "u"), (5, "n")))
+    assertKeyInScans(multi)
+  }
+
   test("events parquet scan prunes to envelope columns used by the planning aggregate") {
     import TestHelpers._
     val d = tmpDir("planspec-scan")

@@ -26,19 +26,21 @@ class SkewSpec extends SparkSuite {
     */
   private def hotBatch(n: Int): DataFrame = {
     val ts = lit(new java.sql.Timestamp(1700000000000L))
-    val hot = col("id") % 5 === 0
-    val conv = when(hot, lit("c_hot")).otherwise(concat(lit("c"), col("id") % 4000))
-    val turn = when(hot, ((col("id") / 5) % 50)).otherwise((col("id") / 4000) % 8).cast("int")
+    // duplicate delivery: every 97th row re-delivers the whole previous
+    // row (same offset, key and payload)
+    val id = when(col("id") % 97 === 96, col("id") - 1).otherwise(col("id"))
+    val hot = id % 5 === 0
+    val conv = when(hot, lit("c_hot")).otherwise(concat(lit("c"), id % 4000))
+    val turn = when(hot, ((id / 5) % 50)).otherwise((id / 4000) % 8).cast("int")
     spark.range(n).select(
       lit(0).as("partition"),
-      // duplicate delivery: every 97th offset appears twice (same row)
-      when(col("id") % 97 === 96, col("id") - 1).otherwise(col("id")).as("offset"),
+      id.as("offset"),
       ts.as("ts"),
       lit("upsert").as("op"),
       conv.as("conv_id"),
       turn.as("turn_idx"),
       struct(conv.as("conv_id"), turn.as("turn_idx"), lit("user").as("role"),
-        concat(lit("text-"), col("id")).as("text"), lit(null).cast("string").as("tool"),
+        concat(lit("text-"), id).as("text"), lit(null).cast("string").as("tool"),
         ts.as("ts")).as("after"),
       lit(2).as("schema_v"))
   }
