@@ -58,6 +58,17 @@ object CdcApply {
     */
   val MorCommitRetries: Int = 5
 
+  /** Run `body` under `desc` as this thread's Spark job description and
+    * clear it on exit. A job description is a thread-local property that
+    * a new thread inherits from the thread that created it, so a pooled
+    * thread carries whatever label was set when its pool grew: every
+    * engine `Future` that runs Spark jobs labels itself on entry.
+    */
+  private[graft] def labelled[T](spark: SparkSession, desc: String)(body: => T): T = {
+    spark.sparkContext.setJobDescription(desc)
+    try body finally spark.sparkContext.setJobDescription(null)
+  }
+
   /** Total MOR commit races retried in this JVM (observability/test hook). */
   private[graft] val morRaceRetries = new java.util.concurrent.atomic.LongAdder
 
@@ -299,10 +310,10 @@ object CdcApply {
           // Job descriptions are thread-local: label each concurrent job
           // from its own thread so the UI/stage profile attributes them.
           val planF = Future {
-            spark.sparkContext.setJobDescription("cdc: planning aggregate")
-            try events0.groupBy("partition")
-              .agg(max("offset").as("max_off"), count(lit(1)).as("n")).collect()
-            finally spark.sparkContext.setJobDescription(null)
+            labelled(spark, "cdc: planning aggregate") {
+              events0.groupBy("partition")
+                .agg(max("offset").as("max_off"), count(lit(1)).as("n")).collect()
+            }
           }
           // Rejected-record count: a TOTAL, not per-partition — observed
           // on the fold's scan (no extra job, no extra payload decode)
@@ -352,10 +363,9 @@ object CdcApply {
             if (!spec.deleteEnabled) 0L
             else Await.result(
               Future {
-                spark.sparkContext.setJobDescription("cdc: wipe count")
-                try events0.filter(col("op") === "delete" && col("turn_idx").isNull && wipeable)
-                  .count()
-                finally spark.sparkContext.setJobDescription(null)
+                labelled(spark, "cdc: wipe count") {
+                  events0.filter(col("op") === "delete" && col("turn_idx").isNull && wipeable).count()
+                }
               },
               Duration.Inf)
           // The wipe aggregate has TWO consumers in the delta-write
@@ -522,14 +532,14 @@ object CdcApply {
     def stageDeltas(seq: Long): (java.nio.file.Path, Map[Int, Seq[String]], Long) = {
       val deltaRows = actionRows.unionByName(wipeRows).withColumn("seq", lit(seq))
       val stage = table.newStageDir()
-      spark.sparkContext.setJobDescription(s"cdc: fold + delta write (seq $seq)")
-      try (if (preAligned) deltaRows
-       else deltaRows.hint("rebalance", "bucket")) // AQE splits hot buckets, coalesces cold
-        .write.mode("overwrite")
-        .option("compression", "snappy")
-        .partitionBy("bucket")
-        .parquet(stage.toString)
-      finally spark.sparkContext.setJobDescription(null)
+      labelled(spark, s"cdc: fold + delta write (seq $seq)") {
+        (if (preAligned) deltaRows
+         else deltaRows.hint("rebalance", "bucket")) // AQE splits hot buckets, coalesces cold
+          .write.mode("overwrite")
+          .option("compression", "snappy")
+          .partitionBy("bucket")
+          .parquet(stage.toString)
+      }
       val staged = table.stagedFilesByBucket(stage)
       val rowsWritten = footerRowCount(spark, staged.values.flatten.map(r => s"${table.dir}/$r"))
       (stage, staged, rowsWritten)
@@ -689,11 +699,7 @@ object CdcApply {
           s"COW apply: concurrent writer's schema is incompatible: $reason")
       }
       val base = {
-        val files = table.resolve(cur.files, Some(touched))
-        val b =
-          if (files.isEmpty)
-            spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schemaNow)
-          else spark.read.schema(schemaNow).parquet(files: _*)
+        val b = IceLite.readFiles(spark, schemaNow, table.resolve(cur.files, Some(touched)))
         val deltaPaths = table.resolve(cur.deltas, Some(touched))
         if (deltaPaths.isEmpty) b else MorRead.merged(spark, schemaNow, b, deltaPaths)
       }

@@ -248,9 +248,11 @@ object CdcStream {
         import scala.concurrent.ExecutionContext.Implicits.global
         val logAppend = logTable.map { lt =>
           Future {
-            graft.operators.EventLogApply.appendBatch(
-              spark, lt, batch.drop(cfg.routing.map(_.topicColumn).toSeq: _*),
-              cfg.spec, epoch = Some((cfg.streamId, epochId)))
+            CdcApply.labelled(spark, "cdc: event-log append") {
+              graft.operators.EventLogApply.appendBatch(
+                spark, lt, batch.drop(cfg.routing.map(_.topicColumn).toSeq: _*),
+                cfg.spec, epoch = Some((cfg.streamId, epochId)))
+            }
           }
         }
         val touchedTables: Seq[IceLiteTable] = cfg.routing match {
@@ -317,7 +319,7 @@ object CdcStream {
             val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
             try {
               val applies = groups.map { case (folded, ts) =>
-                Future {
+                Future(CdcApply.labelled(spark, s"cdc: routed apply ($folded)") {
                   val dir = r.tableDirFor(folded)
                   val slice0 = batch.filter(col(r.topicColumn).isin(ts: _*)).drop(r.topicColumn)
                   val live = ts.flatMap(t => liveByTopic.getOrElse(t, Set.empty)).toSet
@@ -349,7 +351,7 @@ object CdcStream {
                     epoch = Some((cfg.streamId, epochId)),
                     rejectedDir = cfg.rejectedDir.map(d => s"$d/topic=$folded"))
                   tbl
-                }(ec)
+                })(ec)
               }
               applies.map(Await.result(_, Duration.Inf))
             } finally { ec.shutdown() }
@@ -374,7 +376,7 @@ object CdcStream {
           val key = cfg.checkpointDir
           val queued = maintenanceQueued.getOrElseUpdate(
             key, new java.util.concurrent.atomic.AtomicBoolean(false))
-          def runMaintenance(): Unit = {
+          def runMaintenance(): Unit = CdcApply.labelled(spark, "cdc: maintenance") {
             try {
               // own scheduler pool: under spark.scheduler.mode=FAIR the
               // maintenance job SHARES task slots with the overlapping

@@ -105,7 +105,7 @@ object ChangeFeed {
     val mor = {
       val fs = abs(morFiles.result())
       if (fs.isEmpty) empty
-      else spark.read.schema(MorRead.deltaSchema(sch)).parquet(fs: _*)
+      else IceLite.readFiles(spark, MorRead.deltaSchema(sch), fs)
         .withColumnRenamed("seq", "_commit_version")
     }
     // append commits stamp their version driver-side (base rows carry
@@ -126,7 +126,7 @@ object ChangeFeed {
         appends.flatMap { case (v, fs) => abs(fs).map(f => (qualify(f), v)) }
       import spark.implicits._
       val vmap = fileVer.toDF("_file_path", "_commit_version")
-      spark.read.schema(sch).parquet(fileVer.map(_._1): _*)
+      IceLite.readFiles(spark, sch, fileVer.map(_._1))
         .withColumn("_file_path", col("_metadata.file_path"))
         .join(broadcast(vmap), Seq("_file_path"), "left")
         .select(

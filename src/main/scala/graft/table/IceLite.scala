@@ -207,8 +207,10 @@ final class IceLiteTable(val dir: String) {
     * reader) — merged at read time with any outstanding MOR delta files
     * (a no-op pass-through when there are none). A read that names
     * exactly one bucket merges inside a single task with no exchange
-    * ([[MorRead.mergedInBucket]]); any other read takes the
-    * broadcast-pruned multi-bucket merge ([[MorRead.merged]]).
+    * ([[MorRead.mergedInBucket]]); any other read takes the multi-bucket
+    * merge ([[MorRead.merged]]): two delta passes, one broadcast of the
+    * delta keys and one exchange for the fold. Files are scanned from
+    * the snapshot's list, with no listing job ([[IceLite.readFiles]]).
     */
   def read(spark: SparkSession, buckets: Option[Set[Int]] = None): DataFrame =
     readSnapshotState(spark, current, buckets)
@@ -537,7 +539,7 @@ final class IceLiteTable(val dir: String) {
   private def readSnapshotState(
       spark: SparkSession, s: Snapshot, buckets: Option[Set[Int]]): DataFrame = {
     val sch = schemaOf(s)
-    val base = readFiles(spark, sch, resolve(s.files, buckets))
+    val base = IceLite.readFiles(spark, sch, resolve(s.files, buckets))
     val deltaPaths = resolve(s.deltas, buckets)
     if (deltaPaths.isEmpty) base
     else if (buckets.exists(_.size == 1)) MorRead.mergedInBucket(spark, sch, base, deltaPaths)
@@ -546,12 +548,7 @@ final class IceLiteTable(val dir: String) {
 
   /** Base files only — MOR deltas NOT applied (compaction + COW internals). */
   def readBase(spark: SparkSession, buckets: Option[Set[Int]] = None): DataFrame =
-    readFiles(spark, schema, dataFiles(buckets))
-
-  /** `files` under `sch`; an empty frame when there are none. */
-  private def readFiles(spark: SparkSession, sch: StructType, files: Seq[String]): DataFrame =
-    if (files.isEmpty) spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), sch)
-    else spark.read.schema(sch).parquet(files: _*)
+    IceLite.readFiles(spark, schema, dataFiles(buckets))
 
   private def schemaOf(s: Snapshot): StructType =
     org.apache.spark.sql.types.DataType.fromJson(s.schemaJson).asInstanceOf[StructType]
@@ -858,7 +855,7 @@ final class IceLiteTable(val dir: String) {
     val sch = schema
     targets.foreach { case (b, small) =>
       val files = small.map(rel => Paths.get(dir).resolve(rel).toString)
-      spark.read.schema(sch).parquet(files: _*)
+      IceLite.readFiles(spark, sch, files)
         .coalesce(1)
         .sortWithinPartitions(sortCols.map(col): _*)
         .write.mode("append")
@@ -957,7 +954,7 @@ final class IceLiteTable(val dir: String) {
     // threads are created here, so they inherit this thread's job
     // description and scheduler properties.
     def rewrite(b: Int): Unit =
-      MorRead.mergedInBucket(spark, sch, readFiles(spark, sch, resolve(cur.files, Some(Set(b)))),
+      MorRead.mergedInBucket(spark, sch, IceLite.readFiles(spark, sch, resolve(cur.files, Some(Set(b)))),
         resolve(cur.deltas, Some(Set(b))))
         .sortWithinPartitions("conv_id", "turn_idx")
         .write.mode("overwrite")
@@ -1099,6 +1096,37 @@ object IceLite {
     refLocks.computeIfAbsent(
       Paths.get(dir).toAbsolutePath.normalize.toString, _ => new Object)
   private val refLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** Parquet `files` (absolute paths, as a snapshot names them) under
+    * `sch`; an empty frame when there are none. The scan is built from
+    * the known files, never from a listing: their statuses seed the file
+    * index's cache, so more paths than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` start no
+    * "Listing leaf files" job, as `spark.read.parquet(paths)` would. One
+    * stat per file, driver-side; a directory among `files` is listed as
+    * `spark.read` would list it. Every snapshot scan goes through here:
+    * base and delta files of state reads and the change feed.
+    */
+  private[graft] def readFiles(spark: SparkSession, sch: StructType, files: Seq[String]): DataFrame = {
+    import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+    import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    if (files.isEmpty) return spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), sch)
+    val hconf = spark.sessionState.newHadoopConf()
+    val statuses = files.map { f =>
+      val p = new HPath(f)
+      p.getFileSystem(hconf).getFileStatus(p)
+    }
+    val known = statuses.filterNot(_.isDirectory).map(s => s.getPath -> Array(s)).toMap
+    val cache = new FileStatusCache {
+      override def getLeafFiles(path: HPath): Option[Array[FileStatus]] = known.get(path)
+      def putLeafFiles(path: HPath, leafFiles: Array[FileStatus]): Unit = ()
+      def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(spark, statuses.map(_.getPath), Map.empty, Some(sch), cache)
+    spark.baseRelationToDataFrame(
+      HadoopFsRelation(index, index.partitionSchema, sch, None, new ParquetFileFormat, Map.empty)(spark))
+  }
 
   /** Physical bucket of a conversation — the table's hash-distribution
     * layout (reference analogue: `PARTITION BY HASH` DDL,

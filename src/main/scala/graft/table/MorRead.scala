@@ -34,24 +34,31 @@ import graft.model.NetAction
   * Read amplification is O(deltas + touched base rows), NOT O(touched
   * bucket): base rows whose key no delta touches pass through an
   * anti-join against the (O(changes)) delta key set and are never
-  * sorted, aggregated or shuffled. Two plan shapes serve reads:
+  * sorted, aggregated or shuffled. Two plan shapes serve reads, and both
+  * fold the touched keys with the same per-conversation window plus
+  * per-key aggregate ([[foldActions]]):
   *
   *  - [[mergedInBucket]] — a read that names exactly ONE bucket (point
   *    lookups, per-bucket compaction). A bucket holds every row of its
   *    keys, so the whole merge runs inside a single task: the base and
   *    delta scans are coalesced to one partition and every join is a
   *    hash join built on the delta side — no exchange, no broadcast job.
-  *  - [[merged]] — reads that span several buckets. The touched-key set
-  *    is broadcast, untouched base rows pass through shuffle-free, and
-  *    only the touched subset enters the hash-partitioned fold.
+  *  - [[merged]] — reads that span several buckets (full-state scans,
+  *    bucket subsets, the copy-on-write hand-off). Two delta passes: a
+  *    narrow scan of the raw delta keys, broadcast once, splits the base
+  *    into pass-through rows (anti-join) and touched rows (semi-join);
+  *    the full delta scan and the touched rows then fold behind one
+  *    exchange and one sort.
   *
   * Deltas are bounded per bucket by the compaction threshold, so both
   * hash builds are small by construction; a defensive size gate
   * ([[PrunedReadMaxDeltaBytes]]) falls back to the full fold (one
   * spillable aggregation over base ∪ deltas) — correct at any
-  * scale, just the pre-pruning shuffle shape. Both shapes take
+  * scale, just the pre-pruning shuffle shape. Every shape takes
   * `conv_id`/`turn_idx` from the fold's grouping key, so a key predicate
-  * on the result reaches every base and delta scan. The reference
+  * on the result reaches every base and delta scan. Delta files are
+  * scanned from the snapshot's file list, with no listing job
+  * ([[IceLite.readFiles]]). The reference
   * analogue: reads against an indexed table never rescan it
   * (reference `README.md:19-24`); Iceberg's equality-delete reads
   * use the same anti-join-against-delete-keys shape.
@@ -82,6 +89,18 @@ object MorRead {
   /** Current state of a bucket subset of the table: `base` rows merged
     * with the net actions in `deltaPaths`. Serves reads that span
     * several buckets; a one-bucket read takes [[mergedInBucket]].
+    *
+    * Two passes over the deltas. The first is a narrow scan of their raw
+    * keys `(conv_id, turn_idx)` — a wipe row's key has a null `turn_idx`
+    * — built into ONE broadcast, keyed on `conv_id` only. The base scan
+    * splits against it in two: a base row that no key matches (neither
+    * its own key nor a wipe of its conversation) passes through a
+    * broadcast anti-join, never sorted or shuffled; a base row whose own
+    * key some delta touches enters the fold through a semi-join on the
+    * same broadcast. A base row of a wiped conversation that no point
+    * action touches is in neither side: its seq 0 always loses to the
+    * wipe. The second pass is the full delta scan, folded with the
+    * touched base rows by [[foldActions]] — one exchange, one sort.
     */
   def merged(
       spark: SparkSession,
@@ -91,37 +110,26 @@ object MorRead {
       maxPrunedDeltaBytes: Long = PrunedReadMaxDeltaBytes): DataFrame = {
     if (deltaPaths.isEmpty) return base
     val cols = tableSchema.fieldNames.toSeq
-    val deltas = spark.read.schema(deltaSchema(tableSchema)).parquet(deltaPaths: _*)
-
-    // wipes are usually rare, but can be bulk (GDPR-style batch deletes)
-    // — no broadcast hint; AQE broadcasts when the aggregate is small
-    val wipes = deltas
-      .filter(col("action") === NetAction.Wipe)
-      .groupBy("conv_id")
-      .agg(max("seq").as("wipe_seq"))
-
+    val deltas = IceLite.readFiles(spark, deltaSchema(tableSchema), deltaPaths)
     // driver-side metadata only: decides the plan shape, runs no job
-    if (deltaBytes(deltaPaths) <= maxPrunedDeltaBytes) {
-      // ---- pruned formulation: untouched base rows never shuffle ----
-      // touched keys (point actions) and wiped conversations are both
-      // O(changes); broadcast them so the base scan splits narrowly into
-      // pass-through ∪ fold-input with NO exchange of untouched payloads
-      val touchedKeys = deltas.filter(col("turn_idx").isNotNull)
-        .select("conv_id", "turn_idx").distinct()
-      val wipedConvs = wipes.select("conv_id")
-      val passthrough = base
-        .join(broadcast(wipedConvs), Seq("conv_id"), "left_anti")
-        .join(broadcast(touchedKeys), Seq("conv_id", "turn_idx"), "left_anti")
-      // a wiped-conv base row outside the touched-key set is simply gone
-      // (its seq 0 always loses to the wipe); one that IS a touched key
-      // goes through the fold, whose wipe join resolves it exactly
-      val foldBase = base
-        .join(broadcast(touchedKeys), Seq("conv_id", "turn_idx"), "left_semi")
-      passthrough.select(cols.map(col): _*)
-        .unionByName(fold(foldBase, deltas, wipes, cols))
-    } else {
-      fold(base, deltas, wipes, cols)
-    }
+    if (deltaBytes(deltaPaths) > maxPrunedDeltaBytes) return fullFold(base, deltas, cols)
+    val keys = broadcast(deltas.select(col("conv_id").as("_k_conv"), col("turn_idx").as("_k_turn")))
+    val sameConv = col("conv_id") === col("_k_conv")
+    val passthrough = base
+      .join(keys, sameConv && (col("_k_turn").isNull || col("_k_turn") === col("turn_idx")), "left_anti")
+    // the turn test stays a residual condition (an equality here would
+    // become a second join key, and so a second broadcast of the keys)
+    val touched = base
+      .join(keys, sameConv && coalesce(col("_k_turn") === col("turn_idx"), lit(false)), "left_semi")
+    val folded = foldActions(
+      touched.select(
+        col("conv_id"), col("turn_idx"),
+        lit(NetAction.Put).as("action"),
+        struct(cols.map(col): _*).as("row"),
+        lit(0L).as("seq"))
+        .unionByName(deltas))
+    passthrough.select(cols.map(col): _*)
+      .unionByName(folded.filter(col("_a_action") === NetAction.Put).select(stateCols(cols, "_v_row"): _*))
   }
 
   /** Current state of ONE bucket, merged inside a single task: `base`
@@ -133,14 +141,13 @@ object MorRead {
     * sides already sit in a single partition, so the planner adds no
     * exchange, and the hints keep it from broadcasting).
     *
-    * The deltas fold once per key — a window over each conversation
-    * finds its last wipe, so the fold needs no join — and the base rows
+    * The deltas fold once per key ([[foldActions]]) and the base rows
     * stream past that fold and the wipe set in two hash joins, never
     * sorted: an untouched base row passes through, an update-only key
     * takes the delta value where its base row exists, and anchor Puts
     * come straight from the fold. Above `maxPrunedDeltaBytes` of deltas
     * the in-task hash builds are no longer assumed small and the read
-    * takes [[merged]]'s spillable full fold instead.
+    * takes the spillable full fold instead.
     */
   def mergedInBucket(
       spark: SparkSession,
@@ -151,27 +158,10 @@ object MorRead {
     if (deltaPaths.isEmpty) return base
     if (deltaBytes(deltaPaths) > maxPrunedDeltaBytes)
       return merged(spark, tableSchema, base, deltaPaths, maxPrunedDeltaBytes)
-    import org.apache.spark.sql.expressions.Window
     val cols = tableSchema.fieldNames.toSeq
     val key = Seq("conv_id", "turn_idx")
-    val deltas = spark.read.schema(deltaSchema(tableSchema)).parquet(deltaPaths: _*).coalesce(1)
-    // one row per touched key: its existence anchor and value winner
-    // among the actions at or after the conversation's last wipe. The
-    // window sorts by (conv_id, turn_idx), which is also the order the
-    // aggregation needs, and a key predicate passes below it (conv_id is
-    // its partition key).
-    val conv = Window.partitionBy("conv_id").orderBy("turn_idx")
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val aSeq = when(col("action").isin(NetAction.Put, NetAction.Del), col("seq"))
-    val vSeq = when(col("action").isin(NetAction.Put, NetAction.UpdateIfExists), col("seq"))
-    val folded = deltas
-      .withColumn("_wipe_seq", max(when(col("action") === NetAction.Wipe, col("seq"))).over(conv))
-      .filter(col("turn_idx").isNotNull && col("seq") >= coalesce(col("_wipe_seq"), lit(0L)))
-      .groupBy("conv_id", "turn_idx")
-      .agg(
-        max(aSeq).as("_a_seq"),
-        max_by(col("action"), aSeq).as("_a_action"),
-        max_by(col("row"), vSeq).as("_v_row"))
+    val deltas = IceLite.readFiles(spark, deltaSchema(tableSchema), deltaPaths).coalesce(1)
+    val folded = foldActions(deltas)
     val wiped = deltas.filter(col("action") === NetAction.Wipe)
       .select(col("conv_id"), lit(true).as("_wiped")).distinct()
     // Base rows: untouched ones pass through; a touched key survives here
@@ -190,6 +180,42 @@ object MorRead {
     onBase
       .union(folded.filter(col("_a_action") === NetAction.Put).select(stateCols(cols, "_v_row"): _*))
       .coalesce(1)
+  }
+
+  /** The read-side fold of both pruned shapes: one row per touched key of
+    * `actions` ([[deltaSchema]] rows; base rows enter as seq-0 Puts) with
+    * its existence anchor (`_a_seq`, `_a_action`: the highest-seq Put or
+    * Del) and its value winner (`_v_row`: the highest-seq Put or
+    * UpdateIfExists) among the actions at or after its conversation's
+    * last wipe. A window over each conversation finds that wipe, so the
+    * fold needs no join; it sorts by (conv_id, turn_idx), which is also
+    * the order the per-key aggregation needs, so the payload is sorted
+    * once — after one exchange on `conv_id` where the input is
+    * partitioned, none where it is one partition. A key predicate passes
+    * below it (conv_id is the window's partition key and the
+    * aggregation's grouping key).
+    *
+    * A per-conversation window is safe on the read side. After the
+    * per-commit fold, a conversation holds at most one action per turn
+    * per outstanding commit, plus its wipe rows and touched base rows,
+    * and compaction bounds the outstanding commits per bucket. The
+    * write-side fold cannot lean on this: a single batch can carry a hot
+    * conversation's whole burst of raw events, so it partitions by key.
+    */
+  private def foldActions(actions: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val conv = Window.partitionBy("conv_id").orderBy("turn_idx")
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val aSeq = when(col("action").isin(NetAction.Put, NetAction.Del), col("seq"))
+    val vSeq = when(col("action").isin(NetAction.Put, NetAction.UpdateIfExists), col("seq"))
+    actions
+      .withColumn("_wipe_seq", max(when(col("action") === NetAction.Wipe, col("seq"))).over(conv))
+      .filter(col("turn_idx").isNotNull && col("seq") >= coalesce(col("_wipe_seq"), lit(0L)))
+      .groupBy("conv_id", "turn_idx")
+      .agg(
+        max(aSeq).as("_a_seq"),
+        max_by(col("action"), aSeq).as("_a_action"),
+        max_by(col("row"), vSeq).as("_v_row"))
   }
 
   /** Total size of the delta files — driver-side metadata, runs no job. */
@@ -218,18 +244,18 @@ object MorRead {
     * supersedes them. Assumes keyed state semantics (at most one live row
     * per (conv_id, turn_idx)) — not applicable to append-only tables.
     */
-  def foldState(base: DataFrame, deltas: DataFrame, tableSchema: StructType): DataFrame = {
+  def foldState(base: DataFrame, deltas: DataFrame, tableSchema: StructType): DataFrame =
+    fullFold(base, deltas, tableSchema.fieldNames.toSeq)
+
+  /** The full fold over base rows ∪ delta actions — one hash-partitioned,
+    * spillable aggregation with no assumption on the size of the deltas,
+    * the same shape and scale behavior as the in-batch fold (SURVEY.md
+    * §2.A A5/A6). Wipes are usually rare, but can be bulk (GDPR-style
+    * batch deletes): no broadcast hint, AQE broadcasts when they are few.
+    */
+  private def fullFold(base: DataFrame, deltas: DataFrame, cols: Seq[String]): DataFrame = {
     val wipes = deltas.filter(col("action") === NetAction.Wipe)
       .groupBy("conv_id").agg(max("seq").as("wipe_seq"))
-    fold(base, deltas, wipes, tableSchema.fieldNames.toSeq)
-  }
-
-  /** The fold aggregation over (a subset of) base rows ∪ delta actions —
-    * one hash-partitioned aggregation, the same shape and scale behavior
-    * as the in-batch fold (SURVEY.md §2.A A5/A6).
-    */
-  private def fold(
-      base: DataFrame, deltas: DataFrame, wipes: DataFrame, cols: Seq[String]): DataFrame = {
     val all = base
       .select(
         col("conv_id"), col("turn_idx"),

@@ -12,13 +12,15 @@ import graft.table.IceLite
 /** Randomized equivalence of the two merge-on-read plan shapes: for every
   * bucket, at the current version and at pinned earlier versions, the
   * one-bucket read (in-task merge), the multi-bucket read restricted to
-  * that bucket (broadcast-pruned merge) and the sequential oracle fold
-  * must hold the same rows — and so must point lookups, a missing key
-  * included.
+  * that bucket (two-pass broadcast merge) and the sequential oracle fold
+  * must hold the same rows — and so must multi-bucket reads of 2- and
+  * 3-bucket subsets and of the whole table, point lookups (a missing key
+  * included) and the full-fold fallback of the multi-bucket read.
   *
   * The logs mix series wipes, update-only keys (on base rows and on keys
   * that never existed), updates after a wipe and re-inserts after a wipe,
-  * and a mid-run compaction puts base rows under later deltas.
+  * and a mid-run compaction puts base rows under later deltas — among
+  * them a conversation that is then wiped and never touched again.
   */
 class BucketReadEquivalenceSpec extends SparkSuite {
   import TestHelpers._
@@ -56,9 +58,11 @@ class BucketReadEquivalenceSpec extends SparkSuite {
   private def runCase(seed: Long): Unit = {
     val rnd = new Random(seed)
     val batches: Vector[Vector[ChangeEvent]] = {
-      val first = randomLog(rnd, 0L, 150, 10, 4)
+      // c_gone: base rows after the compaction, then only a wipe
+      val first = randomLog(rnd, 0L, 150, 10, 4) ++ (0 until 3).map(i => ins(900L + i, "c_gone", i, s"gone-$i"))
       val second = randomLog(rnd, 1000L, 120, 10, 4)
-      val third = randomLog(rnd, 2000L, 80, 10, 4) ++ wipeScript(3000L, f"c${rnd.nextInt(10)}%02d")
+      val third = randomLog(rnd, 2000L, 80, 10, 4) ++ wipeScript(3000L, f"c${rnd.nextInt(10)}%02d") :+
+        del(3100L, "c_gone", None)
       val fourth = randomLog(rnd, 4000L, 60, 10, 4)
       Vector(first, second, third, fourth).map(rnd.shuffle(_))
     }
@@ -87,6 +91,11 @@ class BucketReadEquivalenceSpec extends SparkSuite {
       val want = OracleFold.rows(OracleFold.finalState(batches.take(n).flatten))
         .map(x => (x.conv_id, x.turn_idx, x.text))
       val all = t.readAt(spark, v)
+      assert(rows(all) == want, s"seed=$seed v$v: whole-table read != oracle")
+      Seq(Set(0, 1), Set(1, 3), Set(0, 1, 2), Set(1, 2, 3)).foreach { sub =>
+        assert(rows(t.readAt(spark, v, Some(sub))) == want.filter(r => sub(bucketOf(r._1))),
+          s"seed=$seed v$v: read of buckets $sub != oracle")
+      }
       (0 until NumBuckets).foreach { b =>
         val clue = s"seed=$seed v$v bucket=$b"
         val oracle = want.filter(r => bucketOf(r._1) == b)
@@ -102,6 +111,11 @@ class BucketReadEquivalenceSpec extends SparkSuite {
         assert(got == want.filter(_._1 == c), s"seed=$seed v$v lookup $c")
       }
     }
+    assert(!rows(t.read(spark)).exists(_._1 == "c_gone") && t.dataFiles().nonEmpty)
+    val fallback = graft.table.MorRead.merged(spark, t.schema, t.readBase(spark), t.deltaFiles(),
+      maxPrunedDeltaBytes = 0L)
+    assert(rows(fallback) == OracleFold.rows(OracleFold.finalState(batches.flatten))
+      .map(x => (x.conv_id, x.turn_idx, x.text)), s"seed=$seed: full-fold fallback != oracle")
   }
 
   test("one-bucket read == multi-bucket read == oracle, per bucket and pinned version") {

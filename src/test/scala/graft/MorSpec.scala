@@ -152,6 +152,39 @@ class MorSpec extends SparkSuite {
     assert(key(pruned) == want)
   }
 
+  test("a full read over more than 32 delta files starts no listing job") {
+    val t = IceLite.create(tmpDir("mor-nolisting") + "/t", turnSchema, 8)
+    val spec = MergeSpec(mergeStrategy = "mor", morCompactThreshold = 1000)
+    val log = randomLog(new Random(43), 600, 64, 4)
+    log.grouped(120).zipWithIndex.foreach { case (b, i) =>
+      CdcApply.applyBatch(spark, t, eventsDF(spark, b), spec = spec, epoch = Some(("nl", i.toLong)))
+    }
+    val threshold = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
+    assert(t.deltaFiles().size > threshold, s"${t.deltaFiles().size} delta files")
+
+    val listings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .filter(_.startsWith("Listing leaf files")).foreach(listings.add)
+    }
+    def listingJobs(f: => Any): Int = {
+      listings.clear()
+      spark.sparkContext.addSparkListener(listener)
+      try { f; Thread.sleep(1000) } // listener bus drain
+      finally spark.sparkContext.removeSparkListener(listener)
+      listings.size
+    }
+    // the same files through spark.read do list, in parallel
+    assert(listingJobs(spark.read.parquet(t.deltaFiles(): _*).count()) > 0)
+    var got = Seq.empty[(String, Int, String)]
+    assert(listingJobs {
+      got = t.read(spark).select("conv_id", "turn_idx", "text").collect()
+        .map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSeq.sorted
+    } == 0)
+    assert(got == OracleFold.rows(OracleFold.finalState(log)).map(x => (x.conv_id, x.turn_idx, x.text)))
+  }
+
   test("schema drift across mor deltas survives read-merge and compaction") {
     val dir = tmpDir("mor-drift") + "/t"
     val t = IceLite.create(dir, turnSchema, 4)

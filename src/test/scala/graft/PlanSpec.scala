@@ -180,12 +180,51 @@ class PlanSpec extends SparkSuite {
     assert(!all.exists(_.isInstanceOf[org.apache.spark.sql.execution.exchange.BroadcastExchangeExec]),
       df.queryExecution.executedPlan.toString)
     assertKeyInScans(df)
-    // the multi-bucket (broadcast-pruned) merge keys its fold output on
+    // the multi-bucket (two-pass broadcast) merge keys its fold output on
     // the grouping columns too, so the predicate reaches its scans as well
     val multi = t.read(spark, Some(Set(b, (b + 1) % 4))).filter(col("conv_id") === "c07")
     assert(multi.select("turn_idx", "text").collect().map(r => (r.getInt(0), r.getString(1))).toSet ==
       Set((1, "u"), (5, "n")))
     assertKeyInScans(multi)
+  }
+
+  test("multi-bucket MOR read: one key broadcast, one exchange, the payload folded once") {
+    import TestHelpers._
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    val t = graft.table.IceLite.create(tmpDir("planspec-mor-multi") + "/t", turnSchema, 4)
+    val mor = graft.model.MergeSpec(mergeStrategy = "mor", morCompactThreshold = 1000)
+    graft.operators.CdcApply.applyBatch(spark, t,
+      eventsDF(spark, (0 until 40).map(i => ins(i.toLong, f"c$i%02d", i % 3, s"v$i"))), spec = mor)
+    assert(t.compactDeltas(spark) > 0)
+    graft.operators.CdcApply.applyBatch(spark, t, eventsDF(spark, Seq(
+      upd(100, "c07", 1, "u"), ins(101, "c07", 5, "n"), del(102, "c11", None), ups(103, "c20", 2, "w"))),
+      spec = mor)
+    assert(t.dataFiles().nonEmpty && t.deltaFiles().nonEmpty)
+    val df = t.read(spark)
+    assert(df.count() == 40 - 1 + 1, "the fixture's state")
+    df.collect()
+    // the executed adaptive plan, each query stage's own plan inlined
+    def flat(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => flat(a.executedPlan)
+      case q: QueryStageExec        => q +: flat(q.plan)
+      case other                    => other +: other.children.flatMap(flat)
+    }
+    val plan = df.queryExecution.executedPlan
+    val all = flat(plan)
+    val shown = plan.toString
+    assert(all.count(_.isInstanceOf[BroadcastExchangeExec]) == 1, shown)
+    val shuffles = all.collect { case e: ShuffleExchangeExec => e }
+    assert(shuffles.size == 1, shown)
+    assert(!flat(shuffles.head).exists(_.isInstanceOf[SortAggregateExec]),
+      s"the payload is aggregated below the exchange:\n$shown")
+    val deltaScans = all.collect {
+      case f: FileSourceScanExec if f.relation.dataSchema.fieldNames.contains("action") => f
+    }
+    assert(deltaScans.size == 2, shown)
+    assert(deltaScans.count(!_.requiredSchema.fieldNames.contains("row")) == 1, shown)
   }
 
   test("events parquet scan prunes to envelope columns used by the planning aggregate") {

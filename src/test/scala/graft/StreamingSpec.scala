@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.gen.ChangeLogGen
@@ -78,6 +80,46 @@ class StreamingSpec extends SparkSuite {
       .map(r => (r.getString(0), r.getInt(1), r.getString(2))).sortBy(x => (x._1, x._2)).toSeq
     val evs = collectLog(spark.read.parquet(s"$root/log"))
     assert(got == oracleTriples(evs))
+  }
+
+  test("event-log append jobs carry their own label; the planning label stays on planning jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val root = tmpDir("stream-joblabels")
+    val cfg = ChangeLogGen.GenConfig(numEvents = 3000, numConvs = 30, maxTurns = 6, logPartitions = 2)
+    ChangeLogGen.writeLog(spark, cfg, s"$root/log", chunks = 3)
+    val sc = CdcStream.StreamConfig(s"$root/log", s"$root/table", s"$root/ckpt",
+      maxFilesPerTrigger = Some(1), eventLogTableDir = Some(s"$root/logtbl"))
+    // SQL execution id -> its physical plan; each job's execution id and label
+    val plans = new java.util.concurrent.ConcurrentHashMap[Long, String]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Option[Long], String)]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.put(s.executionId, s.physicalPlanDescription)
+        case _                                 =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        jobs.add((p.flatMap(x => Option(x.getProperty("spark.sql.execution.id"))).map(_.toLong),
+          p.flatMap(x => Option(x.getProperty("spark.job.description"))).getOrElse("")))
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val table =
+      try { val t = CdcStream.runAvailable(spark, sc); Thread.sleep(1000); t } // listener bus drain
+      finally spark.sparkContext.removeSparkListener(listener)
+    assert(table.current.properties("epoch:cdc").toLong >= 2, "expected multiple epochs")
+    val seen = jobs.asScala.toSeq.map { case (id, desc) =>
+      (id.flatMap(i => Option(plans.get(i))).getOrElse(""), desc)
+    }
+    // the append's jobs: those of the executions that write the log table
+    val append = seen.filter(_._1.contains(s"$root/logtbl/"))
+    assert(append.nonEmpty, "no job wrote the event-log table")
+    assert(append.forall(_._2 == "cdc: event-log append"), append.map(_._2).distinct)
+    val planning = seen.filter(_._2 == "cdc: planning aggregate")
+    assert(planning.nonEmpty)
+    assert(planning.forall(_._1.contains("max_off")),
+      planning.filterNot(_._1.contains("max_off")).map(_._1.take(300)))
   }
 
   test("rebucket mid-stream: the fenced epoch fails the stream; restart resumes under the new layout") {
