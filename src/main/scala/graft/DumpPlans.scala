@@ -8,9 +8,17 @@ import org.apache.spark.sql.execution.ExplainMode
 /** Writes PLANS.md: formatted physical plans for representative queries
   * and the engine's fold, as reviewable evidence of pushdown/pruning/
   * broadcast/codegen behavior. Re-run after plan-affecting changes.
+  *
+  * `DumpPlans <name> ...` instead writes each named plan to
+  * `plans/<name>.txt`: a `SparkEntry` query over the tables in
+  * `SPARK_GRAFT_SF_DIR`, or `cdc_fold`, the per-key fold over a generated
+  * 100k-event change-log batch. It uses `Bench.session` (`SPARK_GRAFT_CPUS`
+  * cores, default 32), so the dumped initial plans match what the bench
+  * executes.
   */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
+    if (args.nonEmpty) return dumpNamed(args.toSeq)
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
@@ -54,7 +62,7 @@ object DumpPlans {
     sb.append("# PLANS — formatted physical plans (generated by graft.DumpPlans)\n\n")
     sb.append("Evidence that the declarative design claims hold in actual plans:\n")
     sb.append("`PushedFilters`/`ReadSchema` show scan-level pushdown and pruning;\n")
-    sb.append("`BroadcastHashJoin` for small dims; single-aggregation CDC fold.\n")
+    sb.append("`BroadcastHashJoin` for small dims; a single-window CDC fold.\n")
     picks.foreach { case (name, why) =>
       sb.append(s"\n## $name — $why\n\n```\n")
       sb.append(fmt(SparkEntry.queries(name)(spark, dir)).take(4500))
@@ -65,17 +73,13 @@ object DumpPlans {
     import TestHelpersMain._
     val events = demoEvents(spark)
     val wipes = graft.operators.MergeEngine.seriesWipes(events)
-    sb.append("\n## MergeEngine.netActionsViaWindow — the DEFAULT per-key fold (r06): ONE exchange,\n")
-    sb.append("ONE sort of the payload, one Window pass (row_number picks the key's last event,\n")
-    sb.append("an unbounded-frame max picks the anchor) — vs the aggregate fold's partial+final\n")
-    sb.append("SortAggregate pair, which sorts the payload twice\n\n```\n")
-    sb.append(fmt(graft.operators.MergeEngine.netActionsViaWindow(events, wipes)).take(4500))
-    sb.append("\n```\n")
-    sb.append("\n## MergeEngine.netActions — the aggregate fold (foldStrategy=\"agg\": the\nheavy-re-delivery alternative — map-side combine collapses duplicates pre-shuffle)\n\n```\n")
+    sb.append("\n## MergeEngine.netActions — the per-key fold: ONE exchange, ONE sort of the\n")
+    sb.append("payload, one Window pass (row_number picks the key's last event, an\n")
+    sb.append("unbounded-frame max picks the anchor)\n\n```\n")
     sb.append(fmt(graft.operators.MergeEngine.netActions(events, wipes)).take(4500))
     sb.append("\n```\n")
     sb.append("\n## MergeEngine.netActions — opt-in bucket alignment (ONE payload exchange:\n")
-    sb.append("the REPARTITION_BY_NUM onto the bucket key; the (bucket, key) aggregation and\n")
+    sb.append("the REPARTITION_BY_NUM onto the bucket key; the (bucket, key) window and\n")
     sb.append("the per-bucket delta write then run partition-local, no further exchange —\n")
     sb.append("the cross-node-traffic-halving plan for network-shuffle clusters; see\n")
     sb.append("MergeSpec.foldAlignment for why the single-socket default is \"key\")\n\n```\n")
@@ -157,6 +161,28 @@ object DumpPlans {
 
     Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
     println(s"[plans] wrote PLANS.md (${sb.length} chars)")
+    spark.stop()
+  }
+
+  private def dumpNamed(names: Seq[String]): Unit = {
+    import graft.operators.MergeEngine
+    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-dump-plans")
+    val outDir = Paths.get("plans")
+    Files.createDirectories(outDir)
+    names.foreach { name =>
+      val df =
+        if (name == "cdc_fold") {
+          val events = graft.gen.ChangeLogGen.events(spark,
+            graft.gen.ChangeLogGen.GenConfig(numEvents = 100000L))
+          MergeEngine.netActions(events,
+            org.apache.spark.sql.functions.broadcast(MergeEngine.seriesWipes(events)))
+        } else SparkEntry.queries(name)(spark, sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+          sys.error(s"$name: set SPARK_GRAFT_SF_DIR to the query tables' directory")))
+      val txt = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      Files.write(outDir.resolve(s"$name.txt"), txt.getBytes("UTF-8"))
+      System.err.println(s"[plans] wrote $name.txt (${txt.length} chars)")
+    }
+    graft.queries.ContentQueries.clearShared(spark)
     spark.stop()
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Dev-only stage profiler for the CDC replay (not part of the contract).
-  * Usage: PROF_MASTER=local[32] PROF_SHUFFLE=96 runMain graft.ProfileReplay <events>
+  * Usage: PROF_MASTER=local[32] PROF_SHUFFLE=96 PROF_FOLDS=key,bucket runMain graft.ProfileReplay <events>
   */
 object ProfileReplay {
   def main(args: Array[String]): Unit = {
@@ -38,21 +38,17 @@ object ProfileReplay {
     val warm = java.nio.file.Files.createTempDirectory(Bench.tmpBase, "prof-warm").toString
     Bench.replay(spark, 500000L, 1, 128, warm)
     Bench.deleteRecursively(warm)
-    // each entry is "<foldStrategy>" or "<foldStrategy>:<foldAlignment>"
-    val foldVariants = sys.env.getOrElse("PROF_FOLDS", "window,agg").split(",").map(_.trim)
+    // each entry is a MergeSpec.foldAlignment value
+    val alignments = sys.env.getOrElse("PROF_FOLDS", "key,bucket").split(",").map(_.trim)
     val strategies = sys.env.getOrElse("PROF_STRATEGIES", "mor").split(",").map(_.trim)
     val nBatches = sys.env.getOrElse("PROF_BATCHES", "2").toInt
     (1 to sys.env.getOrElse("PROF_REPEATS", "1").toInt).foreach { rep =>
-      foldVariants.foreach { f =>
+      alignments.foreach { f =>
         strategies.foreach { strat =>
           println(s"[prof] ===== run $rep fold=$f strategy=$strat =====")
           val logDir = java.nio.file.Files.createTempDirectory(Bench.tmpBase, "prof-log").toString
-          val (fs, fa) = f.split(":") match {
-            case Array(s, a) => (s, a)
-            case _           => (f, "key")
-          }
           val sec = Bench.replay(spark, nEvents, numBatches = nBatches, buckets = 128, logDir = logDir,
-            spec = graft.model.MergeSpec(numBuckets = 128, foldStrategy = fs, foldAlignment = fa,
+            spec = graft.model.MergeSpec(numBuckets = 128, foldAlignment = f,
               mergeStrategy = strat)).sum
           println(f"[prof] run $rep fold=$f strategy=$strat: $nEvents events in $sec%.1fs = ${nEvents / sec}%.0f ev/s")
           Bench.deleteRecursively(logDir)

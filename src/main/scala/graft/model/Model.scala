@@ -89,14 +89,6 @@ final case class PayloadSchema(name: String, matchPath: String, extract: Seq[Ext
   * @param numBuckets physical hash-bucket count of the table layout
   *                   (reference `partitions`, default 10,
   *                   `.../sink/JdbcSinkConfig.java:295-299`)
-  * @param writeSalts skew strategy for the merge write. A hot conversation
-  *                    (Zipf head) concentrates in one bucket and would make
-  *                    that bucket a straggler writer task. 0 (default) =
-  *                    AQE skew-aware rebalance: hot partitions split, small
-  *                    ones coalesce, no extra files for cold buckets;
-  *                    1 = one writer task per bucket (no skew handling);
-  *                    k>1 = fixed salt fan-out (k files per bucket — only
-  *                    for extreme known skew; costs small files)
   * @param deleteEnabled when false, tombstones are invalid input and are
   *                    quarantined (reference `delete.enabled` +
   *                    RecordValidator, `.../sink/RecordValidator.java:44-117`)
@@ -109,7 +101,6 @@ final case class MergeSpec(
     upsertKeys: Seq[String] = Seq("conv_id", "turn_idx"),
     deleteKeys: Seq[String] = Seq("conv_id"),
     numBuckets: Int = 32,
-    writeSalts: Int = 0,
     deleteEnabled: Boolean = true,
     /** Reference `auto.evolve` (`.../sink/JdbcSinkConfig.java:145-150`):
       * when false, a batch whose records would require an ALTER-ADD /
@@ -134,21 +125,8 @@ final case class MergeSpec(
       * inert (a whitelisted column may first appear via later drift). */
     fieldsWhitelist: Seq[String] = Nil,
     coordinates: Boolean = false,
-    /** per-key fold plan: "window" (default) = single-sort window pass
-      * (one exchange, ONE sort of the payload, row_number + full-frame
-      * anchor max — netActionsViaWindow; measured −10/−22% fold-stage task
-      * time and faster walls vs "agg" in interleaved 24M-event A/Bs,
-      * r06); "agg" = single struct-valued aggregation (plans as
-      * SortAggregate — struct buffers cannot hash-aggregate — so the
-      * payload is sorted TWICE, map-side partial + reduce-side final, but
-      * its map-side combine collapses duplicates pre-shuffle: prefer it
-      * when re-delivery duplication is heavy, the same rule as
-      * [[foldAlignment]]); "join" = all-primitive HashAggregate + one
-      * deciding-row fetch join (payload never enters the agg shuffle, but
-      * pays a second batch scan, a join and a distinct — measured slower;
-      * kept as the escape hatch for payloads far wider than these) */
-    foldStrategy: String = "window",
-    /** which key the fold's payload exchange targets (MOR path only).
+    /** which key the fold's payload exchange targets (MOR path only;
+      * the fold itself is MergeEngine.netActions, one window pass).
       *
       * "key" (default): the fold exchanges on the upsert key and the
       * delta write redistributes by bucket (AQE rebalance) — two payload
@@ -169,13 +147,7 @@ final case class MergeSpec(
       * plan). The right alignment when shuffle crosses a real network
       * and numBuckets ≫ total cores (a 100 TB deployment: thousands of
       * buckets, each fold task still small): it halves cross-node
-      * payload traffic per epoch.
-      *
-      * Applies to foldStrategy "window" and "agg" on the MOR path (both
-      * accept the single bucket exchange — HashPartitioning(bucket)
-      * satisfies the window's/agg's ClusteredDistribution); the "join"
-      * fold always key-aligns (its shuffled fetch join re-exchanges on
-      * the full join key regardless — see netActionsViaJoin). */
+      * payload traffic per epoch. */
     foldAlignment: String = "key",
     /** how a batch's net actions reach the table.
       *

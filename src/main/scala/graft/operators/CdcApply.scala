@@ -166,8 +166,6 @@ object CdcApply {
     require(auditRef.isEmpty || spec.mergeStrategy == "mor",
       "write-audit-publish stages MOR delta snapshots; mergeStrategy='cow' " +
         "rewrites shared bucket files in place and cannot stage an isolated audit")
-    require(Set("agg", "join", "window")(spec.foldStrategy),
-      s"foldStrategy must be 'agg', 'join' or 'window', got '${spec.foldStrategy}'")
     require(Set("key", "bucket")(spec.foldAlignment),
       s"foldAlignment must be 'key' or 'bucket', got '${spec.foldAlignment}'")
 
@@ -264,7 +262,6 @@ object CdcApply {
                 .partitionBy("_rejected_at_epoch").parquet(d)
           }
         }
-      val valid = tagged.filter(col("_error").isNull).drop("_error")
 
       // Normalize action rows to the (possibly evolved) table schema:
       // missing columns → null, narrower types → up-cast. No-op when the
@@ -316,35 +313,29 @@ object CdcApply {
             }
           }
           // Rejected-record count: a TOTAL, not per-partition — observed
-          // on the fold's scan (no extra job, no extra payload decode)
-          // when the fold reads the batch exactly once (foldStrategy
-          // "window"/"agg"); the "join" fold scans the batch twice, which would
-          // double-count an observed metric, so it keeps a dedicated
-          // count job. Caveat (documented): observed metrics follow
-          // accumulator semantics — a re-run shuffle stage after executor
-          // loss could overcount; the >0 quarantine gate is unaffected
-          // (zero stays zero) and the quarantine WRITE derives its rows
-          // from `tagged`, not from this count.
-          val (foldInput, rejectedCountF): (DataFrame, () => Long) =
-            if (spec.foldStrategy != "join") { // agg and window both scan the batch exactly once
-              val obs = org.apache.spark.sql.Observation()
-              val v = tagged
-                .observe(obs, sum(when(col("_error").isNotNull, 1L).otherwise(0L)).as("bad"))
-                .filter(col("_error").isNull).drop("_error")
-              // The metric can be LOST (not just zero): when the fold leg
-              // materializes empty (all-wipe / all-reject / empty batch),
-              // AQE's empty-relation propagation replaces the subtree and
-              // the CollectMetrics node leaves the final plan — Spark 4's
-              // ObservationManager then completes the observation with an
-              // EMPTY row. Fall back to a dedicated count for exactly
-              // those degenerate batches; steady-state epochs never pay it.
-              (v, () => obs.get.get("bad") match {
-                case Some(null) => 0L // observed node saw zero rows (empty batch)
-                case Some(n)    => n.asInstanceOf[Long]
-                case None       => tagged.filter(col("_error").isNotNull).count()
-              })
-            } else
-              (valid, () => tagged.filter(col("_error").isNotNull).count())
+          // on the fold's scan (the fold reads the batch exactly once: no
+          // extra job, no extra payload decode). Caveat (documented):
+          // observed metrics follow accumulator semantics — a re-run
+          // shuffle stage after executor loss could overcount; the >0
+          // quarantine gate is unaffected (zero stays zero) and the
+          // quarantine WRITE derives its rows from `tagged`, not from
+          // this count.
+          val obs = org.apache.spark.sql.Observation()
+          val foldInput = tagged
+            .observe(obs, sum(when(col("_error").isNotNull, 1L).otherwise(0L)).as("bad"))
+            .filter(col("_error").isNull).drop("_error")
+          // The metric can be LOST (not just zero): when the fold leg
+          // materializes empty (all-wipe / all-reject / empty batch),
+          // AQE's empty-relation propagation replaces the subtree and
+          // the CollectMetrics node leaves the final plan — Spark 4's
+          // ObservationManager then completes the observation with an
+          // EMPTY row. Fall back to a dedicated count for exactly
+          // those degenerate batches; steady-state epochs never pay it.
+          val rejectedCountF = () => obs.get.get("bad") match {
+            case Some(null) => 0L // observed node saw zero rows (empty batch)
+            case Some(n)    => n.asInstanceOf[Long]
+            case None       => tagged.filter(col("_error").isNotNull).count()
+          }
           // The wipe-broadcast gate needs a count BEFORE the fold plan is
           // built (an unhinted wipe join materializes the payload side
           // into an extra shuffle even when AQE later converts it to
@@ -401,11 +392,7 @@ object CdcApply {
             // join relation" every epoch
             val wipes = if (nWipes <= WipeBroadcastMax) broadcast(wipes0) else wipes0
             val aligned = if (spec.foldAlignment == "bucket") Some(snap0.numBuckets) else None
-            val actions = spec.foldStrategy match {
-              case "agg"    => MergeEngine.netActions(foldInput, wipes, aligned)
-              case "window" => MergeEngine.netActionsViaWindow(foldInput, wipes, aligned)
-              case _        => MergeEngine.netActionsViaJoin(foldInput, wipes)
-            }
+            val actions = MergeEngine.netActions(foldInput, wipes, aligned)
             applyMor(spark, table, snap0, normalize(actions), wipes0, evolved, epoch, planF,
               rejectedCountF, writeQuarantine, preAligned = aligned.isDefined,
               auditRef = auditRef, extraProps = extraProps)
@@ -423,6 +410,7 @@ object CdcApply {
           // double-count them otherwise)
           if (epoch.isDefined) writeQuarantine(rejectedCount)
 
+          val valid = tagged.filter(col("_error").isNull).drop("_error")
           // series wipes: distributed aggregate over the batch — never
           // collected to the driver; broadcast into the fold/merge only
           // below the bulk-delete threshold. The (common) wipe-free batch
@@ -438,11 +426,7 @@ object CdcApply {
             else MergeEngine.seriesWipes(valid)
           val wipes = if (nWipeEvents <= WipeBroadcastMax) broadcast(wipes0) else wipes0
 
-          val actions = spec.foldStrategy match {
-            case "agg"    => MergeEngine.netActions(valid, wipes)
-            case "window" => MergeEngine.netActionsViaWindow(valid, wipes)
-            case _        => MergeEngine.netActionsViaJoin(valid, wipes)
-          }
+          val actions = MergeEngine.netActions(valid, wipes)
 
           if (touched.isEmpty) {
             // Nothing to merge (e.g. all events invalid) — still commit the
@@ -457,7 +441,7 @@ object CdcApply {
             if (epoch.isEmpty) writeQuarantine(rejectedCount)
             return BatchResult(snap, skipped = false, 0L, eventsSeen, rejectedCount)
           }
-          val r = applyCow(spark, table, normalize(actions), wipes, touched, evolved, spec, epoch, lineage,
+          val r = applyCow(spark, table, normalize(actions), wipes, touched, evolved, epoch, lineage,
             eventsSeen, rejectedCount, nbPlan = snap0.numBuckets, extraProps = extraProps)
           if (epoch.isEmpty) writeQuarantine(rejectedCount)
           r
@@ -556,8 +540,8 @@ object CdcApply {
     // commit is the first consumer of the lineage
     val lineage = scala.concurrent.Await.result(lineageF, scala.concurrent.duration.Duration.Inf)
     val eventsSeen = lineage.map(_.getAs[Long]("n")).sum
-    // observed on the fold scan of the staging above (agg fold) or a
-    // dedicated count (join fold) — ready by the time staging completed
+    // observed on the fold scan of the staging above (or, for a batch
+    // whose fold leg ran empty, a dedicated count) — ready by now
     val rejectedCount = rejectedCountF()
 
     // Epoch-tagged batches quarantine BEFORE the commit: a crash between
@@ -657,7 +641,6 @@ object CdcApply {
       wipes: DataFrame,
       touched: Set[Int],
       evolved: StructType,
-      spec: MergeSpec,
       epoch: Option[(String, Long)],
       lineage: Array[org.apache.spark.sql.Row],
       eventsSeen: Long,
@@ -719,21 +702,14 @@ object CdcApply {
       val merged = MergeEngine.merge(base, actionsNow, wipes)
 
       val stage = table.newStageDir()
-      // Skew-aware write partitioning (MergeSpec.writeSalts): a hot
-      // conversation (Zipf head) concentrates in one bucket; partitioning
-      // the write by bucket alone would make that bucket a straggler task.
-      // Default = AQE rebalance (hot partitions split, cold coalesce);
-      // fixed salting available for extreme known skew. Files stay
-      // bucket-pure via partitionBy, so pruning is unaffected. AQE handles
-      // the join side; this handles the write side.
-      val withBucket = merged.withColumn("bucket", MergeEngine.bucketOf(col("conv_id"), nb0))
-      val partitioned = spec.writeSalts match {
-        case 0 => withBucket.hint("rebalance", "bucket") // AQE splits hot buckets, coalesces cold
-        case 1 => withBucket.repartition(col("bucket"))
-        case k => withBucket.repartition(col("bucket"),
-          pmod(xxhash64(col("conv_id"), col("turn_idx")), lit(k.toLong)))
-      }
-      partitioned
+      // Skew-aware write partitioning: a hot conversation (Zipf head)
+      // concentrates in one bucket; partitioning the write by bucket alone
+      // would make that bucket a straggler task. AQE rebalance splits hot
+      // buckets and coalesces cold ones; files stay bucket-pure via
+      // partitionBy, so pruning is unaffected. AQE handles the join side;
+      // this handles the write side.
+      merged.withColumn("bucket", MergeEngine.bucketOf(col("conv_id"), nb0))
+        .hint("rebalance", "bucket")
         .sortWithinPartitions("bucket", "conv_id", "turn_idx")
         .write.mode("overwrite").options(writeOptions)
         .partitionBy("bucket")

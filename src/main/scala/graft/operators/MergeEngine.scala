@@ -23,18 +23,19 @@ import graft.model.NetAction
   *    turn_idx == null ⇒ series delete of the whole conversation
   *    (README.md:126-137).
   *
-  * Scale design: the fold is ONE hash aggregation on (conv_id, turn_idx)
-  * built from conditional `max_by`s — whole-stage-codegen'd, with
-  * map-side partial aggregation, so a hot conversation (Zipf skew) is
-  * spread over its turns and a hot turn collapses map-side before the
-  * shuffle. No per-group buffering or sorting anywhere. This is what
-  * replaces the reference's in-memory buffer at 10^10-event scale.
+  * Scale design: the fold is ONE exchange on (conv_id, turn_idx) and ONE
+  * sort of the batch by offset inside each key, read by one Window pass
+  * (`row_number` for the key's last event, a full-frame max for its
+  * anchor); each key group is buffered once. Hashing on both key
+  * columns spreads a hot conversation (Zipf skew) over its turns. This
+  * is what replaces the reference's in-memory buffer at 10^10-event
+  * scale.
   *
   * Order authority: `offset` (strictly increasing per log partition;
   * a conversation is keyed to one partition, so per-key offsets are
   * totally ordered — the Connect delivery contract). Duplicate delivery
-  * of the same offset is naturally idempotent: `max_by` picks one of two
-  * identical rows.
+  * of the same offset is naturally idempotent: `row_number` picks one of
+  * two identical rows.
   */
 object MergeEngine {
 
@@ -138,20 +139,37 @@ object MergeEngine {
     * threshold); an unhinted wipe set joins by shuffle, and AQE still
     * broadcasts it at runtime if it is actually small.
     *
+    * Physical shape: ONE exchange on the grouping key, ONE sort of the
+    * payload-bearing batch, one Window pass, no aggregation. In every
+    * branch of the derivation the winning VALUE is the after-image of the
+    * key's LAST event (anchor last ⇒ anchor row; updates after a live
+    * anchor, or updates only ⇒ last update; anchor = delete ⇒ row forced
+    * null), so a window over (key ORDER BY offset DESC) computes every
+    * winner in one pass over rows sorted once —
+    *  - `row_number() = 1`  ⇒ the key's last event (value + lineage; offset
+    *    ties are duplicate deliveries of identical rows, so either pick is
+    *    the same row),
+    *  - `max(struct(offset, op)) filtered to non-updates` over the full
+    *    frame ⇒ the anchor (struct ordering compares offset first; ties
+    *    again only between identical duplicates),
+    *  - `wipe_off` is constant within a key (it joins on conv_id), so the
+    *    surviving row carries it.
+    * The exchange carries raw rows: re-delivered duplicates are not
+    * collapsed before it.
+    *
     * `bucketed = Some(n)`: BUCKET-ALIGNED fold. The batch is exchanged
     * ONCE onto the table's bucket key (`bucketOf(conv_id) % n`) before
-    * the fold, the fold groups on (bucket, key) — HashPartitioning(bucket)
-    * satisfies the agg's ClusteredDistribution because bucket is one of
-    * the grouping keys — and the output carries `bucket`, already laid
-    * out for a per-bucket delta write with NO further exchange. The
-    * payload crosses the wire exactly once per epoch (key-aligned plans
-    * cross twice: fold exchange + write redistribution). Trade-off: the
-    * bucket exchange moves RAW events, so map-side partial aggregation
-    * no longer collapses duplicates pre-shuffle — prefer key alignment
-    * when re-delivery duplication exceeds ~2x (see MergeSpec.foldAlignment).
+    * the fold, the window partitions on (bucket, key) — HashPartitioning(
+    * bucket) satisfies its ClusteredDistribution because bucket is a
+    * prefix of the partition spec — and the output carries `bucket`,
+    * already laid out for a per-bucket delta write with NO further
+    * exchange. The payload crosses the wire exactly once per epoch
+    * (key-aligned plans cross twice: fold exchange + write
+    * redistribution); see MergeSpec.foldAlignment.
     */
   def netActions(events: DataFrame, wipes: DataFrame,
                  bucketed: Option[Int] = None): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val turnEvents0 = events
       .filter(col("turn_idx").isNotNull)
       .join(wipes, Seq("conv_id"), "left")
@@ -159,95 +177,6 @@ object MergeEngine {
     // repartition AFTER the wipe join: a bulk (non-broadcast) wipe join
     // exchanges on conv_id anyway; aligning before it would add a third
     // payload crossing instead of removing one
-    val turnEvents = bucketed match {
-      case Some(n) => turnEvents0
-        .withColumn("bucket", bucketOf(col("conv_id"), n))
-        .repartition(n, col("bucket"))
-      case None => turnEvents0
-    }
-    val groupCols = bucketed.map(_ => "bucket").toSeq ++ Seq("conv_id", "turn_idx")
-
-    val isUpd = col("op") === "update"
-    val anchorOff = when(!isUpd, col("offset"))
-
-    // The payload rides through the aggregation exactly ONCE: in every
-    // branch of the derivation the winning VALUE is the after-image of
-    // the key's LAST event —
-    //   anchor last (insert/upsert)        ⇒ anchor row = last row;
-    //   update(s) after a live anchor      ⇒ last update = last row;
-    //   updates only (no anchor)           ⇒ last update = last row;
-    //   anchor = delete                    ⇒ row forced null below
-    //     (a later update would itself out-sequence the delete as the
-    //      value source, but the Del branch discards the value anyway).
-    // Keeping two max_by struct buffers (anchor + update) would move the
-    // payload through the partial-agg exchange twice for nothing —
-    // measured as the dominant shuffle bytes of the fold at bench scale.
-    turnEvents
-      .groupBy(groupCols.map(col): _*)
-      .agg(
-        max_by(struct(col("after").as("after"), col("partition").as("part")), col("offset"))
-          .as("last"),
-        max(col("offset")).as("last_off"),
-        max(anchorOff).as("a_off"),
-        max_by(col("op"), anchorOff).as("a_op"),
-        max(col("wipe_off")).as("wipe_off"))
-      .select(
-        (bucketed.map(_ => col("bucket")).toSeq ++ Seq(
-        col("conv_id"),
-        col("turn_idx"),
-        when(col("a_off").isNull && col("wipe_off").isNull, NetAction.UpdateIfExists)
-          .when(col("a_off").isNull, NetAction.Del)
-          .when(col("a_op") === "delete", NetAction.Del)
-          .otherwise(NetAction.Put)
-          .as("action"),
-        when(col("a_off").isNotNull && col("a_op") === "delete", lit(null))
-          .otherwise(col("last.after"))
-          .as("row"),
-        // lineage of the winning version (the reference's optional kafka
-        // coordinate columns, `.../sink/JdbcSinkConfig.java:52-59`)
-        col("last_off").as("src_offset"),
-        col("last.part").as("src_partition"))): _*)
-  }
-
-  /** Fold strategy 3 — "single-sort window". Same contract as
-    * [[netActions]] (identical output columns and values; pinned by the
-    * same oracle equivalence suites), different physical shape: ONE
-    * exchange on the grouping key, ONE sort of the payload-bearing batch,
-    * one Window pass, no aggregation at all.
-    *
-    * Why it can beat the aggregate fold: the struct-valued `max_by`
-    * forces SortAggregate, and Spark always plans the partial+final
-    * pair — the key-aligned agg fold therefore sorts the full payload
-    * TWICE (map-side sort before the partial, reduce-side sort before
-    * the final), while the partial aggregation collapses almost nothing
-    * at realistic (~2%) re-delivery duplication. A window over
-    * (key ORDER BY offset DESC) computes the same four winners —
-    *  - `row_number() = 1`  ⇒ the key's last event (value + lineage:
-    *    identical to `max_by(struct(after, part), offset)`; offset ties
-    *    are duplicate deliveries of identical rows, so either pick is
-    *    the same row),
-    *  - `max(struct(offset, op)) filtered to non-updates` over the full
-    *    frame ⇒ (a_off, a_op) (struct ordering compares offset first;
-    *    ties again only between identical duplicates),
-    *  - `wipe_off` is constant within a key (it joins on conv_id), so
-    *    the surviving row carries it —
-    * in one pass over rows sorted once. Trade-off vs "agg": the exchange
-    * carries raw rows (no map-side collapse), so prefer "agg" when
-    * re-delivery duplication is heavy (same rule as foldAlignment).
-    *
-    * `bucketed` behaves exactly as in [[netActions]]: the explicit
-    * bucket exchange satisfies the window's ClusteredDistribution
-    * (bucket is a prefix of the partition spec), so the fold stays a
-    * single-exchange plan whose output is pre-laid-out for the
-    * per-bucket delta write.
-    */
-  def netActionsViaWindow(events: DataFrame, wipes: DataFrame,
-                          bucketed: Option[Int] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val turnEvents0 = events
-      .filter(col("turn_idx").isNotNull)
-      .join(wipes, Seq("conv_id"), "left")
-      .filter(col("offset") > coalesce(col("wipe_off"), lit(Long.MinValue)))
     val turnEvents = bucketed match {
       case Some(n) => turnEvents0
         .withColumn("bucket", bucketOf(col("conv_id"), n))
@@ -285,78 +214,10 @@ object MergeEngine {
         when(col("_a").isNotNull && col("_a.op") === "delete", lit(null))
           .otherwise(col("after"))
           .as("row"),
+        // lineage of the winning version (the reference's optional kafka
+        // coordinate columns, `.../sink/JdbcSinkConfig.java:52-59`)
         col("offset").as("src_offset"),
         col("partition").as("src_partition"))): _*)
-  }
-
-  /** Fold strategy 2 — "narrow agg + deciding-row fetch". The struct-valued
-    * `max_by` in [[netActions]] forces SortAggregate (struct buffers cannot
-    * hash-aggregate), which sorts the full payload-bearing batch twice.
-    * This variant keeps the aggregation ALL-PRIMITIVE (offsets + an int
-    * opcode → HashAggregate, payload never enters the agg shuffle), then
-    * fetches the single deciding event row per key with one equi-join,
-    * and dedupes re-delivered duplicates with a hash-based distinct.
-    * Semantically identical to [[netActions]] (same oracle equivalence
-    * suites run against both).
-    */
-  def netActionsViaJoin(events: DataFrame, wipes: DataFrame): DataFrame = {
-    // NOTE: bucket alignment (netActions' `bucketed`) is deliberately NOT
-    // offered here: the deciding-row fetch is a shuffled join, and Spark's
-    // co-partition rule (requireAllClusterKeysForCoPartition, default on)
-    // re-exchanges both sides on the FULL join key even when both are
-    // already partitioned by the bucket — measured as a third payload
-    // crossing, strictly worse than the key-aligned plan below.
-    val turnEvents = events
-      .filter(col("turn_idx").isNotNull)
-      .join(wipes, Seq("conv_id"), "left")
-      .filter(col("offset") > coalesce(col("wipe_off"), lit(Long.MinValue)))
-
-    val isUpd = col("op") === "update"
-    val anchorOff = when(!isUpd, col("offset"))
-    val updOff = when(isUpd, col("offset"))
-    val opInt = when(col("op") === "delete", 1).otherwise(2) // only delete-vs-write matters for the anchor
-
-    val winners = turnEvents
-      .groupBy("conv_id", "turn_idx")
-      .agg(
-        max(anchorOff).as("a_off"),
-        max_by(opInt, anchorOff).as("a_op"),
-        max(updOff).as("u_off"),
-        max(col("wipe_off")).as("wipe_off"))
-      .withColumn("action",
-        when(col("a_off").isNotNull && col("a_op") === 1, NetAction.Del)
-          .when(col("a_off").isNull && col("wipe_off").isNull, NetAction.UpdateIfExists)
-          .when(col("a_off").isNull, NetAction.Del)
-          .otherwise(NetAction.Put))
-      .withColumn("fetch_off",
-        when(col("action") === NetAction.Del, lit(null))
-          .when(col("a_off").isNull || col("u_off") > col("a_off"), col("u_off"))
-          .otherwise(col("a_off")))
-
-    val dels = winners.filter(col("action") === NetAction.Del).select(
-      col("conv_id"), col("turn_idx"), col("action"),
-      lit(null).cast(events.schema("after").dataType).as("row"),
-      greatest(col("a_off"), col("u_off")).as("src_offset"),
-      lit(null).cast("int").as("src_partition"))
-
-    val ev = turnEvents.select(
-      col("conv_id"), col("turn_idx"), col("offset"),
-      col("after"), col("partition"))
-    // SHUFFLE_HASH on the narrow winners side: a sort-merge join would
-    // sort the payload-bearing ev side — the cost this strategy removes
-    val fetched = winners.filter(col("fetch_off").isNotNull).hint("shuffle_hash").as("w")
-      .join(ev.as("e"),
-        col("w.conv_id") === col("e.conv_id") && col("w.turn_idx") === col("e.turn_idx") &&
-          col("e.offset") === col("w.fetch_off"))
-      .select(
-        col("e.conv_id").as("conv_id"), col("e.turn_idx").as("turn_idx"), col("w.action").as("action"),
-        col("e.after").as("row"),
-        col("e.offset").as("src_offset"),
-        col("e.partition").as("src_partition"))
-      // re-delivered duplicates fetch identical rows — hash distinct
-      .distinct()
-
-    fetched.unionByName(dels)
   }
 
   /** Copy-on-write merge of net actions (+ series wipes) into the base

@@ -367,8 +367,10 @@ object ContentQueries {
     * compression + union by attaching the lexicographically larger root)
     * over the collected edge list, then each component labeled with its
     * min doc_id. Only reachable under the [[dedupClusters]] count gate.
+    * Output: a row for every non-root vertex; a vertex without a row is
+    * a root, labeled with itself.
     */
-  private def ccUnionFindDriver(s: SparkSession, pairs: DataFrame): DataFrame = {
+  private[graft] def ccUnionFindDriver(s: SparkSession, pairs: DataFrame): DataFrame = {
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
     def find(x: Long): Long = {
       var r = x
@@ -385,7 +387,10 @@ object ContentQueries {
       } else parent.getOrElseUpdate(ra, ra)
     }
     import s.implicits._
-    parent.keysIterator.map(v => (v, find(v))).toSeq.toDF("doc_id", "cluster_id")
+    // snapshot the keys first: `find` writes every key it visits, and a
+    // write to a map one key below its resize threshold grows the table
+    // under a live key iterator, which then silently skips keys
+    parent.keys.toList.map(v => (v, find(v))).toDF("doc_id", "cluster_id")
   }
 
   /** Distributed connected components over the duplicate-pair graph:

@@ -19,7 +19,7 @@ class MergeEngineSpec extends SparkSuite {
     TestHelpers.bothStrategies.foreach { spec =>
       val got = engineReplay(spark, batches, spec = spec)
       assert(got == want,
-        s"[$clue / ${spec.mergeStrategy}@${spec.morCompactThreshold}] engine != oracle\nengine: $got\noracle: $want")
+        s"[$clue / ${spec.mergeStrategy}@${spec.morCompactThreshold}/${spec.foldAlignment}] engine != oracle\nengine: $got\noracle: $want")
     }
   }
 
@@ -167,15 +167,10 @@ object TestHelpers {
 
   /** Both merge strategies must produce the oracle state. */
   val bothStrategies: Seq[MergeSpec] = Seq(
-    MergeSpec(mergeStrategy = "mor"), // default fold: window (netActionsViaWindow)
+    MergeSpec(mergeStrategy = "mor"), // key-aligned fold
     // aggressive compaction: exercise the delta→base fold mid-replay
     MergeSpec(mergeStrategy = "mor", morCompactThreshold = 1),
-    // bucket-aligned window fold: the single-exchange plan stays oracle-true
+    // bucket-aligned fold: the single-exchange plan stays oracle-true
     MergeSpec(mergeStrategy = "mor", foldAlignment = "bucket"),
-    // aggregate fold (the heavy-duplication alternative), both alignments
-    MergeSpec(mergeStrategy = "mor", foldStrategy = "agg"),
-    MergeSpec(mergeStrategy = "mor", foldStrategy = "agg", foldAlignment = "bucket"),
-    // narrow-agg + deciding-row fetch fold (its own rejected-count path)
-    MergeSpec(mergeStrategy = "mor", foldStrategy = "join"),
     MergeSpec(mergeStrategy = "cow"))
 }

@@ -70,6 +70,24 @@ class QueriesSpec extends SparkSuite {
     assert(driver == distributed && driver.nonEmpty)
   }
 
+  test("q33 driver union-find labels every vertex when its map sits one key below a resize threshold") {
+    import spark.implicits._
+    // each chain (b+1, b+2), (b, b+1) leaves the keys b+1 and b+2 in the
+    // union-find map (the root b is implicit), plus the lone pair (1, 2):
+    // n keys, one below the map's resize threshold for every n here, so
+    // the first write during labelling grows the table
+    for (nKeys <- Seq(11, 23, 47, 95)) {
+      val roots = (0 until nKeys / 2).map(i => 10L * i + 10)
+      val pairs = roots.flatMap(b => Seq((b + 1, b + 2), (b, b + 1))) :+ ((1L, 2L))
+      val want = (roots.flatMap(b => Seq(b -> b, (b + 1) -> b, (b + 2) -> b)) ++ Seq(1L -> 1L, 2L -> 1L)).toMap
+      val labels = queries.ContentQueries.ccUnionFindDriver(spark, pairs.toDF("ida", "idb"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // as in dedupClusters, a vertex without a label row is its own label
+      val got = want.keys.map(v => v -> labels.getOrElse(v, v)).toMap
+      assert(got == want, s"$nKeys keys: wrong labels ${got.toSeq.filter { case (v, l) => want(v) != l }.sorted}")
+    }
+  }
+
   test("q26 knn: exactly 3 neighbors per probe, no self-match") {
     val df = SparkEntry.queries("q26_embed_knn")(spark, dir)
     val perProbe = df.groupBy("pid").count().collect()

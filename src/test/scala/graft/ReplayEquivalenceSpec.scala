@@ -54,7 +54,7 @@ class ReplayEquivalenceSpec extends SparkSuite {
       assert(
         got.map(t => (t.conv_id, t.turn_idx, t.text)) ==
           want.map(t => (t.conv_id, t.turn_idx, t.text)),
-        s"seed=$seed n=$n convs=$convs turns=$turns batches=$nBatches strategy=${spec.mergeStrategy}@${spec.morCompactThreshold}")
+        s"seed=$seed n=$n convs=$convs turns=$turns batches=$nBatches strategy=${spec.mergeStrategy}@${spec.morCompactThreshold}/${spec.foldAlignment}")
     }
   }
 

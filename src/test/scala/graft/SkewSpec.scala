@@ -13,8 +13,7 @@ import graft.operators.MergeEngine
   * VERDICT r05 #5). The fold's shuffle key is (conv_id, turn_idx), so a
   * Zipf-hot conversation spreads across its turns: no reduce task may
   * read more than 2x the median task's shuffle rows even when ONE
-  * conversation carries ~20% of the batch. Run against both the default
-  * window fold and the aggregate fold.
+  * conversation carries ~20% of the batch.
   *
   * Reference anchor: hash distribution exists exactly to spread hot
   * keys (`/root/reference/src/main/java/io/confluent/connect/jdbc/dialect/PostgreSqlDatabaseDialect.java:208-232`).
@@ -79,19 +78,14 @@ class SkewSpec extends SparkSuite {
     conf.set("spark.sql.shuffle.partitions", "8")
     conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     try {
-      Seq(
-        "window" -> MergeEngine.netActionsViaWindow(events, wipes),
-        "agg"    -> MergeEngine.netActions(events, wipes)
-      ).foreach { case (name, actions) =>
-        val rows = reduceTaskRows(actions)
-        assert(rows.size >= 4, s"[$name] expected >=4 reduce tasks, got ${rows.size}")
-        val sorted = rows.sorted
-        val median = sorted(sorted.size / 2).max(1L)
-        val max = sorted.last
-        assert(max <= 2 * median,
-          s"[$name] hot-key skew leaked into the fold shuffle: task rows $sorted " +
-            s"(max $max > 2x median $median) — the (conv_id, turn_idx) key must spread a hot conversation")
-      }
+      val rows = reduceTaskRows(MergeEngine.netActions(events, wipes))
+      assert(rows.size >= 4, s"expected >=4 reduce tasks, got ${rows.size}")
+      val sorted = rows.sorted
+      val median = sorted(sorted.size / 2).max(1L)
+      val max = sorted.last
+      assert(max <= 2 * median,
+        s"hot-key skew leaked into the fold shuffle: task rows $sorted " +
+          s"(max $max > 2x median $median) — the (conv_id, turn_idx) key must spread a hot conversation")
     } finally {
       conf.set("spark.sql.shuffle.partitions", oldPart)
       conf.set("spark.sql.adaptive.coalescePartitions.enabled", oldCoalesce)
@@ -101,17 +95,12 @@ class SkewSpec extends SparkSuite {
   test("fold exchange hashes on BOTH conv_id and turn_idx (the skew-spreading key)") {
     val events = hotBatch(1000)
     val wipes = broadcast(MergeEngine.seriesWipes(events))
-    Seq(
-      "window" -> MergeEngine.netActionsViaWindow(events, wipes),
-      "agg"    -> MergeEngine.netActions(events, wipes)
-    ).foreach { case (name, actions) =>
-      val plan = actions.queryExecution
-        .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      val exchangeLine = plan.linesIterator
-        .find(l => l.trim.startsWith("Arguments: hashpartitioning"))
-        .getOrElse(fail(s"[$name] no hash exchange in plan:\n${plan.take(2000)}"))
-      assert(exchangeLine.contains("conv_id") && exchangeLine.contains("turn_idx"),
-        s"[$name] fold must exchange on (conv_id, turn_idx), got: $exchangeLine")
-    }
+    val plan = MergeEngine.netActions(events, wipes).queryExecution
+      .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    val exchangeLine = plan.linesIterator
+      .find(l => l.trim.startsWith("Arguments: hashpartitioning"))
+      .getOrElse(fail(s"no hash exchange in plan:\n${plan.take(2000)}"))
+    assert(exchangeLine.contains("conv_id") && exchangeLine.contains("turn_idx"),
+      s"fold must exchange on (conv_id, turn_idx), got: $exchangeLine")
   }
 }

@@ -37,7 +37,6 @@ class SpecFlagsSpec extends SparkSuite {
     val evs = eventsDF(spark, Seq(ins(0, "c1", 0, "v0")))
     for (bad <- Seq(
       MergeSpec(mergeStrategy = "merge-on-read"),
-      MergeSpec(foldStrategy = "aggregate"),
       MergeSpec(foldAlignment = "buckets"))) {
       val e = intercept[IllegalArgumentException](CdcApply.applyBatch(spark, t, evs, spec = bad))
       assert(e.getMessage.contains("must be"), e.getMessage)
