@@ -52,6 +52,65 @@ class PlanSpec extends SparkSuite {
     assert(windows == 1, s"expected 1 Window node, got $windows:\n${plan.take(3000)}")
   }
 
+  /** The aggregate formulation of the net-action fold, kept here as an
+    * independent reference for [[graft.operators.MergeEngine.netActions]]:
+    * one group per (conv_id, turn_idx) built from conditional `max_by`s —
+    * the key's last event supplies value and lineage, the last non-update
+    * its anchor, and a wipe with no later anchor turns updates into a
+    * delete.
+    */
+  private def aggFold(events: org.apache.spark.sql.DataFrame,
+                      wipes: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    import graft.model.NetAction
+    val anchorOff = when(col("op") =!= "update", col("offset"))
+    events
+      .filter(col("turn_idx").isNotNull)
+      .join(wipes, Seq("conv_id"), "left")
+      .filter(col("offset") > coalesce(col("wipe_off"), lit(Long.MinValue)))
+      .groupBy("conv_id", "turn_idx")
+      .agg(
+        max_by(struct(col("after").as("after"), col("partition").as("part")), col("offset")).as("last"),
+        max(col("offset")).as("last_off"),
+        max(anchorOff).as("a_off"),
+        max_by(col("op"), anchorOff).as("a_op"),
+        max(col("wipe_off")).as("wipe_off"))
+      .select(
+        col("conv_id"),
+        col("turn_idx"),
+        when(col("a_off").isNull && col("wipe_off").isNull, NetAction.UpdateIfExists)
+          .when(col("a_off").isNull, NetAction.Del)
+          .when(col("a_op") === "delete", NetAction.Del)
+          .otherwise(NetAction.Put)
+          .as("action"),
+        when(col("a_off").isNotNull && col("a_op") === "delete", lit(null))
+          .otherwise(col("last.after"))
+          .as("row"),
+        col("last_off").as("src_offset"),
+        col("last.part").as("src_partition"))
+  }
+
+  test("fold=window equals fold=agg on net actions (both alignments)") {
+    import TestHelpers._
+    val evs = Seq(
+      ins(0, "c1", 0, "a"), upd(1, "c1", 0, "b"), del(2, "c1", Some(0)),
+      ins(3, "c2", 1, "x"), upd(4, "c2", 1, "y"), ins(5, "c3", 0, "z"),
+      del(6, "c3", None), ins(7, "c3", 1, "w"), upd(8, "c4", 2, "u"),
+      ups(9, "c5", 0, "v"), del(10, "c5", Some(0)), upd(11, "c5", 0, "ghost"),
+      // duplicate delivery of an identical row: either pick is the same row
+      ins(3, "c2", 1, "x"))
+    val events = eventsDF(spark, evs)
+    val wipes = broadcast(graft.operators.MergeEngine.seriesWipes(events))
+    val agg = aggFold(events, wipes)
+      .orderBy("conv_id", "turn_idx").collect().map(_.toString).toSeq
+    val win = graft.operators.MergeEngine.netActions(events, wipes)
+      .orderBy("conv_id", "turn_idx").collect().map(_.toString).toSeq
+    val winB = graft.operators.MergeEngine.netActions(events, wipes, Some(8))
+      .drop("bucket").orderBy("conv_id", "turn_idx").collect().map(_.toString).toSeq
+    assert(agg.nonEmpty)
+    assert(agg == win, s"agg:    $agg\nwindow: $win")
+    assert(agg == winB, s"agg:      $agg\nwindow/b: $winB")
+  }
+
   test("bucket-aligned fold: the payload crosses exactly ONE exchange") {
     import TestHelpers._
     val events = eventsDF(spark, Seq(ins(0, "c1", 0, "a"), upd(1, "c1", 0, "b"), ins(2, "c2", 0, "c")))
