@@ -40,8 +40,7 @@ object Demo {
       val batch = log.filter(col("offset") >= b * batchSize && col("offset") < (b + 1) * batchSize)
       val res = CdcApply.applyBatch(spark, table, batch, epoch = Some(("demo", b.toLong)))
       println(s"[demo] epoch $b: applied=${res.eventsSeen} rowsWritten=${res.rowsWritten} " +
-        s"deltaFilesAdded=${res.snapshot.metrics.getOrElse("deltaFilesAdded", 0L)} " +
-        s"bucketsRewritten=${res.snapshot.metrics.getOrElse("bucketsRewritten", 0L)} snapshotV=${res.snapshot.version}")
+        s"deltaFilesAdded=${res.snapshot.metrics.getOrElse("deltaFilesAdded", 0L)} snapshotV=${res.snapshot.version}")
     }
     val secs = (System.nanoTime() - t0) / 1e9
     val state = table.read(spark)

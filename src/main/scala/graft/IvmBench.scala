@@ -46,7 +46,7 @@ object IvmBench {
       s"$dir/log", chunks = epochs)
     val log = spark.read.parquet(s"$dir/log")
 
-    val mor = MergeSpec(mergeStrategy = "mor")
+    val spec = MergeSpec()
     val src = IceLite.create(s"$dir/src", graft.model.Schemas.transcript, 64)
     val vspec = IncrementalView.ViewSpec(
       dims = Seq("role" -> col("role")),
@@ -60,9 +60,9 @@ object IvmBench {
     val spinPre = Bench.spinProbeMs()
     val rows = (0 until epochs).map { e =>
       CdcApply.applyBatch(spark, src, log.filter(col("chunk") === e).drop("chunk"),
-        spec = mor, epoch = Some(("ivmbench", e.toLong)))
-      val (_, refreshMs) = ms(IncrementalView.refresh(spark, src, view, vspec, mor))
-      val (_, syncMs) = ms(Mirror.sync(spark, src, mirror, mor))
+        spec = spec, epoch = Some(("ivmbench", e.toLong)))
+      val (_, refreshMs) = ms(IncrementalView.refresh(spark, src, view, vspec, spec))
+      val (_, syncMs) = ms(Mirror.sync(spark, src, mirror, spec))
       // the naive alternative the view replaces: full recompute of the
       // same aggregate over the whole corpus (collect is 3 rows)
       val (_, recomputeMs) = ms(src.read(spark).groupBy("role")

@@ -7,17 +7,15 @@ import org.apache.spark.sql.functions._
 
 /** Write-amplification evidence: per-batch wall time over a GROWING table.
   *
-  * Copy-on-write rewrites every touched bucket per batch; with uniformly
-  * distributed keys each batch touches all buckets, so per-batch cost
-  * grows with TABLE STATE (O(state) write amplification — the 10^10-event
-  * scale killer). Merge-on-read appends O(changes) delta files per batch
-  * and amortizes the rewrite into threshold-bounded compaction, matching
-  * the reference's O(changes)-per-put row-level DML
-  * (`/root/reference/src/main/java/io/confluent/connect/jdbc/sink/BufferedRecords.java:294-336`).
+  * Merge-on-read appends O(changes) delta files per batch and amortizes
+  * the rewrite into threshold-bounded compaction, matching the
+  * reference's O(changes)-per-put row-level DML
+  * (`.../sink/BufferedRecords.java:294-336`),
+  * so per-batch cost should stay flat while table state grows.
   *
   * Usage: runMain graft.MorBench [epochs] [eventsPerEpoch]
-  * Emits per-epoch seconds for both strategies + a head/tail slope ratio;
-  * writes BENCH/mor-flatness.md.
+  * Emits per-epoch seconds + a head/tail slope ratio; writes
+  * BENCH/mor-flatness.md.
   */
 object MorBench {
   def main(args: Array[String]): Unit = {
@@ -48,52 +46,37 @@ object MorBench {
     val log = spark.read.parquet(logDir)
     val schema = graft.model.Schemas.transcript
 
-    def run(strategy: String): Seq[Double] = {
-      val dir = Files.createTempDirectory(Bench.tmpBase, s"mor-flat-$strategy").toString
-      val table = IceLite.create(s"$dir/t", schema, 128)
-      val spec = graft.model.MergeSpec(numBuckets = 128, mergeStrategy = strategy,
-        morCompactThreshold = 4)
-      val times = (0 until epochs).map { b =>
-        val t0 = System.nanoTime()
-        CdcApply.applyBatch(spark, table, log.filter(col("chunk") === b).drop("chunk"),
-          spec = spec, epoch = Some((s"flat-$strategy", b.toLong)))
-        val s = (System.nanoTime() - t0) / 1e9
-        println(f"[morbench] $strategy epoch $b: $s%.2fs (state files=${table.dataFiles().size}, deltas=${table.deltaFiles().size})")
-        s
-      }
-      val rows = table.read(spark).count()
-      println(s"[morbench] $strategy final state rows=$rows")
-      Bench.deleteRecursively(dir)
-      times
+    val dir = Files.createTempDirectory(Bench.tmpBase, "mor-flat").toString
+    val table = IceLite.create(s"$dir/t", schema, 128)
+    val spec = graft.model.MergeSpec(numBuckets = 128, morCompactThreshold = 4)
+    val mor = (0 until epochs).map { b =>
+      val t0 = System.nanoTime()
+      CdcApply.applyBatch(spark, table, log.filter(col("chunk") === b).drop("chunk"),
+        spec = spec, epoch = Some(("flat", b.toLong)))
+      val s = (System.nanoTime() - t0) / 1e9
+      println(f"[morbench] epoch $b: $s%.2fs (state files=${table.dataFiles().size}, deltas=${table.deltaFiles().size})")
+      s
     }
+    println(s"[morbench] final state rows=${table.read(spark).count()}")
+    Bench.deleteRecursively(dir)
 
-    // mor first, cow second (any JVM warmup favors cow — conservative)
-    val mor = run("mor")
-    val cow = run("cow")
-
-    def slope(ts: Seq[Double]): Double = {
-      val h = ts.take(3).sum / 3
-      val t = ts.takeRight(3).sum / 3
-      t / h
-    }
-    val (sm, sc) = (slope(mor), slope(cow))
-    println(f"[morbench] head->tail per-batch slope: mor ${sm}%.2fx vs cow ${sc}%.2fx (1.0 = flat)")
+    val sm = mor.takeRight(3).sum / mor.take(3).sum
+    println(f"[morbench] head->tail per-batch slope: mor ${sm}%.2fx (1.0 = flat)")
 
     val md =
       f"""# BENCH — merge-on-read write-amplification flatness
          |
          |$epochs epochs x $perEpoch%,d change events over a GROWING table
          |(fresh keyspace per epoch, 128 buckets, local[32], /dev/shm),
-         |same seeded input for both strategies, one JVM.
+         |seeded input, one JVM.
          |
-         || epoch | mor (s) | cow (s) |
-         ||---|---|---|
-         |${mor.indices.map(i => f"| $i | ${mor(i)}%.2f | ${cow(i)}%.2f |").mkString("\n")}
+         || epoch | mor (s) |
+         ||---|---|
+         |${mor.indices.map(i => f"| $i | ${mor(i)}%.2f |").mkString("\n")}
          |
          |Head→tail per-batch slope (avg of last 3 / first 3):
-         |**mor ${sm}%.2fx (flat, O(changes) per batch + budgeted
-         |compaction)** vs **cow ${sc}%.2fx (grows with table state)**.
-         |mor epochs carry the BUDGETED inline compaction (auto budget =
+         |**mor ${sm}%.2fx** (1.0 = flat: O(changes) per batch + budgeted
+         |compaction). Epochs carry the BUDGETED inline compaction (auto budget =
          |numBuckets/threshold buckets per epoch, most-backlogged first,
          |threshold 4 delta files/bucket): the amortized rewrite is spread
          |evenly instead of stalling single epochs 7-9x (the pre-budget

@@ -40,19 +40,15 @@ object ProfileReplay {
     Bench.deleteRecursively(warm)
     // each entry is a MergeSpec.foldAlignment value
     val alignments = sys.env.getOrElse("PROF_FOLDS", "key,bucket").split(",").map(_.trim)
-    val strategies = sys.env.getOrElse("PROF_STRATEGIES", "mor").split(",").map(_.trim)
     val nBatches = sys.env.getOrElse("PROF_BATCHES", "2").toInt
     (1 to sys.env.getOrElse("PROF_REPEATS", "1").toInt).foreach { rep =>
       alignments.foreach { f =>
-        strategies.foreach { strat =>
-          println(s"[prof] ===== run $rep fold=$f strategy=$strat =====")
-          val logDir = java.nio.file.Files.createTempDirectory(Bench.tmpBase, "prof-log").toString
-          val sec = Bench.replay(spark, nEvents, numBatches = nBatches, buckets = 128, logDir = logDir,
-            spec = graft.model.MergeSpec(numBuckets = 128, foldAlignment = f,
-              mergeStrategy = strat)).sum
-          println(f"[prof] run $rep fold=$f strategy=$strat: $nEvents events in $sec%.1fs = ${nEvents / sec}%.0f ev/s")
-          Bench.deleteRecursively(logDir)
-        }
+        println(s"[prof] ===== run $rep fold=$f =====")
+        val logDir = java.nio.file.Files.createTempDirectory(Bench.tmpBase, "prof-log").toString
+        val sec = Bench.replay(spark, nEvents, numBatches = nBatches, buckets = 128, logDir = logDir,
+          spec = graft.model.MergeSpec(numBuckets = 128, foldAlignment = f)).sum
+        println(f"[prof] run $rep fold=$f: $nEvents events in $sec%.1fs = ${nEvents / sec}%.0f ev/s")
+        Bench.deleteRecursively(logDir)
       }
     }
     spark.stop()

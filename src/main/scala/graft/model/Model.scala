@@ -125,8 +125,8 @@ final case class MergeSpec(
       * inert (a whitelisted column may first appear via later drift). */
     fieldsWhitelist: Seq[String] = Nil,
     coordinates: Boolean = false,
-    /** which key the fold's payload exchange targets (MOR path only;
-      * the fold itself is MergeEngine.netActions, one window pass).
+    /** which key the fold's payload exchange targets (the fold itself
+      * is MergeEngine.netActions, one window pass).
       *
       * "key" (default): the fold exchanges on the upsert key and the
       * delta write redistributes by bucket (AQE rebalance) — two payload
@@ -149,26 +149,21 @@ final case class MergeSpec(
       * buckets, each fold task still small): it halves cross-node
       * payload traffic per epoch. */
     foldAlignment: String = "key",
-    /** how a batch's net actions reach the table.
+    /** Compact a bucket back to base files once it holds more than this
+      * many delta files (bounds read-time merge work and makes write
+      * amplification O(state/threshold) amortized, not O(state)).
       *
-      * "cow" = copy-on-write: every affected bucket is rewritten per
-      * batch. Reads are pure base-file scans, but write amplification is
-      * O(table state) per batch once keys are spread across buckets —
-      * the reference instead applies O(changes) row-level DML per batch
-      * (`.../sink/BufferedRecords.java:294-336`).
-      *
-      * "mor" (default) = merge-on-read: the batch's net actions are
-      * APPENDED as per-bucket delta files (O(changes) per commit, like
-      * the reference) and folded into the base rows at read time; buckets
-      * whose delta count crosses [[morCompactThreshold]] are compacted
-      * back to plain base files (the copy-on-write moment, amortized).
-      * This is Iceberg's equality-delete/merge-on-read shape. */
-    mergeStrategy: String = "mor",
-    /** MOR only: compact a bucket back to base files once it holds more
-      * than this many delta files (bounds read-time merge work and makes
-      * write amplification O(state/threshold) amortized, not O(state)). */
+      * Every batch reaches the table as merge-on-read: its net actions
+      * are APPENDED as per-bucket delta files (O(changes) per commit,
+      * like the reference's row-level DML,
+      * `.../sink/BufferedRecords.java:294-336`) and folded into the base
+      * rows at read time — Iceberg's equality-delete/merge-on-read shape.
+      * Read-heavy tables set this to 1 with [[morCompactBudget]] = -1:
+      * each epoch then compacts every bucket holding more than one delta
+      * file, so a read merges at most one delta file per bucket (the
+      * latest batch's) into its base files. */
     morCompactThreshold: Int = 16,
-    /** MOR only: compact at most this many buckets per epoch (most-
+    /** Compact at most this many buckets per epoch (most-
       * backlogged first). Uniformly-filling buckets all cross the
       * threshold at the same epoch; an unbudgeted compaction then
       * rewrites the whole table inline in the ingest path (measured 7-9x
@@ -178,7 +173,7 @@ final case class MergeSpec(
       * whole-table compaction but spread evenly so no epoch stalls.
       * <0 = unbounded (strict counts<=threshold, bursty). */
     morCompactBudget: Int = 0,
-    /** MOR only: de-synchronize the FIRST compaction wave by lowering
+    /** De-synchronize the FIRST compaction wave by lowering
       * each bucket's effective threshold by a deterministic per-bucket
       * offset in [0, stagger] (0 = off). */
     morCompactStagger: Int = 4,

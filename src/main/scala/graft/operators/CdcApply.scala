@@ -7,18 +7,15 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.model.{MergeSpec, NetAction}
-import graft.table.{IceLite, IceLiteTable, MorRead, SchemaEvolution}
+import graft.table.{IceLite, IceLiteTable, SchemaEvolution}
 
 /** Applies one batch (micro-batch or whole-log replay) of change events to
   * an IceLite transcripts table: validate → evolve schema → per-key fold →
-  * then either
-  *  - "mor" (default): APPEND the folded net actions as per-bucket delta
-  *    files — O(changes) per commit, the reference's row-level-DML cost
-  *    shape (`/root/reference/src/main/java/io/confluent/connect/jdbc/sink/BufferedRecords.java:294-336`)
-  *    — folded into reads by [[graft.table.MorRead]], with amortized
-  *    compaction back to base files; or
-  *  - "cow": bucket-pruned copy-on-write rewrite of the affected buckets
-  *    (kept for read-heavy tables; O(touched state) per commit).
+  * APPEND the folded net actions as per-bucket delta files — O(changes)
+  * per commit, the reference's row-level-DML cost shape
+  * (`.../sink/BufferedRecords.java:294-336`)
+  * — folded into reads by [[graft.table.MorRead]], with amortized
+  * compaction back to base files ([[graft.model.MergeSpec.morCompactThreshold]]).
   *
   * This is the engine's equivalent of the reference's
   * `JdbcDbWriter.write(records)` + per-put JDBC transaction
@@ -30,7 +27,7 @@ import graft.table.{IceLite, IceLiteTable, MorRead, SchemaEvolution}
   *
   * Per epoch the batch source is scanned once column-pruned (planning)
   * and once full-width (fold+write); the quarantine write runs only when
-  * the planning aggregate saw rejects.
+  * the fold's scan observed rejects.
   */
 object CdcApply {
 
@@ -105,22 +102,11 @@ object CdcApply {
     new java.util.concurrent.atomic.AtomicReference[() => Unit](null)
 
   /** Above this many series tombstones in one batch, the wipe set is no
-    * longer broadcast into the fold/merge (a bulk GDPR-delete batch would
-    * otherwise be a driver/executor memory hazard); the joins fall back
-    * to shuffles and AQE still broadcasts if the aggregate turns out small.
+    * longer broadcast into the fold (a bulk GDPR-delete batch would
+    * otherwise be a driver/executor memory hazard); the join falls back
+    * to a shuffle and AQE still broadcasts if the aggregate turns out small.
     */
   val WipeBroadcastMax: Long = 100000L
-
-  /** Write options applied to every data file: zstd + a bloom filter on
-    * conv_id (reference analogue: PG bloom index,
-    * `.../dialect/PostgreSqlDatabaseDialect.java:263-294`) with files
-    * sorted by (conv_id, turn_idx) so parquet min/max row-group stats are
-    * selective (reference analogue: zonemaps/BRIN,
-    * `.../dialect/OracleDatabaseDialect.java:296-310`).
-    */
-  private val writeOptions: Map[String, String] = Map(
-    "compression" -> "zstd",
-    "parquet.bloom.filter.enabled#conv_id" -> "true")
 
   /** Apply `events` (envelope columns: partition, offset, ts, op, conv_id,
     * turn_idx, after, schema_v) to the table.
@@ -135,8 +121,7 @@ object CdcApply {
     *                     would-be snapshot under this audit name instead
     *                     of committing — the table pointer is untouched
     *                     until `table.publishAudit(name)`; audit queries
-    *                     run on `table.readAudit`. MOR-only (like the
-    *                     change feed); quarantine rows are written at
+    *                     run on `table.readAudit`. Quarantine rows are written at
     *                     STAGE time (they are the record of the staging
     *                     act and re-staging overwrites them). Epoch
     *                     markers ride the staged snapshot and land only
@@ -161,11 +146,6 @@ object CdcApply {
 
     // enum-valued spec fields fail loudly on a typo (a misspelled value
     // would otherwise silently select the fallback plan)
-    require(Set("mor", "cow")(spec.mergeStrategy),
-      s"mergeStrategy must be 'mor' or 'cow', got '${spec.mergeStrategy}'")
-    require(auditRef.isEmpty || spec.mergeStrategy == "mor",
-      "write-audit-publish stages MOR delta snapshots; mergeStrategy='cow' " +
-        "rewrites shared bucket files in place and cannot stage an isolated audit")
     require(Set("key", "bucket")(spec.foldAlignment),
       s"foldAlignment must be 'key' or 'bucket', got '${spec.foldAlignment}'")
 
@@ -209,7 +189,7 @@ object CdcApply {
         org.apache.spark.sql.types.StructField("_partition", org.apache.spark.sql.types.IntegerType),
         org.apache.spark.sql.types.StructField("_offset", org.apache.spark.sql.types.LongType)))
 
-    // Scan-count note (r06): a MOR epoch runs (a) one NARROW planning
+    // Scan-count note (r06): an epoch runs (a) one NARROW planning
     // aggregate (partition/offset only — asserted in PlanSpec), (b) the
     // fold+write job (the one full-width scan, which also carries the
     // observed rejected-count metric), (c) a narrow wipe count + (when
@@ -219,250 +199,171 @@ object CdcApply {
     // columnar cache of the full payload costs more than the narrow
     // re-scans it saves.
     val tagged = MergeEngine.tagErrors(events0, spec.deleteEnabled)
-    locally {
-      // --- planning: per-log-partition lineage (offsets advance past
-      // errant records — quarantined, not retried,
-      // `.../sink/JdbcSinkTaskTest.java:324-492`), volume + rejection +
-      // series-tombstone counts, and (COW only) the touched-bucket set
-      // (every action's conv_id comes from some batch event, so the
-      // batch's distinct buckets are exactly the affected set — no fold
-      // needed for planning).
-      val isWipe = col("op") === "delete" && col("turn_idx").isNull && col("_error").isNull
-      // COW planning aggregate (full form, _error-aware). NOTE (r06): any
-      // aggregate referencing _error reads the ENTIRE after struct — the
-      // validation rule `op =!= 'delete' && after.isNull` defeats nested-
-      // schema pruning (IsNull over a struct prunes nothing), so this
-      // scan decodes the payload. The MOR hot path therefore uses the
-      // NARROW planning aggregate below plus an observed metric on the
-      // fold's own full-width scan instead.
-      def planAgg(): Array[org.apache.spark.sql.Row] = {
-        val aggs = Seq(
-          max("offset").as("max_off"),
-          count(lit(1)).as("n"),
-          sum(when(col("_error").isNotNull, 1L).otherwise(0L)).as("bad"),
-          sum(when(isWipe, 1L).otherwise(0L)).as("n_wipes"),
-          collect_set(when(col("_error").isNull,
-            MergeEngine.bucketOf(col("conv_id"), snap0.numBuckets))).as("buckets"))
-        tagged.groupBy("partition").agg(aggs.head, aggs.tail: _*).collect()
-      }
-      def writeQuarantine(rejectedCount: Long): Unit =
-        if (rejectedCount > 0) rejectedDir.foreach { d =>
-          val rej = tagged.filter(col("_error").isNotNull)
-            .withColumn("_rejected_at_epoch", lit(epoch.map(_._2).getOrElse(-1L)))
-          epoch match {
-            case Some(_) =>
-              // dynamic partition overwrite: a re-run of the same epoch
-              // (crash between quarantine and commit) replaces its own
-              // partition instead of duplicating rows
-              rej.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_rejected_at_epoch").parquet(d)
-            case None =>
-              rej.write.mode("append")
-                .partitionBy("_rejected_at_epoch").parquet(d)
-          }
+    def writeQuarantine(rejectedCount: Long): Unit =
+      if (rejectedCount > 0) rejectedDir.foreach { d =>
+        val rej = tagged.filter(col("_error").isNotNull)
+          .withColumn("_rejected_at_epoch", lit(epoch.map(_._2).getOrElse(-1L)))
+        epoch match {
+          case Some(_) =>
+            // dynamic partition overwrite: a re-run of the same epoch
+            // (crash between quarantine and commit) replaces its own
+            // partition instead of duplicating rows
+            rej.write.mode("overwrite")
+              .option("partitionOverwriteMode", "dynamic")
+              .partitionBy("_rejected_at_epoch").parquet(d)
+          case None =>
+            rej.write.mode("append")
+              .partitionBy("_rejected_at_epoch").parquet(d)
         }
-
-      // Normalize action rows to the (possibly evolved) table schema:
-      // missing columns → null, narrower types → up-cast. No-op when the
-      // fold's row struct already matches the table schema exactly (the
-      // steady state of every non-evolving stream): the per-row struct
-      // rebuild is measurable CPU at replay scale and Catalyst does not
-      // eliminate an identity CreateNamedStruct-over-GetStructField.
-      def normalize(actions: DataFrame): DataFrame = {
-        // exact match only (field names, types, nullability, metadata) —
-        // any mismatch falls through to the rebuilding projection
-        if (!spec.coordinates && actions.schema("row").dataType == evolved) return actions
-        val rowFields = actions.schema("row").dataType.asInstanceOf[StructType].fieldNames.toSet
-        val normRow = struct(evolved.fields.toSeq.map { f =>
-          (f.name match {
-            case "_partition" if spec.coordinates => col("src_partition").cast(f.dataType)
-            case "_offset" if spec.coordinates    => col("src_offset").cast(f.dataType)
-            case n if rowFields.contains(n)       => col(s"row.$n").cast(f.dataType)
-            case _                                => lit(null).cast(f.dataType)
-          }).as(f.name)
-        }: _*)
-        actions.withColumn("row", normRow)
       }
 
-      val result = spec.mergeStrategy match {
-        case "mor" =>
-          // Planning and the delta write are independent jobs over the
-          // same batch — the COMMIT needs the lineage, the write does
-          // not (MOR appends; no bucket set needed up front). Submit
-          // planning concurrently so its scan hides behind the write
-          // instead of serializing in front of it (per-epoch Amdahl
-          // region).
-          import scala.concurrent.{Await, ExecutionContext, Future}
-          import scala.concurrent.duration.Duration
-          implicit val ec: ExecutionContext = ExecutionContext.global
-          // NARROW planning aggregate (r06): per-partition lineage needs
-          // only (partition, max_off, n) — none of which touch _error, so
-          // the scan prunes to two envelope columns (the round-5 form
-          // aggregated `bad` here, whose _error reference dragged the
-          // FULL payload struct into this scan — measured ~39s of task
-          // time per 12M-event epoch decoding text the planning job never
-          // used). The rejected count now rides the fold job's own
-          // full-width scan as an observed metric (below).
-          // Job descriptions are thread-local: label each concurrent job
-          // from its own thread so the UI/stage profile attributes them.
-          val planF = Future {
-            labelled(spark, "cdc: planning aggregate") {
-              events0.groupBy("partition")
-                .agg(max("offset").as("max_off"), count(lit(1)).as("n")).collect()
-            }
-          }
-          // Rejected-record count: a TOTAL, not per-partition — observed
-          // on the fold's scan (the fold reads the batch exactly once: no
-          // extra job, no extra payload decode). Caveat (documented):
-          // observed metrics follow accumulator semantics — a re-run
-          // shuffle stage after executor loss could overcount; the >0
-          // quarantine gate is unaffected (zero stays zero) and the
-          // quarantine WRITE derives its rows from `tagged`, not from
-          // this count.
-          val obs = org.apache.spark.sql.Observation()
-          val foldInput = tagged
-            .observe(obs, sum(when(col("_error").isNotNull, 1L).otherwise(0L)).as("bad"))
-            .filter(col("_error").isNull).drop("_error")
-          // The metric can be LOST (not just zero): when the fold leg
-          // materializes empty (all-wipe / all-reject / empty batch),
-          // AQE's empty-relation propagation replaces the subtree and
-          // the CollectMetrics node leaves the final plan — Spark 4's
-          // ObservationManager then completes the observation with an
-          // EMPTY row. Fall back to a dedicated count for exactly
-          // those degenerate batches; steady-state epochs never pay it.
-          val rejectedCountF = () => obs.get.get("bad") match {
-            case Some(null) => 0L // observed node saw zero rows (empty batch)
-            case Some(n)    => n.asInstanceOf[Long]
-            case None       => tagged.filter(col("_error").isNotNull).count()
-          }
-          // The wipe-broadcast gate needs a count BEFORE the fold plan is
-          // built (an unhinted wipe join materializes the payload side
-          // into an extra shuffle even when AQE later converts it to
-          // broadcast — measured, that shuffle is the regression). Use a
-          // dedicated MINIMAL count: three narrow envelope columns, no
-          // `after` access, overlapped with the planning scan. A delete
-          // is a wipe candidate iff its key is sound, deletes are
-          // admitted and its payload extraction (when configured) did not
-          // fail — exactly tagErrors' rule for op=delete. Only the
-          // extraction check reads the payload, and only when configured.
-          val wipeable =
-            if (events0.columns.contains("_extract_error"))
-              col("conv_id").isNotNull && col("_extract_error").isNull
-            else col("conv_id").isNotNull
-          val nWipes =
-            if (!spec.deleteEnabled) 0L
-            else Await.result(
-              Future {
-                labelled(spark, "cdc: wipe count") {
-                  events0.filter(col("op") === "delete" && col("turn_idx").isNull && wipeable).count()
-                }
-              },
-              Duration.Inf)
-          // The wipe aggregate has TWO consumers in the delta-write
-          // action: the fold's wipe join (broadcast build) and the
-          // wipe-marker union leg — without a persist each re-runs the
-          // scan+aggregate over the batch (measured as two low-
-          // concurrency stages per epoch). Persist the small
-          // (deleted-conversations-sized) frame for the epoch; released
-          // in the finally below.
-          val wipes0 =
-            if (nWipes == 0L)
-              spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-                StructType(Seq(
-                  org.apache.spark.sql.types.StructField("conv_id", org.apache.spark.sql.types.StringType),
-                  org.apache.spark.sql.types.StructField("wipe_off", org.apache.spark.sql.types.LongType))))
-            else
-              // narrow equivalent of seriesWipes(valid): an op=delete row
-              // is valid iff it is `wipeable` (the after-null and
-              // turn-null rules never apply to deletes, and deletes are
-              // admitted on this path — nWipes > 0 implies deleteEnabled),
-              // so filtering events0 directly keeps the wipe scan off the
-              // payload struct (seriesWipes(valid) read it via _error).
-              // parts: see seriesWipes — the persisted frame otherwise
-              // pins a shuffle.partitions-wide layout whose near-empty
-              // cached partitions cost scheduling wall in every consumer.
-              MergeEngine.seriesWipes(events0.filter(wipeable),
-                parts = Some(MergeEngine.wipePartitions(nWipes)))
-                .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            // the broadcast hint goes ONLY to the join consumers (the fold);
-            // applyMor's wipe-marker projection is not a join, and a hinted
-            // non-join frame makes Spark log "broadcast ... not part of a
-            // join relation" every epoch
-            val wipes = if (nWipes <= WipeBroadcastMax) broadcast(wipes0) else wipes0
-            val aligned = if (spec.foldAlignment == "bucket") Some(snap0.numBuckets) else None
-            val actions = MergeEngine.netActions(foldInput, wipes, aligned)
-            applyMor(spark, table, snap0, normalize(actions), wipes0, evolved, epoch, planF,
-              rejectedCountF, writeQuarantine, preAligned = aligned.isDefined,
-              auditRef = auditRef, extraProps = extraProps)
-          } finally if (nWipes > 0L) wipes0.unpersist(blocking = false)
-        case _ =>
-          val lineage = planAgg()
-          val eventsSeen = lineage.map(_.getAs[Long]("n")).sum
-          val rejectedCount = lineage.map(_.getAs[Long]("bad")).sum
-          val nWipeEvents = lineage.map(_.getAs[Long]("n_wipes")).sum
-          val touched = lineage.flatMap(_.getAs[scala.collection.Seq[Int]]("buckets")).toSet
-          // same ordering rule as the MOR path: epoch-tagged rejects land
-          // BEFORE the commit (idempotent via dynamic partition
-          // overwrite); ad-hoc rejects APPEND and so wait for a
-          // successful commit (a failed commit + re-apply would
-          // double-count them otherwise)
-          if (epoch.isDefined) writeQuarantine(rejectedCount)
-
-          val valid = tagged.filter(col("_error").isNull).drop("_error")
-          // series wipes: distributed aggregate over the batch — never
-          // collected to the driver; broadcast into the fold/merge only
-          // below the bulk-delete threshold. The (common) wipe-free batch
-          // skips the aggregate + join stages entirely with an empty
-          // literal relation (planning count is exact, from the lineage
-          // aggregate).
-          val wipes0 =
-            if (nWipeEvents == 0L)
-              spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-                StructType(Seq(
-                  org.apache.spark.sql.types.StructField("conv_id", org.apache.spark.sql.types.StringType),
-                  org.apache.spark.sql.types.StructField("wipe_off", org.apache.spark.sql.types.LongType))))
-            else MergeEngine.seriesWipes(valid)
-          val wipes = if (nWipeEvents <= WipeBroadcastMax) broadcast(wipes0) else wipes0
-
-          val actions = MergeEngine.netActions(valid, wipes)
-
-          if (touched.isEmpty) {
-            // Nothing to merge (e.g. all events invalid) — still commit the
-            // epoch marker so re-delivery stays a no-op. No buckets touched
-            // ⇒ the race check is vacuous; only re-delivery can abort.
-            val snap =
-              try commitSnapshot(table, snap0, Map.empty, touched, evolved, epoch, lineage,
-                0L, eventsSeen, rejectedCount, extraProps)
-              catch {
-                case AlreadyApplied(_) => return BatchResult(table.current, skipped = true, 0L, 0L, 0L)
-              }
-            if (epoch.isEmpty) writeQuarantine(rejectedCount)
-            return BatchResult(snap, skipped = false, 0L, eventsSeen, rejectedCount)
-          }
-          val r = applyCow(spark, table, normalize(actions), wipes, touched, evolved, epoch, lineage,
-            eventsSeen, rejectedCount, nbPlan = snap0.numBuckets, extraProps = extraProps)
-          if (epoch.isEmpty) writeQuarantine(rejectedCount)
-          r
-      }
-      // amortized copy-on-write moment: fold delta-heavy buckets back to
-      // base files (bounds read-time merge work; per-batch write cost
-      // stays O(changes + state/threshold) amortized). Budgeted: at most
-      // morCompactBudget buckets per epoch so a synchronized threshold
-      // crossing can never stall an epoch with a full-table rewrite.
-      if (spec.mergeStrategy == "mor" && spec.morCompactThreshold > 0) {
-        val budget =
-          if (spec.morCompactBudget > 0) spec.morCompactBudget
-          else if (spec.morCompactBudget < 0) Int.MaxValue
-          else // auto: the sustainable steady-state rate when every epoch
-               // touches every bucket (inflow numBuckets deltas/epoch)
-            math.max(1, (table.numBuckets + spec.morCompactThreshold - 1) / spec.morCompactThreshold)
-        table.compactDeltas(spark, spec.morCompactThreshold,
-          maxBuckets = budget, stagger = spec.morCompactStagger)
-      }
-      result
+    // Normalize action rows to the (possibly evolved) table schema:
+    // missing columns → null, narrower types → up-cast. No-op when the
+    // fold's row struct already matches the table schema exactly (the
+    // steady state of every non-evolving stream): the per-row struct
+    // rebuild is measurable CPU at replay scale and Catalyst does not
+    // eliminate an identity CreateNamedStruct-over-GetStructField.
+    def normalize(actions: DataFrame): DataFrame = {
+      // exact match only (field names, types, nullability, metadata) —
+      // any mismatch falls through to the rebuilding projection
+      if (!spec.coordinates && actions.schema("row").dataType == evolved) return actions
+      val rowFields = actions.schema("row").dataType.asInstanceOf[StructType].fieldNames.toSet
+      val normRow = struct(evolved.fields.toSeq.map { f =>
+        (f.name match {
+          case "_partition" if spec.coordinates => col("src_partition").cast(f.dataType)
+          case "_offset" if spec.coordinates    => col("src_offset").cast(f.dataType)
+          case n if rowFields.contains(n)       => col(s"row.$n").cast(f.dataType)
+          case _                                => lit(null).cast(f.dataType)
+        }).as(f.name)
+      }: _*)
+      actions.withColumn("row", normRow)
     }
+
+    // Planning and the delta write are independent jobs over the same
+    // batch — the COMMIT needs the lineage, the write does not (deltas
+    // append; no bucket set needed up front). Submit planning
+    // concurrently so its scan hides behind the write instead of
+    // serializing in front of it (per-epoch Amdahl region).
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    // NARROW planning aggregate (r06): per-log-partition lineage (offsets
+    // advance past errant records — quarantined, not retried,
+    // `.../sink/JdbcSinkTaskTest.java:324-492`) needs only (partition,
+    // max_off, n) — none of which touch _error, so the scan prunes to two
+    // envelope columns (the round-5 form aggregated `bad` here, whose
+    // _error reference dragged the FULL payload struct into this scan —
+    // measured ~39s of task time per 12M-event epoch decoding text the
+    // planning job never used). The rejected count rides the fold job's
+    // own full-width scan as an observed metric (below).
+    // Job descriptions are thread-local: label each concurrent job from
+    // its own thread so the UI/stage profile attributes them.
+    val planF = Future {
+      labelled(spark, "cdc: planning aggregate") {
+        events0.groupBy("partition")
+          .agg(max("offset").as("max_off"), count(lit(1)).as("n")).collect()
+      }
+    }
+    // Rejected-record count: a TOTAL, not per-partition — observed on the
+    // fold's scan (the fold reads the batch exactly once: no extra job,
+    // no extra payload decode). Caveat (documented): observed metrics
+    // follow accumulator semantics — a re-run shuffle stage after
+    // executor loss could overcount; the >0 quarantine gate is unaffected
+    // (zero stays zero) and the quarantine WRITE derives its rows from
+    // `tagged`, not from this count.
+    val obs = org.apache.spark.sql.Observation()
+    val foldInput = tagged
+      .observe(obs, sum(when(col("_error").isNotNull, 1L).otherwise(0L)).as("bad"))
+      .filter(col("_error").isNull).drop("_error")
+    // The metric can be LOST (not just zero): when the fold leg
+    // materializes empty (all-wipe / all-reject / empty batch), AQE's
+    // empty-relation propagation replaces the subtree and the
+    // CollectMetrics node leaves the final plan — Spark 4's
+    // ObservationManager then completes the observation with an EMPTY
+    // row. Fall back to a dedicated count for exactly those degenerate
+    // batches; steady-state epochs never pay it.
+    val rejectedCountF = () => obs.get.get("bad") match {
+      case Some(null) => 0L // observed node saw zero rows (empty batch)
+      case Some(n)    => n.asInstanceOf[Long]
+      case None       => tagged.filter(col("_error").isNotNull).count()
+    }
+    // The wipe-broadcast gate needs a count BEFORE the fold plan is built
+    // (an unhinted wipe join materializes the payload side into an extra
+    // shuffle even when AQE later converts it to broadcast — measured,
+    // that shuffle is the regression). Use a dedicated MINIMAL count:
+    // three narrow envelope columns, no `after` access, overlapped with
+    // the planning scan. A delete is a wipe candidate iff its key is
+    // sound, deletes are admitted and its payload extraction (when
+    // configured) did not fail — exactly tagErrors' rule for op=delete.
+    // Only the extraction check reads the payload, and only when
+    // configured.
+    val wipeable =
+      if (events0.columns.contains("_extract_error"))
+        col("conv_id").isNotNull && col("_extract_error").isNull
+      else col("conv_id").isNotNull
+    val nWipes =
+      if (!spec.deleteEnabled) 0L
+      else Await.result(
+        Future {
+          labelled(spark, "cdc: wipe count") {
+            events0.filter(col("op") === "delete" && col("turn_idx").isNull && wipeable).count()
+          }
+        },
+        Duration.Inf)
+    // The wipe aggregate has TWO consumers in the delta-write action: the
+    // fold's wipe join (broadcast build) and the wipe-marker union leg —
+    // without a persist each re-runs the scan+aggregate over the batch
+    // (measured as two low-concurrency stages per epoch). Persist the
+    // small (deleted-conversations-sized) frame for the epoch; released
+    // in the finally below.
+    val wipes0 =
+      if (nWipes == 0L)
+        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+          StructType(Seq(
+            org.apache.spark.sql.types.StructField("conv_id", org.apache.spark.sql.types.StringType),
+            org.apache.spark.sql.types.StructField("wipe_off", org.apache.spark.sql.types.LongType))))
+      else
+        // narrow equivalent of seriesWipes(valid): an op=delete row is
+        // valid iff it is `wipeable` (the after-null and turn-null rules
+        // never apply to deletes, and deletes are admitted on this path —
+        // nWipes > 0 implies deleteEnabled), so filtering events0
+        // directly keeps the wipe scan off the payload struct
+        // (seriesWipes(valid) read it via _error). parts: see seriesWipes
+        // — the persisted frame otherwise pins a shuffle.partitions-wide
+        // layout whose near-empty cached partitions cost scheduling wall
+        // in every consumer.
+        MergeEngine.seriesWipes(events0.filter(wipeable),
+          parts = Some(MergeEngine.wipePartitions(nWipes)))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val result =
+      try {
+        // the broadcast hint goes ONLY to the join consumers (the fold);
+        // applyMor's wipe-marker projection is not a join, and a hinted
+        // non-join frame makes Spark log "broadcast ... not part of a
+        // join relation" every epoch
+        val wipes = if (nWipes <= WipeBroadcastMax) broadcast(wipes0) else wipes0
+        val aligned = if (spec.foldAlignment == "bucket") Some(snap0.numBuckets) else None
+        val actions = MergeEngine.netActions(foldInput, wipes, aligned)
+        applyMor(spark, table, snap0, normalize(actions), wipes0, evolved, epoch, planF,
+          rejectedCountF, writeQuarantine, preAligned = aligned.isDefined,
+          auditRef = auditRef, extraProps = extraProps)
+      } finally if (nWipes > 0L) wipes0.unpersist(blocking = false)
+    // amortized compaction: fold delta-heavy buckets back to base files
+    // (bounds read-time merge work; per-batch write cost stays
+    // O(changes + state/threshold) amortized). Budgeted: at most
+    // morCompactBudget buckets per epoch so a synchronized threshold
+    // crossing can never stall an epoch with a full-table rewrite.
+    if (spec.morCompactThreshold > 0) {
+      val budget =
+        if (spec.morCompactBudget > 0) spec.morCompactBudget
+        else if (spec.morCompactBudget < 0) Int.MaxValue
+        else // auto: the sustainable steady-state rate when every epoch
+             // touches every bucket (inflow numBuckets deltas/epoch)
+          math.max(1, (table.numBuckets + spec.morCompactThreshold - 1) / spec.morCompactThreshold)
+      table.compactDeltas(spark, spec.morCompactThreshold,
+        maxBuckets = budget, stagger = spec.morCompactStagger)
+    }
+    result
   }
 
   /** Merge-on-read write: net actions + wipe markers land as delta files
@@ -625,126 +526,6 @@ object CdcApply {
             s"$MorCommitRetries): re-staging against parent v${parent0.version}")
           val t = stageDeltas(parent0.version + 1)
           stage = t._1; staged = t._2; rowsWritten = t._3
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** Copy-on-write merge of affected buckets (pre-MOR default, kept for
-    * read-heavy tables): fold output is joined against the bucket's base
-    * rows and the bucket content is rewritten.
-    */
-  private def applyCow(
-      spark: SparkSession,
-      table: IceLiteTable,
-      normActions: DataFrame,
-      wipes: DataFrame,
-      touched: Set[Int],
-      evolved: StructType,
-      epoch: Option[(String, Long)],
-      lineage: Array[org.apache.spark.sql.Row],
-      eventsSeen: Long,
-      rejectedCount: Long,
-      nbPlan: Int,
-      extraProps: Map[String, String] = Map.empty): BatchResult = {
-
-    // COW applies on top of the CURRENT state: any outstanding MOR deltas
-    // of the touched buckets are folded in first (strategy hand-off).
-    // The base snapshot is PINNED (`cur`) and the commit verifies the
-    // touched buckets are unchanged between it and the commit parent —
-    // without the check, IceLite.commit's CAS loop would happily replace
-    // a touched bucket a concurrent writer just rewrote, silently losing
-    // that writer's rows (the COW twin of the MOR seq race). A detected
-    // race re-reads, re-merges and re-stages (bounded retries).
-    var cur = table.current
-    // rebucket fence, COW flavor: `touched` was computed under nbPlan
-    // (the planning snapshot's layout) — a rebucket landing anywhere
-    // between planning and commit would make the bucket replacement
-    // (and the staged bucket column) wrong, so abort instead of staging
-    // or retrying against a moved layout
-    val nb0 = nbPlan
-    if (cur.numBuckets != nb0)
-      throw new IllegalStateException(
-        s"table ${table.dir} was re-bucketed ($nb0 -> ${cur.numBuckets}) while this " +
-          "batch was planned under the old layout — re-apply the batch")
-    var attempt = 0
-    while (true) {
-      // Schema is re-merged over `cur` EVERY iteration (not just after a
-      // detected race): a concurrent schema-evolving commit can land
-      // between applyBatch's snap0 read and this point — reading the
-      // touched buckets with the pre-evolution schema would silently drop
-      // that writer's new column from the rewritten files.
-      val schemaNow = SchemaEvolution.merge(
-        org.apache.spark.sql.types.DataType.fromJson(cur.schemaJson).asInstanceOf[StructType],
-        evolved) match {
-        case Right(s) => s
-        case Left(reason) => throw new IllegalStateException(
-          s"COW apply: concurrent writer's schema is incompatible: $reason")
-      }
-      val base = {
-        val b = IceLite.readFiles(spark, schemaNow, table.resolve(cur.files, Some(touched)))
-        val deltaPaths = table.resolve(cur.deltas, Some(touched))
-        if (deltaPaths.isEmpty) b else MorRead.merged(spark, schemaNow, b, deltaPaths)
-      }
-      // action rows were normalized to the pre-race schema; pad any
-      // racer-added columns with null so the merge projection resolves
-      val actionsNow = {
-        val rowT = normActions.schema("row").dataType.asInstanceOf[StructType]
-        if (rowT == schemaNow) normActions
-        else {
-          val have = rowT.fieldNames.toSet
-          normActions.withColumn("row", struct(schemaNow.fields.toSeq.map { f =>
-            (if (have.contains(f.name)) col(s"row.`${f.name}`").cast(f.dataType)
-             else lit(null).cast(f.dataType)).as(f.name)
-          }: _*))
-        }
-      }
-      val merged = MergeEngine.merge(base, actionsNow, wipes)
-
-      val stage = table.newStageDir()
-      // Skew-aware write partitioning: a hot conversation (Zipf head)
-      // concentrates in one bucket; partitioning the write by bucket alone
-      // would make that bucket a straggler task. AQE rebalance splits hot
-      // buckets and coalesces cold ones; files stay bucket-pure via
-      // partitionBy, so pruning is unaffected. AQE handles the join side;
-      // this handles the write side.
-      merged.withColumn("bucket", MergeEngine.bucketOf(col("conv_id"), nb0))
-        .hint("rebalance", "bucket")
-        .sortWithinPartitions("bucket", "conv_id", "turn_idx")
-        .write.mode("overwrite").options(writeOptions)
-        .partitionBy("bucket")
-        .parquet(stage.toString)
-
-      val staged = table.stagedFilesByBucket(stage)
-      // rows-written metric from parquet footers, read driver-side — no
-      // Spark job (the reference's update-count == expected check,
-      // `.../sink/BufferedRecords.java:262-273`, as a commit metric)
-      val rowsWritten = footerRowCount(spark, staged.values.flatten.map(r => s"${table.dir}/$r"))
-      if (attempt == 0) Option(testOnStaged.getAndSet(null)).foreach(_.apply())
-
-      try {
-        val snap = commitSnapshot(table, cur, staged, touched, schemaNow, epoch, lineage,
-          rowsWritten, eventsSeen, rejectedCount, extraProps)
-        return BatchResult(snap, skipped = false, rowsWritten, eventsSeen, rejectedCount)
-      } catch {
-        case AlreadyApplied(_) =>
-          dropStage(stage)
-          return BatchResult(table.current, skipped = true, 0L, 0L, 0L)
-        case CommitRaced(msg) =>
-          attempt += 1
-          dropStage(stage) // a COW stage is O(bucket state) — never orphan it to GC
-          if (attempt > MorCommitRetries)
-            throw new IllegalStateException(
-              s"$msg — still racing after $MorCommitRetries re-merge attempts; " +
-                "a concurrent writer is livelocking this table, re-apply the batch manually.")
-          morRaceRetries.increment()
-          cur = table.current // loop head re-merges the schema from it
-          if (cur.numBuckets != nb0)
-            throw new IllegalStateException(
-              s"table ${table.dir} was re-bucketed ($nb0 -> ${cur.numBuckets}) while " +
-                "this batch was staged under the old layout — re-apply the batch")
-          System.err.println(s"[graft] COW commit race on ${table.dir} (attempt $attempt/" +
-            s"$MorCommitRetries): re-merging against v${cur.version}")
       }
     }
     throw new IllegalStateException("unreachable")
@@ -948,78 +729,4 @@ object CdcApply {
 
   private def epochProps(epoch: Option[(String, Long)]): Map[String, String] =
     epoch.map { case (sid, bid) => s"epoch:$sid" -> bid.toString }.toMap
-
-  /** COW commit: replace the touched buckets' file lists. Throws
-    * [[AlreadyApplied]] on epoch re-delivery and [[CommitRaced]] when a
-    * concurrent commit changed a touched bucket (base files OR deltas)
-    * after `cur` was read — the staged rewrite was computed from stale
-    * state and replacing the bucket would silently drop the racer's rows.
-    * Callers own the catch (applyCow re-merges; the empty-touch path
-    * cannot race by construction).
-    */
-  private def commitSnapshot(
-      table: IceLiteTable,
-      cur: IceLite.Snapshot,
-      staged: Map[Int, Seq[String]],
-      touched: Set[Int],
-      evolved: StructType,
-      epoch: Option[(String, Long)],
-      lineage: Array[org.apache.spark.sql.Row],
-      rowsWritten: Long,
-      eventsSeen: Long,
-      rejected: Long,
-      extraProps: Map[String, String] = Map.empty): IceLite.Snapshot =
-    table.commit { parent =>
-      epoch.foreach { case (sid, bid) =>
-        if (lastEpoch(parent, sid).exists(_ >= bid)) throw AlreadyApplied(bid)
-      }
-      // Rebucket fence, in the one place that sees the true commit parent:
-      // the staged files' bucket column was computed under cur.numBuckets.
-      // A rebucket landing between the base read and this CAS moves every
-      // row, but when the touched buckets are empty on BOTH sides (a batch
-      // of brand-new conversations) the per-bucket stale check below cannot
-      // see it — without this check the commit would publish old-layout
-      // files into a new-layout snapshot and bucket-pruned reads would
-      // miss the rows. CommitRaced (not a direct abort) so the caller's
-      // retry path drops the stage dir first; its own nb fence then
-      // escalates with the re-apply message. Marker-only commits
-      // (touched and staged both empty — the epoch-only path, which does
-      // not catch CommitRaced) carry no bucketed rows and are exempt.
-      if ((touched.nonEmpty || staged.nonEmpty) && parent.numBuckets != cur.numBuckets)
-        throw CommitRaced(
-          s"COW commit raced on ${table.dir}: table was re-bucketed " +
-            s"(${cur.numBuckets} -> ${parent.numBuckets}) while this batch was staged")
-      val stale = touched.filter(b =>
-        parent.files.get(b) != cur.files.get(b) || parent.deltas.get(b) != cur.deltas.get(b))
-      if (stale.nonEmpty)
-        throw CommitRaced(
-          s"COW commit raced on ${table.dir}: buckets ${stale.toSeq.sorted.mkString(",")} " +
-            s"changed between base read (v${cur.version}) and commit (parent v${parent.version})")
-      // The touched-bucket check admits a concurrent commit to DISJOINT
-      // buckets (correct: no data conflict) — but that commit may have
-      // evolved the schema, so the published schema must merge OVER the
-      // fresh parent's, never overwrite it with this batch's older view.
-      val schemaOut = SchemaEvolution.merge(
-        org.apache.spark.sql.types.DataType.fromJson(parent.schemaJson).asInstanceOf[StructType],
-        evolved) match {
-        case Right(s) => s
-        case Left(reason) => throw new IllegalStateException(
-          s"COW commit: concurrent writer's schema is incompatible: $reason")
-      }
-      val newFiles = (parent.files -- touched.toSeq) ++
-        staged ++
-        // a touched bucket whose merge produced no rows becomes empty
-        (touched -- staged.keySet).map(_ -> Seq.empty[String]).toMap
-      parent.copy(
-        schemaJson = schemaOut.json,
-        files = newFiles.filter(_._2.nonEmpty),
-        // the COW rewrite folded any outstanding deltas of these buckets
-        deltas = (parent.deltas -- touched.toSeq).filter(_._2.nonEmpty),
-        properties = parent.properties ++ offsetProps(parent, lineage) ++ epochProps(epoch) ++ extraProps,
-        metrics = Map(
-          "rowsWritten" -> rowsWritten,
-          "bucketsRewritten" -> touched.size.toLong,
-          "eventsApplied" -> eventsSeen,
-          "rejected" -> rejected))
-    }
 }

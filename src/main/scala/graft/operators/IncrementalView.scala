@@ -173,8 +173,6 @@ object IncrementalView {
       spec: ViewSpec,
       mergeSpec: MergeSpec = MergeSpec(),
       toVersion: Long = -1L): RefreshResult = {
-    require(mergeSpec.mergeStrategy == "mor",
-      "view tables must be merge-on-read (feed-readable, O(changes) commits)")
     val to = if (toVersion < 0) source.currentVersion else toVersion
     val from = cursor(source, view)
     if (from.exists(_ >= to))

@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 import graft.model.NetAction
 
 /** The CDC merge engine: turns a micro-batch of change events into the
-  * minimal set of per-key net effects, then rewrites only the affected
-  * hash buckets of the base table (copy-on-write MERGE).
+  * minimal set of per-key net effects. [[CdcApply]] appends them as
+  * per-bucket delta files; [[graft.table.MorRead]] applies them to the
+  * base rows at read time.
   *
   * Semantics reproduced from the reference connector (SURVEY.md §2.A):
   *  - per-key sequential application in offset order
@@ -56,8 +57,6 @@ object MergeEngine {
   // the batch proceeds (errant-record-reporter semantics,
   // `.../sink/JdbcSinkTaskTest.java:324-492`).
   // ---------------------------------------------------------------------
-  final case class ValidatedBatch(valid: DataFrame, rejected: DataFrame)
-
   /** Adds a nullable `_error` column (null = valid). A `_extract_error`
     * column (attached by CdcApply's ingest-time extraction: cast failure,
     * unmatched payload schema) is folded in and dropped.
@@ -74,13 +73,6 @@ object MergeEngine {
       else base.when(col("op") === "delete", "tombstone with delete.enabled=false").otherwise(null)
     val tagged = events.withColumn("_error", err)
     if (hasExtract) tagged.drop("_extract_error") else tagged
-  }
-
-  def validate(events: DataFrame, deleteEnabled: Boolean = true): ValidatedBatch = {
-    val tagged = tagErrors(events, deleteEnabled)
-    ValidatedBatch(
-      valid = tagged.filter(col("_error").isNull).drop("_error"),
-      rejected = tagged.filter(col("_error").isNotNull))
   }
 
   /** Latest series-delete offset per conversation in this batch.
@@ -126,7 +118,7 @@ object MergeEngine {
     *  - anchor = delete            ⇒ Del (updates after a delete drop);
     *  - anchor = insert/upsert     ⇒ Put(last update after anchor, else anchor row);
     *  - no anchor, no wipe         ⇒ UpdateIfExists(last update) — existence
-    *    is decided by the base table at merge time;
+    *    is decided by the base rows at read time;
     *  - no anchor, wiped           ⇒ Del (state was known-Absent).
     *
     * Output: (conv_id, turn_idx, action, row struct) — one row per touched key.
@@ -218,48 +210,5 @@ object MergeEngine {
         // coordinate columns, `.../sink/JdbcSinkConfig.java:52-59`)
         col("offset").as("src_offset"),
         col("partition").as("src_partition"))): _*)
-  }
-
-  /** Copy-on-write merge of net actions (+ series wipes) into the base
-    * rows of the affected buckets. `base` must already be pruned to the
-    * affected buckets (IceLite does this); output is the complete new
-    * content of those buckets.
-    *
-    * Join shape: full-outer on the upsert key (both sides shuffled on the
-    * same key — AQE handles residual skew); the wipe set keeps whatever
-    * broadcast/shuffle hint the caller attached.
-    */
-  def merge(base: DataFrame, actions: DataFrame, wipes: DataFrame): DataFrame = {
-    val key = Seq("conv_id", "turn_idx")
-    val cols = base.columns.toSeq
-    // build the hash table on the actions side (<= one row per touched
-    // key; the base side is the whole bucket content and would pay a sort
-    // under sort-merge join)
-    val a = actions
-      .withColumnRenamed("row", "_row")
-      .hint("shuffle_hash")
-    val w = wipes.select(col("conv_id"), lit(true).as("_wiped"))
-
-    val rowCol = (name: String) =>
-      if (key.contains(name)) col(name) else col(s"_row.$name")
-
-    base
-      .withColumn("_in_base", lit(true))
-      .join(a, key, "full_outer")
-      .join(w, Seq("conv_id"), "left")
-      .withColumn(
-        "_keep",
-        when(col("action") === NetAction.Put, lit(true))
-          .when(col("action") === NetAction.Del, lit(false))
-          .when(col("action") === NetAction.UpdateIfExists, coalesce(col("_in_base"), lit(false)))
-          // no action: base row survives unless its conversation was wiped
-          .otherwise(coalesce(col("_in_base"), lit(false)) && col("_wiped").isNull))
-      .withColumn(
-        "_use_new",
-        col("action") === NetAction.Put || col("action") === NetAction.UpdateIfExists)
-      .filter(col("_keep"))
-      .select(cols.map { c =>
-        when(col("_use_new"), rowCol(c)).otherwise(col(c)).as(c)
-      }: _*)
   }
 }

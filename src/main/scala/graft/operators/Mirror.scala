@@ -59,9 +59,6 @@ object Mirror {
       target: IceLiteTable,
       spec: MergeSpec = MergeSpec(),
       toVersion: Long = -1L): SyncResult = {
-    require(spec.mergeStrategy == "mor",
-      "mirror targets must be merge-on-read: COW commits are not feed-readable, " +
-        "which would break mirror chaining (and the O(changes) sync cost)")
     val to = if (toVersion < 0) source.currentVersion else toVersion
     val from = cursor(source, target)
     if (from.exists(_ >= to))

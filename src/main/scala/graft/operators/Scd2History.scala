@@ -106,8 +106,6 @@ object Scd2History {
       history: IceLiteTable,
       mergeSpec: MergeSpec = MergeSpec(),
       toVersion: Long = -1L): RefreshResult = {
-    require(mergeSpec.mergeStrategy == "mor",
-      "history tables must be merge-on-read (feed-readable, O(changes) commits)")
     val to = if (toVersion < 0) source.currentVersion else toVersion
     val from = cursor(source, history)
     if (from.exists(_ >= to))

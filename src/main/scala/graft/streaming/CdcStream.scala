@@ -176,8 +176,7 @@ object CdcStream {
         * cursors stay inside the retention window): mirror-table dirs
         * ([[graft.operators.Mirror.sync]]) kept tracking the primary
         * state table, created on first sync with its schema. Single-table
-        * streams only; requires a merge-on-read source (feed-readable
-        * commits). A sync failure is logged and retried next cadence,
+        * streams only. A sync failure is logged and retried next cadence,
         * never an ingest failure. */
       downstreamMirrors: Seq[String] = Seq.empty,
       /** Incremental materialized views over the primary state table
@@ -198,11 +197,8 @@ object CdcStream {
       else Some(loadOrCreate(cfg.tableDir, specShapedSchema(Schemas.transcript, cfg.spec), cfg.spec,
         autoCreate = cfg.autoCreate))
     if (cfg.downstreamMirrors.nonEmpty || cfg.downstreamViews.nonEmpty ||
-        cfg.downstreamHistories.nonEmpty) {
+        cfg.downstreamHistories.nonEmpty)
       require(table.isDefined, "downstream mirrors/views/histories require a single-table stream")
-      require(cfg.spec.mergeStrategy == "mor",
-        "downstream mirrors/views/histories require a merge-on-read source (feed-readable commits)")
-    }
     // downstream handles, cached across cadences like routedTables
     val downstreamTables = scala.collection.concurrent.TrieMap.empty[String, IceLiteTable]
     // routed-table handles, cached across epochs: an IceLiteTable handle

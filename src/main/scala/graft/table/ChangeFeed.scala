@@ -30,10 +30,13 @@ import graft.model.NetAction
   *  - rollback (`rollbackTo`): the reverted rows were never re-written,
   *    so the range is not feed-expressible — the read throws and the
   *    consumer re-bootstraps (see [[IceLiteTable.rollback]]);
-  *  - copy-on-write apply (`bucketsRewritten`): the per-batch change
-  *    rows were folded into rewritten buckets and NOT retained — the
-  *    range is not feed-readable and the read throws (same contract as
-  *    Iceberg COW tables without a changelog).
+  *  - any other commit that changes the file lists — a copy-on-write
+  *    apply (`bucketsRewritten`) in a table written before merge-on-read
+  *    became the only apply path, or a foreign writer: its change rows
+  *    were NOT retained, so the range is not feed-readable and the read
+  *    throws (same contract as Iceberg COW tables without a changelog).
+  *    The engine no longer writes such commits; the check guards tables
+  *    and commits from outside it.
   *
   * Scale: the version walk is a driver-side metadata fold, O(range)
   * with memoized snapshots; the data read is ONE parquet scan over
@@ -93,7 +96,7 @@ object ChangeFeed {
       else throw new UnsupportedOperationException(
         s"version $v of ${table.dir} rewrote data files outside the merge-on-read/" +
           "append paths (copy-on-write commit): its change rows were not retained. " +
-          "Use mergeStrategy=mor for feed-readable tables, or diff readAt snapshots.")
+          "Diff readAt snapshots instead.")
       prev = s
     }
 

@@ -192,10 +192,10 @@ final class IceLiteTable(val dir: String) {
 
   /** Resolve a snapshot's table-relative file lists to absolute paths —
     * the pinned-snapshot variant of [[dataFiles]]/[[deltaFiles]], for
-    * writers that must read base state and commit against the SAME
-    * snapshot (CdcApply's COW race detection).
+    * reads of a pinned snapshot and for compaction, which must read base
+    * state and commit against the SAME snapshot.
     */
-  private[graft] def resolve(m: Map[Int, Seq[String]], buckets: Option[Set[Int]]): Seq[String] =
+  private def resolve(m: Map[Int, Seq[String]], buckets: Option[Set[Int]]): Seq[String] =
     m.toSeq
       .filter { case (b, _) => buckets.forall(_.contains(b)) }
       .flatMap(_._2)
@@ -502,7 +502,7 @@ final class IceLiteTable(val dir: String) {
     * land with it — a redelivery of the audited batch after publish is
     * the usual no-op). Fails LOUDLY if any commit landed since the stage
     * (the audited state no longer describes current+batch): discard and
-    * re-stage — same contract as the rebucket/COW fences.
+    * re-stage — same contract as the rebucket fence.
     */
   def publishAudit(name: String): Snapshot = {
     val a = auditSnapshot(name)
@@ -546,7 +546,8 @@ final class IceLiteTable(val dir: String) {
     else MorRead.merged(spark, sch, base, deltaPaths)
   }
 
-  /** Base files only — MOR deltas NOT applied (compaction + COW internals). */
+  /** Base files only — MOR deltas NOT applied (the base input of an
+    * explicit [[MorRead]] merge). */
   def readBase(spark: SparkSession, buckets: Option[Set[Int]] = None): DataFrame =
     IceLite.readFiles(spark, schema, dataFiles(buckets))
 
@@ -909,7 +910,7 @@ final class IceLiteTable(val dir: String) {
   }
 
   /** Fold outstanding MOR delta files back into base files for buckets
-    * holding more than `maxDeltasPerBucket` of them — the copy-on-write
+    * holding more than `maxDeltasPerBucket` of them — the rewrite
     * moment, amortized (Iceberg's rewrite_data_files + delete-file
     * removal). Returns the number of buckets compacted. Each bucket is
     * rewritten by its own one-task job — merged, sorted by

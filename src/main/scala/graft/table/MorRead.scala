@@ -44,7 +44,7 @@ import graft.model.NetAction
   *    delta scans are coalesced to one partition and every join is a
   *    hash join built on the delta side — no exchange, no broadcast job.
   *  - [[merged]] — reads that span several buckets (full-state scans,
-  *    bucket subsets, the copy-on-write hand-off). Two delta passes: a
+  *    bucket subsets). Two delta passes: a
   *    narrow scan of the raw delta keys, broadcast once, splits the base
   *    into pass-through rows (anti-join) and touched rows (semi-join);
   *    the full delta scan and the touched rows then fold behind one

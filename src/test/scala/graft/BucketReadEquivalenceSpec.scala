@@ -67,7 +67,7 @@ class BucketReadEquivalenceSpec extends SparkSuite {
       Vector(first, second, third, fourth).map(rnd.shuffle(_))
     }
     val t = IceLite.create(tmpDir("bucket-read") + "/t", turnSchema, NumBuckets)
-    val spec = MergeSpec(mergeStrategy = "mor", morCompactThreshold = 1000)
+    val spec = MergeSpec(morCompactThreshold = 1000)
     // (version, batches applied as of it)
     val versions = batches.zipWithIndex.flatMap { case (b, i) =>
       CdcApply.applyBatch(spark, t, eventsDF(spark, b), spec = spec, epoch = Some(("eq", i.toLong)))
@@ -126,7 +126,7 @@ class BucketReadEquivalenceSpec extends SparkSuite {
   test("oversized deltas fall back to the full fold with the same rows") {
     val t = IceLite.create(tmpDir("bucket-read-big") + "/t", turnSchema, 2)
     val log = randomLog(new Random(31), 0L, 200, 6, 4) ++ wipeScript(500L, "c01")
-    val spec = MergeSpec(mergeStrategy = "mor", morCompactThreshold = 1000)
+    val spec = MergeSpec(morCompactThreshold = 1000)
     log.grouped(70).zipWithIndex.foreach { case (b, i) =>
       CdcApply.applyBatch(spark, t, eventsDF(spark, b), spec = spec, epoch = Some(("big", i.toLong)))
       if (i == 0) assert(t.compactDeltas(spark) > 0)

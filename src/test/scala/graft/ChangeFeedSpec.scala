@@ -8,13 +8,14 @@ import graft.table.{IceLite, MorRead}
 
 /** Incremental change-data-feed reads (`IceLiteTable.readChanges`):
   * range scoping, commit-kind handling (MOR apply / append / compaction /
-  * COW), and the defining property — applying a range's feed onto the
-  * `from` snapshot reproduces the `to` snapshot exactly.
+  * copy-on-write rewrites in older tables), and the defining property —
+  * applying a range's feed onto the `from` snapshot reproduces the `to`
+  * snapshot exactly.
   */
 class ChangeFeedSpec extends SparkSuite {
   import TestHelpers._
 
-  private val mor = MergeSpec(mergeStrategy = "mor", morCompactThreshold = 1000)
+  private val mor = MergeSpec(morCompactThreshold = 1000)
 
   private def feed(t: graft.table.IceLiteTable, from: Long, to: Long = -1L) =
     t.readChanges(spark, from, to).collect()
@@ -124,8 +125,20 @@ class ChangeFeedSpec extends SparkSuite {
     val dir = tmpDir("cf-cow") + "/t"
     val t = IceLite.create(dir, turnSchema, 4)
     CdcApply.applyBatch(spark, t, eventsDF(spark, Seq(ins(0, "c1", 0, "a"))),
-      spec = MergeSpec(mergeStrategy = "cow"), epoch = Some(("c", 0L)))
-    val e = intercept[UnsupportedOperationException](t.readChanges(spark, 1).collect())
+      spec = mor, epoch = Some(("c", 0L)))
+    assert(t.compactDeltas(spark) == 1)
+    val from = t.currentVersion
+    // a copy-on-write commit as a table written before merge-on-read
+    // became the only apply path holds one: the bucket's base file is
+    // replaced by a rewritten copy, and the batch's change rows are gone
+    val (b, Seq(old)) = t.current.files.head
+    val rewritten = t.newStageDir().resolve(s"bucket=$b/part-cow.parquet")
+    java.nio.file.Files.createDirectories(rewritten.getParent)
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/$old"), rewritten)
+    val rel = java.nio.file.Paths.get(dir).relativize(rewritten).toString
+    t.commit(p => p.copy(files = p.files + (b -> Seq(rel)), metrics = Map("bucketsRewritten" -> 1L)))
+    assert(readTable(spark, t).map(_.text) == Seq("a"))
+    val e = intercept[UnsupportedOperationException](t.readChanges(spark, from).collect())
     assert(e.getMessage.contains("copy-on-write"))
   }
 }

@@ -85,27 +85,25 @@ class ConfigFidelitySpec extends SparkSuite {
   }
 
   test("an extract-errored series delete is quarantined and wipes nothing") {
-    Seq("mor", "cow").foreach { strategy =>
-      val dir = tmpDir("extract-wipe")
-      val table = IceLite.create(s"$dir/t", turnSchema, 4)
-      val spec = MergeSpec(mergeStrategy = strategy,
-        extractFields = Seq(ExtractField("score", "$.score", "int")), extractSource = "text")
-      CdcApply.applyBatch(spark, table, eventsDF(spark, Seq(
-        ins(0L, "c1", 0, """{"score":1}"""), ins(1L, "c1", 1, """{"score":2}"""),
-        ins(2L, "c2", 0, """{"score":3}"""))), spec)
-      // series deletes carrying a payload: c1's fails extraction (quarantined,
-      // must not wipe), c2's extracts cleanly (wipes)
-      val malformed = graft.model.ChangeEvent(0, 3L, ts(3L), "delete", "c1", None,
-        Some(turn("c1", 0, """{"score":"not-a-number"}""", 3L)), 2)
-      val sound = graft.model.ChangeEvent(0, 4L, ts(4L), "delete", "c2", None,
-        Some(turn("c2", 0, """{"score":4}""", 4L)), 2)
-      val r = CdcApply.applyBatch(spark, table, eventsDF(spark, Seq(malformed, sound)), spec,
-        rejectedDir = Some(s"$dir/rej"))
-      assert(r.rejected == 1L, strategy)
-      val rows = table.read(spark).select("conv_id", "turn_idx").collect()
-        .map(r => (r.getString(0), r.getInt(1))).toSeq.sorted
-      assert(rows == Seq(("c1", 0), ("c1", 1)), s"$strategy: $rows")
-    }
+    val dir = tmpDir("extract-wipe")
+    val table = IceLite.create(s"$dir/t", turnSchema, 4)
+    val spec = MergeSpec(
+      extractFields = Seq(ExtractField("score", "$.score", "int")), extractSource = "text")
+    CdcApply.applyBatch(spark, table, eventsDF(spark, Seq(
+      ins(0L, "c1", 0, """{"score":1}"""), ins(1L, "c1", 1, """{"score":2}"""),
+      ins(2L, "c2", 0, """{"score":3}"""))), spec)
+    // series deletes carrying a payload: c1's fails extraction (quarantined,
+    // must not wipe), c2's extracts cleanly (wipes)
+    val malformed = graft.model.ChangeEvent(0, 3L, ts(3L), "delete", "c1", None,
+      Some(turn("c1", 0, """{"score":"not-a-number"}""", 3L)), 2)
+    val sound = graft.model.ChangeEvent(0, 4L, ts(4L), "delete", "c2", None,
+      Some(turn("c2", 0, """{"score":4}""", 4L)), 2)
+    val r = CdcApply.applyBatch(spark, table, eventsDF(spark, Seq(malformed, sound)), spec,
+      rejectedDir = Some(s"$dir/rej"))
+    assert(r.rejected == 1L)
+    val rows = table.read(spark).select("conv_id", "turn_idx").collect()
+      .map(r => (r.getString(0), r.getInt(1))).toSeq.sorted
+    assert(rows == Seq(("c1", 0), ("c1", 1)), rows)
   }
 
   test("multi-schema classification: two JSON shapes on one topic get their own extract columns") {
@@ -178,21 +176,18 @@ class ConfigFidelitySpec extends SparkSuite {
     assert(e5.getMessage.contains("duplicate extract names"))
   }
 
-  test("ad-hoc (no-epoch) batches write quarantine once, after the commit (both merge strategies)") {
-    for (strat <- Seq("mor", "cow")) {
-      val dir = tmpDir(s"quar-adhoc-$strat")
-      val table = IceLite.create(s"$dir/t", turnSchema, 4)
-      val spec = MergeSpec(mergeStrategy = strat)
-      val evs = eventsDF(spark, Seq(ins(0L, "c1", 0, "ok"), ins(1L, null, 0, "bad")))
-        .withColumnRenamed("schemaV", "schema_v")
-      val r = CdcApply.applyBatch(spark, table, evs, spec, rejectedDir = Some(s"$dir/rej"))
-      assert(r.rejected == 1L, strat)
-      assert(spark.read.parquet(s"$dir/rej").count() == 1, strat)
-      // a second ad-hoc apply of the same data appends (at-least-once by
-      // design: no epoch marker exists to dedupe on)
-      CdcApply.applyBatch(spark, table, evs, spec, rejectedDir = Some(s"$dir/rej"))
-      assert(spark.read.parquet(s"$dir/rej").count() == 2, strat)
-    }
+  test("ad-hoc (no-epoch) batches write quarantine once, after the commit") {
+    val dir = tmpDir("quar-adhoc")
+    val table = IceLite.create(s"$dir/t", turnSchema, 4)
+    val evs = eventsDF(spark, Seq(ins(0L, "c1", 0, "ok"), ins(1L, null, 0, "bad")))
+      .withColumnRenamed("schemaV", "schema_v")
+    val r = CdcApply.applyBatch(spark, table, evs, rejectedDir = Some(s"$dir/rej"))
+    assert(r.rejected == 1L)
+    assert(spark.read.parquet(s"$dir/rej").count() == 1)
+    // a second ad-hoc apply of the same data appends (at-least-once by
+    // design: no epoch marker exists to dedupe on)
+    CdcApply.applyBatch(spark, table, evs, rejectedDir = Some(s"$dir/rej"))
+    assert(spark.read.parquet(s"$dir/rej").count() == 2)
   }
 
   test("quarantine is idempotent: epoch re-delivery adds nothing; epoch partition overwrites stale rows") {

@@ -31,7 +31,7 @@ class DeadLetterSpec extends SparkSuite {
     val base = tmpDir("dlq-heal")
     val t0 = IceLite.create(s"$base/t", turnSchema, 4)
     val rej = s"$base/rejected"
-    val spec = MergeSpec(mergeStrategy = "mor")
+    val spec = MergeSpec()
     val good = Seq(ins(0L, "c1", 0, "a"), ins(1L, "c1", 1, "b"))
     val bad = Seq(brokenIns(2L, "c2", 0, "healme"), brokenIns(3L, "c3", 5, "metoo"))
     val r0 = CdcApply.applyBatch(spark, t0, eventsDF(spark, good ++ bad), spec,
@@ -54,7 +54,7 @@ class DeadLetterSpec extends SparkSuite {
     val base = tmpDir("dlq-samedir")
     val t0 = IceLite.create(s"$base/t", turnSchema, 4)
     val rej = s"$base/rejected"
-    val spec = MergeSpec(mergeStrategy = "mor")
+    val spec = MergeSpec()
     CdcApply.applyBatch(spark, t0, eventsDF(spark, Seq(brokenIns(0L, "c2", 0, "x"))), spec,
       epoch = Some(("ing", 0L)), rejectedDir = Some(rej))
     val e = intercept[IllegalArgumentException] {
@@ -71,7 +71,7 @@ class DeadLetterSpec extends SparkSuite {
     val base = tmpDir("dlq-partial")
     val t0 = IceLite.create(s"$base/t", turnSchema, 4)
     val rej = s"$base/rejected"
-    val spec = MergeSpec(mergeStrategy = "mor")
+    val spec = MergeSpec()
     val events = Seq(ins(0L, "c1", 0, "a"), brokenIns(1L, "c2", 0, "fixable"), bogusOp(2L, "c9", 1))
     CdcApply.applyBatch(spark, t0, eventsDF(spark, events), spec,
       epoch = Some(("ing", 0L)), rejectedDir = Some(rej))
@@ -90,7 +90,7 @@ class DeadLetterSpec extends SparkSuite {
     val base = tmpDir("dlq-crash")
     val t0 = IceLite.create(s"$base/t", turnSchema, 4)
     val rej = s"$base/rejected"
-    val spec = MergeSpec(mergeStrategy = "mor")
+    val spec = MergeSpec()
     CdcApply.applyBatch(spark, t0,
       eventsDF(spark, Seq(ins(0L, "c1", 0, "a"), brokenIns(1L, "c2", 0, "heal"))), spec,
       epoch = Some(("ing", 0L)), rejectedDir = Some(rej))
@@ -112,7 +112,7 @@ class DeadLetterSpec extends SparkSuite {
     val base = tmpDir("dlq-crash-new")
     val t0 = IceLite.create(s"$base/t", turnSchema, 4)
     val rej = s"$base/rejected"
-    val spec = MergeSpec(mergeStrategy = "mor")
+    val spec = MergeSpec()
     CdcApply.applyBatch(spark, t0,
       eventsDF(spark, Seq(ins(0L, "c1", 0, "a"), brokenIns(1L, "c2", 0, "heal"))), spec,
       epoch = Some(("ing", 0L)), rejectedDir = Some(rej))
@@ -157,7 +157,7 @@ class DeadLetterSpec extends SparkSuite {
     val base = tmpDir("dlq-extract")
     val t0 = IceLite.create(s"$base/t", turnSchema, 4)
     val rej = s"$base/rejected"
-    val spec = MergeSpec(mergeStrategy = "mor", payloadSchemas = Seq(
+    val spec = MergeSpec(payloadSchemas = Seq(
       PayloadSchema("chat", "$.msg", Seq(ExtractField("kind", "$.msg.kind")))))
     val mk = (off: Long, conv: String, text: String) =>
       ChangeEvent(0, off, ts(off), "insert", conv, Some(0), Some(turn(conv, 0, text, off)), 2)

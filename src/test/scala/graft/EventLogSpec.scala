@@ -82,13 +82,15 @@ class EventLogSpec extends SparkSuite {
   test("expireSnapshots deletes old snapshots and orphaned data files only") {
     val dir = tmpDir("expire") + "/t"
     val t = IceLite.create(dir, TestHelpers.turnSchema, 4)
-    // cow: each batch rewrites the bucket, orphaning the previous files —
-    // the expiry behavior under test (mor snapshots reference deltas
-    // cumulatively, so nothing orphans until compaction)
+    // each batch is compacted right away, rewriting the bucket and
+    // orphaning its previous files — the expiry behavior under test
+    // (snapshots reference deltas cumulatively, so nothing orphans until
+    // compaction)
     (0 until 4).foreach { i =>
       graft.operators.CdcApply.applyBatch(spark, t,
         eventsDF(spark, Seq(ins(i.toLong, "c1", i, s"v$i"))), epoch = Some(("q", i.toLong)),
-        spec = graft.model.MergeSpec(mergeStrategy = "cow"))
+        spec = graft.model.MergeSpec(morCompactThreshold = 1000))
+      assert(t.compactDeltas(spark) == 1)
     }
     val rowsBefore = readTable(spark, t)
     val vBefore = t.currentVersion

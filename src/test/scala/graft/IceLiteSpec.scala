@@ -267,11 +267,14 @@ class IceLiteSpec extends SparkSuite {
     assert(res.isLeft && res.swap.toOption.get.contains("strict_col"))
   }
 
-  test("bucket pruning reads only the target bucket's files (cow base files)") {
+  test("bucket pruning reads only the target bucket's files (compacted base files)") {
     val dir = tmpDir("icelite-prune") + "/t"
     val t = IceLite.create(dir, turnSchema, 8)
     val evs = (0 until 64).map(i => ins(i.toLong, f"c$i%02d", 0, s"row$i"))
-    CdcApply.applyBatch(spark, t, eventsDF(spark, evs), spec = graft.model.MergeSpec(mergeStrategy = "cow"))
+    CdcApply.applyBatch(spark, t, eventsDF(spark, evs),
+      spec = graft.model.MergeSpec(morCompactThreshold = 1000))
+    t.compactDeltas(spark)
+    assert(t.deltaFiles().isEmpty)
     val b = spark.range(1).select(MergeEngine.bucketOf(lit("c07"), 8)).collect()(0).getInt(0)
     val prunedFiles = t.dataFiles(Some(Set(b)))
     assert(prunedFiles.size < t.dataFiles().size)
@@ -284,7 +287,7 @@ class IceLiteSpec extends SparkSuite {
     val t = IceLite.create(dir, turnSchema, 8)
     val evs = (0 until 64).map(i => ins(i.toLong, f"c$i%02d", 0, s"row$i"))
     CdcApply.applyBatch(spark, t, eventsDF(spark, evs),
-      spec = graft.model.MergeSpec(mergeStrategy = "mor", morCompactThreshold = 1000))
+      spec = graft.model.MergeSpec(morCompactThreshold = 1000))
     assert(t.dataFiles().isEmpty, "mor apply must not rewrite base files")
     val b = spark.range(1).select(MergeEngine.bucketOf(lit("c07"), 8)).collect()(0).getInt(0)
     assert(t.deltaFiles(Some(Set(b))).size < t.deltaFiles().size)

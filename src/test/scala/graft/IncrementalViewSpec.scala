@@ -15,7 +15,7 @@ import graft.table.IceLite
 class IncrementalViewSpec extends SparkSuite {
   import TestHelpers._
 
-  private val mor = MergeSpec(mergeStrategy = "mor", morCompactThreshold = 1000)
+  private val mor = MergeSpec(morCompactThreshold = 1000)
   private val vspec = ViewSpec(
     dims = Seq("role" -> col("role")),
     sums = Seq("turns" -> col("turn_idx").cast("long"), "chars" -> length(col("text")).cast("long")))

@@ -16,10 +16,10 @@ class MergeEngineSpec extends SparkSuite {
 
   private def check(batches: Seq[Seq[ChangeEvent]], clue: String): Unit = {
     val want = OracleFold.rows(OracleFold.finalState(batches.flatten))
-    TestHelpers.bothStrategies.foreach { spec =>
+    TestHelpers.writeConfigs.foreach { spec =>
       val got = engineReplay(spark, batches, spec = spec)
       assert(got == want,
-        s"[$clue / ${spec.mergeStrategy}@${spec.morCompactThreshold}/${spec.foldAlignment}] engine != oracle\nengine: $got\noracle: $want")
+        s"[$clue / compact@${spec.morCompactThreshold}/${spec.foldAlignment}] engine != oracle\nengine: $got\noracle: $want")
     }
   }
 
@@ -165,12 +165,12 @@ object TestHelpers {
     readTable(spark, table)
   }
 
-  /** Both merge strategies must produce the oracle state. */
-  val bothStrategies: Seq[MergeSpec] = Seq(
-    MergeSpec(mergeStrategy = "mor"), // key-aligned fold
+  /** Write configurations that must each produce the oracle state. */
+  val writeConfigs: Seq[MergeSpec] = Seq(
+    MergeSpec(), // key-aligned fold
     // aggressive compaction: exercise the delta→base fold mid-replay
-    MergeSpec(mergeStrategy = "mor", morCompactThreshold = 1),
+    // (its auto budget covers every bucket: the read-optimized setting)
+    MergeSpec(morCompactThreshold = 1),
     // bucket-aligned fold: the single-exchange plan stays oracle-true
-    MergeSpec(mergeStrategy = "mor", foldAlignment = "bucket"),
-    MergeSpec(mergeStrategy = "cow"))
+    MergeSpec(foldAlignment = "bucket"))
 }

@@ -16,7 +16,7 @@ class MetaTablesSpec extends SparkSuite {
   private def freshTable(prefix: String) = {
     val dir = tmpDir(prefix) + "/t"
     val t = IceLite.create(dir, turnSchema, 4)
-    val spec = MergeSpec(mergeStrategy = "mor", morCompactThreshold = 1000)
+    val spec = MergeSpec(morCompactThreshold = 1000)
     val b0 = (0 until 60).map(i => ins(i.toLong, f"c${i % 6}%03d", i % 10, s"a-$i"))
     val b1 = (60 until 120).map(i => ups(i.toLong, f"c${i % 6}%03d", i % 10, s"b-$i"))
     CdcApply.applyBatch(spark, t, eventsDF(spark, b0), spec = spec, epoch = Some(("mt", 0L)))
@@ -55,7 +55,7 @@ class MetaTablesSpec extends SparkSuite {
   }
 
   test("files: manifest matches the snapshot's file lists; footer rows sum to the written rows") {
-    val (t, spec) = freshTable("meta-files")
+    val (t, _) = freshTable("meta-files")
     val df = MetaTables.files(spark, t)
     assert(df.count() == (t.dataFiles().size + t.deltaFiles().size).toLong)
     assert(df.filter(col("kind") === "base").count() == t.dataFiles().size.toLong)
@@ -78,8 +78,6 @@ class MetaTablesSpec extends SparkSuite {
     // compaction preserved state row count: base footer rows == state rows
     val baseRows = nowDf.agg(sum("row_count")).collect()(0).getLong(0)
     assert(baseRows == t.read(spark).count())
-    // spec-independent sanity so `spec` isn't dead in this test
-    assert(spec.mergeStrategy == "mor")
   }
 
   test("refs: tags and staged audits both surface with their pinned versions") {

@@ -13,7 +13,7 @@ import graft.table.IceLite
 class MirrorSpec extends SparkSuite {
   import TestHelpers._
 
-  private val mor = MergeSpec(mergeStrategy = "mor", morCompactThreshold = 1000)
+  private val mor = MergeSpec(morCompactThreshold = 1000)
 
   private def state(t: graft.table.IceLiteTable): Seq[(String, Int, String)] =
     t.read(spark).select("conv_id", "turn_idx", "text").collect()
@@ -120,13 +120,5 @@ class MirrorSpec extends SparkSuite {
     assert(!r.result.skipped && state(dst) == state(src) && state(dst).size == 6)
     // control: with no registered consumers the base window applies unchanged
     assert(graft.streaming.CdcStream.pinnedKeep(3, 100L, Seq.empty) == 3)
-  }
-
-  test("cow targets are rejected up front") {
-    val src = IceLite.create(tmpDir("mir-cow-src") + "/t", turnSchema, 4)
-    val dst = IceLite.create(tmpDir("mir-cow-dst") + "/t", turnSchema, 4)
-    val e = intercept[IllegalArgumentException](
-      Mirror.sync(spark, src, dst, MergeSpec(mergeStrategy = "cow")))
-    assert(e.getMessage.contains("merge-on-read"))
   }
 }

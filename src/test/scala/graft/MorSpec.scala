@@ -8,10 +8,10 @@ import graft.model.{ChangeEvent, MergeSpec}
 import graft.operators.CdcApply
 import graft.table.IceLite
 
-/** Merge-on-read specifics beyond the strategy-parameterized equivalence
+/** Merge-on-read specifics beyond the config-parameterized equivalence
   * suites: write-amplification shape (no base rewrites per batch),
-  * compaction bounds, cow↔mor hand-off, and bulk series-tombstone
-  * batches staying distributed (no driver-side wipe collection).
+  * compaction bounds, commit races, and bulk series-tombstone batches
+  * staying distributed (no driver-side wipe collection).
   */
 class MorSpec extends SparkSuite {
   import TestHelpers._
@@ -34,7 +34,7 @@ class MorSpec extends SparkSuite {
     val dir = tmpDir("mor-shape") + "/t"
     val t = IceLite.create(dir, turnSchema, 4)
     val log = randomLog(new Random(7), 300, 6, 5)
-    val spec = MergeSpec(mergeStrategy = "mor", morCompactThreshold = 1000)
+    val spec = MergeSpec(morCompactThreshold = 1000)
     log.grouped(100).zipWithIndex.foreach { case (b, i) =>
       CdcApply.applyBatch(spark, t, eventsDF(spark, b), spec = spec, epoch = Some(("m", i.toLong)))
       assert(t.dataFiles().isEmpty, s"batch $i rewrote base files under mor")
@@ -56,7 +56,7 @@ class MorSpec extends SparkSuite {
     val log = randomLog(new Random(11), 400, 8, 4)
     // unbounded budget: this test pins the STRICT counts<=threshold
     // contract (budgeted mode relaxes it transiently; see the budget test)
-    val spec = MergeSpec(mergeStrategy = "mor", morCompactThreshold = 2, morCompactBudget = -1)
+    val spec = MergeSpec(morCompactThreshold = 2, morCompactBudget = -1)
     log.grouped(40).zipWithIndex.foreach { case (b, i) =>
       CdcApply.applyBatch(spark, t, eventsDF(spark, b), spec = spec, epoch = Some(("b", i.toLong)))
       t.current.deltas.foreach { case (bk, fs) =>
@@ -75,7 +75,7 @@ class MorSpec extends SparkSuite {
     // threshold 3, 4 buckets => steady-state compaction demand ~4/3 buckets
     // per epoch; budget 2 is sustainable but can never compact all buckets
     // in one epoch (the synchronized-wave stall this bounds)
-    val spec = MergeSpec(mergeStrategy = "mor", morCompactThreshold = 3,
+    val spec = MergeSpec(morCompactThreshold = 3,
       morCompactBudget = 2, morCompactStagger = 0)
     var sawBacklog = false
     log.grouped(40).zipWithIndex.foreach { case (b, i) =>
@@ -103,12 +103,12 @@ class MorSpec extends SparkSuite {
     // 2000-row base state (compacted), then one delta batch touching ~20 keys + 2 wipes
     val seed = (0 until 2000).map(i => ins(i.toLong, f"c${i / 4}%04d", i % 4, s"v$i"))
     CdcApply.applyBatch(spark, t, eventsDF(spark, seed),
-      spec = MergeSpec(mergeStrategy = "mor", morCompactThreshold = 1000), epoch = Some(("p", 0L)))
+      spec = MergeSpec(morCompactThreshold = 1000), epoch = Some(("p", 0L)))
     assert(t.compactDeltas(spark, 0) > 0)
     val touch = (0 until 20).map(i => ups(10000L + i, f"c${i * 7}%04d", i % 4, s"new$i")) ++
       Seq(del(10100L, "c0003", None), del(10101L, "c0200", None))
     CdcApply.applyBatch(spark, t, eventsDF(spark, touch),
-      spec = MergeSpec(mergeStrategy = "mor", morCompactThreshold = 1000), epoch = Some(("p", 1L)))
+      spec = MergeSpec(morCompactThreshold = 1000), epoch = Some(("p", 1L)))
     assert(t.deltaFiles().nonEmpty)
 
     val pruned = t.read(spark)
@@ -154,7 +154,7 @@ class MorSpec extends SparkSuite {
 
   test("a full read over more than 32 delta files starts no listing job") {
     val t = IceLite.create(tmpDir("mor-nolisting") + "/t", turnSchema, 8)
-    val spec = MergeSpec(mergeStrategy = "mor", morCompactThreshold = 1000)
+    val spec = MergeSpec(morCompactThreshold = 1000)
     val log = randomLog(new Random(43), 600, 64, 4)
     log.grouped(120).zipWithIndex.foreach { case (b, i) =>
       CdcApply.applyBatch(spark, t, eventsDF(spark, b), spec = spec, epoch = Some(("nl", i.toLong)))
@@ -188,7 +188,7 @@ class MorSpec extends SparkSuite {
   test("schema drift across mor deltas survives read-merge and compaction") {
     val dir = tmpDir("mor-drift") + "/t"
     val t = IceLite.create(dir, turnSchema, 4)
-    val spec = MergeSpec(mergeStrategy = "mor", morCompactThreshold = 1000)
+    val spec = MergeSpec(morCompactThreshold = 1000)
 
     // epoch 0 writes deltas under the original schema
     CdcApply.applyBatch(spark, t,
@@ -220,7 +220,7 @@ class MorSpec extends SparkSuite {
   test("compaction rewrites each bucket in one task, into one sorted zstd base file") {
     val dir = tmpDir("mor-compact-task") + "/t"
     val t = IceLite.create(dir, turnSchema, 4)
-    val spec = MergeSpec(mergeStrategy = "mor", morCompactThreshold = 1000)
+    val spec = MergeSpec(morCompactThreshold = 1000)
     val log = randomLog(new Random(41), 400, 24, 5)
     log.grouped(100).zipWithIndex.foreach { case (b, i) =>
       CdcApply.applyBatch(spark, t, eventsDF(spark, b), spec = spec, epoch = Some(("ct", i.toLong)))
@@ -266,21 +266,6 @@ class MorSpec extends SparkSuite {
     val want = OracleFold.rows(OracleFold.finalState(log))
     assert(readTable(spark, t).map(x => (x.conv_id, x.turn_idx, x.text)) ==
       want.map(x => (x.conv_id, x.turn_idx, x.text)))
-  }
-
-  test("cow batch on top of outstanding mor deltas folds them (strategy hand-off)") {
-    val dir = tmpDir("mor-handoff") + "/t"
-    val t = IceLite.create(dir, turnSchema, 4)
-    val b1 = Seq(ins(0, "c1", 0, "v0"), ins(1, "c2", 0, "w0"), del(2, "c3", None))
-    val b2 = Seq(ups(3, "c1", 0, "v1"), upd(4, "c2", 0, "w1"), ins(5, "c3", 1, "z0"))
-    CdcApply.applyBatch(spark, t, eventsDF(spark, b1),
-      spec = MergeSpec(mergeStrategy = "mor", morCompactThreshold = 1000))
-    assert(t.deltaFiles().nonEmpty)
-    CdcApply.applyBatch(spark, t, eventsDF(spark, b2), spec = MergeSpec(mergeStrategy = "cow"))
-    // touched buckets lost their deltas (folded into the rewrite)
-    val want = OracleFold.rows(OracleFold.finalState(b1 ++ b2))
-    assert(readTable(spark, t) == want)
-    assert(t.deltaFiles().isEmpty, "cow rewrite must fold + clear the touched buckets' deltas")
   }
 
   test("bulk series-tombstone batch (150k wipes) stays distributed and applies correctly") {
@@ -359,95 +344,6 @@ class MorSpec extends SparkSuite {
       "retried writer's rows widen the missing column to null")
   }
 
-  test("cow commit race: a concurrent rewrite of a touched bucket is re-merged, no lost update") {
-    val dir = tmpDir("cow-race") + "/t"
-    val t = IceLite.create(dir, turnSchema, 2) // 2 buckets: the writers WILL collide
-    val cowSpec = MergeSpec(mergeStrategy = "cow")
-    // seed so both batches touch existing buckets
-    CdcApply.applyBatch(spark, t,
-      eventsDF(spark, (0 until 20).map(i => ins(i.toLong, f"s$i%03d", 0, s"s$i"))),
-      spec = cowSpec, epoch = Some(("seed", 0L)))
-    val b1 = (0 until 20).map(i => ins((100 + i).toLong, f"a$i%03d", 0, s"a$i"))
-    val b2 = (0 until 20).map(i => ins((200 + i).toLong, f"b$i%03d", 0, s"b$i"))
-    val before = CdcApply.morRaceRetries.sum()
-    // batch-2 commits between batch-1's base read/stage and its commit:
-    // without the touched-bucket staleness check batch-1's rewrite would
-    // REPLACE the buckets batch-2 just rewrote, silently dropping b2
-    CdcApply.testOnStaged.set(() => {
-      CdcApply.applyBatch(spark, t, eventsDF(spark, b2), spec = cowSpec, epoch = Some(("c2", 0L)))
-      ()
-    })
-    val r1 = CdcApply.applyBatch(spark, t, eventsDF(spark, b1), spec = cowSpec, epoch = Some(("c1", 0L)))
-    assert(!r1.skipped)
-    assert(CdcApply.morRaceRetries.sum() > before, "the cow race must have been detected and retried")
-    val want = OracleFold.rows(OracleFold.finalState(
-      (0 until 20).map(i => ins(i.toLong, f"s$i%03d", 0, s"s$i")) ++ b1 ++ b2))
-    assert(readTable(spark, t).map(x => (x.conv_id, x.turn_idx, x.text)) ==
-      want.map(x => (x.conv_id, x.turn_idx, x.text)))
-  }
-
-  test("cow race with schema evolution: racer's drift column survives retry, values intact") {
-    val dir = tmpDir("cow-race-evolve") + "/t"
-    val t = IceLite.create(dir, turnSchema, 2)
-    val cowSpec = MergeSpec(mergeStrategy = "cow")
-    CdcApply.applyBatch(spark, t,
-      eventsDF(spark, (0 until 10).map(i => ins(i.toLong, f"s$i%03d", 0, s"s$i"))),
-      spec = cowSpec, epoch = Some(("seed", 0L)))
-    val b1 = (0 until 10).map(i => ins((100 + i).toLong, f"a$i%03d", 0, s"a$i"))
-    val b2 = (0 until 10).map(i => ins((200 + i).toLong, f"b$i%03d", 0, s"b$i"))
-    val evs2 = eventsDF(spark, b2).withColumn("after",
-      when(col("after").isNotNull, struct(col("after.*"),
-        when(col("conv_id").isNotNull, lit("x")).as("extra"))))
-    CdcApply.testOnStaged.set(() => {
-      CdcApply.applyBatch(spark, t, evs2, spec = cowSpec, epoch = Some(("ce2", 0L)))
-      ()
-    })
-    val r1 = CdcApply.applyBatch(spark, t, eventsDF(spark, b1), spec = cowSpec, epoch = Some(("ce1", 0L)))
-    assert(!r1.skipped)
-    val schema = org.apache.spark.sql.types.DataType
-      .fromJson(t.current.schemaJson).asInstanceOf[org.apache.spark.sql.types.StructType]
-    assert(schema.fieldNames.contains("extra"),
-      "racer's drift column must survive the retried COW rewrite")
-    val rows = t.read(spark).select("conv_id", "extra").collect()
-      .map(r => (r.getString(0), Option(r.getString(1)))).toSeq
-    assert(rows.count(_._2.contains("x")) == 10,
-      "racer's drift VALUES must survive the bucket rewrite (not just the schema)")
-    assert(rows.length == 30)
-  }
-
-  test("disjoint-bucket concurrent commit: schema merge happens in the commit, no clobber") {
-    val dir = tmpDir("cow-disjoint") + "/t"
-    val t = IceLite.create(dir, turnSchema, 8)
-    val cowSpec = MergeSpec(mergeStrategy = "cow")
-    // pick two conv ids in DIFFERENT buckets so the writers never conflict
-    // on files and the touched-bucket race check passes for both
-    def bucketOf(id: String): Int =
-      spark.range(1).select(graft.operators.MergeEngine.bucketOf(lit(id), 8)).head.getInt(0)
-    val ids = (0 until 64).map(i => f"z$i%03d")
-    val idA = ids.head
-    val idB = ids.find(x => bucketOf(x) != bucketOf(idA)).get
-    val before = CdcApply.morRaceRetries.sum()
-    val evsB = eventsDF(spark, Seq(ins(200L, idB, 0, "vb"))).withColumn("after",
-      when(col("after").isNotNull, struct(col("after.*"),
-        when(col("conv_id").isNotNull, lit("x")).as("extra"))))
-    CdcApply.testOnStaged.set(() => {
-      CdcApply.applyBatch(spark, t, evsB, spec = cowSpec, epoch = Some(("d2", 0L)))
-      ()
-    })
-    val rA = CdcApply.applyBatch(spark, t,
-      eventsDF(spark, Seq(ins(100L, idA, 0, "va"))), spec = cowSpec, epoch = Some(("d1", 0L)))
-    assert(!rA.skipped)
-    assert(CdcApply.morRaceRetries.sum() == before,
-      "disjoint buckets must NOT race — the commit merges schemas without a re-stage")
-    val schema = org.apache.spark.sql.types.DataType
-      .fromJson(t.current.schemaJson).asInstanceOf[org.apache.spark.sql.types.StructType]
-    assert(schema.fieldNames.contains("extra"),
-      "the disjoint racer's schema evolution must not be clobbered by the later commit")
-    val got = t.read(spark).select("conv_id", "text", "extra").collect()
-      .map(r => (r.getString(0), r.getString(1), Option(r.getString(2)))).sortBy(_._1).toSeq
-    assert(got == Seq((idB, "vb", Some("x")), (idA, "va", None)).sortBy(_._1))
-  }
-
   test("two uncoordinated concurrent writers: both commit without manual re-apply") {
     val dir = tmpDir("mor-race2") + "/t"
     val t = IceLite.create(dir, turnSchema, 8)
@@ -473,9 +369,8 @@ class MorSpec extends SparkSuite {
     // CONCURRENT writers over disjoint conv universes (disjointness makes
     // the merged oracle commit-order independent — per-key ordering is
     // each writer's own offset order, which fold and oracle both honor).
-    // One seed mixes strategies: a COW writer's bucket rewrites interleave
-    // with a MOR writer's delta appends on the same table, exercising the
-    // cross-strategy race paths (stale-bucket check vs seq check).
+    // One seed mixes fold strategies: a bucket-aligned writer's delta
+    // appends interleave with a key-aligned writer's on the same table.
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
@@ -497,8 +392,8 @@ class MorSpec extends SparkSuite {
             case _           => del(off, conv, None)
           }
         }
-      val specA = MergeSpec(mergeStrategy = "mor")
-      val specB = MergeSpec(mergeStrategy = if (seed % 2 == 0) "cow" else "mor")
+      val specA = MergeSpec()
+      val specB = MergeSpec(foldAlignment = if (seed % 2 == 0) "bucket" else "key")
       var all = Vector.empty[ChangeEvent]
       (0 until 3).foreach { r =>
         val bA = randomBatch("ra", r * 1000L, 30 + rnd.nextInt(20))

@@ -165,7 +165,9 @@ class PlanSpec extends SparkSuite {
     val t = graft.table.IceLite.create(d, turnSchema, 16)
     val evs = (0 until 64).map(i => ins(i.toLong, f"c$i%02d", 0, s"v$i"))
     graft.operators.CdcApply.applyBatch(spark, t, eventsDF(spark, evs),
-      spec = graft.model.MergeSpec(mergeStrategy = "cow"))
+      spec = graft.model.MergeSpec(morCompactThreshold = 1000))
+    t.compactDeltas(spark)
+    assert(t.deltaFiles().isEmpty)
     val b = spark.range(1)
       .select(graft.operators.MergeEngine.bucketOf(lit("c07"), 16)).collect()(0).getInt(0)
     val pruned = t.read(spark, Some(Set(b)))
@@ -180,7 +182,7 @@ class PlanSpec extends SparkSuite {
     import TestHelpers._
     val d = tmpDir("planspec-mor") + "/t"
     val t = graft.table.IceLite.create(d, turnSchema, 4)
-    val mor = graft.model.MergeSpec(mergeStrategy = "mor", morCompactThreshold = 1000)
+    val mor = graft.model.MergeSpec(morCompactThreshold = 1000)
     val seed = (0 until 40).map(i => ins(i.toLong, f"c$i%02d", i % 3, s"v$i"))
     graft.operators.CdcApply.applyBatch(spark, t, eventsDF(spark, seed), spec = mor)
     assert(t.compactDeltas(spark) > 0)
@@ -231,7 +233,7 @@ class PlanSpec extends SparkSuite {
     import org.apache.spark.sql.execution.aggregate.SortAggregateExec
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
     val t = graft.table.IceLite.create(tmpDir("planspec-mor-multi") + "/t", turnSchema, 4)
-    val mor = graft.model.MergeSpec(mergeStrategy = "mor", morCompactThreshold = 1000)
+    val mor = graft.model.MergeSpec(morCompactThreshold = 1000)
     graft.operators.CdcApply.applyBatch(spark, t,
       eventsDF(spark, (0 until 40).map(i => ins(i.toLong, f"c$i%02d", i % 3, s"v$i"))), spec = mor)
     assert(t.compactDeltas(spark) > 0)

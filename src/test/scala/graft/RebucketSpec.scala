@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.model.MergeSpec
 import graft.operators.{CdcApply, EventLogApply}
 import graft.table.IceLite
 
@@ -93,32 +92,17 @@ class RebucketSpec extends SparkSuite {
     }
   }
 
-  test("COW apply fenced the same way") {
-    val dir = tmpDir("rebucket-cow-race") + "/t"
-    val t = IceLite.create(dir, turnSchema, 4)
-    val spec = MergeSpec(mergeStrategy = "cow")
-    CdcApply.applyBatch(spark, t, eventsDF(spark, Seq(ins(0L, "c1", 0, "seed"))), spec, epoch = Some(("q", 0L)))
-    CdcApply.testOnStaged.set(() => { t.rebucket(spark, 8); () })
-    val b = (0 until 20).map(i => ins((10 + i).toLong, f"n$i%02d", 0, s"n$i"))
-    val e = intercept[IllegalStateException](
-      CdcApply.applyBatch(spark, t, eventsDF(spark, b), spec, epoch = Some(("q", 1L))))
-    assert(e.getMessage.contains("re-bucketed"), e.getMessage)
-    val r = CdcApply.applyBatch(spark, t, eventsDF(spark, b), spec, epoch = Some(("q", 1L)))
-    assert(!r.skipped && state(t).size == 21)
-  }
-
-  test("COW fence holds when every touched bucket is empty on both sides of the rebucket") {
-    // The adversarial case for the per-bucket stale check: a COW batch of
+  test("MOR fence holds when every touched bucket is empty on both sides of the rebucket") {
+    // The adversarial case for any per-bucket staleness test: a batch of
     // BRAND-NEW conversations whose buckets hold no files under the old
-    // layout NOR under the rebucketed parent's. The file-list comparison
-    // sees None == None for every touched bucket, so only the commit
-    // callback's numBuckets fence can catch the race — without it the
-    // old-layout staged files would publish into a new-layout snapshot
-    // and bucket-pruned reads would miss the rows.
-    val dir = tmpDir("rebucket-cow-empty") + "/t"
+    // layout NOR under the rebucketed parent's, so comparing the touched
+    // buckets' file lists sees nothing change. Only the layout fence can
+    // catch the race — without it the old-layout staged deltas would
+    // publish into a new-layout snapshot and bucket-pruned reads would
+    // miss the rows.
+    val dir = tmpDir("rebucket-mor-empty") + "/t"
     val t = IceLite.create(dir, turnSchema, 4)
-    val spec = MergeSpec(mergeStrategy = "cow")
-    CdcApply.applyBatch(spark, t, eventsDF(spark, Seq(ins(0L, "c1", 0, "seed"))), spec,
+    CdcApply.applyBatch(spark, t, eventsDF(spark, Seq(ins(0L, "c1", 0, "seed"))),
       epoch = Some(("q", 0L)))
     // deterministically pick new conv_ids whose bucket avoids the seed's
     // bucket under BOTH layouts (so no touched bucket has files anywhere)
@@ -129,18 +113,21 @@ class RebucketSpec extends SparkSuite {
     val Array(seedB4, seedB8) = spark.range(1)
       .select(IceLite.bucketOf(lit("c1"), 4), IceLite.bucketOf(lit("c1"), 8))
       .collect()(0).toSeq.map(_.asInstanceOf[Int]).toArray
-    val fresh = rows.filter(r => r.getInt(1) != seedB4 && r.getInt(1) != seedB8)
+    val fresh = rows.filter(r => r.getInt(1) != seedB4 && r.getInt(2) != seedB8)
       .take(5).map(_.getString(0))
     assert(fresh.length == 5, "candidate pool must yield 5 bucket-avoiding names")
     CdcApply.testOnStaged.set(() => { t.rebucket(spark, 8); () })
     val b = fresh.zipWithIndex.map { case (c, i) => ins((10 + i).toLong, c, 0, s"n-$c") }
     val e = intercept[IllegalStateException](
-      CdcApply.applyBatch(spark, t, eventsDF(spark, b.toSeq), spec, epoch = Some(("q", 1L))))
+      CdcApply.applyBatch(spark, t, eventsDF(spark, b.toSeq), epoch = Some(("q", 1L))))
     assert(e.getMessage.contains("re-bucketed"), e.getMessage)
-    // re-apply lands under the new layout; every base file is bucket-pure
-    val r = CdcApply.applyBatch(spark, t, eventsDF(spark, b.toSeq), spec, epoch = Some(("q", 1L)))
+    assert(state(t).size == 1, "the fenced batch published nothing")
+    // re-apply lands under the new layout; every base and delta file is
+    // bucket-pure
+    val r = CdcApply.applyBatch(spark, t, eventsDF(spark, b.toSeq), epoch = Some(("q", 1L)))
     assert(!r.skipped && state(t).size == 6)
-    t.current.files.toSeq.foreach { case (bkt, fs) =>
+    assert(t.current.deltas.values.flatten.nonEmpty)
+    (t.current.files.toSeq ++ t.current.deltas.toSeq).foreach { case (bkt, fs) =>
       if (fs.nonEmpty) {
         val rows2 = spark.read.parquet(fs.map(f => s"$dir/$f"): _*).select("conv_id").distinct()
         val wrong = rows2.filter(IceLite.bucketOf(col("conv_id"), 8) =!= lit(bkt)).count()

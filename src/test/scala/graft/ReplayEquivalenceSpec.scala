@@ -49,12 +49,12 @@ class ReplayEquivalenceSpec extends SparkSuite {
     }
 
     val want = OracleFold.rows(OracleFold.finalState(log))
-    TestHelpers.bothStrategies.foreach { spec =>
+    TestHelpers.writeConfigs.foreach { spec =>
       val got = engineReplay(spark, batches.map(_.toSeq), spec = spec)
       assert(
         got.map(t => (t.conv_id, t.turn_idx, t.text)) ==
           want.map(t => (t.conv_id, t.turn_idx, t.text)),
-        s"seed=$seed n=$n convs=$convs turns=$turns batches=$nBatches strategy=${spec.mergeStrategy}@${spec.morCompactThreshold}/${spec.foldAlignment}")
+        s"seed=$seed n=$n convs=$convs turns=$turns batches=$nBatches config=compact@${spec.morCompactThreshold}/${spec.foldAlignment}")
     }
   }
 

@@ -18,7 +18,7 @@ import graft.table.{IceLite, IceLiteTable}
 class Scd2Spec extends SparkSuite {
   import TestHelpers._
 
-  private val mor = MergeSpec(mergeStrategy = "mor", morCompactThreshold = 1000)
+  private val mor = MergeSpec(morCompactThreshold = 1000)
 
   private type Payload = (String, String, String, Timestamp) // role,text,tool,ts
   private type Version = (Payload, Long, Option[Long])       // payload, from, to
@@ -217,17 +217,14 @@ class Scd2Spec extends SparkSuite {
     assert(eng == oracleHistory(src, 2L, src.currentVersion))
   }
 
-  test("cow targets and append-commit source ranges are rejected") {
+  test("append-commit source ranges are rejected") {
     val src = IceLite.create(tmpDir("scd2-rej-src") + "/t",
       graft.operators.EventLogApply.logSchema(turnSchema), 4)
     val h = IceLite.create(tmpDir("scd2-rej-h") + "/t", Scd2History.historySchema(turnSchema), 4)
-    val e1 = intercept[IllegalArgumentException](
-      Scd2History.refresh(spark, src, h, MergeSpec(mergeStrategy = "cow")))
-    assert(e1.getMessage.contains("merge-on-read"))
     // an append-only event-log commit in range is not a keyed-state source
     graft.operators.EventLogApply.appendBatch(spark, src,
       eventsDF(spark, Seq(ins(0, "c1", 0, "a"), ins(1, "c1", 0, "b"))))
-    val e2 = intercept[IllegalArgumentException](Scd2History.refresh(spark, src, h, mor))
-    assert(e2.getMessage.contains("keyed-state"))
+    val e = intercept[IllegalArgumentException](Scd2History.refresh(spark, src, h, mor))
+    assert(e.getMessage.contains("keyed-state"))
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.model.MergeSpec
 import graft.operators.CdcApply
 import graft.table.IceLite
 
@@ -163,7 +162,7 @@ class WapSpec extends SparkSuite {
     }
   }
 
-  test("re-staging a name replaces it; COW audit rejected; bad names rejected; quarantine at stage time") {
+  test("re-staging a name replaces it; bad names rejected; quarantine at stage time") {
     val dir0 = tmpDir("wap-misc")
     val dir = dir0 + "/t"
     val t = IceLite.create(dir, turnSchema, 4)
@@ -188,9 +187,6 @@ class WapSpec extends SparkSuite {
     intercept[IllegalStateException](t.publishAudit("co-b"))
     assert(t.discardAudit("co-b") && t.audits.isEmpty)
 
-    intercept[IllegalArgumentException](
-      CdcApply.applyBatch(spark, t, eventsDF(spark, Seq(ins(3L, "c4", 0, "z"))),
-        spec = MergeSpec(mergeStrategy = "cow"), auditRef = Some("y")))
     intercept[IllegalArgumentException](t.readAudit(spark, "../escape"))
     intercept[NoSuchElementException](t.readAudit(spark, "nope"))
 
