@@ -12,7 +12,9 @@ import org.apache.spark.sql.execution.ExplainMode
   * `DumpPlans <name> ...` instead writes each named plan to
   * `plans/<name>.txt`: a `SparkEntry` query over the tables in
   * `SPARK_GRAFT_SF_DIR`, or `cdc_fold`, the per-key fold over a generated
-  * 100k-event change-log batch. It uses `Bench.session` (`SPARK_GRAFT_CPUS`
+  * 100k-event change-log batch (it also writes `cdc_fold_one_task.txt`,
+  * the same fold over the batch coalesced to one partition: the plan a
+  * one-task epoch runs, with no exchange). It uses `Bench.session` (`SPARK_GRAFT_CPUS`
   * cores, default 32), so the dumped initial plans match what the bench
   * executes.
   */
@@ -84,6 +86,12 @@ object DumpPlans {
     sb.append("the cross-node-traffic-halving plan for network-shuffle clusters; see\n")
     sb.append("MergeSpec.foldAlignment for why the single-socket default is \"key\")\n\n```\n")
     sb.append(fmt(graft.operators.MergeEngine.netActions(events, wipes, Some(8))).take(4500))
+    sb.append("\n```\n")
+    sb.append("\n## MergeEngine.netActions — a one-task epoch (MergeEngine.plansOneTask: the\n")
+    sb.append("batch's scan is one partition, coalesced): NO exchange; the window sorts the\n")
+    sb.append("single partition in place, and the delta write and event-log append are\n")
+    sb.append("one task each instead of a rebalance\n\n```\n")
+    sb.append(fmt(oneTaskFold(events)).take(4500))
     sb.append("\n```\n")
 
     // the pruned MOR read: untouched base rows pass through via broadcast
@@ -164,20 +172,31 @@ object DumpPlans {
     spark.stop()
   }
 
+  /** The fold of a one-task epoch: the batch coalesced to one partition,
+    * as CdcApply does when [[graft.operators.MergeEngine.plansOneTask]]
+    * holds, with the wipe set broadcast. */
+  private def oneTaskFold(events: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    import graft.operators.MergeEngine
+    val one = events.coalesce(1)
+    require(MergeEngine.plansOneTask(one))
+    MergeEngine.netActions(one, org.apache.spark.sql.functions.broadcast(MergeEngine.seriesWipes(one)))
+  }
+
   private def dumpNamed(names: Seq[String]): Unit = {
     import graft.operators.MergeEngine
     val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-dump-plans")
     val outDir = Paths.get("plans")
     Files.createDirectories(outDir)
-    names.foreach { name =>
-      val df =
-        if (name == "cdc_fold") {
-          val events = graft.gen.ChangeLogGen.events(spark,
-            graft.gen.ChangeLogGen.GenConfig(numEvents = 100000L))
-          MergeEngine.netActions(events,
-            org.apache.spark.sql.functions.broadcast(MergeEngine.seriesWipes(events)))
-        } else SparkEntry.queries(name)(spark, sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
-          sys.error(s"$name: set SPARK_GRAFT_SF_DIR to the query tables' directory")))
+    names.flatMap { name =>
+      if (name == "cdc_fold") {
+        val events = graft.gen.ChangeLogGen.events(spark,
+          graft.gen.ChangeLogGen.GenConfig(numEvents = 100000L))
+        Seq(name -> MergeEngine.netActions(events,
+          org.apache.spark.sql.functions.broadcast(MergeEngine.seriesWipes(events))),
+          s"${name}_one_task" -> oneTaskFold(events))
+      } else Seq(name -> SparkEntry.queries(name)(spark, sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+        sys.error(s"$name: set SPARK_GRAFT_SF_DIR to the query tables' directory"))))
+    }.foreach { case (name, df) =>
       val txt = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
       Files.write(outDir.resolve(s"$name.txt"), txt.getBytes("UTF-8"))
       System.err.println(s"[plans] wrote $name.txt (${txt.length} chars)")

@@ -79,13 +79,12 @@ final case class PayloadSchema(name: String, matchPath: String, extract: Seq[Ext
 
 /** Write-mode analogue of the reference's `insert.mode`
   * (`.../sink/JdbcSinkConfig.java:32-37`). In the engine the mode is
-  * carried per-event in `op`, so `MergeSpec` only fixes the keys.
+  * carried per-event in `op`, and the keys are fixed by the transcript
+  * layout: (conv_id, turn_idx) is the upsert key (reference
+  * `upsert.keys`) and conv_id the delete key of a series tombstone
+  * (reference `delete.keys`; a tombstone with a null turn_idx deletes
+  * the whole conversation). They are not configurable.
   *
-  * @param upsertKeys key columns for insert/upsert/update matching
-  *                   (reference `upsert.keys`; here (conv_id, turn_idx))
-  * @param deleteKeys key columns for tombstone deletes — may be coarser
-  *                   (reference `delete.keys`; here (conv_id) enables
-  *                   series deletion)
   * @param numBuckets physical hash-bucket count of the table layout
   *                   (reference `partitions`, default 10,
   *                   `.../sink/JdbcSinkConfig.java:295-299`)
@@ -98,8 +97,6 @@ final case class PayloadSchema(name: String, matchPath: String, extract: Seq[Ext
   *                    `.../sink/JdbcSinkConfig.java:52-59`)
   */
 final case class MergeSpec(
-    upsertKeys: Seq[String] = Seq("conv_id", "turn_idx"),
-    deleteKeys: Seq[String] = Seq("conv_id"),
     numBuckets: Int = 32,
     deleteEnabled: Boolean = true,
     /** Reference `auto.evolve` (`.../sink/JdbcSinkConfig.java:145-150`):
@@ -115,8 +112,8 @@ final case class MergeSpec(
     /** Reference `fields.whitelist`
       * (`.../sink/JdbcSinkConfig.java` fields.whitelist, applied in
       * `sink/metadata/FieldsMetadata.java:79-162`): when non-empty, only
-      * these value fields of the after-struct land in the table. Key
-      * columns ([[upsertKeys]] ∪ [[deleteKeys]]) always survive, as do
+      * these value fields of the after-struct land in the table. The key
+      * columns (conv_id, turn_idx) always survive, as do
       * spec-referenced columns ([[extractSource]] while extraction or the
       * payload rename is configured) and extracted target columns (they
       * are explicit config). Applied at ingest BEFORE schema evolution,
@@ -126,7 +123,10 @@ final case class MergeSpec(
     fieldsWhitelist: Seq[String] = Nil,
     coordinates: Boolean = false,
     /** which key the fold's payload exchange targets (the fold itself
-      * is MergeEngine.netActions, one window pass).
+      * is MergeEngine.netActions, one window pass). Alignment applies
+      * only to multi-task batches: a batch whose scan plans to one task
+      * (MergeEngine.plansOneTask) folds and writes in that task with no
+      * exchange to align, whichever value is set.
       *
       * "key" (default): the fold exchanges on the upsert key and the
       * delta write redistributes by bucket (AQE rebalance) — two payload
@@ -152,6 +152,10 @@ final case class MergeSpec(
     /** Compact a bucket back to base files once it holds more than this
       * many delta files (bounds read-time merge work and makes write
       * amplification O(state/threshold) amortized, not O(state)).
+      * 0 compacts every bucket holding a delta after each epoch, so the
+      * batch's own deltas fold into base files and a read merges none.
+      * A negative value disables compaction: deltas accumulate until
+      * `IceLiteTable.compactDeltas` is called.
       *
       * Every batch reaches the table as merge-on-read: its net actions
       * are APPENDED as per-bucket delta files (O(changes) per commit,

@@ -25,9 +25,16 @@ import graft.table.{IceLite, IceLiteTable, SchemaEvolution}
   * `epoch:<streamId>` records the last applied batch id; a re-delivered
   * epoch is a no-op (`AlreadyApplied`).
   *
-  * Per epoch the batch source is scanned once column-pruned (planning)
-  * and once full-width (fold+write); the quarantine write runs only when
-  * the fold's scan observed rejects.
+  * Per epoch the batch source is scanned by (a) a NARROW planning
+  * aggregate (partition/offset only), (b) a narrow wipe count and, when
+  * the batch holds series deletes, a narrow wipe aggregate, (c) the fold
+  * + delta write — the one full-width scan, which also observes the
+  * rejected count — and (d) a quarantine write, only when rejects were
+  * observed. A streamed epoch with an event-log table scans it once more
+  * for the append ([[EventLogApply]]). A batch whose scan plans to ONE
+  * task runs each of these jobs in one task with no exchange
+  * ([[MergeEngine.plansOneTask]]); any other batch keeps the exchange
+  * plan below.
   */
 object CdcApply {
 
@@ -189,16 +196,18 @@ object CdcApply {
         org.apache.spark.sql.types.StructField("_partition", org.apache.spark.sql.types.IntegerType),
         org.apache.spark.sql.types.StructField("_offset", org.apache.spark.sql.types.LongType)))
 
-    // Scan-count note (r06): an epoch runs (a) one NARROW planning
-    // aggregate (partition/offset only — asserted in PlanSpec), (b) the
-    // fold+write job (the one full-width scan, which also carries the
-    // observed rejected-count metric), (c) a narrow wipe count + (when
-    // wipes exist) a narrow wipe aggregate, and (d) a quarantine write
-    // only when rejects were observed. Caching the tagged batch instead
-    // was measured SLOWER at bench scale (24M events): building the
-    // columnar cache of the full payload costs more than the narrow
-    // re-scans it saves.
-    val tagged = MergeEngine.tagErrors(events0, spec.deleteEnabled)
+    // The scans of the header note re-read the batch source; caching the
+    // tagged batch instead was measured SLOWER at bench scale (24M
+    // events): building the columnar cache of the full payload costs
+    // more than the narrow re-scans it saves.
+    //
+    // One-task epoch: a batch whose scan is one partition is coalesced
+    // to it explicitly, so every job below — planning and wipe
+    // aggregates, the fold's window, the delta write — plans no exchange
+    // (SinglePartition satisfies each clustered distribution).
+    val oneTask = MergeEngine.plansOneTask(events0)
+    val batch = if (oneTask) events0.coalesce(1) else events0
+    val tagged = MergeEngine.tagErrors(batch, spec.deleteEnabled)
     def writeQuarantine(rejectedCount: Long): Unit =
       if (rejectedCount > 0) rejectedDir.foreach { d =>
         val rej = tagged.filter(col("_error").isNotNull)
@@ -260,7 +269,7 @@ object CdcApply {
     // its own thread so the UI/stage profile attributes them.
     val planF = Future {
       labelled(spark, "cdc: planning aggregate") {
-        events0.groupBy("partition")
+        batch.groupBy("partition")
           .agg(max("offset").as("max_off"), count(lit(1)).as("n")).collect()
       }
     }
@@ -298,7 +307,7 @@ object CdcApply {
     // Only the extraction check reads the payload, and only when
     // configured.
     val wipeable =
-      if (events0.columns.contains("_extract_error"))
+      if (batch.columns.contains("_extract_error"))
         col("conv_id").isNotNull && col("_extract_error").isNull
       else col("conv_id").isNotNull
     val nWipes =
@@ -306,7 +315,7 @@ object CdcApply {
       else Await.result(
         Future {
           labelled(spark, "cdc: wipe count") {
-            events0.filter(col("op") === "delete" && col("turn_idx").isNull && wipeable).count()
+            batch.filter(col("op") === "delete" && col("turn_idx").isNull && wipeable).count()
           }
         },
         Duration.Inf)
@@ -326,13 +335,13 @@ object CdcApply {
         // narrow equivalent of seriesWipes(valid): an op=delete row is
         // valid iff it is `wipeable` (the after-null and turn-null rules
         // never apply to deletes, and deletes are admitted on this path —
-        // nWipes > 0 implies deleteEnabled), so filtering events0
+        // nWipes > 0 implies deleteEnabled), so filtering the batch
         // directly keeps the wipe scan off the payload struct
         // (seriesWipes(valid) read it via _error). parts: see seriesWipes
         // — the persisted frame otherwise pins a shuffle.partitions-wide
         // layout whose near-empty cached partitions cost scheduling wall
         // in every consumer.
-        MergeEngine.seriesWipes(events0.filter(wipeable),
+        MergeEngine.seriesWipes(batch.filter(wipeable),
           parts = Some(MergeEngine.wipePartitions(nWipes)))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val result =
@@ -342,10 +351,13 @@ object CdcApply {
         // non-join frame makes Spark log "broadcast ... not part of a
         // join relation" every epoch
         val wipes = if (nWipes <= WipeBroadcastMax) broadcast(wipes0) else wipes0
-        val aligned = if (spec.foldAlignment == "bucket") Some(snap0.numBuckets) else None
+        // bucket alignment only shapes a multi-task fold's exchange; a
+        // one-task fold has none to align
+        val aligned =
+          if (spec.foldAlignment == "bucket" && !oneTask) Some(snap0.numBuckets) else None
         val actions = MergeEngine.netActions(foldInput, wipes, aligned)
         applyMor(spark, table, snap0, normalize(actions), wipes0, evolved, epoch, planF,
-          rejectedCountF, writeQuarantine, preAligned = aligned.isDefined,
+          rejectedCountF, writeQuarantine, preAligned = aligned.isDefined, oneTask = oneTask,
           auditRef = auditRef, extraProps = extraProps)
       } finally if (nWipes > 0L) wipes0.unpersist(blocking = false)
     // amortized compaction: fold delta-heavy buckets back to base files
@@ -353,13 +365,17 @@ object CdcApply {
     // O(changes + state/threshold) amortized). Budgeted: at most
     // morCompactBudget buckets per epoch so a synchronized threshold
     // crossing can never stall an epoch with a full-table rewrite.
-    if (spec.morCompactThreshold > 0) {
+    // Threshold 0 compacts every bucket holding a delta; a negative one
+    // never compacts.
+    if (spec.morCompactThreshold >= 0) {
       val budget =
         if (spec.morCompactBudget > 0) spec.morCompactBudget
         else if (spec.morCompactBudget < 0) Int.MaxValue
-        else // auto: the sustainable steady-state rate when every epoch
-             // touches every bucket (inflow numBuckets deltas/epoch)
-          math.max(1, (table.numBuckets + spec.morCompactThreshold - 1) / spec.morCompactThreshold)
+        else { // auto: the sustainable steady-state rate when every epoch
+               // touches every bucket (inflow numBuckets deltas/epoch)
+          val perBucket = math.max(1, spec.morCompactThreshold)
+          math.max(1, (table.numBuckets + perBucket - 1) / perBucket)
+        }
       table.compactDeltas(spark, spec.morCompactThreshold,
         maxBuckets = budget, stagger = spec.morCompactStagger)
     }
@@ -381,6 +397,7 @@ object CdcApply {
       rejectedCountF: () => Long,
       quarantine: Long => Unit,
       preAligned: Boolean,
+      oneTask: Boolean,
       auditRef: Option[String] = None,
       extraProps: Map[String, String] = Map.empty): BatchResult = {
 
@@ -401,6 +418,8 @@ object CdcApply {
     // bucket, so partitionBy emits one delta file per touched bucket
     // with no further exchange. Key-aligned actions need the write-side
     // redistribution (AQE rebalance: hot buckets split, cold coalesce).
+    // A one-task epoch writes actions and wipe markers from ONE task
+    // instead: its sort by bucket still emits one file per touched bucket.
     val actionRows =
       if (preAligned)
         normActions.select(col("bucket"), col("conv_id"), col("turn_idx"), col("action"), col("row"))
@@ -418,7 +437,8 @@ object CdcApply {
       val deltaRows = actionRows.unionByName(wipeRows).withColumn("seq", lit(seq))
       val stage = table.newStageDir()
       labelled(spark, s"cdc: fold + delta write (seq $seq)") {
-        (if (preAligned) deltaRows
+        (if (oneTask) deltaRows.coalesce(1)
+         else if (preAligned) deltaRows
          else deltaRows.hint("rebalance", "bucket")) // AQE splits hot buckets, coalesces cold
           .write.mode("overwrite")
           .option("compression", "snappy")
@@ -627,8 +647,9 @@ object CdcApply {
     }
   }
 
-  /** Field names of `afterT` surviving the whitelist projection: keys ∪
-    * whitelist ∪ spec-referenced columns (event-side names).
+  /** Field names of `afterT` surviving the whitelist projection: the
+    * key columns (conv_id, turn_idx) ∪ whitelist ∪ spec-referenced
+    * columns (event-side names).
     */
   private def whitelistKeep(afterT: StructType, spec: MergeSpec): Seq[String] = {
     val specCols: Set[String] =
@@ -637,7 +658,7 @@ object CdcApply {
         Set(spec.extractSource)
       else Set.empty
     afterT.fieldNames.toSeq.filter(n =>
-      spec.upsertKeys.contains(n) || spec.deleteKeys.contains(n) ||
+      n == "conv_id" || n == "turn_idx" ||
         spec.fieldsWhitelist.contains(n) || specCols.contains(n))
   }
 

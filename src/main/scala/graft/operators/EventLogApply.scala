@@ -76,10 +76,14 @@ object EventLogApply {
     // appending files staged under an old layout would break pruning)
     val nb0 = table.numBuckets
 
+    // A batch scanned in one task (MergeEngine.plansOneTask) is
+    // appended from that task: its sort by bucket already emits one file
+    // per touched bucket, so the rebalance would only scatter and gather
+    // the rows. Any other batch is rebalanced onto the bucket key.
+    val bucketed = rows.withColumn("bucket", MergeEngine.bucketOf(col("conv_id"), nb0))
     val stage = table.newStageDir()
-    rows
-      .withColumn("bucket", MergeEngine.bucketOf(col("conv_id"), nb0))
-      .hint("rebalance", "bucket")
+    (if (MergeEngine.plansOneTask(events0)) bucketed.coalesce(1)
+     else bucketed.hint("rebalance", "bucket"))
       .sortWithinPartitions("bucket", "conv_id", "turn_idx", "_offset")
       .write.mode("overwrite")
       .option("compression", "zstd")

@@ -32,6 +32,16 @@ import graft.model.NetAction
   * is what replaces the reference's in-memory buffer at 10^10-event
   * scale.
   *
+  * A batch whose scan plans to ONE task ([[plansOneTask]]: about one
+  * small file, the shape of a tailing micro-batch) skips every exchange
+  * instead: CdcApply and EventLogApply coalesce it to one partition, so
+  * the fold's key exchange, the delta write's and event-log append's
+  * `rebalance` and the planning/wipe aggregates' exchanges all drop out
+  * (`SinglePartition` satisfies every clustered distribution) and each
+  * of the epoch's jobs runs as the one task that scans the batch.
+  * Spreading one task's rows over an exchange only to gather them back
+  * costs shuffle bytes and tasks per epoch and parallelizes nothing.
+  *
   * Order authority: `offset` (strictly increasing per log partition;
   * a conversation is keyed to one partition, so per-key offsets are
   * totally ordered — the Connect delivery contract). Duplicate delivery
@@ -97,6 +107,39 @@ object MergeEngine {
     parts.fold(wipes)(p => wipes.coalesce(p))
   }
 
+  /** True when `batch` plans to at most one task with no exchange: its
+    * physical plan holds no exchange, no subquery and no adaptive node,
+    * and either reports a single output partition or reads ONE leaf —
+    * a file scan, an RDD scan (a streaming micro-batch) or a local
+    * relation — of at most one partition. Spark's file-split rule puts a
+    * file scan in one task only for about one file of at most
+    * `spark.sql.files.openCostInBytes` (4 MB) or one row group, i.e. a
+    * small batch, so this adds no knob.
+    *
+    * Decided on the driver from the planned scan and never starts a
+    * Spark job: the leaf partition counts are read off RDDs the scan
+    * builds lazily, and any plan that would need an adaptive query stage
+    * (an exchange) or a subquery answers false before anything runs.
+    * Batches derived from joins (Mirror, IncrementalView, Scd2History)
+    * hold an exchange and so keep the multi-task plan.
+    */
+  def plansOneTask(batch: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, RDDScanExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val plan = batch.queryExecution.executedPlan
+    val narrow = !plan.exists(p => p.isInstanceOf[Exchange] ||
+      p.isInstanceOf[AdaptiveSparkPlanExec] || p.subqueries.nonEmpty)
+    def leafTasks: Int = plan.collectLeaves() match {
+      case Seq(f: FileSourceScanExec) => f.inputRDD.getNumPartitions
+      case Seq(r: RDDScanExec)        => r.rdd.getNumPartitions
+      case Seq(l: LocalTableScanExec) => l.inputRDD.getNumPartitions
+      case _                          => Int.MaxValue
+    }
+    narrow && (plan.outputPartitioning == SinglePartition || leafTasks <= 1)
+  }
+
   /** Series wipes per partition of a persisted wipe set. */
   val WipesPerPartition: Long = 50000L
 
@@ -158,6 +201,10 @@ object MergeEngine {
     * exchange. The payload crosses the wire exactly once per epoch
     * (key-aligned plans cross twice: fold exchange + write
     * redistribution); see MergeSpec.foldAlignment.
+    *
+    * A one-partition `events` ([[plansOneTask]], coalesced by the
+    * caller) plans no exchange at all with `bucketed = None`: the window
+    * sorts the single partition in place.
     */
   def netActions(events: DataFrame, wipes: DataFrame,
                  bucketed: Option[Int] = None): DataFrame = {

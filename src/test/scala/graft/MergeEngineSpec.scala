@@ -16,10 +16,11 @@ class MergeEngineSpec extends SparkSuite {
 
   private def check(batches: Seq[Seq[ChangeEvent]], clue: String): Unit = {
     val want = OracleFold.rows(OracleFold.finalState(batches.flatten))
-    TestHelpers.writeConfigs.foreach { spec =>
-      val got = engineReplay(spark, batches, spec = spec)
+    for (spec <- writeConfigs; shape <- batchShapes) {
+      val got = engineReplay(spark, batches, spec = spec, shape = Some(shape))
       assert(got == want,
-        s"[$clue / compact@${spec.morCompactThreshold}/${spec.foldAlignment}] engine != oracle\nengine: $got\noracle: $want")
+        s"[$clue / compact@${spec.morCompactThreshold}/${spec.foldAlignment}/${shape.name}] " +
+          s"engine != oracle\nengine: $got\noracle: $want")
     }
   }
 
@@ -97,6 +98,28 @@ class MergeEngineSpec extends SparkSuite {
     assert(got.map(_.text) == Seq("fine"))
   }
 
+  test("all-reject, all-wipe and empty batches: exact rejected count and oracle state in both batch shapes") {
+    val seed = Seq(ins(0, "c1", 0, "a"), ins(1, "c1", 1, "b"), ins(2, "c2", 0, "c"))
+    val allReject = Seq(
+      ChangeEvent(0, 3, ts(3), "insert", null, Some(1), Some(turn("cX", 1, "x", 3)), 2),
+      ChangeEvent(0, 4, ts(4), "insert", "cY", Some(1), None, 2))
+    val allWipe = Seq(del(5, "c1", None), del(6, "c9", None))
+    val want = OracleFold.rows(OracleFold.finalState(seed ++ allWipe))
+    for (spec <- writeConfigs; shape <- batchShapes) {
+      val clue = s"compact@${spec.morCompactThreshold}/${spec.foldAlignment}/${shape.name}"
+      val dir = tmpDir("merge-degenerate")
+      val table = IceLite.create(s"$dir/t", turnSchema, 8)
+      Seq(seed -> 0L, allReject -> 2L, allWipe -> 0L, Seq.empty[ChangeEvent] -> 0L).foreach {
+        case (b, rejected) =>
+          val res = CdcApply.applyBatch(spark, table, batchOf(spark, b, shape),
+            spec = spec, rejectedDir = Some(s"$dir/rejected"))
+          assert(res.rejected == rejected, s"[$clue] batch of ${b.size}: rejected ${res.rejected}")
+      }
+      assert(spark.read.parquet(s"$dir/rejected").count() == 2L, clue)
+      assert(readTable(spark, table) == want, clue)
+    }
+  }
+
   test("net actions shape: one row per touched key, correct action kinds") {
     val evs = Seq(
       ins(0, "c1", 0, "a"), upd(1, "c1", 0, "b"),      // Put(b)
@@ -151,17 +174,40 @@ object TestHelpers {
     table.read(spark).as[TranscriptTurn].collect().toSeq.sortBy(t => (t.conv_id, t.turn_idx))
   }
 
+  /** A batch's partitioning: an RDD-backed batch of `slices` partitions,
+    * the shape of a streaming micro-batch. One slice takes the one-task
+    * epoch (no exchange), more take the exchange plan.
+    */
+  final case class BatchShape(name: String, slices: Int)
+
+  /** Both epoch plans: every write config must hold in each. */
+  val batchShapes: Seq[BatchShape] = Seq(BatchShape("one-task", 1), BatchShape("multi-task", 3))
+
+  /** `events` as a batch of `shape`, checked to take the plan it names. */
+  def batchOf(spark: SparkSession, events: Seq[ChangeEvent], shape: BatchShape): DataFrame = {
+    val local = eventsDF(spark, events)
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(local.collect().toSeq, shape.slices), local.schema)
+    assert(MergeEngine.plansOneTask(df) == (shape.slices == 1), s"${shape.name} batch plans the other path")
+    df
+  }
+
   /** Full-stack replay: create a fresh IceLite table, apply each batch via
-    * CdcApply, read back sorted rows.
+    * CdcApply, read back sorted rows. Without a `shape` the batches are
+    * local relations, one partition per event up to the core count.
     */
   def engineReplay(
       spark: SparkSession,
       batches: Seq[Seq[ChangeEvent]],
       numBuckets: Int = 8,
-      spec: MergeSpec = MergeSpec()): Seq[TranscriptTurn] = {
+      spec: MergeSpec = MergeSpec(),
+      shape: Option[BatchShape] = None): Seq[TranscriptTurn] = {
     val dir = java.nio.file.Files.createTempDirectory("engine-replay").toString
     val table = IceLite.create(s"$dir/t", turnSchema, numBuckets)
-    batches.foreach { b => CdcApply.applyBatch(spark, table, eventsDF(spark, b), spec = spec) }
+    batches.foreach { b =>
+      val df = shape.fold(eventsDF(spark, b))(batchOf(spark, b, _))
+      CdcApply.applyBatch(spark, table, df, spec = spec)
+    }
     readTable(spark, table)
   }
 

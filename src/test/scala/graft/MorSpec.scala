@@ -68,6 +68,24 @@ class MorSpec extends SparkSuite {
       want.map(x => (x.conv_id, x.turn_idx, x.text)))
   }
 
+  test("threshold 0 compacts every epoch's own deltas; a negative threshold never compacts") {
+    val log = randomLog(new Random(13), 300, 8, 4)
+    val want = OracleFold.rows(OracleFold.finalState(log)).map(x => (x.conv_id, x.turn_idx, x.text))
+    val every = IceLite.create(tmpDir("mor-t0") + "/t", turnSchema, 4)
+    val never = IceLite.create(tmpDir("mor-tneg") + "/t", turnSchema, 4)
+    log.grouped(60).zipWithIndex.foreach { case (b, i) =>
+      CdcApply.applyBatch(spark, every, eventsDF(spark, b),
+        spec = MergeSpec(morCompactThreshold = 0), epoch = Some(("z", i.toLong)))
+      assert(every.deltaFiles().isEmpty, s"threshold 0 left delta files after batch $i")
+      CdcApply.applyBatch(spark, never, eventsDF(spark, b),
+        spec = MergeSpec(morCompactThreshold = -1), epoch = Some(("n", i.toLong)))
+      assert(never.dataFiles().isEmpty, s"a negative threshold compacted at batch $i")
+    }
+    assert(every.dataFiles().nonEmpty)
+    assert(readTable(spark, every).map(x => (x.conv_id, x.turn_idx, x.text)) == want)
+    assert(readTable(spark, never).map(x => (x.conv_id, x.turn_idx, x.text)) == want)
+  }
+
   test("budgeted compaction: at most morCompactBudget buckets per epoch, backlog drains, state correct") {
     val dir = tmpDir("mor-budget") + "/t"
     val t = IceLite.create(dir, turnSchema, 4)

@@ -159,6 +159,61 @@ class PlanSpec extends SparkSuite {
     assert(bucketed == want, s"bucket: $bucketed\nwant:   $want")
   }
 
+  test("one-task epoch: fold + delta write and event-log append execute with no shuffle exchange") {
+    import TestHelpers._
+    import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.operators.{CdcApply, EventLogApply}
+    import scala.jdk.CollectionConverters._
+    // every executed node, adaptive stages and cached plans inlined
+    def flat(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => flat(a.executedPlan)
+      case q: QueryStageExec        => q +: flat(q.plan)
+      case m: InMemoryTableScanExec => m +: flat(m.relation.cachedPlan)
+      case c: CommandResultExec     => c +: flat(c.commandPhysicalPlan)
+      case other                    => other +: other.children.flatMap(flat)
+    }
+    val evs = Seq(ins(0, "c1", 0, "a"), upd(1, "c1", 0, "b"), ins(2, "c2", 0, "c"),
+      del(3, "c3", None), ins(4, "c3", 1, "d"), ups(5, "c4", 2, "e"))
+    // executed plans of one applyBatch + appendBatch: (plan text, shuffle
+    // exchanges) per query, and the two writes' shuffle counts
+    def epochPlans(shape: BatchShape): (Seq[(String, Int)], Int, Int) = {
+      val dir = tmpDir("planspec-onetask")
+      val t = graft.table.IceLite.create(s"$dir/state", turnSchema, 4)
+      val log = graft.table.IceLite.create(s"$dir/log", EventLogApply.logSchema(turnSchema), 4)
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+          val all = flat(qe.executedPlan)
+          seen.add((all.map(_.simpleStringWithNodeId()).mkString("\n") + "\n" + qe.executedPlan,
+            all.count(_.isInstanceOf[ShuffleExchangeExec])))
+        }
+        def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        CdcApply.applyBatch(spark, t, batchOf(spark, evs, shape),
+          spec = graft.model.MergeSpec(morCompactThreshold = 1000))
+        EventLogApply.appendBatch(spark, log, batchOf(spark, evs, shape))
+        def write(d: String) = seen.asScala.find(_._1.contains(s"$dir/$d/"))
+        val deadline = System.currentTimeMillis() + 20000 // listener bus drain
+        while ((write("state").isEmpty || write("log").isEmpty) && System.currentTimeMillis() < deadline)
+          Thread.sleep(50)
+        (seen.asScala.toSeq, write("state").fold(-1)(_._2), write("log").fold(-1)(_._2))
+      } finally spark.listenerManager.unregister(listener)
+    }
+    val (one, oneFold, oneLog) = epochPlans(batchShapes.head)
+    assert(oneFold == 0 && oneLog == 0,
+      s"fold + delta write: $oneFold, event-log append: $oneLog shuffles\n${one.map(_._1).mkString("\n\n")}")
+    // planning aggregate and wipe count plan none either
+    assert(one.forall(_._2 == 0), one.filter(_._2 > 0).map(_._1).mkString("\n\n"))
+    // the multi-task shape keeps its exchange plan
+    val (_, multiFold, multiLog) = epochPlans(batchShapes.last)
+    assert(multiFold > 0 && multiLog > 0, s"multi-task fold: $multiFold, append: $multiLog")
+  }
+
   test("IceLite point read scans only the target bucket's files") {
     import TestHelpers._
     val d = tmpDir("planspec") + "/t"

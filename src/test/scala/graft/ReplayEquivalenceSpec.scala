@@ -49,12 +49,13 @@ class ReplayEquivalenceSpec extends SparkSuite {
     }
 
     val want = OracleFold.rows(OracleFold.finalState(log))
-    TestHelpers.writeConfigs.foreach { spec =>
-      val got = engineReplay(spark, batches.map(_.toSeq), spec = spec)
+    for (spec <- writeConfigs; shape <- batchShapes) {
+      val got = engineReplay(spark, batches.map(_.toSeq), spec = spec, shape = Some(shape))
       assert(
         got.map(t => (t.conv_id, t.turn_idx, t.text)) ==
           want.map(t => (t.conv_id, t.turn_idx, t.text)),
-        s"seed=$seed n=$n convs=$convs turns=$turns batches=$nBatches config=compact@${spec.morCompactThreshold}/${spec.foldAlignment}")
+        s"seed=$seed n=$n convs=$convs turns=$turns batches=$nBatches " +
+          s"config=compact@${spec.morCompactThreshold}/${spec.foldAlignment}/${shape.name}")
     }
   }
 

@@ -71,6 +71,21 @@ class SpecFlagsSpec extends SparkSuite {
     assert(c2.getAs[Long]("_offset") == 11L && c2.getAs[Int]("_partition") == 1)
   }
 
+  test("fields.whitelist always keeps the fixed key columns conv_id and turn_idx") {
+    // the keys are not configurable (MergeSpec has no key fields): a
+    // whitelist that names neither key column still lands both, and the
+    // fold keys on them
+    val spec = MergeSpec(fieldsWhitelist = Seq("text"))
+    val t = IceLite.create(tmpDir("wl-keys") + "/t", CdcApply.whitelistedStruct(turnSchema, spec), 4)
+    CdcApply.applyBatch(spark, t, eventsDF(spark, Seq(
+      ins(0, "c1", 0, "v0"), ins(1, "c1", 1, "v1"), upd(2, "c1", 0, "v2"), del(3, "c2", None))),
+      spec = spec)
+    assert(t.schema.fieldNames.toSeq == Seq("conv_id", "turn_idx", "text"), t.schema.simpleString)
+    assert(t.read(spark).orderBy("turn_idx").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSeq ==
+      Seq(("c1", 0, "v2"), ("c1", 1, "v1")))
+  }
+
   test("coordinates off by default: table schema stays exactly input_hint shape") {
     val got = engineReplay(spark, Seq(Seq(ins(0, "c1", 0, "v0"))))
     assert(got.nonEmpty) // readTable already decodes to TranscriptTurn (6 cols)

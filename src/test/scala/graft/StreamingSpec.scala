@@ -122,6 +122,71 @@ class StreamingSpec extends SparkSuite {
       planning.filterNot(_._1.contains("max_off")).map(_._1.take(300)))
   }
 
+  test("one-file epochs fold, write deltas and append the event log with no shuffle; the decision runs no job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    val root = tmpDir("stream-onetask")
+    // one log partition: each chunk is one small file, each epoch one file
+    val cfg = ChangeLogGen.GenConfig(numEvents = 3000, numConvs = 30, maxTurns = 6, logPartitions = 1)
+    ChangeLogGen.writeLog(spark, cfg, s"$root/log", chunks = 3)
+    val sc = CdcStream.StreamConfig(s"$root/log", s"$root/table", s"$root/ckpt",
+      maxFilesPerTrigger = Some(1), eventLogTableDir = Some(s"$root/logtbl"))
+    // stage id -> its job's label; (label, shuffle bytes written) per task
+    val stageLabel = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val taskShuffle = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]()
+    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val label = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("")
+        labels.add(label)
+        e.stageIds.foreach(stageLabel.put(_, label))
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = if (e.taskMetrics != null)
+        taskShuffle.add((stageLabel.getOrDefault(e.stageId, ""),
+          e.taskMetrics.shuffleWriteMetrics.bytesWritten))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val table =
+      try { val t = CdcStream.runAvailable(spark, sc); Thread.sleep(1000); t } // listener bus drain
+      finally spark.sparkContext.removeSparkListener(listener)
+    assert(table.current.properties("epoch:cdc").toLong >= 2, "expected multiple epochs")
+    val cdc = taskShuffle.asScala.toSeq.filter(_._1.startsWith("cdc:"))
+      .groupMapReduce(_._1)(_._2)(_ + _)
+    assert(labels.asScala.exists(_.startsWith("cdc: fold + delta write")) &&
+      labels.asScala.exists(_ == "cdc: event-log append"), labels.asScala.toSeq.distinct)
+    assert(cdc.values.forall(_ == 0L), cdc)
+    assert(stateTriples(table) == oracleTriples(collectLog(spark.read.parquet(s"$root/log"))))
+
+    // the decision itself, on a streamed micro-batch and on a batch whose
+    // plan is adaptive (a join), starts no Spark job under its label
+    val decided = new java.util.concurrent.ConcurrentLinkedQueue[(Boolean, Boolean)]()
+    val probeJobs = new java.util.concurrent.atomic.AtomicInteger()
+    val probe = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "one-task probe"))
+          probeJobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(probe)
+    try {
+      spark.readStream.schema(graft.model.Schemas.envelope()).option("maxFilesPerTrigger", 1)
+        .parquet(s"$root/log").writeStream
+        .option("checkpointLocation", s"$root/ckpt-probe")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+          graft.operators.CdcApply.labelled(spark, "one-task probe") {
+            decided.add((graft.operators.MergeEngine.plansOneTask(df),
+              graft.operators.MergeEngine.plansOneTask(df.join(df.select("conv_id").distinct(), "conv_id"))))
+          }
+          ()
+        }
+        .start().awaitTermination()
+      Thread.sleep(1000) // listener bus drain
+    } finally spark.sparkContext.removeSparkListener(probe)
+    assert(probeJobs.get == 0, s"${probeJobs.get} job(s) ran inside the decision")
+    assert(decided.size >= 2, decided)
+    assert(decided.asScala.forall(_ == ((true, false))), decided)
+  }
+
   test("rebucket mid-stream: the fenced epoch fails the stream; restart resumes under the new layout") {
     val root = tmpDir("stream-rebucket")
     val cfg = ChangeLogGen.GenConfig(numEvents = 3000, numConvs = 40, maxTurns = 8, logPartitions = 2)
