@@ -63,14 +63,17 @@ object CdcApply {
   val MorCommitRetries: Int = 5
 
   /** Run `body` under `desc` as this thread's Spark job description and
-    * clear it on exit. A job description is a thread-local property that
-    * a new thread inherits from the thread that created it, so a pooled
-    * thread carries whatever label was set when its pool grew: every
-    * engine `Future` that runs Spark jobs labels itself on entry.
+    * restore the caller's on exit, so the caller's later jobs keep its
+    * label. A job description is a thread-local property that a new
+    * thread inherits from the thread that created it, so a pooled thread
+    * carries whatever label was set when its pool grew: every engine
+    * `Future` that runs Spark jobs labels itself on entry.
     */
   private[graft] def labelled[T](spark: SparkSession, desc: String)(body: => T): T = {
-    spark.sparkContext.setJobDescription(desc)
-    try body finally spark.sparkContext.setJobDescription(null)
+    val sc = spark.sparkContext
+    val caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setJobDescription(caller)
   }
 
   /** Total MOR commit races retried in this JVM (observability/test hook). */
@@ -209,7 +212,7 @@ object CdcApply {
     val batch = if (oneTask) events0.coalesce(1) else events0
     val tagged = MergeEngine.tagErrors(batch, spec.deleteEnabled)
     def writeQuarantine(rejectedCount: Long): Unit =
-      if (rejectedCount > 0) rejectedDir.foreach { d =>
+      if (rejectedCount > 0) rejectedDir.foreach(d => labelled(spark, "cdc: quarantine write") {
         val rej = tagged.filter(col("_error").isNotNull)
           .withColumn("_rejected_at_epoch", lit(epoch.map(_._2).getOrElse(-1L)))
         epoch match {
@@ -224,7 +227,7 @@ object CdcApply {
             rej.write.mode("append")
               .partitionBy("_rejected_at_epoch").parquet(d)
         }
-      }
+      })
 
     // Normalize action rows to the (possibly evolved) table schema:
     // missing columns → null, narrower types → up-cast. No-op when the
@@ -376,8 +379,10 @@ object CdcApply {
           val perBucket = math.max(1, spec.morCompactThreshold)
           math.max(1, (table.numBuckets + perBucket - 1) / perBucket)
         }
-      table.compactDeltas(spark, spec.morCompactThreshold,
-        maxBuckets = budget, stagger = spec.morCompactStagger)
+      labelled(spark, "cdc: compaction") {
+        table.compactDeltas(spark, spec.morCompactThreshold,
+          maxBuckets = budget, stagger = spec.morCompactStagger)
+      }
     }
     result
   }

@@ -523,16 +523,19 @@ object CdcStream {
     * file set comes from the checkpoint's file-source log (driver-side
     * file read, no Spark job); if that ever fails to parse, fall back to
     * a `_metadata.file_path` distinct over the streamed scan (one narrow
-    * job). The streamed DataFrame itself is never executed on this path —
-    * it is only the offset-tracking feed.
+    * job). The footer merge itself runs as a Spark job; both carry the
+    * label "cdc: batch schema". The streamed DataFrame itself is never
+    * executed on this path — it is only the offset-tracking feed.
     */
   private def resolveBatch(
       spark: SparkSession, cfg: StreamConfig, epochId: Long, df: DataFrame): DataFrame = {
-    val files = batchFiles(cfg.checkpointDir, epochId)
-      .getOrElse(df.select(col("_metadata.file_path")).distinct()
-        .collect().map(_.getString(0)).toSeq)
-    if (files.isEmpty) df
-    else spark.read.option("mergeSchema", "true").parquet(files: _*)
+    CdcApply.labelled(spark, "cdc: batch schema") {
+      val files = batchFiles(cfg.checkpointDir, epochId)
+        .getOrElse(df.select(col("_metadata.file_path")).distinct()
+          .collect().map(_.getString(0)).toSeq)
+      if (files.isEmpty) df
+      else spark.read.option("mergeSchema", "true").parquet(files: _*)
+    }
   }
 
   /** Parse `checkpoint/sources/0/<batchId>` (Spark's file-source log: a

@@ -205,12 +205,14 @@ final class IceLiteTable(val dir: String) {
     * the current table schema — older files missing later-added columns
     * surface them as nulls (ALTER-ADD semantics for free from the parquet
     * reader) — merged at read time with any outstanding MOR delta files
-    * (a no-op pass-through when there are none). A read that names
-    * exactly one bucket merges inside a single task with no exchange
-    * ([[MorRead.mergedInBucket]]); any other read takes the multi-bucket
-    * merge ([[MorRead.merged]]): two delta passes, one broadcast of the
-    * delta keys and one exchange for the fold. Files are scanned from
-    * the snapshot's list, with no listing job ([[IceLite.readFiles]]).
+    * (a no-op pass-through when there are none). Every read takes the
+    * same fold ([[MorRead]]): the deltas fold once per key and the base
+    * rows stream past that fold in one outer join. A read that names
+    * exactly one bucket runs the join inside a single task with no
+    * exchange ([[MorRead.mergedInBucket]]); any other read lets the
+    * planner place it ([[MorRead.merged]]): one exchange for the fold,
+    * the fold broadcast while it is small. Files are scanned from the
+    * snapshot's list, with no listing job ([[IceLite.readFiles]]).
     */
   def read(spark: SparkSession, buckets: Option[Set[Int]] = None): DataFrame =
     readSnapshotState(spark, current, buckets)
@@ -541,8 +543,7 @@ final class IceLiteTable(val dir: String) {
     val sch = schemaOf(s)
     val base = IceLite.readFiles(spark, sch, resolve(s.files, buckets))
     val deltaPaths = resolve(s.deltas, buckets)
-    if (deltaPaths.isEmpty) base
-    else if (buckets.exists(_.size == 1)) MorRead.mergedInBucket(spark, sch, base, deltaPaths)
+    if (buckets.exists(_.size == 1)) MorRead.mergedInBucket(spark, sch, base, deltaPaths)
     else MorRead.merged(spark, sch, base, deltaPaths)
   }
 

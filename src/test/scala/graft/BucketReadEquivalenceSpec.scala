@@ -7,25 +7,38 @@ import org.apache.spark.sql.functions._
 
 import graft.model.{ChangeEvent, MergeSpec}
 import graft.operators.{CdcApply, MergeEngine}
-import graft.table.IceLite
+import graft.table.{IceLite, MorRead}
 
-/** Randomized equivalence of the two merge-on-read plan shapes: for every
-  * bucket, at the current version and at pinned earlier versions, the
-  * one-bucket read (in-task merge), the multi-bucket read restricted to
-  * that bucket (two-pass broadcast merge) and the sequential oracle fold
-  * must hold the same rows — and so must multi-bucket reads of 2- and
-  * 3-bucket subsets and of the whole table, point lookups (a missing key
-  * included) and the full-fold fallback of the multi-bucket read.
+/** Randomized differential check of the merge-on-read formulations
+  * against the sequential oracle fold: for every bucket, at the current
+  * version and at pinned earlier versions, the one-bucket read (in-task
+  * merge), the multi-bucket read restricted to that bucket and the
+  * oracle must hold the same rows — and so must multi-bucket reads of 2-
+  * and 3-bucket subsets and of the whole table, point lookups (a missing
+  * key included), the roll-forward of each pinned state over the change
+  * feed to the next (`MorRead.foldState`, IncrementalView's after-state)
+  * and the over-gate reads (in-task builds gated off, broadcasts
+  * disabled).
   *
   * The logs mix series wipes, update-only keys (on base rows and on keys
   * that never existed), updates after a wipe and re-inserts after a wipe,
   * and a mid-run compaction puts base rows under later deltas — among
-  * them a conversation that is then wiped and never touched again.
+  * them a conversation that is then wiped and never touched again. Two
+  * columns are added mid-run ([[DriftCols]]), so reads widen base files
+  * and delta files written under older schemas. Equal rows on seeded
+  * logs stand in for a proof of bag-semantics equivalence.
   */
 class BucketReadEquivalenceSpec extends SparkSuite {
   import TestHelpers._
 
   private val NumBuckets = 4
+
+  /** Columns added mid-run -> the first batch whose events carry them.
+    * An event's value is `<column>:<its text>`.
+    */
+  private val DriftCols = Seq("sentiment" -> 1, "topic" -> 3)
+
+  private type Row5 = (String, Int, String, Option[String], Option[String])
 
   private def randomLog(rnd: Random, from: Long, n: Int, convs: Int, turns: Int): Vector[ChangeEvent] =
     (0 until n).map { i =>
@@ -51,9 +64,37 @@ class BucketReadEquivalenceSpec extends SparkSuite {
     upd(from + 3, conv, 1, s"reupd-${from + 3}"),
     upd(from + 4, "c_ghost", 0, "never-existed"))
 
-  private def rows(df: DataFrame): Seq[(String, Int, String)] =
-    df.select("conv_id", "turn_idx", "text").collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSeq.sorted
+  /** `events` with the drift columns of batch `i` appended to `after`. */
+  private def batchDF(events: Seq[ChangeEvent], i: Int): DataFrame = {
+    val cols = DriftCols.collect { case (c, from) if from <= i => c }
+    val df = eventsDF(spark, events)
+    if (cols.isEmpty) df
+    else df.withColumn("after", when(col("after").isNotNull, struct(col("after.*") +: cols.map(c =>
+      // `when` without otherwise => nullable, as ALTER-ADD requires
+      when(col("conv_id").isNotNull, concat(lit(s"$c:"), col("after.text"))).as(c)): _*)))
+  }
+
+  /** Key, text and drift columns (null where the schema lacks one). */
+  private def rows(df: DataFrame): Seq[Row5] =
+    df.select(Seq(col("conv_id"), col("turn_idx"), col("text")) ++ DriftCols.map { case (c, _) =>
+      if (df.columns.contains(c)) col(c) else lit(null).cast("string").as(c)
+    }: _*).collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getString(2), Option(r.getString(3)), Option(r.getString(4))))
+      .toSeq.sorted
+
+  /** `body` with every broadcast join disabled, static and adaptive: the
+    * planner must then place the merge's joins without one.
+    */
+  private def withoutBroadcast[T](body: => T): T = {
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val before = keys.map(k => k -> spark.conf.getOption(k))
+    keys.foreach(spark.conf.set(_, "-1"))
+    try body
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
 
   private def runCase(seed: Long): Unit = {
     val rnd = new Random(seed)
@@ -70,7 +111,7 @@ class BucketReadEquivalenceSpec extends SparkSuite {
     val spec = MergeSpec(morCompactThreshold = 1000)
     // (version, batches applied as of it)
     val versions = batches.zipWithIndex.flatMap { case (b, i) =>
-      CdcApply.applyBatch(spark, t, eventsDF(spark, b), spec = spec, epoch = Some(("eq", i.toLong)))
+      CdcApply.applyBatch(spark, t, batchDF(b, i), spec = spec, epoch = Some(("eq", i.toLong)))
       val applied = t.currentVersion -> (i + 1)
       // base rows under the later batches' deltas
       if (i == 1) {
@@ -79,6 +120,7 @@ class BucketReadEquivalenceSpec extends SparkSuite {
       } else Seq(applied)
     }
     assert(t.dataFiles().nonEmpty && t.deltaFiles().nonEmpty, "case never mixed base and delta files")
+    assert(DriftCols.forall(c => t.schema.fieldNames.contains(c._1)), t.schema.simpleString)
 
     val convs = (batches.flatten.map(_.conv_id) :+ "c_missing").distinct
     val bucketOf: Map[String, Int] = {
@@ -87,9 +129,17 @@ class BucketReadEquivalenceSpec extends SparkSuite {
         .select(col("conv_id"), MergeEngine.bucketOf(col("conv_id"), NumBuckets))
         .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
     }
+    // texts are unique per event: the batch an event came from fixes its drift columns
+    val batchOfText: Map[String, Int] =
+      batches.zipWithIndex.flatMap { case (b, i) => b.flatMap(_.after).map(_.text -> i) }.toMap
+    def oracle(n: Int): Seq[Row5] = {
+      def drift(c: String, text: String) =
+        DriftCols.collectFirst { case (`c`, from) if batchOfText(text) >= from => s"$c:$text" }
+      OracleFold.rows(OracleFold.finalState(batches.take(n).flatten))
+        .map(x => (x.conv_id, x.turn_idx, x.text, drift("sentiment", x.text), drift("topic", x.text)))
+    }
     versions.foreach { case (v, n) =>
-      val want = OracleFold.rows(OracleFold.finalState(batches.take(n).flatten))
-        .map(x => (x.conv_id, x.turn_idx, x.text))
+      val want = oracle(n)
       val all = t.readAt(spark, v)
       assert(rows(all) == want, s"seed=$seed v$v: whole-table read != oracle")
       Seq(Set(0, 1), Set(1, 3), Set(0, 1, 2), Set(1, 2, 3)).foreach { sub =>
@@ -111,11 +161,37 @@ class BucketReadEquivalenceSpec extends SparkSuite {
         assert(got == want.filter(_._1 == c), s"seed=$seed v$v lookup $c")
       }
     }
-    assert(!rows(t.read(spark)).exists(_._1 == "c_gone") && t.dataFiles().nonEmpty)
-    val fallback = graft.table.MorRead.merged(spark, t.schema, t.readBase(spark), t.deltaFiles(),
-      maxPrunedDeltaBytes = 0L)
-    assert(rows(fallback) == OracleFold.rows(OracleFold.finalState(batches.flatten))
-      .map(x => (x.conv_id, x.turn_idx, x.text)), s"seed=$seed: full-fold fallback != oracle")
+    // IncrementalView's roll-forward: the state at `from`, widened to the
+    // schema at `to`, folded with the feed of (from, to]; both sides
+    // checkpointed as the view checkpoints them
+    def rolled(from: Long, to: Long): DataFrame = {
+      val sch = org.apache.spark.sql.types.DataType.fromJson(t.snapshot(to).schemaJson)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
+      val before0 = t.readAt(spark, from)
+      val before = before0.select(sch.fields.toSeq.map(f =>
+        if (before0.columns.contains(f.name)) col(f.name) else lit(null).cast(f.dataType).as(f.name)): _*)
+      val feed = t.readChanges(spark, from, to).localCheckpoint(false)
+        .select(col("conv_id"), col("turn_idx"), col("action"), col("row"), col("_commit_version").as("seq"))
+      MorRead.foldState(before.localCheckpoint(false), feed, sch)
+    }
+    (versions.sliding(2).toSeq :+ Seq(versions.head, versions.last)).foreach {
+      case Seq((from, _), (to, n)) =>
+        assert(rows(rolled(from, to)) == oracle(n), s"seed=$seed: foldState v$from -> v$to != oracle")
+    }
+    // over the in-task gate, and with no join broadcast anywhere
+    val want = oracle(batches.size)
+    assert(!want.exists(_._1 == "c_gone") && t.dataFiles().nonEmpty)
+    withoutBroadcast {
+      assert(rows(MorRead.merged(spark, t.schema, t.readBase(spark), t.deltaFiles())) == want,
+        s"seed=$seed: multi-bucket read without broadcast != oracle")
+      (0 until NumBuckets).foreach { b =>
+        val got = rows(MorRead.mergedInBucket(spark, t.schema, t.readBase(spark, Some(Set(b))),
+          t.deltaFiles(Some(Set(b))), maxInTaskDeltaBytes = 0L))
+        assert(got == want.filter(r => bucketOf(r._1) == b), s"seed=$seed bucket=$b: over-gate read != oracle")
+      }
+      assert(rows(rolled(versions.head._1, versions.last._1)) == want,
+        s"seed=$seed: foldState without broadcast != oracle")
+    }
   }
 
   test("one-bucket read == multi-bucket read == oracle, per bucket and pinned version") {
@@ -123,7 +199,7 @@ class BucketReadEquivalenceSpec extends SparkSuite {
     runCase(seed = 12)
   }
 
-  test("oversized deltas fall back to the full fold with the same rows") {
+  test("oversized deltas fall back to planner-placed joins with the same rows") {
     val t = IceLite.create(tmpDir("bucket-read-big") + "/t", turnSchema, 2)
     val log = randomLog(new Random(31), 0L, 200, 6, 4) ++ wipeScript(500L, "c01")
     val spec = MergeSpec(morCompactThreshold = 1000)
@@ -131,14 +207,14 @@ class BucketReadEquivalenceSpec extends SparkSuite {
       CdcApply.applyBatch(spark, t, eventsDF(spark, b), spec = spec, epoch = Some(("big", i.toLong)))
       if (i == 0) assert(t.compactDeltas(spark) > 0)
     }
-    val want = OracleFold.rows(OracleFold.finalState(log)).map(x => (x.conv_id, x.turn_idx, x.text))
+    val want = OracleFold.rows(OracleFold.finalState(log)).map(x => (x.conv_id, x.turn_idx, x.text, None, None))
     val perBucket = (0 until 2).map { b =>
       val base = t.readBase(spark, Some(Set(b)))
       val deltas = t.deltaFiles(Some(Set(b)))
       assert(base.count() > 0 && deltas.nonEmpty, s"bucket $b mixes no base and delta files")
-      val inTask = rows(graft.table.MorRead.mergedInBucket(spark, t.schema, base, deltas))
-      val full = rows(graft.table.MorRead.mergedInBucket(spark, t.schema, base, deltas,
-        maxPrunedDeltaBytes = 0L))
+      val inTask = rows(MorRead.mergedInBucket(spark, t.schema, base, deltas))
+      val full = rows(MorRead.mergedInBucket(spark, t.schema, base, deltas,
+        maxInTaskDeltaBytes = 0L))
       assert(inTask == full, s"bucket $b")
       inTask
     }

@@ -122,6 +122,42 @@ class StreamingSpec extends SparkSuite {
       planning.filterNot(_._1.contains("max_off")).map(_._1.take(300)))
   }
 
+  test("every job of a streamed epoch with quarantine and compaction carries a cdc: label") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val root = tmpDir("stream-alllabelled")
+    val cfg = ChangeLogGen.GenConfig(numEvents = 2000, numConvs = 20, maxTurns = 6, logPartitions = 1)
+    ChangeLogGen.writeLog(spark, cfg, s"$root/log", chunks = 3)
+    // one more file in the middle chunk: two invalid envelopes and a valid insert
+    val chunk1 = Paths.get(s"$root/log/chunk=1")
+    val bad = ChangeEvent(0, 990000L, ts(990000L), "bogus", "zz", Some(0), Some(turn("zz", 0, "bad", 990000L)), 2)
+    eventsDF(spark, Seq(bad, bad.copy(offset = 990001L), ins(990002L, "zz", 1, "good")))
+      .withColumnRenamed("schemaV", "schema_v").coalesce(1).write.parquet(s"$root/extra")
+    val extra = Files.list(Paths.get(s"$root/extra")).iterator.asScala
+      .find(_.getFileName.toString.endsWith(".parquet")).get
+    val moved = Files.move(extra, chunk1.resolve("part-extra.parquet"))
+    Files.setLastModifiedTime(moved, Files.list(chunk1).iterator.asScala
+      .filter(_ != moved).map(Files.getLastModifiedTime(_)).toSeq.head)
+    val sc = CdcStream.StreamConfig(s"$root/log", s"$root/table", s"$root/ckpt",
+      spec = graft.model.MergeSpec(morCompactThreshold = 0), maxFilesPerTrigger = Some(1),
+      rejectedDir = Some(s"$root/rej"))
+    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        labels.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val table =
+      try { val t = CdcStream.runAvailable(spark, sc); Thread.sleep(1000); t } // listener bus drain
+      finally spark.sparkContext.removeSparkListener(listener)
+    val snaps = table.versions.map(table.snapshot)
+    assert(snaps.exists(_.metrics.contains("bucketsCompacted")), "no epoch compacted")
+    assert(snaps.flatMap(_.metrics.get("rejected")).sum == 2L, "the invalid envelopes were not quarantined")
+    val seen = labels.asScala.toSeq
+    assert(seen.contains("cdc: quarantine write") && seen.contains("cdc: compaction"), seen.distinct)
+    assert(seen.forall(_.startsWith("cdc:")), seen.filterNot(_.startsWith("cdc:")).distinct)
+  }
+
   test("one-file epochs fold, write deltas and append the event log with no shuffle; the decision runs no job") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
     val root = tmpDir("stream-onetask")
