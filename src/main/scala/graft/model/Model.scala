@@ -165,7 +165,14 @@ final case class MergeSpec(
       * Read-heavy tables set this to 1 with [[morCompactBudget]] = -1:
       * each epoch then compacts every bucket holding more than one delta
       * file, so a read merges at most one delta file per bucket (the
-      * latest batch's) into its base files. */
+      * latest batch's) into its base files. Threshold 0 compacts every
+      * epoch's own deltas, so reads see base files only. Measured on one
+      * 32-bucket table (~79k rows, `local[4]`, 7 epochs of ~24k events,
+      * each followed by 20 point lookups and one full read): threshold 0
+      * spent 3.37 s of task CPU per epoch writing and 0.46 s reading,
+      * threshold 1 spent 2.52 s writing and 1.18 s reading (3.83 s
+      * against 3.70 s). Threshold 1 stays the read-heavy setting up to
+      * about 1.2x that read mix per epoch; above it threshold 0 wins. */
     morCompactThreshold: Int = 16,
     /** Compact at most this many buckets per epoch (most-
       * backlogged first). Uniformly-filling buckets all cross the
