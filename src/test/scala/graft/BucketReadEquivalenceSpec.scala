@@ -199,7 +199,7 @@ class BucketReadEquivalenceSpec extends SparkSuite {
     runCase(seed = 12)
   }
 
-  test("oversized deltas fall back to planner-placed joins with the same rows") {
+  test("oversized deltas fall back to planner-placed joins, same rows") {
     val t = IceLite.create(tmpDir("bucket-read-big") + "/t", turnSchema, 2)
     val log = randomLog(new Random(31), 0L, 200, 6, 4) ++ wipeScript(500L, "c01")
     val spec = MergeSpec(morCompactThreshold = 1000)

@@ -281,7 +281,7 @@ class PlanSpec extends SparkSuite {
     assertKeyInScans(multi)
   }
 
-  test("multi-bucket MOR read: one payload base scan, one delta exchange, the payload folded once") {
+  test("multi-bucket MOR read: one payload base scan, one delta exchange, one fold") {
     import TestHelpers._
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
