@@ -127,6 +127,18 @@ object CdcApply {
     *                     Epoch-tagged batches overwrite their own epoch
     *                     partition on re-delivery (idempotent); ad-hoc
     *                     batches append (at-least-once).
+    *
+    *                     The committed `rejected` metric: an epoch batch
+    *                     with a rejectedDir writes its quarantine before
+    *                     the commit and commits the row count read from
+    *                     the footers of its `_rejected_at_epoch=<id>`
+    *                     files — exact. Any other batch (no epoch: its
+    *                     quarantine is written after the commit; no
+    *                     rejectedDir: nothing is written) commits the
+    *                     count observed on the fold's scan. That count is
+    *                     exact when no stage is retried; a retried stage
+    *                     can over-count it, never under-count it, and a
+    *                     batch with no rejects always commits 0.
     * @param auditRef write-audit-publish (B12): stage the batch's full
     *                     would-be snapshot under this audit name instead
     *                     of committing — the table pointer is untouched
@@ -211,21 +223,31 @@ object CdcApply {
     val oneTask = MergeEngine.plansOneTask(events0)
     val batch = if (oneTask) events0.coalesce(1) else events0
     val tagged = MergeEngine.tagErrors(batch, spec.deleteEnabled)
-    def writeQuarantine(rejectedCount: Long): Unit =
-      if (rejectedCount > 0) rejectedDir.foreach(d => labelled(spark, "cdc: quarantine write") {
+    // Writes the quarantine and returns the rejected count to commit: an
+    // epoch batch's is read from the footers of the partition it just
+    // wrote — exact, where the observed count can over-count under a
+    // stage retry; any other batch's is the observed count (applyBatch).
+    def writeQuarantine(rejectedCount: Long): Long =
+      if (rejectedCount == 0L) 0L
+      else rejectedDir.fold(rejectedCount)(d => labelled(spark, "cdc: quarantine write") {
         val rej = tagged.filter(col("_error").isNotNull)
           .withColumn("_rejected_at_epoch", lit(epoch.map(_._2).getOrElse(-1L)))
         epoch match {
-          case Some(_) =>
+          case Some((_, bid)) =>
             // dynamic partition overwrite: a re-run of the same epoch
             // (crash between quarantine and commit) replaces its own
             // partition instead of duplicating rows
             rej.write.mode("overwrite")
               .option("partitionOverwriteMode", "dynamic")
               .partitionBy("_rejected_at_epoch").parquet(d)
+            val part = new org.apache.hadoop.fs.Path(s"$d/_rejected_at_epoch=$bid")
+            val fs = part.getFileSystem(spark.sessionState.newHadoopConf())
+            footerRowCount(spark, fs.listStatus(part).toSeq.map(_.getPath)
+              .filter(_.getName.endsWith(".parquet")).map(_.toString))
           case None =>
             rej.write.mode("append")
               .partitionBy("_rejected_at_epoch").parquet(d)
+            rejectedCount
         }
       })
 
@@ -278,11 +300,12 @@ object CdcApply {
     }
     // Rejected-record count: a TOTAL, not per-partition — observed on the
     // fold's scan (the fold reads the batch exactly once: no extra job,
-    // no extra payload decode). Caveat (documented): observed metrics
-    // follow accumulator semantics — a re-run shuffle stage after
-    // executor loss could overcount; the >0 quarantine gate is unaffected
-    // (zero stays zero) and the quarantine WRITE derives its rows from
-    // `tagged`, not from this count.
+    // no extra payload decode). Observed metrics follow accumulator
+    // semantics — a re-run shuffle stage after executor loss could
+    // overcount; the >0 quarantine gate is unaffected (zero stays zero),
+    // the quarantine WRITE derives its rows from `tagged`, not from this
+    // count, and an epoch batch commits its quarantine's footer count
+    // instead (writeQuarantine).
     val obs = org.apache.spark.sql.Observation()
     val foldInput = tagged
       .observe(obs, sum(when(col("_error").isNotNull, 1L).otherwise(0L)).as("bad"))
@@ -400,7 +423,7 @@ object CdcApply {
       epoch: Option[(String, Long)],
       lineageF: scala.concurrent.Future[Array[org.apache.spark.sql.Row]],
       rejectedCountF: () => Long,
-      quarantine: Long => Unit,
+      quarantine: Long => Long,
       preAligned: Boolean,
       oneTask: Boolean,
       auditRef: Option[String] = None,
@@ -424,7 +447,9 @@ object CdcApply {
     // with no further exchange. Key-aligned actions need the write-side
     // redistribution (AQE rebalance: hot buckets split, cold coalesce).
     // A one-task epoch writes actions and wipe markers from ONE task
-    // instead: its sort by bucket still emits one file per touched bucket.
+    // into ONE file, listed under every bucket its rows hash to
+    // (IceLiteTable.stageEpochFile): Spark's per-file write cost, not the
+    // rows, dominates a micro-batch's delta write.
     val actionRows =
       if (preAligned)
         normActions.select(col("bucket"), col("conv_id"), col("turn_idx"), col("action"), col("row"))
@@ -441,17 +466,20 @@ object CdcApply {
     def stageDeltas(seq: Long): (java.nio.file.Path, Map[Int, Seq[String]], Long) = {
       val deltaRows = actionRows.unionByName(wipeRows).withColumn("seq", lit(seq))
       val stage = table.newStageDir()
-      labelled(spark, s"cdc: fold + delta write (seq $seq)") {
-        (if (oneTask) deltaRows.coalesce(1)
-         else if (preAligned) deltaRows
-         else deltaRows.hint("rebalance", "bucket")) // AQE splits hot buckets, coalesces cold
-          .write.mode("overwrite")
-          .option("compression", "snappy")
-          .partitionBy("bucket")
-          .parquet(stage.toString)
+      val staged = labelled(spark, s"cdc: fold + delta write (seq $seq)") {
+        if (oneTask)
+          table.stageEpochFile(spark, deltaRows.coalesce(1), stage, Nil, Map("compression" -> "snappy"))
+        else {
+          (if (preAligned) deltaRows
+           else deltaRows.hint("rebalance", "bucket")) // AQE splits hot buckets, coalesces cold
+            .write.mode("overwrite")
+            .option("compression", "snappy")
+            .partitionBy("bucket")
+            .parquet(stage.toString)
+          table.stagedFilesByBucket(stage)
+        }
       }
-      val staged = table.stagedFilesByBucket(stage)
-      val rowsWritten = footerRowCount(spark, staged.values.flatten.map(r => s"${table.dir}/$r"))
+      val rowsWritten = footerRowCount(spark, staged.values.flatten.toSeq.distinct.map(r => s"${table.dir}/$r"))
       (stage, staged, rowsWritten)
     }
     // single-writer sequence: rows are stamped before the commit, so a
@@ -468,7 +496,7 @@ object CdcApply {
     val eventsSeen = lineage.map(_.getAs[Long]("n")).sum
     // observed on the fold scan of the staging above (or, for a batch
     // whose fold leg ran empty, a dedicated count) — ready by now
-    val rejectedCount = rejectedCountF()
+    val observedRejected = rejectedCountF()
 
     // Epoch-tagged batches quarantine BEFORE the commit: a crash between
     // commit and a post-commit quarantine write would lose the rejects
@@ -479,7 +507,7 @@ object CdcApply {
     // have no re-delivery marker — pre-commit writes would duplicate
     // rejects when a failed commit is re-applied, so they write after a
     // successful commit (the caller owns the retry decision).
-    if (epoch.isDefined) quarantine(rejectedCount)
+    val rejectedCount = if (epoch.isDefined) quarantine(observedRejected) else observedRejected
 
     var attempt = 0
     while (true) {
@@ -502,7 +530,7 @@ object CdcApply {
             properties = parent.properties ++ offsetProps(parent, lineage) ++ epochProps(epoch) ++ extraProps,
             metrics = Map(
               "rowsWritten" -> rowsWritten,
-              "deltaFilesAdded" -> staged.values.map(_.size.toLong).sum,
+              "deltaFilesAdded" -> staged.values.flatten.toSet.size.toLong,
               "eventsApplied" -> eventsSeen,
               "rejected" -> rejectedCount))
         }

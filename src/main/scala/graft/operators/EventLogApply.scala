@@ -17,7 +17,11 @@ import graft.table.{IceLite, IceLiteTable}
   *
   * Pure append = new files added to buckets; existing files are never
   * rewritten, so commits are O(batch), not O(state). Exactly-once via the
-  * same epoch property mechanism as the merge path.
+  * same epoch property mechanism as the merge path. A batch scanned in
+  * one task appends ONE file, listed under every bucket its rows hash
+  * to; a read keeps from it only the rows of the read buckets that still
+  * list it ([[graft.table.IceLite.BucketFiles]]). Any other batch appends
+  * one file per bucket.
   */
 object EventLogApply {
 
@@ -77,23 +81,26 @@ object EventLogApply {
     val nb0 = table.numBuckets
 
     // A batch scanned in one task (MergeEngine.plansOneTask) is
-    // appended from that task: its sort by bucket already emits one file
-    // per touched bucket, so the rebalance would only scatter and gather
-    // the rows. Any other batch is rebalanced onto the bucket key.
+    // appended from that task as ONE file, listed under every bucket its
+    // rows hash to (IceLiteTable.stageEpochFile): the rebalance would
+    // only scatter and gather the rows, and a file per bucket costs more
+    // to write than the rows in it. Any other batch is rebalanced onto
+    // the bucket key and written one file per bucket.
     val bucketed = rows.withColumn("bucket", MergeEngine.bucketOf(col("conv_id"), nb0))
     val stage = table.newStageDir()
-    (if (MergeEngine.plansOneTask(events0)) bucketed.coalesce(1)
-     else bucketed.hint("rebalance", "bucket"))
-      .sortWithinPartitions("bucket", "conv_id", "turn_idx", "_offset")
-      .write.mode("overwrite")
-      .option("compression", "zstd")
-      .option("parquet.bloom.filter.enabled#conv_id", "true")
-      .partitionBy("bucket")
-      .parquet(stage.toString)
-
-    val staged = table.stagedFilesByBucket(stage)
+    val options = Map("compression" -> "zstd", "parquet.bloom.filter.enabled#conv_id" -> "true")
+    val sortCols = Seq("conv_id", "turn_idx", "_offset")
+    val staged =
+      if (MergeEngine.plansOneTask(events0))
+        table.stageEpochFile(spark, bucketed.coalesce(1), stage, sortCols, options)
+      else {
+        bucketed.hint("rebalance", "bucket").sortWithinPartitions(("bucket" +: sortCols).map(col): _*)
+          .write.mode("overwrite").options(options)
+          .partitionBy("bucket").parquet(stage.toString)
+        table.stagedFilesByBucket(stage)
+      }
     // footer-only count, driver-side — no Spark job in the append path
-    val rowsWritten = CdcApply.footerRowCount(spark, staged.values.flatten.map(r => s"${table.dir}/$r"))
+    val rowsWritten = CdcApply.footerRowCount(spark, staged.values.flatten.toSeq.distinct.map(r => s"${table.dir}/$r"))
     Option(CdcApply.testOnStaged.getAndSet(null)).foreach(_.apply())
 
     object AlreadyApplied extends Exception

@@ -17,8 +17,26 @@ import org.apache.spark.sql.types.StructType
   * {{{
   *   <dir>/snap/v0000000001.json     // one immutable snapshot DIFF per commit
   *   <dir>/snap/c0000000032.json     // periodic full-state checkpoint
-  *   <dir>/data/<commitUuid>/b=<bucket>/part-*.parquet
+  *   <dir>/data/<commitUuid>/bucket=<bucket>/part-*.parquet
+  *   <dir>/data/<commitUuid>/epoch/part-*.parquet   // a one-task epoch's one file
   * }}}
+  *
+  * A file may be listed under several buckets. A write that runs as one
+  * task — a one-task epoch's MOR delta write or event-log append —
+  * writes ONE file instead of one per bucket, and the snapshot lists it
+  * under exactly the buckets its rows hash to ([[stageEpochFile]]): Spark
+  * pays a fixed CPU cost per parquet file written, whatever the file
+  * holds. Every flatten of a snapshot's file lists therefore takes
+  * distinct paths. Compaction drops a bucket's listing of a shared file
+  * once the bucket's base holds its rows, so the file's rows are live
+  * only for the buckets that still list it: a read of a bucket set S
+  * (every bucket, for a full read) keeps from a shared file only the
+  * rows with `bucketOf(conv_id) ∈ S ∩ listed(file)` ([[BucketFiles]]).
+  * The file stores that bucket in a column, sorted, in small pages, so
+  * the parquet page index skips the other buckets' rows. Multi-task
+  * writes keep one file per bucket (`bucket=<b>/`), whose rows need no
+  * filter. A shared file lives until no retained snapshot
+  * lists it under any bucket.
   *
   * Commit protocol (the analogue of the reference's one-JDBC-transaction-
   * per-put batch, `/root/reference/src/main/java/io/confluent/connect/jdbc/sink/JdbcDbWriter.java:56,83`):
@@ -180,26 +198,50 @@ final class IceLiteTable(val dir: String) {
 
   def numBuckets: Int = current.numBuckets
 
-  /** All base data files (absolute paths) of the current snapshot,
-    * optionally restricted to a bucket subset — the bucket-pruning path.
+  /** All base data files (absolute, distinct paths) of the current
+    * snapshot, optionally restricted to a bucket subset — the
+    * bucket-pruning path. A file listed under a bucket of the subset may
+    * also hold rows of other buckets; [[baseScan]] says which to keep.
     */
-  def dataFiles(buckets: Option[Set[Int]] = None): Seq[String] =
-    resolve(current.files, buckets)
+  def dataFiles(buckets: Option[Set[Int]] = None): Seq[String] = baseScan(buckets).paths
 
-  /** MOR delta files (absolute paths), optionally bucket-pruned. */
-  def deltaFiles(buckets: Option[Set[Int]] = None): Seq[String] =
-    resolve(current.deltas, buckets)
+  /** MOR delta files (absolute, distinct paths), optionally bucket-pruned. */
+  def deltaFiles(buckets: Option[Set[Int]] = None): Seq[String] = deltaScan(buckets).paths
 
-  /** Resolve a snapshot's table-relative file lists to absolute paths —
-    * the pinned-snapshot variant of [[dataFiles]]/[[deltaFiles]], for
-    * reads of a pinned snapshot and for compaction, which must read base
-    * state and commit against the SAME snapshot.
+  /** What a read of `buckets` scans from the current snapshot's base
+    * files: [[dataFiles]] with the rows to keep of each.
     */
-  private def resolve(m: Map[Int, Seq[String]], buckets: Option[Set[Int]]): Seq[String] =
-    m.toSeq
-      .filter { case (b, _) => buckets.forall(_.contains(b)) }
-      .flatMap(_._2)
-      .map(rel => Paths.get(dir).resolve(rel).toString)
+  def baseScan(buckets: Option[Set[Int]] = None): BucketFiles = {
+    val s = current
+    bucketFiles(s, s.files, buckets)
+  }
+
+  /** What a read of `buckets` scans from the current snapshot's delta
+    * files: [[deltaFiles]] with the rows to keep of each.
+    */
+  def deltaScan(buckets: Option[Set[Int]] = None): BucketFiles = {
+    val s = current
+    bucketFiles(s, s.deltas, buckets)
+  }
+
+  /** The files a read of `buckets` scans from `m`, one of `s`'s file
+    * maps — a pinned snapshot's, so that compaction reads base state and
+    * commits against the SAME snapshot — each with the buckets whose rows
+    * the read keeps from it: none to filter for a one-bucket file
+    * (`bucket=<b>/`), the read buckets that list it for any other file
+    * ([[BucketFiles]]).
+    */
+  private def bucketFiles(s: Snapshot, m: Map[Int, Seq[String]], buckets: Option[Set[Int]]): BucketFiles = {
+    val read = m.toSeq.sortBy(_._1).filter { case (b, _) => buckets.forall(_.contains(b)) }
+    val keepOf: Map[String, Set[Int]] = read.flatMap { case (b, fs) => fs.map(_ -> b) }
+      .groupMap(_._1)(_._2).map { case (f, bs) => f -> bs.toSet }
+    val (own, shared) = read.flatMap(_._2).distinct.partition(rel =>
+      Option(Paths.get(rel).getParent).exists(_.getFileName.toString.startsWith("bucket=")))
+    def abs(fs: Seq[String]): Seq[String] = fs.map(rel => Paths.get(dir).resolve(rel).toString)
+    val scans = (if (own.isEmpty) Nil else Seq(abs(own) -> None)) ++
+      shared.groupBy(keepOf).toSeq.sortBy(_._1.min).map { case (k, fs) => abs(fs) -> Some(k) }
+    BucketFiles(scans)
+  }
 
   /** Read the table's current STATE (or a bucket subset): base files with
     * the current table schema — older files missing later-added columns
@@ -541,16 +583,16 @@ final class IceLiteTable(val dir: String) {
   private def readSnapshotState(
       spark: SparkSession, s: Snapshot, buckets: Option[Set[Int]]): DataFrame = {
     val sch = schemaOf(s)
-    val base = IceLite.readFiles(spark, sch, resolve(s.files, buckets))
-    val deltaPaths = resolve(s.deltas, buckets)
-    if (buckets.exists(_.size == 1)) MorRead.mergedInBucket(spark, sch, base, deltaPaths)
-    else MorRead.merged(spark, sch, base, deltaPaths)
+    val base = bucketFiles(s, s.files, buckets).read(spark, sch)
+    val deltas = bucketFiles(s, s.deltas, buckets)
+    if (buckets.exists(_.size == 1)) MorRead.mergedInBucket(spark, sch, base, deltas)
+    else MorRead.merged(spark, sch, base, deltas)
   }
 
   /** Base files only — MOR deltas NOT applied (the base input of an
     * explicit [[MorRead]] merge). */
   def readBase(spark: SparkSession, buckets: Option[Set[Int]] = None): DataFrame =
-    IceLite.readFiles(spark, schema, dataFiles(buckets))
+    baseScan(buckets).read(spark, schema)
 
   private def schemaOf(s: Snapshot): StructType =
     org.apache.spark.sql.types.DataType.fromJson(s.schemaJson).asInstanceOf[StructType]
@@ -577,6 +619,47 @@ final class IceLiteTable(val dir: String) {
           b -> fs
         }
         .toMap)
+
+  /** Stage the one file of a write that runs as one task: `rows` (one
+    * partition, holding the `bucket` column) sorted by bucket, then
+    * `sortCols`, written with the writer `options` into `stage/epoch/`.
+    * Returns the file listed under exactly the buckets its rows hash to
+    * — a map of one file, or empty when no row was written.
+    *
+    * The file keeps the `bucket` column, and its pages hold at most
+    * [[IceLite.EpochPageRows]] rows: a read of some of its buckets pushes
+    * `bucket IN (...)` down to the parquet reader, whose page index then
+    * skips the pages of every other bucket ([[BucketFiles]]).
+    *
+    * The bucket set is observed on the written rows themselves, as a set:
+    * a re-run task adds the same elements, so a stage retry cannot
+    * inflate it the way it can a counter. Where the observation comes
+    * back without it (Spark drops the observing node from a plan it
+    * proves empty), the set is read back from the file.
+    */
+  def stageEpochFile(spark: SparkSession, rows: DataFrame, stage: Path, sortCols: Seq[String],
+                     options: Map[String, String]): Map[Int, Seq[String]] = {
+    import org.apache.spark.sql.functions.{col, collect_set}
+    val out = stage.resolve("epoch")
+    val obs = org.apache.spark.sql.Observation()
+    rows.sortWithinPartitions(("bucket" +: sortCols).map(col): _*)
+      .observe(obs, collect_set(col("bucket")).as("buckets"))
+      .write.mode("overwrite").options(options)
+      .option("parquet.page.row.count.limit", IceLite.EpochPageRows.toString)
+      .parquet(out.toString)
+    val files =
+      if (!Files.isDirectory(out)) Seq.empty
+      else listDir(out)(_.filter(_.getFileName.toString.endsWith(".parquet")).toSeq).sorted
+    val observed = obs.get.get("buckets").collect { case bs: scala.collection.Seq[_] => bs.map(_.asInstanceOf[Int]) }
+    lazy val readBack = IceLite.readFiles(spark, StructType(Seq(IceLite.BucketField)), files.map(_.toString))
+      .distinct().collect().map(_.getInt(0)).toSeq
+    val buckets = if (files.isEmpty) Seq.empty else observed.getOrElse(readBack)
+    if (buckets.isEmpty) { dropStageDir(out); Map.empty }
+    else {
+      val rels = files.map(p => Paths.get(dir).relativize(p).toString)
+      buckets.sorted.map(_ -> rels).toMap
+    }
+  }
 
   /** Expire snapshots older than the last `keepLast`, then delete data
     * files no longer referenced by any surviving snapshot (orphan GC —
@@ -837,6 +920,13 @@ final class IceLiteTable(val dir: String) {
     * costs O(data appended since the last run) — the LSM size-tier
     * shape, amortized O(1) per epoch. The fold keeps per-bucket file
     * order (big survivors first, then the new merged file).
+    *
+    * One job compacts every target bucket: it scans each target file
+    * once, however many buckets list it, and keeps a row for the bucket
+    * it hashes to only when that bucket is a target listing the row's
+    * file — a shared file's rows of other buckets, and rows a bucket
+    * already compacted out of it, stay behind. One exchange on the
+    * bucket then sorts and writes one file per bucket.
     */
   def compact(spark: SparkSession, maxFilesPerBucket: Int = 8,
               sortCols: Seq[String] = Seq("conv_id", "turn_idx"),
@@ -854,17 +944,17 @@ final class IceLiteTable(val dir: String) {
       .filter(_._2.size > maxFilesPerBucket)
     if (targets.isEmpty) return 0
     val stage = newStageDir()
-    val sch = schema
-    targets.foreach { case (b, small) =>
-      val files = small.map(rel => Paths.get(dir).resolve(rel).toString)
-      IceLite.readFiles(spark, sch, files)
-        .coalesce(1)
-        .sortWithinPartitions(sortCols.map(col): _*)
-        .write.mode("append")
-        .option("compression", "zstd")
-        .option("parquet.bloom.filter.enabled#conv_id", "true")
-        .parquet(s"$stage/bucket=$b")
-    }
+    // the target buckets' small files, each read once, its rows kept only
+    // for the target buckets listing it
+    bucketFiles(cur, targets, None).read(spark, schemaOf(cur))
+      .withColumn("bucket", IceLite.bucketOf(col("conv_id"), cur.numBuckets))
+      .repartition(math.min(targets.size, math.max(1, spark.sparkContext.defaultParallelism)), col("bucket"))
+      .sortWithinPartitions((col("bucket") +: sortCols.map(col)): _*)
+      .write.mode("overwrite")
+      .option("compression", "zstd")
+      .option("parquet.bloom.filter.enabled#conv_id", "true")
+      .partitionBy("bucket")
+      .parquet(stage.toString)
     val staged = stagedFilesByBucket(stage)
     val snap =
       try commit { parent =>
@@ -916,7 +1006,9 @@ final class IceLiteTable(val dir: String) {
     * removal). Returns the number of buckets compacted. Each bucket is
     * rewritten by its own one-task job — merged, sorted by
     * `(conv_id, turn_idx)`, written as one zstd + bloom file — and the
-    * jobs run side by side.
+    * jobs run side by side. A delta file shared with other buckets is
+    * filtered to the bucket's own rows, and only the bucket's listing of
+    * it is dropped: the buckets not compacted keep theirs.
     *
     * Bounded-work mode (`maxBuckets`): compact at most that many buckets
     * per call, most-backlogged first. Uniformly-filling buckets would
@@ -955,9 +1047,11 @@ final class IceLiteTable(val dir: String) {
     // its children's single partition), hence separate jobs. The pool's
     // threads are created here, so they inherit this thread's job
     // description and scheduler properties.
+    // A shared delta file is read by the job of every target bucket that
+    // lists it, each keeping only its own rows.
     def rewrite(b: Int): Unit =
-      MorRead.mergedInBucket(spark, sch, IceLite.readFiles(spark, sch, resolve(cur.files, Some(Set(b)))),
-        resolve(cur.deltas, Some(Set(b))))
+      MorRead.mergedInBucket(spark, sch, bucketFiles(cur, cur.files, Some(Set(b))).read(spark, sch),
+        bucketFiles(cur, cur.deltas, Some(Set(b))))
         .sortWithinPartitions("conv_id", "turn_idx")
         .write.mode("overwrite")
         .option("compression", "zstd")
@@ -1139,8 +1233,47 @@ object IceLite {
     pmod(xxhash64(convId), lit(numBuckets.toLong)).cast("int")
   }
 
+  /** What a read of a bucket set scans from one of a snapshot's file
+    * maps: the distinct files listed under the set (absolute paths),
+    * grouped by the buckets whose rows the read keeps from them. A file
+    * written for one bucket (`bucket=<b>/`) holds only that bucket's
+    * rows and keeps them all (`None`). A one-task epoch's file holds rows
+    * of several buckets, and compaction drops a bucket's listing of it
+    * once the bucket's base holds those rows, so the read keeps only the
+    * rows with `bucketOf(conv_id)` among the read buckets that still list
+    * it — for a full read as much as for a subset.
+    */
+  final case class BucketFiles(scans: Seq[(Seq[String], Option[Set[Int]])]) {
+    def paths: Seq[String] = scans.flatMap(_._1)
+
+    /** One scan per distinct kept-bucket set, unioned; an empty frame
+      * when there are no files. A shared file's kept buckets are read
+      * from its stored `bucket` column, so the parquet reader skips the
+      * pages of the others.
+      */
+    def read(spark: SparkSession, sch: StructType): DataFrame =
+      if (scans.isEmpty) readFiles(spark, sch, Nil)
+      else scans.map {
+        case (fs, None) => readFiles(spark, sch, fs)
+        case (fs, Some(k)) =>
+          val bucket = org.apache.spark.sql.functions.col(BucketField.name)
+          readFiles(spark, sch.add(BucketField), fs).filter(bucket.isin(k.toSeq.sorted: _*)).drop(bucket)
+      }.reduce(_ union _)
+  }
+
+  /** The bucket column a one-task epoch's file stores ([[IceLiteTable.stageEpochFile]]). */
+  private[table] val BucketField =
+    org.apache.spark.sql.types.StructField("bucket", org.apache.spark.sql.types.IntegerType)
+
+  /** Rows per parquet page of a one-task epoch's file: a read of one of
+    * its buckets decodes that bucket's pages, about this many rows more
+    * than the bucket holds, instead of the whole file.
+    */
+  val EpochPageRows: Int = 256
+
   /** One immutable snapshot of the table. `files` maps bucket id to
-    * table-relative parquet paths; `properties` is free-form commit
+    * table-relative parquet paths (a one-task epoch's file is listed
+    * under every bucket its rows hash to); `properties` is free-form commit
     * bookkeeping (exactly-once epochs, applied offset ranges);
     * `metrics` are per-commit counters (rows written/deleted, buckets
     * rewritten) — the engine's lineage/metrics surface.

@@ -51,8 +51,9 @@ object MetaTables {
 
   private def snapshotRow(table: IceLiteTable, v: Long): SnapshotRow = {
     val s = table.snapshot(v)
-    val base = s.files.values.flatten.toSeq
-    val deltas = s.deltas.values.flatten.toSeq
+    // a one-task epoch's file is listed under several buckets: count it once
+    val base = s.files.values.flatten.toSeq.distinct
+    val deltas = s.deltas.values.flatten.toSeq.distinct
     SnapshotRow(
       version = s.version,
       parent_version = s.parentVersion,
@@ -68,9 +69,10 @@ object MetaTables {
       n_epochs = s.properties.keysIterator.count(_.startsWith("epoch:")))
   }
 
-  /** One row per live file of `version` (default: current): bucket, path
-    * relative to the table root, kind (base|delta), size, and the footer
-    * row count. Row counts come from parquet footers read driver-side in
+  /** One row per live file of `version` (default: current): the buckets
+    * listing it (several for a one-task epoch's file), path relative to
+    * the table root, kind (base|delta), size, and the footer row count.
+    * Row counts come from parquet footers read driver-side in
     * parallel — metadata pages only, never row groups — exactly like the
     * rows-written commit metric.
     *
@@ -104,14 +106,15 @@ object MetaTables {
   private def files0(spark: SparkSession, table: IceLiteTable, version: Long): DataFrame = {
     import spark.implicits._
     val s = table.snapshot(version)
-    val all =
-      s.files.toSeq.flatMap { case (b, fs) => fs.map(f => (b, f, "base")) } ++
-        s.deltas.toSeq.flatMap { case (b, fs) => fs.map(f => (b, f, "delta")) }
+    def byFile(m: Map[Int, Seq[String]], kind: String): Seq[(Seq[Int], String, String)] =
+      m.toSeq.flatMap { case (b, fs) => fs.map(_ -> b) }.groupMap(_._1)(_._2)
+        .toSeq.sortBy(_._1).map { case (f, bs) => (bs.sorted, f, kind) }
+    val all = byFile(s.files, "base") ++ byFile(s.deltas, "delta")
     val conf = spark.sessionState.newHadoopConf()
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val rows = Await.result(Future.sequence(all.map { case (b, f, kind) =>
+    val rows = Await.result(Future.sequence(all.map { case (bs, f, kind) =>
       Future {
         val p = java.nio.file.Paths.get(table.dir).resolve(f)
         val in = org.apache.parquet.hadoop.util.HadoopInputFile
@@ -119,7 +122,7 @@ object MetaTables {
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         val rc = try r.getFooter.getBlocks.asScala.map(_.getRowCount.toLong).sum
         finally r.close()
-        FileRow(s.version, b, f, kind, Files.size(p), rc)
+        FileRow(s.version, bs, f, kind, Files.size(p), rc)
       }
     }), Duration.Inf)
     spark.createDataset(rows).toDF()
@@ -154,7 +157,7 @@ object MetaTables {
 
   final case class FileRow(
       version: Long,
-      bucket: Int,
+      buckets: Seq[Int],
       path: String,
       kind: String,
       size_bytes: Long,

@@ -52,6 +52,13 @@ import graft.model.NetAction
   *    estimated size is under the broadcast threshold, and otherwise
   *    picks a spillable join from that size.
   *
+  * A delta file may be shared: a one-task epoch writes one file listed
+  * under every bucket its rows hash to, and compaction drops a bucket's
+  * listing once its base holds those rows. A read keeps from such a file
+  * only the rows of the read buckets that still list it
+  * ([[IceLite.BucketFiles]]), before the fold — and, in one task, before
+  * the coalesce.
+  *
   * A key predicate on the result reaches every base and delta scan:
   * the join infers it for the fold, and the anchor Puts take their key
   * from the fold's grouping columns. Delta files are scanned from the
@@ -82,7 +89,7 @@ object MorRead {
     StructField("seq", LongType)))
 
   /** Current state of a bucket subset of the table: `base` rows merged
-    * with the net actions in `deltaPaths`, the join placed by the planner.
+    * with the net actions in `deltas`, the join placed by the planner.
     * Serves reads that span several buckets; a one-bucket read takes
     * [[mergedInBucket]].
     */
@@ -90,26 +97,27 @@ object MorRead {
       spark: SparkSession,
       tableSchema: StructType,
       base: DataFrame,
-      deltaPaths: Seq[String]): DataFrame =
-    if (deltaPaths.isEmpty) base
-    else fold(base, IceLite.readFiles(spark, deltaSchema(tableSchema), deltaPaths),
-      tableSchema.fieldNames.toSeq, inTask = false)
+      deltas: IceLite.BucketFiles): DataFrame =
+    if (deltas.paths.isEmpty) base
+    else fold(base, deltas.read(spark, deltaSchema(tableSchema)), tableSchema.fieldNames.toSeq, inTask = false)
 
   /** Current state of ONE bucket, merged inside a single task: `base`
-    * must hold only that bucket's base rows and `deltaPaths` only its
-    * delta files. An IceLite bucket holds every row of its conversations,
-    * so nothing needs redistributing. Above `maxInTaskDeltaBytes` of
-    * deltas the join is placed by the planner, as in [[merged]].
+    * must hold only that bucket's base rows and `deltas` only its delta
+    * rows — a delta file shared with other buckets is filtered to this
+    * bucket's rows by `deltas`, below the coalesce. An IceLite
+    * bucket holds every row of its conversations, so nothing needs
+    * redistributing. Above `maxInTaskDeltaBytes` of delta files the join
+    * is placed by the planner, as in [[merged]].
     */
   def mergedInBucket(
       spark: SparkSession,
       tableSchema: StructType,
       base: DataFrame,
-      deltaPaths: Seq[String],
+      deltas: IceLite.BucketFiles,
       maxInTaskDeltaBytes: Long = InTaskMaxDeltaBytes): DataFrame =
-    if (deltaPaths.isEmpty) base
-    else fold(base, IceLite.readFiles(spark, deltaSchema(tableSchema), deltaPaths),
-      tableSchema.fieldNames.toSeq, inTask = deltaBytes(deltaPaths) <= maxInTaskDeltaBytes)
+    if (deltas.paths.isEmpty) base
+    else fold(base, deltas.read(spark, deltaSchema(tableSchema)), tableSchema.fieldNames.toSeq,
+      inTask = deltaBytes(deltas.paths) <= maxInTaskDeltaBytes)
 
   /** Roll an explicit base state forward over explicit delta actions —
     * the feed consumer's primitive: given keyed state at version A and

@@ -27,6 +27,12 @@ import graft.table.{IceLite, MorRead}
   * columns are added mid-run ([[DriftCols]]), so reads widen base files
   * and delta files written under older schemas. Equal rows on seeded
   * logs stand in for a proof of bag-semantics equivalence.
+  *
+  * A shared-file case replays the same kind of log as one-task epochs,
+  * each of which writes one delta file listed under every bucket its
+  * rows hash to, compacts only some buckets mid-run (the shared files
+  * stay listed under the rest) and rebuckets the result; an event-log
+  * case appends one-task batches and compacts the log bucket by bucket.
   */
 class BucketReadEquivalenceSpec extends SparkSuite {
   import TestHelpers._
@@ -96,7 +102,25 @@ class BucketReadEquivalenceSpec extends SparkSuite {
     }
   }
 
-  private def runCase(seed: Long): Unit = {
+  /** `df` as a one-partition RDD-backed batch: the one-task epoch, which
+    * writes one delta file listed under every bucket its rows hash to.
+    */
+  private def oneTask(df: DataFrame): DataFrame = {
+    val one = spark.createDataFrame(spark.sparkContext.parallelize(df.collect().toSeq, 1), df.schema)
+    assert(MergeEngine.plansOneTask(one))
+    one
+  }
+
+  /** Buckets listing each file of a snapshot's file map. */
+  private def listings(m: Map[Int, Seq[String]]): Map[String, Set[Int]] =
+    m.toSeq.flatMap { case (b, fs) => fs.map(_ -> b) }.groupMap(_._1)(_._2).map { case (f, bs) => f -> bs.toSet }
+
+  /** With `shared`, every batch is a one-task epoch and the mid-run
+    * compaction rewrites only the two most backlogged buckets, so the
+    * shared delta files stay listed under the others; the final state is
+    * then rebucketed.
+    */
+  private def runCase(seed: Long, shared: Boolean = false): Unit = {
     val rnd = new Random(seed)
     val batches: Vector[Vector[ChangeEvent]] = {
       // c_gone: base rows after the compaction, then only a wipe
@@ -111,11 +135,22 @@ class BucketReadEquivalenceSpec extends SparkSuite {
     val spec = MergeSpec(morCompactThreshold = 1000)
     // (version, batches applied as of it)
     val versions = batches.zipWithIndex.flatMap { case (b, i) =>
-      CdcApply.applyBatch(spark, t, batchDF(b, i), spec = spec, epoch = Some(("eq", i.toLong)))
+      val df = batchDF(b, i)
+      CdcApply.applyBatch(spark, t, if (shared) oneTask(df) else df, spec = spec, epoch = Some(("eq", i.toLong)))
       val applied = t.currentVersion -> (i + 1)
+      if (shared) {
+        val added = listings(t.current.deltas).filter { case (f, _) => !listings(t.snapshot(applied._1 - 1).deltas).contains(f) }
+        assert(added.size == 1 && added.head._2.size > 1, s"seed=$seed batch $i: one-task epoch added $added")
+      }
       // base rows under the later batches' deltas
       if (i == 1) {
-        assert(t.compactDeltas(spark) > 0)
+        val before = listings(t.current.deltas)
+        assert(t.compactDeltas(spark, maxBuckets = if (shared) 2 else Int.MaxValue) > 0)
+        if (shared) {
+          val after = listings(t.current.deltas)
+          assert(before.exists { case (f, bs) => after.get(f).exists(a => a.nonEmpty && a != bs) },
+            s"seed=$seed: no shared delta file outlived the compaction of one of its buckets")
+        }
         Seq(applied, t.currentVersion -> (i + 1))
       } else Seq(applied)
     }
@@ -182,21 +217,86 @@ class BucketReadEquivalenceSpec extends SparkSuite {
     val want = oracle(batches.size)
     assert(!want.exists(_._1 == "c_gone") && t.dataFiles().nonEmpty)
     withoutBroadcast {
-      assert(rows(MorRead.merged(spark, t.schema, t.readBase(spark), t.deltaFiles())) == want,
+      assert(rows(MorRead.merged(spark, t.schema, t.readBase(spark), t.deltaScan())) == want,
         s"seed=$seed: multi-bucket read without broadcast != oracle")
       (0 until NumBuckets).foreach { b =>
         val got = rows(MorRead.mergedInBucket(spark, t.schema, t.readBase(spark, Some(Set(b))),
-          t.deltaFiles(Some(Set(b))), maxInTaskDeltaBytes = 0L))
+          t.deltaScan(Some(Set(b))), maxInTaskDeltaBytes = 0L))
         assert(got == want.filter(r => bucketOf(r._1) == b), s"seed=$seed bucket=$b: over-gate read != oracle")
       }
       assert(rows(rolled(versions.head._1, versions.last._1)) == want,
         s"seed=$seed: foldState without broadcast != oracle")
+    }
+    if (shared) {
+      t.rebucket(spark, 3)
+      assert(rows(t.read(spark)) == want, s"seed=$seed: rebucketed read != oracle")
+      val newBucket: Map[String, Int] = {
+        import spark.implicits._
+        convs.toDF("conv_id").select(col("conv_id"), MergeEngine.bucketOf(col("conv_id"), 3))
+          .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+      }
+      (0 until 3).foreach { b =>
+        assert(rows(t.read(spark, Some(Set(b)))) == want.filter(r => newBucket(r._1) == b),
+          s"seed=$seed bucket=$b of 3: rebucketed one-bucket read != oracle")
+      }
     }
   }
 
   test("one-bucket read == multi-bucket read == oracle, per bucket and pinned version") {
     runCase(seed = 11)
     runCase(seed = 12)
+  }
+
+  test("shared epoch files: subset reads, partial compaction, feed fold, rebucket == oracle") {
+    runCase(seed = 21, shared = true)
+  }
+
+  test("shared event-log files: subset reads and one-job log compaction keep every event once") {
+    // conversations pinned to buckets, so each batch touches a chosen bucket set
+    val convsOf: Map[Int, Seq[String]] = {
+      import spark.implicits._
+      (0 until 40).map(i => f"l$i%02d").toDF("conv_id")
+        .select(col("conv_id"), MergeEngine.bucketOf(col("conv_id"), NumBuckets))
+        .collect().toSeq.map(r => r.getInt(1) -> r.getString(0)).groupMap(_._1)(_._2)
+    }
+    // batches 0-2 touch every bucket, batch 3 only buckets 0 and 1
+    val touched = Seq.fill(3)(0 until NumBuckets) :+ (0 until 2)
+    val batches = touched.zipWithIndex.map { case (bs, i) =>
+      bs.flatMap(b => convsOf(b).take(2)).zipWithIndex.map { case (c, j) =>
+        ins(100L * i + j, c, i, s"log-$i-$j")
+      }
+    }
+    val lt = IceLite.create(tmpDir("bucket-read-log") + "/log",
+      graft.operators.EventLogApply.logSchema(turnSchema), NumBuckets)
+    batches.zipWithIndex.foreach { case (b, i) =>
+      graft.operators.EventLogApply.appendBatch(spark, lt, oneTask(eventsDF(spark, b)), epoch = Some(("log", i.toLong)))
+      val s = lt.current
+      assert(listings(s.files).count { case (f, _) => !listings(lt.snapshot(s.version - 1).files).contains(f) } == 1,
+        s"batch $i appended more than one file")
+    }
+    def logRows(df: DataFrame): Seq[(String, Long, String)] =
+      df.select(col("conv_id"), col("_offset"), col("after.text")).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq.sorted
+    val all = batches.flatten.map(e => (e.conv_id, e.offset, e.after.get.text)).sorted
+    val bucketOf = convsOf.toSeq.flatMap { case (b, cs) => cs.map(_ -> b) }.toMap
+    def check(clue: String): Unit = {
+      assert(logRows(lt.read(spark)) == all, s"$clue: whole log")
+      Seq(Set(0), Set(2), Set(1, 3), Set(0, 1, 2)).foreach { sub =>
+        assert(logRows(lt.read(spark, Some(sub))) == all.filter(r => sub(bucketOf(r._1))), s"$clue: buckets $sub")
+      }
+    }
+    check("appended")
+    // buckets 0 and 1 hold four files, 2 and 3 three: only 0 and 1 compact,
+    // and the shared files stay listed under 2 and 3
+    assert(lt.compact(spark, maxFilesPerBucket = 3) == 2)
+    assert(lt.current.files.view.mapValues(_.size).toMap == Map(0 -> 1, 1 -> 1, 2 -> 3, 3 -> 3))
+    check("buckets 0, 1 compacted")
+    // the shared files, now listed only under 2 and 3, still hold rows of
+    // 0 and 1 that their compacted files already carry
+    assert(lt.compact(spark, maxFilesPerBucket = 2) == 2)
+    assert(lt.current.files.values.forall(_.size == 1))
+    check("every bucket compacted")
+    assert(lt.readChanges(spark, 1L).count() == all.size.toLong)
   }
 
   test("oversized deltas fall back to planner-placed joins, same rows") {
@@ -210,8 +310,8 @@ class BucketReadEquivalenceSpec extends SparkSuite {
     val want = OracleFold.rows(OracleFold.finalState(log)).map(x => (x.conv_id, x.turn_idx, x.text, None, None))
     val perBucket = (0 until 2).map { b =>
       val base = t.readBase(spark, Some(Set(b)))
-      val deltas = t.deltaFiles(Some(Set(b)))
-      assert(base.count() > 0 && deltas.nonEmpty, s"bucket $b mixes no base and delta files")
+      val deltas = t.deltaScan(Some(Set(b)))
+      assert(base.count() > 0 && deltas.paths.nonEmpty, s"bucket $b mixes no base and delta files")
       val inTask = rows(MorRead.mergedInBucket(spark, t.schema, base, deltas))
       val full = rows(MorRead.mergedInBucket(spark, t.schema, base, deltas,
         maxInTaskDeltaBytes = 0L))

@@ -74,7 +74,7 @@ class ChangeFeedSpec extends SparkSuite {
       .select(col("conv_id"), col("turn_idx"), col("action"), col("row"),
         col("_commit_version").as("seq"))
       .write.parquet(p)
-    val reconstructed = MorRead.merged(spark, t.schema, t.readAt(spark, from), Seq(p))
+    val reconstructed = MorRead.merged(spark, t.schema, t.readAt(spark, from), graft.table.IceLite.BucketFiles(Seq(Seq(p) -> None)))
       .collect().map(r => (r.getString(0), r.getInt(1), r.getAs[String]("text"))).toSeq.sorted
     val want = t.readAt(spark, to)
       .collect().map(r => (r.getString(0), r.getInt(1), r.getAs[String]("text"))).toSeq.sorted

@@ -3,6 +3,7 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 import graft.model._
 import graft.operators.{CdcApply, MergeEngine}
@@ -117,6 +118,24 @@ class MergeEngineSpec extends SparkSuite {
       }
       assert(spark.read.parquet(s"$dir/rejected").count() == 2L, clue)
       assert(readTable(spark, table) == want, clue)
+    }
+  }
+
+  test("an epoch batch commits the rejected count of the quarantine it wrote, in both batch shapes") {
+    val bad = (0 until 5).map(i => ChangeEvent(0, 20L + i, ts(20L + i), "insert", s"cB$i", Some(1), None, 2))
+    val good = (0 until 6).map(i => ins(30L + i, s"cG$i", 0, s"ok$i"))
+    for (shape <- batchShapes) {
+      val dir = tmpDir("merge-rejected")
+      val table = IceLite.create(s"$dir/t", turnSchema, 8)
+      Seq(0L -> (bad ++ good), 1L -> good.take(2), 2L -> bad.take(3)).foreach { case (epoch, b) =>
+        val res = CdcApply.applyBatch(spark, table, batchOf(spark, b, shape),
+          epoch = Some(("rej", epoch)), rejectedDir = Some(s"$dir/rejected"))
+        val quarantined = spark.read.parquet(s"$dir/rejected")
+          .filter(col("_rejected_at_epoch") === epoch).count()
+        assert(table.current.metrics("rejected") == quarantined && res.rejected == quarantined,
+          s"${shape.name} epoch $epoch: committed ${table.current.metrics("rejected")}, quarantined $quarantined")
+      }
+      assert(table.versions.map(table.snapshot).flatMap(_.metrics.get("rejected")).sum == 8L, shape.name)
     }
   }
 

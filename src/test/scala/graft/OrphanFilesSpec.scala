@@ -91,6 +91,43 @@ class OrphanFilesSpec extends SparkSuite {
     assert(after == (expected :+ (("c000", 3, "racer"))).sorted)
   }
 
+  test("a shared epoch file lives until the last bucket listing it drops it; metadata counts it once") {
+    val dir = tmpDir("orphan-shared") + "/t"
+    val t = IceLite.create(dir, turnSchema, 4)
+    val b = (0 until 24).map(i => ins(i.toLong, f"c$i%03d", 0, s"t$i"))
+    CdcApply.applyBatch(spark, t, batchOf(spark, b, BatchShape("one-task", 1)), epoch = Some(("q", 0L)))
+    val Seq(shared) = t.current.deltas.values.flatten.toSeq.distinct
+    val path = Paths.get(dir).resolve(shared)
+    assert(t.current.deltas.keySet == Set(0, 1, 2, 3) && t.current.deltas.values.forall(_ == Seq(shared)))
+    val expected = readTable(spark, t).map(x => (x.conv_id, x.turn_idx, x.text)).sorted
+    assert(expected.size == 24)
+
+    // the metadata tables count the file once, under all four buckets
+    val snapRow = graft.table.MetaTables.snapshots(spark, t).collect().last
+    assert(snapRow.getAs[Int]("n_delta_files") == 1 && snapRow.getAs[Long]("delta_bytes") == Files.size(path))
+    val Array(fileRow) = graft.table.MetaTables.files(spark, t).collect()
+    assert(fileRow.getAs[scala.collection.Seq[Int]]("buckets").toSeq == Seq(0, 1, 2, 3) && fileRow.getAs[Long]("row_count") == 24L)
+
+    def keeps(clue: String): Unit = {
+      assert(t.removeOrphanFiles(graceMs = 0L) == 0 && Files.exists(path), s"$clue: orphan sweep took it")
+      assert(readTable(spark, t).map(x => (x.conv_id, x.turn_idx, x.text)).sorted == expected, clue)
+    }
+    // two buckets drop it, two still list it: expiry of every older
+    // snapshot must keep it
+    assert(t.compactDeltas(spark, maxBuckets = 2) == 2)
+    assert(t.current.deltas.values.flatten.toSet == Set(shared) && t.current.deltas.size == 2)
+    t.expireSnapshots(keepLast = 1)
+    keeps("listed under two buckets")
+    // the last two drop it: retained older snapshots still list it
+    assert(t.compactDeltas(spark) == 2 && t.current.deltas.isEmpty)
+    keeps("listed by a retained snapshot only")
+    // expiring them reclaims it
+    val (_, deleted) = t.expireSnapshots(keepLast = 1)
+    assert(deleted == 1 && !Files.exists(path))
+    assertNoUnreferenced(dir, t)
+    assert(readTable(spark, t).map(x => (x.conv_id, x.turn_idx, x.text)).sorted == expected)
+  }
+
   test("removeOrphanFiles: collects aged crash orphans; spares live, audit, and grace-fresh files") {
     val dir = tmpDir("orphan-remove") + "/t"
     val t = IceLite.create(dir, turnSchema, 4)

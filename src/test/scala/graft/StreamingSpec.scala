@@ -223,6 +223,36 @@ class StreamingSpec extends SparkSuite {
     assert(decided.asScala.forall(_ == ((true, false))), decided)
   }
 
+  test("a one-task epoch adds one delta file and one event-log file, listed under exactly its rows' buckets") {
+    val root = tmpDir("stream-epochfile")
+    val cfg = ChangeLogGen.GenConfig(numEvents = 2400, numConvs = 40, maxTurns = 6, logPartitions = 1)
+    ChangeLogGen.writeLog(spark, cfg, s"$root/log", chunks = 3)
+    val sc = CdcStream.StreamConfig(s"$root/log", s"$root/table", s"$root/ckpt",
+      maxFilesPerTrigger = Some(1), eventLogTableDir = Some(s"$root/logtbl"))
+    val table = CdcStream.runAvailable(spark, sc)
+    val logTable = IceLite.load(s"$root/logtbl")
+    def listings(m: Map[Int, Seq[String]]): Map[String, Set[Int]] =
+      m.toSeq.flatMap { case (b, fs) => fs.map(_ -> b) }.groupMap(_._1)(_._2).map { case (f, bs) => f -> bs.toSet }
+    // per epoch commit: the files it added, each with the buckets listing it
+    def added(t: graft.table.IceLiteTable, metric: String, files: IceLite.Snapshot => Map[Int, Seq[String]]) =
+      t.versions.filter(v => v > 1 && t.snapshot(v).metrics.contains(metric)).map { v =>
+        val before = listings(files(t.snapshot(v - 1)))
+        listings(files(t.snapshot(v))).filter { case (f, _) => !before.contains(f) }
+      }
+    def rowBuckets(t: graft.table.IceLiteTable, rel: String): Set[Int] =
+      spark.read.parquet(s"${t.dir}/$rel").select(IceLite.bucketOf(col("conv_id"), t.numBuckets))
+        .distinct().collect().map(_.getInt(0)).toSet
+    val deltas = added(table, "deltaFilesAdded", _.deltas)
+    val appends = added(logTable, "bucketsAppended", _.files)
+    assert(deltas.size == 3 && appends.size == 3, s"${deltas.size} applies, ${appends.size} appends")
+    for ((t, epochs) <- Seq(table -> deltas, logTable -> appends); files <- epochs) {
+      assert(files.size == 1, s"${t.dir}: an epoch added ${files.size} files")
+      val (f, bs) = files.head
+      assert(bs.size > 1 && bs == rowBuckets(t, f), s"$f listed under $bs")
+    }
+    assert(stateTriples(table) == oracleTriples(collectLog(spark.read.parquet(s"$root/log"))))
+  }
+
   test("rebucket mid-stream: the fenced epoch fails the stream; restart resumes under the new layout") {
     val root = tmpDir("stream-rebucket")
     val cfg = ChangeLogGen.GenConfig(numEvents = 3000, numConvs = 40, maxTurns = 8, logPartitions = 2)

@@ -1,0 +1,79 @@
+#!/bin/bash
+# Interleaved A/B of one perfbench workload: a parent commit against the
+# working tree, one pair of runs per seed, the order alternating per seed
+# (parent first on the 1st, 3rd, ... seed; the change first on the others).
+#
+#   tools/ab_pairs.sh <parent-sha> <workload> <seed>...
+#   e.g. tools/ab_pairs.sh HEAD~1 stream_read $(seq 101 110)
+#
+# The parent is extracted with `git archive` into a temporary directory,
+# removed on exit. Each side builds from its own sources and runs through
+# its own perfbench/run.py with `--seconds 9 --trace 0`; nothing under
+# perfbench/ or BENCHMARK.json is touched. Prints one line per pair and
+# the medians of task_cpu_s, shuffle_bytes and setup_s, with how many
+# pairs the change is lower in, and flags any run that was not correct or
+# had a failed operation. AB_KEEP=<dir> keeps every run's output there.
+set -euo pipefail
+if [ $# -lt 3 ]; then
+  echo "usage: $0 <parent-sha> <workload> <seed>..." >&2
+  exit 2
+fi
+parent=$1 workload=$2
+shift 2
+repo=$(git rev-parse --show-toplevel)
+tmp=$(mktemp -d)
+trap 'rm -rf "$tmp"' EXIT
+mkdir "$tmp/parent"
+git -C "$repo" archive "$parent" | tar -x -C "$tmp/parent"
+out=${AB_KEEP:-$tmp/out}
+mkdir -p "$out"
+
+run() { # <tree> <side> <seed>
+  echo "$(date +%H:%M:%S) $2 seed $3" >&2
+  (cd "$1" && python3 perfbench/run.py --workload "$workload" --seed "$3" --seconds 9 --trace 0) \
+    > "$out/$2-$3.txt" 2>&1 || echo "$2 seed $3 exited non-zero (see $out/$2-$3.txt)" >&2
+}
+
+i=0
+for s in "$@"; do
+  if [ $((i % 2)) -eq 0 ]; then
+    run "$tmp/parent" parent "$s"; run "$repo" change "$s"
+  else
+    run "$repo" change "$s"; run "$tmp/parent" parent "$s"
+  fi
+  i=$((i + 1))
+done
+
+python3 - "$out" "$@" <<'EOF'
+import json, statistics, sys
+
+out, seeds = sys.argv[1], sys.argv[2:]
+keys = ["task_cpu_s", "shuffle_bytes", "setup_s"]
+
+def result(side, seed):
+    try:
+        lines = open(f"{out}/{side}-{seed}.txt").read().splitlines()
+        return json.loads(next(l for l in reversed(lines) if l.startswith("{")))
+    except (OSError, StopIteration, ValueError):
+        return None
+
+pairs = []
+print("seed  " + "  ".join(f"{k:>27}" for k in keys) + "  ok")
+for s in seeds:
+    p, c = result("parent", s), result("change", s)
+    if p is None or c is None:
+        print(f"{s:<5} missing result ({'parent' if p is None else 'change'})")
+        continue
+    pv = {k: p["metrics"][k]["value"] for k in keys}
+    cv = {k: c["metrics"][k]["value"] for k in keys}
+    ok = all(r["correct"] and r["failed"] == 0 for r in (p, c))
+    pairs.append((pv, cv))
+    print(f"{s:<5} " + "  ".join(f"{pv[k]:>12.6g} -> {cv[k]:<12.6g}" for k in keys) + f"  {'yes' if ok else 'NO'}")
+if pairs:
+    print(f"median of {len(pairs)} pairs, parent -> change (change lower in k of n):")
+    for k in keys:
+        pm = statistics.median(p[k] for p, _ in pairs)
+        cm = statistics.median(c[k] for _, c in pairs)
+        lower = sum(c[k] < p[k] for p, c in pairs)
+        print(f"  {k}: {pm:.6g} -> {cm:.6g} ({(cm - pm) / pm * 100 if pm else 0.0:+.1f}%), lower in {lower}/{len(pairs)}")
+EOF
