@@ -165,7 +165,7 @@ object Scd2History {
   /** The incremental refresh: per touched key, roll the range's feed
     * actions over the key's current open version and emit the history
     * upserts (closed current rows + newly opened versions).
-    * (package-visible so DumpPlans can audit the physical plan)
+    * (package-visible so PlanSpec can pin its physical plan)
     */
   private[graft] def transitionRows(
       spark: SparkSession,

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.{CommandResultExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 
 /** Physical-plan assertions: the Spark-first design claims (pushdown,
@@ -12,6 +15,15 @@ class PlanSpec extends SparkSuite {
 
   private def planOf(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+
+  /** Every node of an executed plan, adaptive stages and cached plans inlined. */
+  private def flat(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => flat(a.executedPlan)
+    case q: QueryStageExec        => q +: flat(q.plan)
+    case m: InMemoryTableScanExec => m +: flat(m.relation.cachedPlan)
+    case c: CommandResultExec     => c +: flat(c.commandPhysicalPlan)
+    case other                    => other +: other.children.flatMap(flat)
+  }
 
   test("filter + projection are pushed into the parquet scan (q02)") {
     val plan = planOf(SparkEntry.queries("q02_filter_project")(spark, dir))
@@ -161,20 +173,10 @@ class PlanSpec extends SparkSuite {
 
   test("one-task epoch: fold + delta write and event-log append execute with no shuffle exchange") {
     import TestHelpers._
-    import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import graft.operators.{CdcApply, EventLogApply}
     import scala.jdk.CollectionConverters._
-    // every executed node, adaptive stages and cached plans inlined
-    def flat(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => flat(a.executedPlan)
-      case q: QueryStageExec        => q +: flat(q.plan)
-      case m: InMemoryTableScanExec => m +: flat(m.relation.cachedPlan)
-      case c: CommandResultExec     => c +: flat(c.commandPhysicalPlan)
-      case other                    => other +: other.children.flatMap(flat)
-    }
     val evs = Seq(ins(0, "c1", 0, "a"), upd(1, "c1", 0, "b"), ins(2, "c2", 0, "c"),
       del(3, "c3", None), ins(4, "c3", 1, "d"), ups(5, "c4", 2, "e"))
     // executed plans of one applyBatch + appendBatch: (plan text, shuffle
@@ -283,8 +285,7 @@ class PlanSpec extends SparkSuite {
 
   test("multi-bucket MOR read: one payload base scan, one delta exchange, one fold") {
     import TestHelpers._
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.aggregate.SortAggregateExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val t = graft.table.IceLite.create(tmpDir("planspec-mor-multi") + "/t", turnSchema, 4)
@@ -301,13 +302,7 @@ class PlanSpec extends SparkSuite {
     assert(df.filter(col("conv_id") === "c07").select("turn_idx", "text").collect()
       .map(r => (r.getInt(0), r.getString(1))).toSet == Set((1, "u"), (5, "n")))
     df.collect()
-    // the executed adaptive plan, each query stage's own plan inlined; a
-    // reused stage is a leaf, so its exchange is counted once
-    def flat(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => flat(a.executedPlan)
-      case q: QueryStageExec        => q +: flat(q.plan)
-      case other                    => other +: other.children.flatMap(flat)
-    }
+    // a reused stage is a leaf, so its exchange is counted once
     def isDelta(f: FileSourceScanExec) = f.relation.dataSchema.fieldNames.contains("action")
     val plan = df.queryExecution.executedPlan
     val all = flat(plan)
@@ -328,6 +323,109 @@ class PlanSpec extends SparkSuite {
     assert(payload.size == 1, shown)
     assert(!flat(payload.head).exists(_.isInstanceOf[SortAggregateExec]),
       s"the payload is aggregated below the exchange:\n$shown")
+  }
+
+  /** Every executed node of `df`, run first. */
+  private def executedNodes(df: org.apache.spark.sql.DataFrame): Seq[SparkPlan] = {
+    df.collect()
+    flat(df.queryExecution.executedPlan)
+  }
+
+  /** Input files of a scan, as local paths. */
+  private def scanFiles(f: org.apache.spark.sql.execution.FileSourceScanExec): Set[String] =
+    f.relation.location.inputFiles.map(p => new org.apache.hadoop.fs.Path(p).toUri.getPath).toSet
+
+  /** A 4-bucket table: 40 rows compacted into base files, then three
+    * merge-on-read commits (updates, inserts, row deletes; no wipe).
+    * Returns the table and the version before those commits. */
+  private def feedFixture(name: String): (graft.table.IceLiteTable, Long) = {
+    import TestHelpers._
+    val t = graft.table.IceLite.create(tmpDir(name) + "/t", turnSchema, 4)
+    val mor = graft.model.MergeSpec(morCompactThreshold = 1000)
+    graft.operators.CdcApply.applyBatch(spark, t,
+      eventsDF(spark, (0 until 40).map(i => ins(i.toLong, f"c$i%02d", 0, s"v$i"))), spec = mor)
+    assert(t.compactDeltas(spark) > 0 && t.deltaFiles().isEmpty)
+    val from = t.currentVersion
+    Seq(Seq(upd(100, "c07", 0, "u"), ins(101, "c07", 1, "n")),
+      Seq(del(102, "c11", Some(0)), ups(103, "c20", 2, "w")),
+      Seq(upd(104, "c30", 0, "x"))).foreach { evs =>
+      graft.operators.CdcApply.applyBatch(spark, t, eventsDF(spark, evs), spec = mor)
+    }
+    (t, from)
+  }
+
+  test("change feed: ONE scan of exactly the range's delta files, no base scan, no union") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, UnionExec}
+    val (t, from) = feedFixture("planspec-feed")
+    assert(t.currentVersion == from + 3 && t.dataFiles().nonEmpty)
+    val df = t.readChanges(spark, from)
+    val all = executedNodes(df)
+    // the compaction left no deltas, so every delta file is the range's
+    val scans = all.collect { case f: FileSourceScanExec => f }
+    assert(scans.size == 1, df.queryExecution.executedPlan.toString)
+    assert(scanFiles(scans.head) == t.deltaFiles().toSet, df.queryExecution.executedPlan.toString)
+    assert(!all.exists(_.isInstanceOf[UnionExec]), df.queryExecution.executedPlan.toString)
+    assert(df.count() == 5)
+  }
+
+  test("groupDelta: no table scan; one checkpointed before side feeds both aggregates") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec}
+    import graft.operators.IncrementalView
+    val (t, from) = feedFixture("planspec-ivm")
+    val vspec = IncrementalView.ViewSpec(
+      dims = Seq("role" -> col("role")),
+      sums = Seq("chars" -> length(col("text")).cast("long")))
+    val df = IncrementalView.groupDelta(spark, t, vspec, from, t.currentVersion)
+    val all = executedNodes(df)
+    val shown = df.queryExecution.executedPlan.toString
+    assert(!all.exists(_.isInstanceOf[FileSourceScanExec]), shown)
+    // two checkpoints: the before state (table columns) and the feed
+    // (rows in a struct); the before one is scanned by the negative
+    // aggregate and by the fold that derives the after side
+    val rdds = all.collect { case r: RDDScanExec => r }
+    val (before, feed) = rdds.partition(_.output.exists(_.name == "role"))
+    assert(before.map(_.rdd.id).distinct.size == 1 && before.size == 2, shown)
+    assert(feed.map(_.rdd.id).distinct.size == 1, shown)
+  }
+
+  test("SCD2 transitions: bucket-pruned history read, no source scan, ONE key exchange") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.ResultQueryStageExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    import graft.operators.Scd2History
+    import TestHelpers._
+    val (t, from) = feedFixture("planspec-scd2")
+    val h = graft.table.IceLite.create(tmpDir("planspec-scd2") + "/h", Scd2History.historySchema(turnSchema), 16)
+    Scd2History.refresh(spark, t, h, toVersion = from)
+    h.compactDeltas(spark)
+    val historyFiles = (h.dataFiles() ++ h.deltaFiles()).toSet
+    val df = Scd2History.transitionRows(spark, t, h, turnSchema, from, t.currentVersion)
+    val all = executedNodes(df)
+    val shown = df.queryExecution.executedPlan.toString
+    // the source is read only through the checkpointed feed; the history
+    // only in the touched keys' buckets
+    val scanned = all.collect { case f: FileSourceScanExec => scanFiles(f) }.flatten.toSet
+    assert(scanned.nonEmpty && scanned.subsetOf(historyFiles) && scanned.size < historyFiles.size,
+      s"scanned ${scanned.size} of ${historyFiles.size} history files\n$shown")
+    // the nodes above the first exchange on every path, and those exchanges
+    def top(p: SparkPlan): (Seq[SparkPlan], Seq[SparkPlan]) = p match {
+      case a: AdaptiveSparkPlanExec => top(a.executedPlan)
+      case r: ResultQueryStageExec  => top(r.plan)
+      case q: QueryStageExec        => (Nil, Seq(q.plan))
+      case e: Exchange              => (Nil, Seq(e))
+      case other =>
+        val (nodes, exchanges) = other.children.map(top).unzip
+        (other +: nodes.flatten, exchanges.flatten)
+    }
+    val (stage, below) = top(df.queryExecution.executedPlan)
+    val windows = all.collect { case w: WindowExec => w }
+    assert(windows.nonEmpty && windows.forall(w => stage.exists(_ eq w)), shown)
+    val shuffles = below.collect { case e: ShuffleExchangeExec => e }
+    assert(shuffles.size == 1, shown)
+    assert(shuffles.head.outputPartitioning.asInstanceOf[HashPartitioning].expressions
+      .flatMap(_.references.map(_.name)) == Seq("src_conv_id", "src_turn_idx"), shown)
   }
 
   test("events parquet scan prunes to envelope columns used by the planning aggregate") {

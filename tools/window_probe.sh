@@ -2,9 +2,8 @@
 # Cheap host-window probe (no JVM): single-thread CPU spin + memcpy,
 # calibrated against its OWN idle baselines (pass as args; defaults
 # measured on this host at load-average 0.16: spin min-of-3 ~285 ms,
-# memcpy ~3.2 GB/s). These refs are probe-specific — do NOT compare against
-# the JVM ScalingBench probes (150 ms spin / 10.5 GB/s triad), which
-# use different loops. Prints one line; exit 0 = looks clean.
+# memcpy ~3.2 GB/s). These refs are specific to this probe's loops.
+# Prints one line; exit 0 = looks clean.
 # Usage: tools/window_probe.sh [spin_ref_ms] [mem_ref_gbs]
 python3 - "$@" <<'EOF'
 import time, sys
