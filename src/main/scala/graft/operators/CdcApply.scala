@@ -1,7 +1,5 @@
 package graft.operators
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -23,7 +21,7 @@ import graft.table.{IceLite, IceLiteTable, SchemaEvolution}
   * with exactly-once obtained from idempotent epoch commits instead of
   * at-least-once + DB transactions: the snapshot property
   * `epoch:<streamId>` records the last applied batch id; a re-delivered
-  * epoch is a no-op (`AlreadyApplied`).
+  * epoch is a no-op ([[graft.table.IceLiteTable.commitStaged]]).
   *
   * Per epoch the batch source is scanned by (a) a NARROW planning
   * aggregate (partition/offset only), (b) a narrow wipe count and, when
@@ -45,7 +43,8 @@ object CdcApply {
       eventsSeen: Long,
       rejected: Long)
 
-  private final case class AlreadyApplied(epoch: Long) extends Exception(s"epoch $epoch already applied")
+  /** The result of a re-delivered batch: nothing applied. */
+  private[operators] def skipped(s: IceLite.Snapshot): BatchResult = BatchResult(s, skipped = true, 0L, 0L, 0L)
 
   /** A concurrent writer committed between this batch's snapshot read and
     * its commit CAS (version moved or a delta seq was taken). Retried by
@@ -78,38 +77,6 @@ object CdcApply {
 
   /** Total MOR commit races retried in this JVM (observability/test hook). */
   private[graft] val morRaceRetries = new java.util.concurrent.atomic.LongAdder
-
-  /** Best-effort removal of an abandoned stage dir (race retry / skipped
-    * epoch). The walk stream must be CLOSED — it holds directory fds, and
-    * a long-lived streaming driver leaking one per contended commit works
-    * toward EMFILE. Catches the UNCHECKED I/O wrappers too: Files.walk's
-    * lazy iteration surfaces errors as UncheckedIOException /
-    * DirectoryIteratorException, and this runs inside the AlreadyApplied
-    * and CommitRaced handlers — a cleanup hiccup must never turn a
-    * retryable race (or an idempotent skip) into an epoch failure.
-    * Leftovers from a failed delete persist (never-referenced files are
-    * invisible to snapshot-based GC) but are inert: stage dirs are
-    * per-commit UUIDs, so nothing ever reads or collides with them.
-    */
-  private[operators] def dropStage(stage: java.nio.file.Path): Unit =
-    try {
-      import java.nio.file.{Files, Path}
-      val walk = Files.walk(stage)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
-      finally walk.close()
-    } catch {
-      case _: java.io.IOException => ()
-      case _: java.io.UncheckedIOException => ()
-      case _: java.nio.file.DirectoryIteratorException => ()
-    }
-
-  /** Test seam: runs once after the first staging, before the first
-    * commit attempt — lets a spec deterministically interleave a second
-    * writer's commit into the race window. Consumed on use.
-    */
-  private[graft] val testOnStaged =
-    new java.util.concurrent.atomic.AtomicReference[() => Unit](null)
 
   /** Above this many series tombstones in one batch, the wipe set is no
     * longer broadcast into the fold (a bulk GDPR-delete batch would
@@ -180,14 +147,13 @@ object CdcApply {
     // deleted/reset checkpoint reused against an existing table with the
     // same streamId — reprocessing requires a NEW streamId, so warn.
     epoch.foreach { case (sid, bid) =>
-      lastEpoch(snap0, sid).foreach { last =>
-        if (last > bid)
-          System.err.println(s"[graft] WARN epoch $bid for stream '$sid' is below the " +
-            s"committed high-water mark $last — skipping. If this is a checkpoint reset " +
-            s"meant to REPROCESS, use a new streamId (epochs are keyed by streamId).")
-        if (last >= bid) return BatchResult(snap0, skipped = true, 0L, 0L, 0L)
+      snap0.epochs.get(sid).filter(_ > bid).foreach { last =>
+        System.err.println(s"[graft] WARN epoch $bid for stream '$sid' is below the " +
+          s"committed high-water mark $last — skipping. If this is a checkpoint reset " +
+          s"meant to REPROCESS, use a new streamId (epochs are keyed by streamId).")
       }
     }
+    if (snap0.applied(epoch)) return skipped(snap0)
 
     // --- schema evolution (ALTER-ADD semantics, SchemaEvolution rules) ---
     val tableSchema0 = org.apache.spark.sql.types.DataType.fromJson(snap0.schemaJson).asInstanceOf[StructType]
@@ -242,7 +208,7 @@ object CdcApply {
               .partitionBy("_rejected_at_epoch").parquet(d)
             val part = new org.apache.hadoop.fs.Path(s"$d/_rejected_at_epoch=$bid")
             val fs = part.getFileSystem(spark.sessionState.newHadoopConf())
-            footerRowCount(spark, fs.listStatus(part).toSeq.map(_.getPath)
+            IceLite.footerRowCount(spark, fs.listStatus(part).toSeq.map(_.getPath)
               .filter(_.getName.endsWith(".parquet")).map(_.toString))
           case None =>
             rej.write.mode("append")
@@ -426,12 +392,13 @@ object CdcApply {
       quarantine: Long => Long,
       preAligned: Boolean,
       oneTask: Boolean,
-      auditRef: Option[String] = None,
-      extraProps: Map[String, String] = Map.empty): BatchResult = {
+      auditRef: Option[String],
+      extraProps: Map[String, String]): BatchResult = {
 
     // the bucket layout this batch stages under, pinned ONCE: the commit
     // retry loop re-reads the parent, and if a rebucket landed meanwhile
-    // the staged bucket assignment is stale — fenced below, never retried
+    // the staged bucket assignment is stale — the commit fences it
+    // (IceLiteTable.commitStaged), never retried
     val nb0 = snap0.numBuckets
 
     val wipeRows = wipes.select(
@@ -443,13 +410,13 @@ object CdcApply {
     // Bucket-aligned actions (MergeSpec.foldAlignment="bucket", flagged
     // explicitly by the caller) arrive already exchanged + grouped on
     // the bucket key: write them AS IS — each task holds exactly one
-    // bucket, so partitionBy emits one delta file per touched bucket
-    // with no further exchange. Key-aligned actions need the write-side
+    // bucket, so the write emits one delta file per touched bucket with
+    // no further exchange. Key-aligned actions need the write-side
     // redistribution (AQE rebalance: hot buckets split, cold coalesce).
     // A one-task epoch writes actions and wipe markers from ONE task
     // into ONE file, listed under every bucket its rows hash to
-    // (IceLiteTable.stageEpochFile): Spark's per-file write cost, not the
-    // rows, dominates a micro-batch's delta write.
+    // (IceLiteTable.stage): Spark's per-file write cost, not the rows,
+    // dominates a micro-batch's delta write.
     val actionRows =
       if (preAligned)
         normActions.select(col("bucket"), col("conv_id"), col("turn_idx"), col("action"), col("row"))
@@ -463,32 +430,17 @@ object CdcApply {
     // buy nothing here and the zstd+sort CPU was the largest block of the
     // per-epoch profile. Rows are seq-stamped per attempt: the commit CAS
     // rejects a stolen seq, and a retry re-stages under the new one.
-    def stageDeltas(seq: Long): (java.nio.file.Path, Map[Int, Seq[String]], Long) = {
+    def stageDeltas(seq: Long): IceLite.Staged = labelled(spark, s"cdc: fold + delta write (seq $seq)") {
       val deltaRows = actionRows.unionByName(wipeRows).withColumn("seq", lit(seq))
-      val stage = table.newStageDir()
-      val staged = labelled(spark, s"cdc: fold + delta write (seq $seq)") {
-        if (oneTask)
-          table.stageEpochFile(spark, deltaRows.coalesce(1), stage, Nil, Map("compression" -> "snappy"))
-        else {
-          (if (preAligned) deltaRows
-           else deltaRows.hint("rebalance", "bucket")) // AQE splits hot buckets, coalesces cold
-            .write.mode("overwrite")
-            .option("compression", "snappy")
-            .partitionBy("bucket")
-            .parquet(stage.toString)
-          table.stagedFilesByBucket(stage)
-        }
-      }
-      val rowsWritten = footerRowCount(spark, staged.values.flatten.toSeq.distinct.map(r => s"${table.dir}/$r"))
-      (stage, staged, rowsWritten)
+      table.stage(spark, if (preAligned || oneTask) deltaRows else deltaRows.hint("rebalance", "bucket"),
+        nb0, oneTask, Nil, Map("compression" -> "snappy"))
     }
     // single-writer sequence: rows are stamped before the commit, so a
     // racing writer (which would steal this version) fails the CAS check
     // and this batch re-stages against the new parent (bounded retries)
     var parent0 = snap0
     var schemaNow = evolved
-    var (stage, staged, rowsWritten) = stageDeltas(parent0.version + 1)
-    Option(testOnStaged.getAndSet(null)).foreach(_.apply())
+    var staged = stageDeltas(parent0.version + 1)
 
     // planning ran concurrently with the delta write; join it here — the
     // commit is the first consumer of the lineage
@@ -512,59 +464,42 @@ object CdcApply {
     var attempt = 0
     while (true) {
       val seq = parent0.version + 1
+      val rowsWritten = staged.rows
       try {
-        val buildChild: IceLite.Snapshot => IceLite.Snapshot = { parent =>
-          epoch.foreach { case (sid, bid) =>
-            if (lastEpoch(parent, sid).exists(_ >= bid)) throw AlreadyApplied(bid)
-          }
+        // Audit staging (B12) evaluates the SAME child-building callback —
+        // epoch-redelivery skip and race fences included — but writes the
+        // result under the audit name instead of the CAS pointer. A race
+        // during staging retries exactly like a commit race (the audit
+        // must describe current+batch at publish time).
+        val committed = table.commitStaged(staged, epoch, auditRef) { parent =>
           if (parent.version != parent0.version || parent.lastDeltaSeq >= seq)
             throw CommitRaced(
               s"MOR commit raced on ${table.dir}: staged seq $seq vs parent " +
                 s"version ${parent.version} (lastDeltaSeq ${parent.lastDeltaSeq})")
           parent.copy(
             schemaJson = schemaNow.json,
-            deltas = parent.deltas ++ staged.map { case (b, fs) =>
-              b -> (parent.deltas.getOrElse(b, Seq.empty) ++ fs)
-            },
+            deltas = staged.appendTo(parent.deltas),
             lastDeltaSeq = seq,
-            properties = parent.properties ++ offsetProps(parent, lineage) ++ epochProps(epoch) ++ extraProps,
+            properties = parent.properties ++ offsetProps(parent, lineage) ++ extraProps,
             metrics = Map(
               "rowsWritten" -> rowsWritten,
-              "deltaFilesAdded" -> staged.values.flatten.toSet.size.toLong,
+              "deltaFilesAdded" -> staged.paths.size.toLong,
               "eventsApplied" -> eventsSeen,
               "rejected" -> rejectedCount))
         }
-        // Audit staging (B12) evaluates the SAME child-building callback —
-        // epoch-redelivery skip and race fences included — but writes the
-        // result under the audit name instead of the CAS pointer. A race
-        // during staging retries exactly like a commit race (the audit
-        // must describe current+batch at publish time).
-        val snap = auditRef match {
-          case Some(an) => table.stageAudit(an, buildChild)
-          case None     => table.commit(buildChild)
+        return committed.fold(skipped(table.current)) { snap =>
+          if (epoch.isEmpty) quarantine(rejectedCount)
+          BatchResult(snap, skipped = false, rowsWritten, eventsSeen, rejectedCount)
         }
-        if (epoch.isEmpty) quarantine(rejectedCount)
-        return BatchResult(snap, skipped = false, rowsWritten, eventsSeen, rejectedCount)
       } catch {
-        case AlreadyApplied(_) =>
-          dropStage(stage)
-          return BatchResult(table.current, skipped = true, 0L, 0L, 0L)
         case CommitRaced(msg) =>
           attempt += 1
-          dropStage(stage)
           if (attempt > MorCommitRetries)
             throw new IllegalStateException(
               s"$msg — still racing after $MorCommitRetries re-stage attempts; " +
                 "a concurrent writer is livelocking this table, re-apply the batch manually.")
           morRaceRetries.increment()
           parent0 = table.current
-          // rebucket fence: the re-stage below re-uses actionRows, whose
-          // bucket column was computed under nb0 — committing it against
-          // a re-bucketed parent would land rows in wrong buckets
-          if (parent0.numBuckets != nb0)
-            throw new IllegalStateException(
-              s"table ${table.dir} was re-bucketed ($nb0 -> ${parent0.numBuckets}) while " +
-                "this batch was staged under the old layout — re-apply the batch")
           // the racer may have evolved the schema: merge ours over the
           // committed one (delta rows keep THIS batch's struct — readers
           // widen missing nested fields to null, ALTER-ADD semantics)
@@ -577,8 +512,7 @@ object CdcApply {
           }
           System.err.println(s"[graft] MOR commit race on ${table.dir} (attempt $attempt/" +
             s"$MorCommitRetries): re-staging against parent v${parent0.version}")
-          val t = stageDeltas(parent0.version + 1)
-          stage = t._1; staged = t._2; rowsWritten = t._3
+          staged = stageDeltas(parent0.version + 1)
       }
     }
     throw new IllegalStateException("unreachable")
@@ -750,37 +684,10 @@ object CdcApply {
       events.withColumn("after", when(col("after").isNotNull, struct(cols: _*)))
     }
 
-  /** Sum of row counts from parquet footers (driver-side metadata reads,
-    * fanned out on a thread pool — one file per bucket per epoch adds up,
-    * and each footer open is latency-bound, not CPU-bound).
-    */
-  private[operators] def footerRowCount(spark: SparkSession, paths: Iterable[String]): Long = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val conf = spark.sessionState.newHadoopConf()
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val counts = paths.toSeq.map { p =>
-      Future {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new org.apache.hadoop.fs.Path(p), conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getFooter.getBlocks.asScala.map(_.getRowCount.toLong).sum
-        finally r.close()
-      }
-    }
-    Await.result(Future.sequence(counts), Duration.Inf).sum
-  }
-
-  private def lastEpoch(s: IceLite.Snapshot, streamId: String): Option[Long] =
-    s.properties.get(s"epoch:$streamId").map(_.toLong)
-
   private def offsetProps(parent: IceLite.Snapshot, lineage: Array[org.apache.spark.sql.Row]): Map[String, String] =
     lineage.map { r =>
       val p = r.getAs[Int]("partition")
       val prev = parent.properties.get(s"maxoff:$p").map(_.toLong).getOrElse(Long.MinValue)
       s"maxoff:$p" -> math.max(prev, r.getAs[Long]("max_off")).toString
     }.toMap
-
-  private def epochProps(epoch: Option[(String, Long)]): Map[String, String] =
-    epoch.map { case (sid, bid) => s"epoch:$sid" -> bid.toString }.toMap
 }

@@ -50,11 +50,7 @@ object EventLogApply {
     val events0 = CdcApply.whitelistFields(events, spec)
 
     val snap0 = table.current
-    epoch.foreach { case (sid, bid) =>
-      val last = snap0.properties.get(s"epoch:$sid").map(_.toLong)
-      if (last.exists(_ >= bid))
-        return CdcApply.BatchResult(snap0, skipped = true, 0L, 0L, 0L)
-    }
+    if (snap0.applied(epoch)) return CdcApply.skipped(snap0)
 
     // Evolve the log table's schema when the batch's after-struct carries
     // drift columns: the ALTER-ADD merge runs FIELD-WISE on the nested
@@ -76,65 +72,27 @@ object EventLogApply {
       col("op"), col("conv_id"), col("turn_idx"), col("after"), col("ts"),
       col("partition").as("_partition"), col("offset").as("_offset"))
 
-    // bucket layout pinned once; the commit re-checks it (rebucket fence:
-    // appending files staged under an old layout would break pruning)
-    val nb0 = table.numBuckets
-
     // A batch scanned in one task (MergeEngine.plansOneTask) is
     // appended from that task as ONE file, listed under every bucket its
-    // rows hash to (IceLiteTable.stageEpochFile): the rebalance would
-    // only scatter and gather the rows, and a file per bucket costs more
-    // to write than the rows in it. Any other batch is rebalanced onto
-    // the bucket key and written one file per bucket.
+    // rows hash to (IceLiteTable.stage): the rebalance would only scatter
+    // and gather the rows, and a file per bucket costs more to write than
+    // the rows in it. Any other batch is rebalanced onto the bucket key
+    // and written one file per bucket. The commit fences a rebucket that
+    // lands meanwhile: appending files staged under an old layout would
+    // break pruning.
+    val nb0 = snap0.numBuckets
     val bucketed = rows.withColumn("bucket", MergeEngine.bucketOf(col("conv_id"), nb0))
-    val stage = table.newStageDir()
-    val options = Map("compression" -> "zstd", "parquet.bloom.filter.enabled#conv_id" -> "true")
-    val sortCols = Seq("conv_id", "turn_idx", "_offset")
-    val staged =
-      if (MergeEngine.plansOneTask(events0))
-        table.stageEpochFile(spark, bucketed.coalesce(1), stage, sortCols, options)
-      else {
-        bucketed.hint("rebalance", "bucket").sortWithinPartitions(("bucket" +: sortCols).map(col): _*)
-          .write.mode("overwrite").options(options)
-          .partitionBy("bucket").parquet(stage.toString)
-        table.stagedFilesByBucket(stage)
-      }
+    val oneTask = MergeEngine.plansOneTask(events0)
+    val staged = table.stage(spark, if (oneTask) bucketed else bucketed.hint("rebalance", "bucket"),
+      nb0, oneTask, Seq("conv_id", "turn_idx", "_offset"), IceLite.BaseFileOptions)
     // footer-only count, driver-side — no Spark job in the append path
-    val rowsWritten = CdcApply.footerRowCount(spark, staged.values.flatten.toSeq.distinct.map(r => s"${table.dir}/$r"))
-    Option(CdcApply.testOnStaged.getAndSet(null)).foreach(_.apply())
-
-    object AlreadyApplied extends Exception
-    try {
-      val snap = table.commit { parent =>
-        epoch.foreach { case (sid, bid) =>
-          val last = parent.properties.get(s"epoch:$sid").map(_.toLong)
-          if (last.exists(_ >= bid)) throw AlreadyApplied
-        }
-        if (parent.numBuckets != nb0) {
-          CdcApply.dropStage(stage)
-          throw new IllegalStateException(
-            s"table ${table.dir} was re-bucketed ($nb0 -> ${parent.numBuckets}) while " +
-              "this append was staged under the old layout — re-apply the batch")
-        }
-        val merged = staged.foldLeft(parent.files) { case (fs, (b, newFiles)) =>
-          fs + (b -> (fs.getOrElse(b, Seq.empty) ++ newFiles))
-        }
-        parent.copy(
-          schemaJson = evolveFrom(parent).json,
-          files = merged,
-          properties = parent.properties ++
-            epoch.map { case (sid, bid) => s"epoch:$sid" -> bid.toString }.toMap,
-          metrics = Map("rowsWritten" -> rowsWritten, "bucketsAppended" -> staged.size.toLong))
-      }
-      CdcApply.BatchResult(snap, skipped = false, rowsWritten, rowsWritten, 0L)
-    } catch {
-      case AlreadyApplied =>
-        // Duplicate delivery that lost the commit CAS: the staged delta
-        // was never referenced by any snapshot, so snapshot-based GC can
-        // never reclaim it — drop it here (same symmetry as CdcApply's
-        // race/skip paths).
-        CdcApply.dropStage(stage)
-        CdcApply.BatchResult(table.current, skipped = true, 0L, 0L, 0L)
-    }
+    val rowsWritten = staged.rows
+    table.commitStaged(staged, epoch) { parent =>
+      parent.copy(
+        schemaJson = evolveFrom(parent).json,
+        files = staged.appendTo(parent.files),
+        metrics = Map("rowsWritten" -> rowsWritten, "bucketsAppended" -> staged.files.size.toLong))
+    }.fold(CdcApply.skipped(table.current))(
+      CdcApply.BatchResult(_, skipped = false, rowsWritten, rowsWritten, 0L))
   }
 }

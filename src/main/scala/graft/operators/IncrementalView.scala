@@ -72,7 +72,7 @@ object IncrementalView {
   private def streamId(source: IceLiteTable): String = s"ivm:${source.dir}"
 
   def cursor(source: IceLiteTable, view: IceLiteTable): Option[Long] =
-    view.current.properties.get(s"epoch:${streamId(source)}").map(_.toLong)
+    view.current.epochs.get(streamId(source))
 
   /** The view's table schema for `spec` (pass to `IceLite.create`):
     * key columns + the dims under their natural types + `cnt` + sums.

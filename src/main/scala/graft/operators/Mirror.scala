@@ -51,7 +51,7 @@ object Mirror {
 
   /** The source version the target has mirrored up to, if any. */
   def cursor(source: IceLiteTable, target: IceLiteTable): Option[Long] =
-    target.current.properties.get(s"epoch:${streamId(source)}").map(_.toLong)
+    target.current.epochs.get(streamId(source))
 
   def sync(
       spark: SparkSession,

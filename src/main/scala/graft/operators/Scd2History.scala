@@ -60,7 +60,7 @@ object Scd2History {
 
   /** The source version the history has been maintained up to, if any. */
   def cursor(source: IceLiteTable, history: IceLiteTable): Option[Long] =
-    history.current.properties.get(s"epoch:${streamId(source)}").map(_.toLong)
+    history.current.epochs.get(streamId(source))
 
   /** History table schema for a source schema (pass to `IceLite.create`):
     * key columns, the source's columns with its key renamed to

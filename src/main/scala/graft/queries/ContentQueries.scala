@@ -345,7 +345,6 @@ object ContentQueries {
     * if a corpus ever shows deep chains.
     */
   def dedupClusters(s: SparkSession, dir: String, maxDriverEdges: Long = 4000000L): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     val pairs = jaccardPairs(s, dir).select(col("ida"), col("idb"))
     // Count gate (same pattern as the wipe-broadcast gate in CdcApply):
     // the dup graph is duplicate-density sized, not corpus sized, so it

@@ -32,8 +32,7 @@ import graft.table.{IceLite, IceLiteTable}
   * on top of Connect's at-least-once redelivery
   * (`.../sink/JdbcSinkTask.java:102-107`).
   *
-  * Schema drift mid-stream: in the default `schemaMode = "drift"`, each
-  * micro-batch's envelope schema is re-resolved from the batch's OWN
+  * Schema drift mid-stream: each micro-batch's envelope schema is re-resolved from the batch's OWN
   * parquet footers (the streamed scan is only an offset-tracking feed; the
   * data flows through a fresh batch read of exactly the files the epoch
   * covers). A column that first appears in log files written AFTER the
@@ -135,11 +134,6 @@ object CdcStream {
         * latest-state view (north star: "append-only event log plus
         * latest-state upsert view") */
       eventLogTableDir: Option[String] = None,
-      /** "drift" (default): re-resolve the envelope schema per micro-batch
-        * from the batch's own files (mid-stream column adds land without a
-        * restart). "pinned": envelope schema fixed at stream start — no
-        * per-epoch re-resolution cost; drift columns wait for a restart. */
-      schemaMode: String = "drift",
       /** Reference `auto.create` (`.../sink/JdbcSinkConfig.java:138-143`):
         * when false, a table that does not already exist fails the stream
         * instead of being created from the incoming schema — the
@@ -212,11 +206,12 @@ object CdcStream {
       loadOrCreate(d,
         graft.operators.EventLogApply.logSchema(
           graft.operators.CdcApply.whitelistedStruct(Schemas.transcript, cfg.spec)),
-        cfg.spec, logTable = true, autoCreate = cfg.autoCreate)
+        cfg.spec, autoCreate = cfg.autoCreate)
     }
 
-    // the pinned source schema; routing adds the topic column (in drift
-    // mode the per-batch re-read resolves the real file schema anyway)
+    // the streamed scan's schema, which only feeds offsets (each batch is
+    // re-read with its files' own schema, resolveBatch); routing adds the
+    // topic column
     val sourceSchema = cfg.routing match {
       case Some(r) => StructType(Schemas.envelope().fields :+
         org.apache.spark.sql.types.StructField(r.topicColumn, org.apache.spark.sql.types.StringType))
@@ -231,8 +226,7 @@ object CdcStream {
       .option("checkpointLocation", cfg.checkpointDir)
       .foreachBatch { (df: DataFrame, epochId: Long) =>
         val batch =
-          (if (cfg.schemaMode == "drift") resolveBatch(spark, cfg, epochId, df) else df)
-            .drop("chunk")
+          resolveBatch(spark, cfg, epochId, df).drop("chunk")
         // The event-log append and the state merge are independent jobs
         // against different tables — submit the append concurrently so it
         // overlaps the merge's driver-side planning/commit (the Amdahl
@@ -251,13 +245,12 @@ object CdcStream {
             }
           }
         }
-        val touchedTables: Seq[IceLiteTable] = cfg.routing match {
+        cfg.routing match {
           case None =>
             CdcApply.applyBatch(
               spark, table.get, batch, cfg.spec,
               epoch = Some((cfg.streamId, epochId)),
               rejectedDir = cfg.rejectedDir)
-            Seq(table.get)
           case Some(r) =>
             // one narrow distinct over the batch (topic column only);
             // topic count is bounded by the upstream subscription.
@@ -510,8 +503,7 @@ object CdcStream {
       if (f.name == spec.extractSource) f.copy(name = spec.payloadTargetName) else f))
 
   private def loadOrCreate(
-      dir: String, schema: StructType, spec: MergeSpec,
-      logTable: Boolean = false, autoCreate: Boolean = true): IceLiteTable =
+      dir: String, schema: StructType, spec: MergeSpec, autoCreate: Boolean): IceLiteTable =
     if (IceLite.exists(dir)) IceLite.load(dir)
     else if (!autoCreate)
       throw new IllegalStateException(

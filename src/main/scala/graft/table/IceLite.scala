@@ -39,13 +39,24 @@ import org.apache.spark.sql.types.StructType
   * lists it under any bucket.
   *
   * Commit protocol (the analogue of the reference's one-JDBC-transaction-
-  * per-put batch, `/root/reference/src/main/java/io/confluent/connect/jdbc/sink/JdbcDbWriter.java:56,83`):
-  * data files are staged first (invisible — snapshots reference files
-  * explicitly, never by directory listing), then the next snapshot file is
-  * published with an atomic create-if-absent move. Losing a race throws;
-  * the caller re-reads and retries. A crash between staging and publish
-  * leaves only unreferenced orphan files. Snapshot `properties` carry the
-  * free-form commit bookkeeping — `(epoch, offsetRange)` for exactly-once
+  * per-put batch, `/root/reference/src/main/java/io/confluent/connect/jdbc/sink/JdbcDbWriter.java:56,83`),
+  * one for every writer — CDC apply, event-log append, rebucket, compact
+  * and delta compaction:
+  *  1. [[stage]] writes the rows into a fresh stage dir under `data/`,
+  *     invisible to readers (snapshots list files explicitly, never by
+  *     directory listing), and returns them as [[IceLite.Staged]].
+  *  1. [[commitStaged]] runs the one after-staging test hook, then the
+  *     CAS: the next snapshot file is published with an atomic
+  *     create-if-absent link ([[commit]] retries a lost link on the fresh
+  *     parent). An epoch-tagged commit whose epoch the parent already
+  *     holds is a no-op re-delivery; a snapshot may list staged files
+  *     only under the bucket count they were staged for. A failed commit
+  *     deletes its stage unless the table references it; a committed one
+  *     deletes the staged files its snapshot does not list.
+  * A crash between staging and publish leaves only unreferenced orphan
+  * files ([[removeOrphanFiles]]). Snapshot `properties` carry the
+  * free-form commit bookkeeping — the `epoch:<streamId>` marker
+  * ([[IceLite.Snapshot.epochs]]) and offset ranges for exactly-once
   * streaming — mirroring Iceberg snapshot summaries.
   *
   * Metadata scale (Iceberg's manifest-list idea, re-shaped for a linear
@@ -153,36 +164,17 @@ final class IceLiteTable(val dir: String) {
       ckv match {
         case Some(k) if !cacheUsable || k > c.version => readCheckpoint(cFile(k))
         case _ if cacheUsable => c
-        case None =>
-          listSnapshotVersions.headOption match {
-            case Some(1L) =>
-              // no checkpoint but the chain is complete from v1 (e.g. a
-              // crash between create()'s v1 link and its c1 checkpoint
-              // write): v1's diff is against the empty parent
-              emptySnapshot
-            case Some(v0) if v0 <= version =>
-              // pre-diff-build table whose history was expired (old
-              // expiry wrote no checkpoints): every old-format v-file is
-              // a self-sufficient full snapshot — seed from the oldest
-              readDiffOrFull(vFile(v0)) match {
-                case Left(full) => full
-                case Right(_) => throw new IllegalStateException(
-                  s"no checkpoint at or below version $version in $snapDir and the oldest " +
-                    s"surviving v-file v$v0 is a diff — corrupt or expired table metadata")
-              }
-            case _ => throw new IllegalStateException(
-              s"no checkpoint at or below version $version in $snapDir — corrupt or expired table metadata")
-          }
+        // no checkpoint but the chain is complete from v1 (e.g. a crash
+        // between create()'s v1 link and its c1 checkpoint write): v1's
+        // diff is against the empty parent
+        case _ if listSnapshotVersions.headOption.contains(1L) => emptySnapshot
+        case _ => throw new IllegalStateException(
+          s"no checkpoint at or below version $version in $snapDir — corrupt or expired table metadata")
       }
     }
     var steps = 0
     while (s.version < version) {
-      // old-format (pre-diff build) v-files carry the FULL state — they
-      // replace instead of folding, keeping round-2 tables readable
-      readDiffOrFull(vFile(s.version + 1)) match {
-        case Right(d)   => s = fold(s, d)
-        case Left(full) => s = full
-      }
+      s = fold(s, readDiff(vFile(s.version + 1)))
       steps += 1
     }
     lastFoldSteps = steps
@@ -297,6 +289,20 @@ final class IceLiteTable(val dir: String) {
         scala.util.Try(p.getFileName.toString -> Files.readString(p).trim.toLong).toOption
       }.toMap
 
+  /** `name`, checked as a ref or audit name. Leading '.' is rejected (not
+    * just '..' traversal — dotfiles are the tmp-file namespace and are
+    * excluded from the [[tags]] and [[audits]] listings, so a dot-named
+    * ref or audit would be unlistable).
+    */
+  private def validName(kind: String, name: String): String = {
+    require(name.nonEmpty && !name.startsWith(".") &&
+      name.forall(c => c.isLetterOrDigit || "-_.".contains(c)),
+      s"$kind name '$name' must be [A-Za-z0-9_-][A-Za-z0-9._-]*")
+    name
+  }
+
+  private def refPath(name: String): Path = refsDir.resolve(validName("ref", name))
+
   /** Tag `version` (default: current) as `name`. Validates the snapshot
     * is readable before pointing at it. Returns the tagged version.
     *
@@ -305,17 +311,6 @@ final class IceLiteTable(val dir: String) {
     * json per commit since the tag, data files shared, not duplicated).
     * Drop tags you no longer need; the next expiry reclaims the chain.
     */
-  /** Validated ref file path. Leading '.' is rejected (not just '..'
-    * traversal — dotfiles are the tmp-file namespace and are excluded
-    * from the [[tags]] listing, so a dot-named ref would be unlistable).
-    */
-  private def refPath(name: String): Path = {
-    require(name.nonEmpty && !name.startsWith(".") &&
-      name.forall(c => c.isLetterOrDigit || "-_.".contains(c)),
-      s"ref name '$name' must be [A-Za-z0-9_-][A-Za-z0-9._-]*")
-    refsDir.resolve(name)
-  }
-
   def tag(name: String, version: Long = -1L): Long = {
     val target = refPath(name)
     // Serialized against expireSnapshots (same JVM): expiry computes its
@@ -331,8 +326,7 @@ final class IceLiteTable(val dir: String) {
       val tmp = refsDir.resolve(s".tmp-${UUID.randomUUID()}")
       Files.writeString(tmp, v.toString)
       Files.move(tmp, target,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
       // Cross-process best-effort: an expiry in ANOTHER process may have
       // read its tag set before our ref landed. Re-check the ON-DISK
       // marker now the ref is visible (snapshot() could answer from the
@@ -414,49 +408,32 @@ final class IceLiteTable(val dir: String) {
     * compaction) and epoch bookkeeping carries over untouched. A
     * concurrent commit between the state read and the CAS aborts the
     * rebucket, deleting its staged rewrite (re-run it); conversely, a
-    * CDC apply staged under the old layout is fenced by its own
-    * numBuckets re-check and aborts rather than landing rows in wrong
-    * buckets.
+    * write staged under the old layout is fenced by [[commitStaged]] and
+    * aborts rather than landing rows in wrong buckets.
     */
   def rebucket(spark: SparkSession, newNumBuckets: Int): Snapshot = {
     import org.apache.spark.sql.functions.col
     require(newNumBuckets > 0, s"newNumBuckets must be positive, got $newNumBuckets")
     val cur = current
     if (newNumBuckets == cur.numBuckets) return cur
-    val stage = newStageDir()
-    readSnapshotState(spark, cur, None)
-      .withColumn("bucket", IceLite.bucketOf(col("conv_id"), newNumBuckets))
-      .hint("rebalance", "bucket")
-      .sortWithinPartitions("bucket", "conv_id", "turn_idx")
-      .write.mode("overwrite")
-      .option("compression", "zstd")
-      .option("parquet.bloom.filter.enabled#conv_id", "true")
-      .partitionBy("bucket")
-      .parquet(stage.toString)
-    val staged = stagedFilesByBucket(stage)
-    Option(IceLite.testOnRebucketStaged.getAndSet(null)).foreach(_.apply())
-    try commit { parent =>
+    val staged = stage(spark,
+      readSnapshotState(spark, cur, None)
+        .withColumn("bucket", IceLite.bucketOf(col("conv_id"), newNumBuckets))
+        .hint("rebalance", "bucket"),
+      newNumBuckets, oneTask = false, Seq("conv_id", "turn_idx"), BaseFileOptions)
+    commitStaged(staged) { parent =>
       if (parent.version != cur.version)
         throw new IllegalStateException(
           s"rebucket of $dir raced: rewrote v${cur.version} but v${parent.version} " +
             "committed meanwhile — re-run rebucket (staged files deleted)")
       parent.copy(
         numBuckets = newNumBuckets,
-        files = staged,
+        files = staged.files,
         deltas = Map.empty,
         metrics = Map(
           "rebucketFrom" -> cur.numBuckets.toLong,
           "rebucketTo" -> newNumBuckets.toLong))
-    } catch {
-      case e: Throwable =>
-        // the staged rewrite (a full table copy) is referenced by no
-        // snapshot — delete it now; only removeOrphanFiles's grace-aged
-        // sweep would ever collect it otherwise. Guarded: a throw AFTER
-        // the durable CAS (e.g. an interrupt in post-commit bookkeeping)
-        // must not delete files the committed snapshot references.
-        if (!stageCommitted(staged.values.flatten.toSet)) dropStageDir(stage)
-        throw e
-    }
+    }.get
   }
 
   // ------------------------------------------------------------------
@@ -465,15 +442,7 @@ final class IceLiteTable(val dir: String) {
 
   private val auditsDir = Paths.get(dir, "audits")
 
-  /** Validated audit-file path (same naming rules as refs; dotfiles are
-    * the tmp namespace).
-    */
-  private def auditPath(name: String): Path = {
-    require(name.nonEmpty && !name.startsWith(".") &&
-      name.forall(c => c.isLetterOrDigit || "-_.".contains(c)),
-      s"audit name '$name' must be [A-Za-z0-9_-][A-Za-z0-9._-]*")
-    auditsDir.resolve(s"$name.json")
-  }
+  private def auditPath(name: String): Path = auditsDir.resolve(s"${validName("audit", name)}.json")
 
   /** Unpublished audits: name → the parent version each was staged on.
     *
@@ -521,8 +490,7 @@ final class IceLiteTable(val dir: String) {
     val tmp = auditsDir.resolve(s".tmp-${UUID.randomUUID()}.json")
     Files.writeString(tmp, toJson(next))
     Files.move(tmp, target,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     next
   }
 
@@ -572,10 +540,8 @@ final class IceLiteTable(val dir: String) {
     if (!Files.exists(p)) return false
     val a = readSnapshot(p)
     Files.deleteIfExists(p)
-    val own = (a.files.values.flatten ++ a.deltas.values.flatten).toSet
     scala.util.Try(snapshot(a.parentVersion)).toOption.foreach { par =>
-      val parentRefs = (par.files.values.flatten ++ par.deltas.values.flatten).toSet
-      (own -- parentRefs).foreach(rel => Files.deleteIfExists(Paths.get(dir).resolve(rel)))
+      (a.allFiles.toSet -- par.allFiles).foreach(rel => Files.deleteIfExists(Paths.get(dir).resolve(rel)))
     }
     true
   }
@@ -598,16 +564,52 @@ final class IceLiteTable(val dir: String) {
     org.apache.spark.sql.types.DataType.fromJson(s.schemaJson).asInstanceOf[StructType]
 
   /** Fresh unique staging directory for one commit's data files. */
-  def newStageDir(): Path = {
+  private[graft] def newStageDir(): Path = {
     val p = dataDir.resolve(UUID.randomUUID().toString)
     Files.createDirectories(p)
     p
   }
 
+  /** Stage `rows` — carrying a `bucket` column computed for `numBuckets`
+    * buckets — in a fresh stage dir, for [[commitStaged]]. A write that
+    * runs as one task (`oneTask`) goes to ONE file listed under every
+    * bucket its rows hold ([[stageEpochFile]]); any other goes to one
+    * file per bucket and task (`bucket=<b>/`), so `rows` arrives
+    * distributed as the writer wants its files. Each file is sorted by
+    * bucket, then `sortCols`, and written with the writer `options`.
+    */
+  def stage(spark: SparkSession, rows: DataFrame, numBuckets: Int, oneTask: Boolean,
+            sortCols: Seq[String], options: Map[String, String]): Staged = {
+    import org.apache.spark.sql.functions.col
+    staging(spark, numBuckets) { stageDir =>
+      if (oneTask) stageEpochFile(spark, rows.coalesce(1), stageDir, sortCols, options)
+      else {
+        rows.sortWithinPartitions(("bucket" +: sortCols).map(col): _*)
+          .write.mode("overwrite").options(options)
+          .partitionBy("bucket")
+          .parquet(stageDir.toString)
+        stagedFilesByBucket(stageDir)
+      }
+    }
+  }
+
+  /** The one stage step under [[stage]] and [[compactDeltas]]: a fresh
+    * stage dir, `write` into it (returning the files it wrote per
+    * bucket), and the dir deleted again when the write fails.
+    */
+  private def staging(spark: SparkSession, numBuckets: Int)(write: Path => Map[Int, Seq[String]]): Staged = {
+    val stageDir = newStageDir()
+    val files =
+      try write(stageDir)
+      catch { case e: Throwable => dropStageDir(stageDir); throw e }
+    new Staged(stageDir, files, numBuckets,
+      footerRowCount(spark, files.values.flatten.toSeq.distinct.map(rel => Paths.get(dir).resolve(rel).toString)))
+  }
+
   /** Collect staged parquet files per bucket (written with
     * partitionBy("bucket") as b=N subdirs), as table-relative paths.
     */
-  def stagedFilesByBucket(stage: Path): Map[Int, Seq[String]] =
+  private def stagedFilesByBucket(stage: Path): Map[Int, Seq[String]] =
     if (!Files.isDirectory(stage)) Map.empty
     else
       listDir(stage)(_.filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith("bucket="))
@@ -637,8 +639,8 @@ final class IceLiteTable(val dir: String) {
     * back without it (Spark drops the observing node from a plan it
     * proves empty), the set is read back from the file.
     */
-  def stageEpochFile(spark: SparkSession, rows: DataFrame, stage: Path, sortCols: Seq[String],
-                     options: Map[String, String]): Map[Int, Seq[String]] = {
+  private def stageEpochFile(spark: SparkSession, rows: DataFrame, stage: Path, sortCols: Seq[String],
+                             options: Map[String, String]): Map[Int, Seq[String]] = {
     import org.apache.spark.sql.functions.{col, collect_set}
     val out = stage.resolve("epoch")
     val obs = org.apache.spark.sql.Observation()
@@ -661,6 +663,45 @@ final class IceLiteTable(val dir: String) {
     }
   }
 
+  /** Commit what `staged` holds: the one after-staging test hook
+    * ([[IceLite.testOnStaged]]), then the CAS [[commit]] of `build` — or,
+    * with `audit`, the staging of its snapshot under that audit name
+    * ([[stageAudit]]). Around `build`:
+    *  - an `epoch` the parent already holds is a re-delivery: nothing is
+    *    committed and the result is None; any other epoch's marker rides
+    *    the commit ([[IceLite.epochProperty]]);
+    *  - a snapshot may list staged files only under the bucket count they
+    *    were staged for: files staged under a layout a rebucket has since
+    *    replaced fail the commit instead of landing in wrong buckets.
+    * A commit that fails (or skips) deletes the stage, unless the table
+    * references it: a throw can escape after the durable CAS, e.g. an
+    * interrupt. A committed one deletes the staged files its snapshot
+    * does not list — those a race guard in `build` left out. Returns the
+    * committed snapshot; always Some without an `epoch`.
+    */
+  def commitStaged(staged: Staged, epoch: Option[(String, Long)] = None, audit: Option[String] = None)(
+      build: Snapshot => Snapshot): Option[Snapshot] = {
+    Option(IceLite.testOnStaged.getAndSet(null)).foreach(_.apply())
+    val child: Snapshot => Snapshot = { parent =>
+      if (parent.applied(epoch)) throw AlreadyApplied
+      val next = build(parent)
+      if (next.numBuckets != staged.numBuckets && staged.listedIn(next).nonEmpty)
+        throw new IllegalStateException(
+          s"table $dir was re-bucketed (${staged.numBuckets} -> ${next.numBuckets}) while " +
+            "this batch was staged under the old layout — re-apply the batch")
+      next.copy(properties = next.properties ++ epochProperty(epoch))
+    }
+    val snap =
+      try Some(audit.fold(commit(child))(stageAudit(_, child)))
+      catch {
+        case e: Throwable =>
+          if (!stageCommitted(staged.paths)) dropStageDir(staged.dir)
+          if (e eq AlreadyApplied) None else throw e
+      }
+    snap.foreach(s => dropUnlisted(staged, staged.listedIn(s)))
+    snap
+  }
+
   /** Expire snapshots older than the last `keepLast`, then delete data
     * files no longer referenced by any surviving snapshot (orphan GC —
     * Iceberg's expire_snapshots + remove_orphan_files). Returns
@@ -671,11 +712,10 @@ final class IceLiteTable(val dir: String) {
     * deletes (after its boundary checkpoint landed) leaves orphan diff
     * v-files whose ancestor chain is gone. The fold therefore seeds from
     * the OLDEST state with a complete forward chain (a checkpoint at or
-    * above `oldest surviving v - 1`, the empty parent when the chain
-    * starts at v1, or an old-format full-snapshot v-file); v-files below
-    * that seed are deleted WITHOUT orphan-ref collection — their data
-    * refs are unknowable without the expired ancestors, so files only
-    * they referenced stay on disk (same class as pre-publish crash
+    * above `oldest surviving v - 1`, or the empty parent when the chain
+    * starts at v1); v-files below that seed are deleted WITHOUT
+    * orphan-ref collection — their data refs are unknowable without the
+    * expired ancestors, so files only they referenced stay on disk (same class as pre-publish crash
     * orphans; [[removeOrphanFiles]] collects both) rather than risking a
     * wrong delete.
     *
@@ -695,15 +735,9 @@ final class IceLiteTable(val dir: String) {
 
   private def expireSnapshots0(keepLast: Int): (Int, Int) = {
     val keepN = math.max(1, keepLast)
-    def refs(s: Snapshot): Iterable[String] = s.files.values.flatten ++ s.deltas.values.flatten
     val versions = listSnapshotVersions
     if (versions.isEmpty) return (0, 0)
-    // the contiguous suffix ending at the current version is the foldable
-    // chain; anything below a gap is a crashed-expiry leftover
-    val suffix = versions.foldLeft(List.empty[Long]) {
-      case (prev :: rest, v) if v == prev + 1 => v :: prev :: rest
-      case (_, v)                             => List(v)
-    }.reverse
+    val suffix = foldableSuffix(versions)
     // tagged versions are pinned: the keep window extends DOWN to the
     // oldest readable tagged version, keeping the contiguous diff chain
     // above it (the expiry boundary below gets a checkpoint, so the
@@ -717,18 +751,15 @@ final class IceLiteTable(val dir: String) {
     val drop = versions.filterNot(keepSet)
     if (drop.isEmpty) return (0, 0)
     // fold seed: oldest checkpoint whose forward chain is complete; else
-    // the empty parent (chain from v1); else an old-format full v-file
+    // the empty parent (chain from v1)
     val h = suffix.head
     val usableCks = listCheckpointVersions.filter(c => c >= h - 1 && c <= versions.last)
     var s: Snapshot =
       if (usableCks.nonEmpty) readCheckpoint(cFile(usableCks.min))
       else if (h == 1L) emptySnapshot
-      else readDiffOrFull(vFile(h)) match {
-        case Left(full) => full
-        case Right(_) => throw new IllegalStateException(
-          s"cannot expire $dir: oldest foldable v-file v$h is a diff and no checkpoint " +
-            s"at or above v${h - 1} exists — corrupt table metadata")
-      }
+      else throw new IllegalStateException(
+        s"cannot expire $dir: no checkpoint at or above v${h - 1} seeds the oldest foldable " +
+          s"v-file v$h — corrupt table metadata")
     // kept versions BELOW the fold seed are unreadable anyway (their
     // ancestor diffs are gone — a previous crash already orphaned them):
     // expire them too rather than keeping v-files that cannot be opened
@@ -739,15 +770,12 @@ final class IceLiteTable(val dir: String) {
     val liveRefs = scala.collection.mutable.Set.empty[String]
     var boundary: Snapshot = null
     def record(x: Snapshot): Unit = {
-      (if (isDrop(x.version)) deadRefs else liveRefs) ++= refs(x)
+      (if (isDrop(x.version)) deadRefs else liveRefs) ++= x.allFiles
       if (keepLive.headOption.contains(x.version)) boundary = x
     }
     record(s)
     suffix.filter(_ > s.version).foreach { v =>
-      s = readDiffOrFull(vFile(v)) match {
-        case Right(d)   => fold(s, d)
-        case Left(full) => full
-      }
+      s = fold(s, readDiff(vFile(v)))
       record(s)
     }
     // The oldest SURVIVING version must stay readable after its ancestor
@@ -766,6 +794,16 @@ final class IceLiteTable(val dir: String) {
     (dropAll.size, dead.size)
   }
 
+  /** The contiguous run of `versions` (ascending) ending at the newest:
+    * the foldable chain. Anything below a gap is a crashed-expiry
+    * leftover.
+    */
+  private def foldableSuffix(versions: Seq[Long]): List[Long] =
+    versions.foldLeft(List.empty[Long]) {
+      case (prev :: rest, v) if v == prev + 1 => v :: prev :: rest
+      case (_, v)                             => List(v)
+    }.reverse
+
   /** Remove commit dirs holding no data (all files deleted or never
     * committed); a dir with any non-empty bucket subdir survives.
     */
@@ -774,18 +812,14 @@ final class IceLiteTable(val dir: String) {
       listDir(dataDir)(_.filter(Files.isDirectory(_)).toSeq).foreach { d =>
         val empty = !listDir(d)(_.exists(p =>
           Files.isDirectory(p) && listDir(p)(_.nonEmpty)))
-        if (empty) {
-          val w = Files.walk(d)
-          try w.iterator.asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-          finally w.close()
-        }
+        if (empty) dropStageDir(d)
       }
 
-  /** Delete a staging dir that will never be committed (raced or failed
-    * writers). Never called on a dir whose files a snapshot references.
-    * Best-effort: it runs inside catch blocks, and a cleanup failure must
-    * never mask the original commit/race exception (leftovers fall to
-    * [[removeOrphanFiles]]).
+  /** Delete a stage dir that will never be committed (raced, skipped or
+    * failed writers), or a commit dir left empty. Never called on a dir
+    * whose files a snapshot references. Best-effort: it runs inside catch
+    * blocks, and a cleanup failure must never mask the original
+    * commit/race exception (leftovers fall to [[removeOrphanFiles]]).
     */
   private def dropStageDir(stage: Path): Unit =
     try {
@@ -807,10 +841,7 @@ final class IceLiteTable(val dir: String) {
     * "committed": keep the files, let [[removeOrphanFiles]] decide later.
     */
   private def stageCommitted(rels: Set[String]): Boolean =
-    scala.util.Try {
-      val s = current
-      (s.files.values.flatten ++ s.deltas.values.flatten).exists(rels)
-    }.getOrElse(true)
+    scala.util.Try(current.allFiles.exists(rels)).getOrElse(true)
 
   /** Delete data files referenced by NO reachable snapshot — Iceberg's
     * `remove_orphan_files`. [[expireSnapshots]]'s dead-ref collection only
@@ -846,7 +877,6 @@ final class IceLiteTable(val dir: String) {
     IceLite.refLock(dir).synchronized {
       if (graceMs < 0) return 0 // disabled — matches StreamConfig.orphanGraceMs semantics
       if (!Files.isDirectory(dataDir)) return 0
-      def refs(s: Snapshot): Iterable[String] = s.files.values.flatten ++ s.deltas.values.flatten
       val live = scala.collection.mutable.Set.empty[String]
       // METADATA READS ARE STRICT: a swallowed read failure here would
       // shrink the live set and turn repairable metadata corruption (a
@@ -858,13 +888,10 @@ final class IceLiteTable(val dir: String) {
       // are unreadable for every reader, so their refs are exactly the
       // orphan class this op collects.
       val versions = listSnapshotVersions
-      val suffix = versions.foldLeft(List.empty[Long]) {
-        case (prev :: rest, v) if v == prev + 1 => v :: prev :: rest
-        case (_, v)                             => List(v)
-      }.reverse.toSet
+      val suffix = foldableSuffix(versions).toSet
       versions.foreach { v =>
-        if (suffix(v)) live ++= refs(snapshot(v)) // the readable-by-contract chain
-        else try live ++= refs(snapshot(v)) catch {
+        if (suffix(v)) live ++= snapshot(v).allFiles // the readable-by-contract chain
+        else try live ++= snapshot(v).allFiles catch {
           case _: IllegalStateException                 => // below the gap: no fold seed
           case e: Throwable if IceLite.missingFile(e)   => // expiry leftover raced away
         }
@@ -873,12 +900,12 @@ final class IceLiteTable(val dir: String) {
       // still seeds reads) and staged audits are reachable too — strict;
       // note `audits` swallows read failures (a listing convenience), so
       // list the audit files directly here
-      listCheckpointVersions.foreach(c => live ++= refs(readCheckpoint(cFile(c))))
+      listCheckpointVersions.foreach(c => live ++= readCheckpoint(cFile(c)).allFiles)
       if (Files.isDirectory(auditsDir))
         listDir(auditsDir)(_.filter { p =>
           val n = p.getFileName.toString
           n.endsWith(".json") && !n.startsWith(".")
-        }.toSeq).foreach(p => live ++= refs(readSnapshot(p)))
+        }.toSeq).foreach(p => live ++= readSnapshot(p).allFiles)
       val cutoff = System.currentTimeMillis() - graceMs
       var removed = 0
       // a concurrent writer renaming its temp files mid-walk surfaces as
@@ -943,60 +970,44 @@ final class IceLiteTable(val dir: String) {
       .map { case (b, fs) => b -> smallOf(fs) }
       .filter(_._2.size > maxFilesPerBucket)
     if (targets.isEmpty) return 0
-    val stage = newStageDir()
     // the target buckets' small files, each read once, its rows kept only
     // for the target buckets listing it
-    bucketFiles(cur, targets, None).read(spark, schemaOf(cur))
-      .withColumn("bucket", IceLite.bucketOf(col("conv_id"), cur.numBuckets))
-      .repartition(math.min(targets.size, math.max(1, spark.sparkContext.defaultParallelism)), col("bucket"))
-      .sortWithinPartitions((col("bucket") +: sortCols.map(col)): _*)
-      .write.mode("overwrite")
-      .option("compression", "zstd")
-      .option("parquet.bloom.filter.enabled#conv_id", "true")
-      .partitionBy("bucket")
-      .parquet(stage.toString)
-    val staged = stagedFilesByBucket(stage)
-    val snap =
-      try commit { parent =>
-        // replace a bucket only if no concurrent commit changed it since we
-        // read `cur` — otherwise dropping the newer files would lose data
-        val safe = staged.filter { case (b, _) => parent.files.get(b).contains(cur.files(b)) }
-        parent.copy(
-          files = parent.files ++ safe.map { case (b, merged) =>
-            b -> ((cur.files(b).diff(targets(b))) ++ merged)
-          },
-          metrics = Map("bucketsCompacted" -> safe.size.toLong))
-      } catch {
-        case e: Throwable =>
-          if (!stageCommitted(staged.values.flatten.toSet)) dropStageDir(stage)
-          throw e
-      }
-    // the COMMITTED count — the race guard may have dropped buckets a
-    // concurrent commit touched; their staged merge files are referenced
-    // by no snapshot, so delete them now rather than leaving them to the
-    // grace-aged removeOrphanFiles sweep
-    dropUncommittedStaged(stage, staged, snap)
-    snap.metrics("bucketsCompacted").toInt
+    val staged = stage(spark,
+      bucketFiles(cur, targets, None).read(spark, schemaOf(cur))
+        .withColumn("bucket", IceLite.bucketOf(col("conv_id"), cur.numBuckets))
+        .repartition(math.min(targets.size, math.max(1, spark.sparkContext.defaultParallelism)), col("bucket")),
+      cur.numBuckets, oneTask = false, sortCols, BaseFileOptions)
+    // the COMMITTED count — the race guard may drop buckets a concurrent
+    // commit touched, and commitStaged deletes their staged merges
+    commitStaged(staged) { parent =>
+      // replace a bucket only if no concurrent commit changed it since we
+      // read `cur` — otherwise dropping the newer files would lose data
+      val safe = staged.files.filter { case (b, _) => parent.files.get(b).contains(cur.files(b)) }
+      parent.copy(
+        files = parent.files ++ safe.map { case (b, merged) =>
+          b -> ((cur.files(b).diff(targets(b))) ++ merged)
+        },
+        metrics = Map("bucketsCompacted" -> safe.size.toLong))
+    }.get.metrics("bucketsCompacted").toInt
   }
 
-  /** Delete staged files the commit's race guard dropped (present in
-    * `staged` but absent from the committed snapshot's file lists), then
-    * tidy ONLY this stage dir (the global empty-dir sweep stays with
-    * expiry/removeOrphanFiles — re-walking every historical commit dir
-    * per compaction would be wasted IO on the maintenance cadence).
+  /** Delete the staged files of `staged` outside `listed` — those the
+    * commit's race guard dropped — then tidy ONLY this stage dir (the
+    * global empty-dir sweep stays with expiry/removeOrphanFiles —
+    * re-walking every historical commit dir per commit would be wasted
+    * IO).
     */
-  private def dropUncommittedStaged(
-      stage: Path, staged: Map[Int, Seq[String]], snap: Snapshot): Unit = {
-    val kept = (snap.files.values.flatten ++ snap.deltas.values.flatten).toSet
-    staged.values.flatten.filterNot(kept).foreach { rel =>
-      Files.deleteIfExists(Paths.get(dir).resolve(rel))
-    }
-    if (Files.isDirectory(stage)) {
-      listDir(stage)(_.filter(Files.isDirectory(_)).toSeq)
-        .foreach(bdir => if (listDir(bdir)(_.isEmpty)) Files.deleteIfExists(bdir))
-      val anyData = listDir(stage)(_.exists(p =>
-        Files.isDirectory(p) && listDir(p)(_.nonEmpty)))
-      if (!anyData) dropStageDir(stage) // nothing committed into it
+  private def dropUnlisted(staged: Staged, listed: Set[String]): Unit = {
+    val unlisted = staged.paths -- listed
+    if (unlisted.nonEmpty || listed.isEmpty) {
+      unlisted.foreach(rel => Files.deleteIfExists(Paths.get(dir).resolve(rel)))
+      if (Files.isDirectory(staged.dir)) {
+        listDir(staged.dir)(_.filter(Files.isDirectory(_)).toSeq)
+          .foreach(bdir => if (listDir(bdir)(_.isEmpty)) Files.deleteIfExists(bdir))
+        val anyData = listDir(staged.dir)(_.exists(p =>
+          Files.isDirectory(p) && listDir(p)(_.nonEmpty)))
+        if (!anyData) dropStageDir(staged.dir) // nothing committed into it
+      }
     }
   }
 
@@ -1040,7 +1051,6 @@ final class IceLiteTable(val dir: String) {
       .map(_._1).toSet
     if (targets.isEmpty) return 0
     val sch = schemaOf(cur)
-    val stage = newStageDir()
     // one single-task job per bucket: the bucket's merge needs no
     // exchange (MorRead.mergedInBucket), and the jobs run side by side.
     // A union of per-bucket merges would run as ONE task (the union keeps
@@ -1049,52 +1059,42 @@ final class IceLiteTable(val dir: String) {
     // description and scheduler properties.
     // A shared delta file is read by the job of every target bucket that
     // lists it, each keeping only its own rows.
-    def rewrite(b: Int): Unit =
+    def rewrite(stageDir: Path, b: Int): Unit =
       MorRead.mergedInBucket(spark, sch, bucketFiles(cur, cur.files, Some(Set(b))).read(spark, sch),
         bucketFiles(cur, cur.deltas, Some(Set(b))))
         .sortWithinPartitions("conv_id", "turn_idx")
-        .write.mode("overwrite")
-        .option("compression", "zstd")
-        .option("parquet.bloom.filter.enabled#conv_id", "true")
-        .parquet(s"$stage/bucket=$b")
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(targets.size, math.max(1, spark.sparkContext.defaultParallelism)))
-    val failures =
-      try targets.toSeq.sorted
-        .map(b => pool.submit(new java.util.concurrent.Callable[Unit] { def call(): Unit = rewrite(b) }))
-        // wait for EVERY job before cleaning up: a failed bucket must not
-        // drop the stage dir under a sibling that is still writing
-        .flatMap(f => scala.util.Try(f.get()).failed.toOption)
-      finally pool.shutdown()
-    if (failures.nonEmpty) {
-      dropStageDir(stage)
-      throw failures.head match {
-        case e: java.util.concurrent.ExecutionException if e.getCause != null => e.getCause
-        case e => e
+        .write.mode("overwrite").options(BaseFileOptions)
+        .parquet(s"$stageDir/bucket=$b")
+    val staged = staging(spark, cur.numBuckets) { stageDir =>
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(targets.size, math.max(1, spark.sparkContext.defaultParallelism)))
+      val failures =
+        try targets.toSeq.sorted
+          .map(b => pool.submit(new java.util.concurrent.Callable[Unit] { def call(): Unit = rewrite(stageDir, b) }))
+          // wait for EVERY job before cleaning up: a failed bucket must not
+          // drop the stage dir under a sibling that is still writing
+          .flatMap(f => scala.util.Try(f.get()).failed.toOption)
+        finally pool.shutdown()
+      failures.headOption.foreach { f =>
+        throw (f match {
+          case e: java.util.concurrent.ExecutionException if e.getCause != null => e.getCause
+          case e => e
+        })
       }
+      stagedFilesByBucket(stageDir)
     }
-    val staged = stagedFilesByBucket(stage)
-    Option(IceLite.testOnCompactStaged.getAndSet(null)).foreach(_.apply())
-    val snap =
-      try commit { parent =>
-        // replace a bucket only if no concurrent commit changed it since we
-        // read `cur` — otherwise we would drop newer base or delta files
-        val safe = targets.filter { b =>
-          parent.files.get(b) == cur.files.get(b) && parent.deltas.get(b) == cur.deltas.get(b)
-        }
-        parent.copy(
-          files = (parent.files -- safe) ++ staged.filter(kv => safe(kv._1)),
-          deltas = parent.deltas -- safe,
-          metrics = Map("bucketsCompacted" -> safe.size.toLong))
-      } catch {
-        case e: Throwable =>
-          if (!stageCommitted(staged.values.flatten.toSet)) dropStageDir(stage)
-          throw e
+    // raced-out buckets' staged merges are deleted by commitStaged
+    commitStaged(staged) { parent =>
+      // replace a bucket only if no concurrent commit changed it since we
+      // read `cur` — otherwise we would drop newer base or delta files
+      val safe = targets.filter { b =>
+        parent.files.get(b) == cur.files.get(b) && parent.deltas.get(b) == cur.deltas.get(b)
       }
-    // raced-out buckets' staged merges are referenced by no snapshot —
-    // delete now instead of waiting for the grace-aged orphan sweep
-    dropUncommittedStaged(stage, staged, snap)
-    snap.metrics("bucketsCompacted").toInt
+      parent.copy(
+        files = (parent.files -- safe) ++ staged.files.filter(kv => safe(kv._1)),
+        deltas = parent.deltas -- safe,
+        metrics = Map("bucketsCompacted" -> safe.size.toLong))
+    }.get.metrics("bucketsCompacted").toInt
   }
 
   /** CAS commit: build the child snapshot from the freshly-read current
@@ -1297,7 +1297,82 @@ object IceLite {
       properties: Map[String, String],
       metrics: Map[String, Long],
       deltas: Map[Int, Seq[String]] = Map.empty,
-      lastDeltaSeq: Long = 0L)
+      lastDeltaSeq: Long = 0L) {
+
+    /** Every file listing, base then delta: a file shared by several
+      * buckets appears once per bucket listing it.
+      */
+    def allFiles: Iterable[String] = files.values.flatten ++ deltas.values.flatten
+
+    /** The last batch id committed per stream id — the exactly-once
+      * epoch markers, stored as `epoch:<streamId>` properties.
+      */
+    def epochs: Map[String, Long] =
+      properties.collect { case (k, v) if k.startsWith(EpochPrefix) => k.stripPrefix(EpochPrefix) -> v.toLong }
+
+    /** True when `epoch`'s batch is at or below its stream's committed
+      * marker: a re-delivery, to skip.
+      */
+    def applied(epoch: Option[(String, Long)]): Boolean =
+      epoch.exists { case (sid, bid) => epochs.get(sid).exists(_ >= bid) }
+  }
+
+  private val EpochPrefix = "epoch:"
+
+  /** The snapshot property a commit of `epoch` (streamId, batchId) carries. */
+  private[table] def epochProperty(epoch: Option[(String, Long)]): Map[String, String] =
+    epoch.map { case (sid, bid) => s"$EpochPrefix$sid" -> bid.toString }.toMap
+
+  /** What a writer staged and has not committed: its stage dir under
+    * `data/`, the files in it per bucket (table-relative), and the bucket
+    * count those buckets were computed for. `rows` is the files' footer
+    * row count, read on first use.
+    */
+  final class Staged private[table] (
+      val dir: Path, val files: Map[Int, Seq[String]], val numBuckets: Int, countRows: => Long) {
+    lazy val rows: Long = countRows
+
+    def paths: Set[String] = files.values.flatten.toSet
+
+    /** `m` with each bucket's staged files appended to its list. */
+    def appendTo(m: Map[Int, Seq[String]]): Map[Int, Seq[String]] =
+      files.foldLeft(m) { case (acc, (b, fs)) => acc.updated(b, acc.getOrElse(b, Seq.empty) ++ fs) }
+
+    /** The staged files `s` lists under the bucket they were staged for. */
+    private[table] def listedIn(s: Snapshot): Set[String] =
+      files.iterator.flatMap { case (b, fs) =>
+        val listed = s.files.getOrElse(b, Nil) ++ s.deltas.getOrElse(b, Nil)
+        fs.filter(listed.contains)
+      }.toSet
+  }
+
+  /** A re-delivered epoch, found at commit time ([[IceLiteTable.commitStaged]]). */
+  private[table] object AlreadyApplied extends Exception("epoch already applied")
+
+  /** Writer options of a base file: zstd, with a conv_id bloom filter. */
+  private[graft] val BaseFileOptions: Map[String, String] =
+    Map("compression" -> "zstd", "parquet.bloom.filter.enabled#conv_id" -> "true")
+
+  /** Sum of row counts from parquet footers (driver-side metadata reads,
+    * fanned out on a thread pool — one file per bucket per epoch adds up,
+    * and each footer open is latency-bound, not CPU-bound).
+    */
+  private[graft] def footerRowCount(spark: SparkSession, paths: Iterable[String]): Long = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    val conf = spark.sessionState.newHadoopConf()
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val counts = paths.toSeq.map { p =>
+      Future {
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile
+          .fromPath(new org.apache.hadoop.fs.Path(p), conf)
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        try r.getFooter.getBlocks.asScala.map(_.getRowCount.toLong).sum
+        finally r.close()
+      }
+    }
+    Await.result(Future.sequence(counts), Duration.Inf).sum
+  }
 
   /** Cadence of full-state checkpoint files. Between checkpoints each
     * commit stores only its diff, so a cold open folds at most this many
@@ -1305,18 +1380,12 @@ object IceLite {
     */
   val CheckpointEvery: Int = 32
 
-  /** Test seam: runs once between rebucket's staging write and its commit
-    * attempt — lets a spec deterministically land a concurrent commit in
-    * the window the rebucket CAS guard exists for.
+  /** Test seam: runs once, at the next [[IceLiteTable.commitStaged]] of
+    * any writer, between its staging and its CAS — lets a spec
+    * deterministically land a concurrent commit in the window each
+    * writer's race guard exists for. Consumed on use.
     */
-  private[graft] val testOnRebucketStaged =
-    new java.util.concurrent.atomic.AtomicReference[() => Unit]()
-
-  /** Test seam: runs once between compactDeltas' staging write and its
-    * commit attempt — lets a spec deterministically race a bucket out of
-    * the compaction's safe set.
-    */
-  private[graft] val testOnCompactStaged =
+  private[graft] val testOnStaged =
     new java.util.concurrent.atomic.AtomicReference[() => Unit]()
 
   private val mapper = new ObjectMapper()
@@ -1439,15 +1508,6 @@ object IceLite {
   private[table] val emptySnapshot: Snapshot =
     Snapshot(0L, 0L, "", 0, Map.empty, Map.empty, Map.empty)
 
-  /** Read a v-file as a diff, or — when it predates the diff format
-    * (no `filesOps` key; pre-round-3 builds wrote full snapshots per
-    * commit) — as the full snapshot it contains.
-    */
-  private[table] def readDiffOrFull(path: Path): Either[Snapshot, SnapshotDiff] = {
-    val root = mapper.readTree(Files.readString(path))
-    if (root.get("filesOps") != null) Right(readDiff(path)) else Left(readSnapshot(path))
-  }
-
   private[table] def writeAtomically(target: Path, content: String): Unit = {
     val tmp = target.getParent.resolve(s".tmp-${UUID.randomUUID()}.json")
     Files.writeString(tmp, content)
@@ -1497,13 +1557,10 @@ object IceLite {
       }.toMap,
       properties = objFields("properties").map { case (k, v) => k -> v.asText() }.toMap,
       metrics = objFields("metrics").map { case (k, v) => k -> v.asLong() }.toMap,
-      // absent in pre-MOR snapshots — default empty (backward-compatible)
-      deltas =
-        if (root.get("deltas") == null) Map.empty
-        else objFields("deltas").map { case (k, v) =>
-          k.toInt -> v.elements().asScala.map(_.asText()).toSeq
-        }.toMap,
-      lastDeltaSeq = Option(root.get("lastDeltaSeq")).map(_.asLong()).getOrElse(0L))
+      deltas = objFields("deltas").map { case (k, v) =>
+        k.toInt -> v.elements().asScala.map(_.asText()).toSeq
+      }.toMap,
+      lastDeltaSeq = root.get("lastDeltaSeq").asLong())
   }
 
   /** Create an empty table (snapshot v1, no files) with its base

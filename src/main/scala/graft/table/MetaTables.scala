@@ -66,7 +66,7 @@ object MetaTables {
       base_bytes = sizeOf(table, base),
       delta_bytes = sizeOf(table, deltas),
       metrics = s.metrics,
-      n_epochs = s.properties.keysIterator.count(_.startsWith("epoch:")))
+      n_epochs = s.epochs.size)
   }
 
   /** One row per live file of `version` (default: current): the buckets

@@ -17,7 +17,7 @@ class ChangeFeedSpec extends SparkSuite {
 
   private val mor = MergeSpec(morCompactThreshold = 1000)
 
-  private def feed(t: graft.table.IceLiteTable, from: Long, to: Long = -1L) =
+  private def feed(t: graft.table.IceLiteTable, from: Long, to: Long) =
     t.readChanges(spark, from, to).collect()
       .map(r => (r.getAs[Long]("_commit_version"), r.getAs[String]("conv_id"),
         Option(r.getAs[Integer]("turn_idx")).map(_.toInt), r.getAs[String]("action")))

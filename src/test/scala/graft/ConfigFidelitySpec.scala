@@ -291,7 +291,7 @@ class ConfigFidelitySpec extends SparkSuite {
   }
 
   test("fields.whitelist: non-whitelisted value fields never reach the table") {
-    import org.apache.spark.sql.types.{StructField, StructType}
+    import org.apache.spark.sql.types.StructType
     val dir = tmpDir("whitelist")
     // reference FieldsMetadata.java:79-162: whitelist filters VALUE
     // fields, key fields always included. Table created with the
@@ -316,7 +316,7 @@ class ConfigFidelitySpec extends SparkSuite {
   }
 
   test("fields.whitelist keeps spec-referenced columns: extraction source survives") {
-    import org.apache.spark.sql.types.{StructField, StructType}
+    import org.apache.spark.sql.types.StructType
     val dir = tmpDir("whitelist-extract")
     val projected = StructType(turnSchema.fields.filter(f =>
       Seq("conv_id", "turn_idx", "text").contains(f.name)))

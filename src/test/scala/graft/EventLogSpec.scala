@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.model.Schemas
 import graft.operators.EventLogApply
 import graft.table.IceLite

@@ -173,45 +173,6 @@ class IceLiteSpec extends SparkSuite {
     assert(IceLite.load(dir).current.properties("k2") == "v2")
   }
 
-  test("pre-diff-build tables (full-snapshot v-files) stay readable and extendable") {
-    val dir = tmpDir("icelite-oldfmt") + "/t"
-    val t = IceLite.create(dir, turnSchema, 4)
-    // hand-write v2 in the OLD format: a FULL snapshot, no filesOps
-    val full = IceLite.Snapshot(2L, 1L, turnSchema.json, 4,
-      Map(0 -> Seq("data/old/bucket=0/p1.parquet")),
-      Map("epoch:legacy" -> "7"), Map("rowsWritten" -> 5L))
-    Files.writeString(java.nio.file.Paths.get(dir, "snap", f"v${2L}%010d.json"), IceLite.toJson(full))
-    val t2 = IceLite.load(dir)
-    assert(t2.current == full)
-    // a NEW (diff-format) commit folds on top of the old-format state
-    t2.commit(p => p.copy(files = p.files.updated(1, Seq("data/new/bucket=1/p2.parquet"))))
-    val s = IceLite.load(dir).current
-    assert(s.version == 3L)
-    assert(s.files == Map(
-      0 -> Seq("data/old/bucket=0/p1.parquet"),
-      1 -> Seq("data/new/bucket=1/p2.parquet")))
-    assert(s.properties("epoch:legacy") == "7")
-  }
-
-  test("pre-diff tables with EXPIRED history (oldest v-file > 1, no checkpoints) remain readable") {
-    // round-2 expiry deleted old full-snapshot v-files and wrote no
-    // checkpoints; each surviving v-file is self-sufficient
-    val dir = tmpDir("icelite-oldexp") + "/t"
-    Files.createDirectories(java.nio.file.Paths.get(dir, "snap"))
-    Files.createDirectories(java.nio.file.Paths.get(dir, "data"))
-    val v3 = IceLite.Snapshot(3L, 2L, turnSchema.json, 4,
-      Map(0 -> Seq("data/a/p1.parquet")), Map("epoch:s" -> "2"), Map.empty)
-    val v4 = v3.copy(version = 4L, parentVersion = 3L,
-      files = v3.files.updated(1, Seq("data/b/p2.parquet")), properties = Map("epoch:s" -> "3"))
-    Files.writeString(java.nio.file.Paths.get(dir, "snap", f"v${3L}%010d.json"), IceLite.toJson(v3))
-    Files.writeString(java.nio.file.Paths.get(dir, "snap", f"v${4L}%010d.json"), IceLite.toJson(v4))
-    val t = IceLite.load(dir)
-    assert(t.current == v4)
-    assert(t.snapshot(3L) == v3)
-    t.commit(p => p.copy(properties = p.properties + ("k" -> "v"))) // new diff on top
-    assert(IceLite.load(dir).current.properties == Map("epoch:s" -> "3", "k" -> "v"))
-  }
-
   test("tailing reader folds exactly ONE diff per new commit; writer reads are cache hits") {
     val dir = tmpDir("icelite-tail") + "/t"
     val writer = IceLite.create(dir, turnSchema, 4)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.model.MergeSpec
 import graft.operators.{CdcApply, Mirror}
 import graft.table.IceLite

@@ -323,7 +323,7 @@ class MorSpec extends SparkSuite {
     // deterministic interleave: after batch-1 stages its deltas but
     // BEFORE its commit, a second writer commits batch-2 — batch-1's CAS
     // sees the moved version and must re-stage + re-commit on its own
-    CdcApply.testOnStaged.set(() => {
+    IceLite.testOnStaged.set(() => {
       CdcApply.applyBatch(spark, t, eventsDF(spark, b2), epoch = Some(("s2", 0L)))
       ()
     })
@@ -347,7 +347,7 @@ class MorSpec extends SparkSuite {
     val evs2 = eventsDF(spark, b2).withColumn("after",
       when(col("after").isNotNull, struct(col("after.*"),
         when(col("conv_id").isNotNull, lit("x")).as("extra")))) // when(): nullable, ALTER-ADD-able
-    CdcApply.testOnStaged.set(() => {
+    IceLite.testOnStaged.set(() => {
       CdcApply.applyBatch(spark, t, evs2, epoch = Some(("e2", 0L)))
       ()
     })

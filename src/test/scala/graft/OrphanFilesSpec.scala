@@ -4,8 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import graft.operators.CdcApply
-import graft.table.IceLite
+import graft.operators.{CdcApply, EventLogApply}
+import graft.table.{IceLite, IceLiteTable}
 
 /** Orphan data-file lifecycle: raced writers delete their own staged
   * files immediately (rebucket, delta compaction), and
@@ -40,6 +40,68 @@ class OrphanFilesSpec extends SparkSuite {
     assert(stray.isEmpty, s"unreferenced parquet left on disk: $stray")
   }
 
+  /** One writer raced by a concurrent commit that lands through the one
+    * after-staging hook (`IceLite.testOnStaged`): the table it writes
+    * (`buckets`, state or event log), its seed commits, the write and its
+    * outcome, the racer, and the rows the table holds afterwards.
+    */
+  private final case class Race(
+      writer: String, racer: String, logTable: Boolean, buckets: Int,
+      seed: IceLiteTable => Unit, write: IceLiteTable => String, race: IceLiteTable => Unit,
+      outcome: String, rows: Long)
+
+  private def rowsOf(tag: String, n: Int, turn: Int = 0) =
+    eventsDF(spark, (0 until n).map(i => ins((turn * 1000 + i).toLong, f"$tag$i%03d", turn, s"$tag$turn-$i")))
+  private def outcome(r: CdcApply.BatchResult): String = if (r.skipped) "skipped" else "committed"
+  private def cdc(t: IceLiteTable, tag: String, n: Int, epoch: (String, Long), turn: Int = 0): String =
+    outcome(CdcApply.applyBatch(spark, t, rowsOf(tag, n, turn), epoch = Some(epoch)))
+  private def logAppend(t: IceLiteTable, tag: String, n: Int, epoch: (String, Long), turn: Int = 0): String =
+    outcome(EventLogApply.appendBatch(spark, t, rowsOf(tag, n, turn), epoch = Some(epoch)))
+
+  private val races = Seq(
+    Race("applyBatch", "another stream's commit", logTable = false, 4,
+      cdc(_, "c", 20, ("q", 0L)), cdc(_, "w", 10, ("q", 1L)), cdc(_, "r", 5, ("r", 0L)),
+      "committed", 35L),
+    Race("applyBatch", "the same epoch's commit", logTable = false, 4,
+      cdc(_, "c", 20, ("q", 0L)), cdc(_, "w", 10, ("q", 1L)), cdc(_, "r", 5, ("q", 1L)),
+      "skipped", 25L),
+    Race("appendBatch", "another stream's commit", logTable = true, 4,
+      logAppend(_, "c", 20, ("q", 0L)), logAppend(_, "w", 10, ("q", 1L)), logAppend(_, "r", 5, ("r", 0L)),
+      "committed", 35L),
+    Race("appendBatch", "the same epoch's commit", logTable = true, 4,
+      logAppend(_, "c", 20, ("q", 0L)), logAppend(_, "w", 10, ("q", 1L)), logAppend(_, "r", 5, ("q", 1L)),
+      "skipped", 25L),
+    // three epochs over both buckets; the racer touches one of them
+    Race("compactDeltas", "a delta in one bucket", logTable = false, 2,
+      t => (0 until 3).foreach(e => cdc(t, "c", 20, ("q", e.toLong), turn = e)),
+      t => s"committed ${t.compactDeltas(spark, maxDeltasPerBucket = 1)}",
+      cdc(_, "c", 1, ("q", 3L), turn = 3),
+      "committed 1", 61L),
+    Race("compact", "an append to one bucket", logTable = true, 2,
+      t => (0 until 3).foreach(e => logAppend(t, "c", 20, ("q", e.toLong), turn = e)),
+      t => s"committed ${t.compact(spark, maxFilesPerBucket = 1)}",
+      logAppend(_, "c", 1, ("q", 3L), turn = 3),
+      "committed 1", 61L),
+    Race("rebucket", "a CDC commit", logTable = false, 4,
+      cdc(_, "c", 20, ("q", 0L)),
+      t => try { t.rebucket(spark, 8); "committed" } catch {
+        case e: IllegalStateException if e.getMessage.contains("raced") => "failed: raced"
+      },
+      cdc(_, "r", 5, ("q", 1L)),
+      "failed: raced", 25L))
+
+  for (r <- races)
+    test(s"${r.writer} raced by ${r.racer}: ${r.outcome}, no stray file") {
+      val dir = tmpDir(s"race-${r.writer}") + "/t"
+      val t = IceLite.create(dir, if (r.logTable) EventLogApply.logSchema(turnSchema) else turnSchema, r.buckets)
+      r.seed(t)
+      IceLite.testOnStaged.set(() => r.race(t))
+      assert(r.write(t) == r.outcome)
+      assert(IceLite.testOnStaged.get == null, "the racer landed through the hook")
+      assert(t.read(spark).count() == r.rows)
+      assertNoUnreferenced(dir, t)
+    }
+
   test("raced rebucket deletes its staged rewrite instead of leaking it") {
     val dir = tmpDir("orphan-rebucket") + "/t"
     val t = IceLite.create(dir, turnSchema, 4)
@@ -47,7 +109,7 @@ class OrphanFilesSpec extends SparkSuite {
     CdcApply.applyBatch(spark, t, eventsDF(spark, b), epoch = Some(("q", 0L)))
     val before = readTable(spark, t).map(x => (x.conv_id, x.turn_idx)).sorted
 
-    IceLite.testOnRebucketStaged.set(() => {
+    IceLite.testOnStaged.set(() => {
       CdcApply.applyBatch(spark, t,
         eventsDF(spark, Seq(ins(100L, "zz1", 0, "racer"))), epoch = Some(("q", 1L)))
       ()
@@ -77,7 +139,7 @@ class OrphanFilesSpec extends SparkSuite {
 
     // between staging and commit, a delta lands in ONE bucket -> that
     // bucket must race out of the safe set and keep its (grown) deltas
-    IceLite.testOnCompactStaged.set(() => {
+    IceLite.testOnStaged.set(() => {
       CdcApply.applyBatch(spark, t,
         eventsDF(spark, Seq(ins(999L, "c000", 3, "racer"))), epoch = Some(("q", 3L)))
       ()

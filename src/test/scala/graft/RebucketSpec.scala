@@ -74,7 +74,7 @@ class RebucketSpec extends SparkSuite {
     val dir = tmpDir("rebucket-mor-race") + "/t"
     val t = IceLite.create(dir, turnSchema, 4)
     CdcApply.applyBatch(spark, t, eventsDF(spark, Seq(ins(0L, "c1", 0, "seed"))), epoch = Some(("q", 0L)))
-    CdcApply.testOnStaged.set(() => { t.rebucket(spark, 8); () })
+    IceLite.testOnStaged.set(() => { t.rebucket(spark, 8); () })
     val b = (0 until 20).map(i => ins((10 + i).toLong, f"n$i%02d", 0, s"n$i"))
     val e = intercept[IllegalStateException](
       CdcApply.applyBatch(spark, t, eventsDF(spark, b), epoch = Some(("q", 1L))))
@@ -116,7 +116,7 @@ class RebucketSpec extends SparkSuite {
     val fresh = rows.filter(r => r.getInt(1) != seedB4 && r.getInt(2) != seedB8)
       .take(5).map(_.getString(0))
     assert(fresh.length == 5, "candidate pool must yield 5 bucket-avoiding names")
-    CdcApply.testOnStaged.set(() => { t.rebucket(spark, 8); () })
+    IceLite.testOnStaged.set(() => { t.rebucket(spark, 8); () })
     val b = fresh.zipWithIndex.map { case (c, i) => ins((10 + i).toLong, c, 0, s"n-$c") }
     val e = intercept[IllegalStateException](
       CdcApply.applyBatch(spark, t, eventsDF(spark, b.toSeq), epoch = Some(("q", 1L))))
@@ -140,7 +140,7 @@ class RebucketSpec extends SparkSuite {
     val dir = tmpDir("rebucket-log-race") + "/t"
     val t = IceLite.create(dir, graft.operators.EventLogApply.logSchema(turnSchema), 4)
     EventLogApply.appendBatch(spark, t, eventsDF(spark, Seq(ins(0L, "c1", 0, "seed"))), epoch = Some(("q", 0L)))
-    CdcApply.testOnStaged.set(() => { t.rebucket(spark, 8); () })
+    IceLite.testOnStaged.set(() => { t.rebucket(spark, 8); () })
     val e = intercept[IllegalStateException](
       EventLogApply.appendBatch(spark, t, eventsDF(spark, Seq(ins(1L, "c2", 0, "x"))), epoch = Some(("q", 1L))))
     assert(e.getMessage.contains("re-bucketed"), e.getMessage)
@@ -189,7 +189,7 @@ class RebucketSpec extends SparkSuite {
     // deterministic interleave: a concurrent writer commits between the
     // rebucket's staging write and its CAS — losing that writer's rows by
     // committing the stale rewrite is exactly what the guard forbids
-    IceLite.testOnRebucketStaged.set(() => {
+    IceLite.testOnStaged.set(() => {
       CdcApply.applyBatch(spark, t, eventsDF(spark, Seq(ins(1L, "c2", 0, "b"))), epoch = Some(("q", 1L)))
       ()
     })

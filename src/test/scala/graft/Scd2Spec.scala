@@ -2,8 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.functions._
-
 import graft.model.MergeSpec
 import graft.operators.{CdcApply, Scd2History}
 import graft.table.{IceLite, IceLiteTable}

@@ -25,20 +25,19 @@ class StreamingSpec extends SparkSuite {
   private def oracleTriples(evs: Seq[ChangeEvent]) =
     OracleFold.rows(OracleFold.finalState(evs)).map(x => (x.conv_id, x.turn_idx, x.text))
 
-  for (mode <- Seq("drift", "pinned"))
-    test(s"streamed replay over file source equals oracle, multiple epochs (schemaMode=$mode)") {
-      val root = tmpDir(s"stream-basic-$mode")
-      val cfg = ChangeLogGen.GenConfig(numEvents = 5000, numConvs = 60, maxTurns = 10, logPartitions = 4)
-      ChangeLogGen.writeLog(spark, cfg, s"$root/log", chunks = 3)
+  test("streamed replay over file source equals oracle, multiple epochs (schemaMode=drift)") {
+    val root = tmpDir("stream-basic-drift")
+    val cfg = ChangeLogGen.GenConfig(numEvents = 5000, numConvs = 60, maxTurns = 10, logPartitions = 4)
+    ChangeLogGen.writeLog(spark, cfg, s"$root/log", chunks = 3)
 
-      val sc = CdcStream.StreamConfig(s"$root/log", s"$root/table", s"$root/ckpt",
-        maxFilesPerTrigger = Some(1), schemaMode = mode)
-      val table = CdcStream.runAvailable(spark, sc)
+    val sc = CdcStream.StreamConfig(s"$root/log", s"$root/table", s"$root/ckpt",
+      maxFilesPerTrigger = Some(1))
+    val table = CdcStream.runAvailable(spark, sc)
 
-      assert(table.current.properties("epoch:cdc").toLong >= 2, "expected multiple epochs")
-      val evs = collectLog(spark.read.parquet(s"$root/log"))
-      assert(stateTriples(table) == oracleTriples(evs))
-    }
+    assert(table.current.properties("epoch:cdc").toLong >= 2, "expected multiple epochs")
+    val evs = collectLog(spark.read.parquet(s"$root/log"))
+    assert(stateTriples(table) == oracleTriples(evs))
+  }
 
   test("auto.create=false: a missing state table fails the stream; a pre-created one streams fine") {
     val root = tmpDir("stream-nocreate")
@@ -263,7 +262,7 @@ class StreamingSpec extends SparkSuite {
     // rebucket lands — the writer fence must fail that epoch (not land
     // rows in wrong buckets), Spark fails the streaming query, and a
     // restart re-applies the epoch under the new layout from checkpoint
-    graft.operators.CdcApply.testOnStaged.set(() => {
+    graft.table.IceLite.testOnStaged.set(() => {
       graft.table.IceLite.load(s"$root/table").rebucket(spark, 16)
       ()
     })

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Unit tests for the checkpoint file-source-log parser that powers
-  * per-micro-batch schema re-resolution (CdcStream.schemaMode = "drift").
+  * per-micro-batch schema re-resolution (CdcStream.resolveBatch).
   * Any surprise must yield None so the caller falls back to the
   * `_metadata.file_path` scan — never a wrong file list.
   */
