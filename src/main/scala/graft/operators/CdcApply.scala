@@ -1,16 +1,20 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
 import graft.model.{MergeSpec, NetAction}
 import graft.table.{IceLite, IceLiteTable, SchemaEvolution}
 
 /** Applies one batch (micro-batch or whole-log replay) of change events to
   * an IceLite transcripts table: validate → evolve schema → per-key fold →
-  * APPEND the folded net actions as per-bucket delta files — O(changes)
-  * per commit, the reference's row-level-DML cost shape
+  * APPEND the folded net actions as delta files (one file for a batch
+  * scanned in one task, else one per bucket) — O(changes) per commit,
+  * the reference's row-level-DML cost shape
   * (`.../sink/BufferedRecords.java:294-336`)
   * — folded into reads by [[graft.table.MorRead]], with amortized
   * compaction back to base files ([[graft.model.MergeSpec.morCompactThreshold]]).
@@ -33,6 +37,11 @@ import graft.table.{IceLite, IceLiteTable, SchemaEvolution}
   * task runs each of these jobs in one task with no exchange
   * ([[MergeEngine.plansOneTask]]); any other batch keeps the exchange
   * plan below.
+  *
+  * The payload-shaping rule — which after-fields land (keys ∪ whitelist
+  * ∪ the columns the spec reads), the payload rename, and the
+  * after-struct projection — lives here too, for the streaming layer's
+  * table creation and routed slices ([[tableStruct]], [[routedSlice]]).
   */
 object CdcApply {
 
@@ -48,8 +57,8 @@ object CdcApply {
 
   /** A concurrent writer committed between this batch's snapshot read and
     * its commit CAS (version moved or a delta seq was taken). Retried by
-    * [[applyMor]] up to [[MorCommitRetries]] times — the analogue of the
-    * reference's DDL race retry (`.../sink/DbStructure.java:203-227`).
+    * [[commitWithRestage]] up to [[MorCommitRetries]] times — the analogue
+    * of the reference's DDL race retry (`.../sink/DbStructure.java:203-227`).
     */
   private final case class CommitRaced(msg: String) extends Exception(msg)
 
@@ -132,50 +141,15 @@ object CdcApply {
       rejectedDir: Option[String] = None,
       auditRef: Option[String] = None,
       extraProps: Map[String, String] = Map.empty): BatchResult = {
-
     // enum-valued spec fields fail loudly on a typo (a misspelled value
     // would otherwise silently select the fallback plan)
     require(Set("key", "bucket")(spec.foldAlignment),
       s"foldAlignment must be 'key' or 'bucket', got '${spec.foldAlignment}'")
-
-    val events0 = renamePayload(extractPayloadFields(whitelistFields(events, spec), spec), spec)
-
+    val shaped = shapePayload(events, spec)
     val snap0 = table.current
-    // Fast idempotence check (re-checked inside the commit CAS). A batch
-    // id BELOW the high-water mark normally means re-delivery of an
-    // already-committed epoch (no-op by contract); it can also mean a
-    // deleted/reset checkpoint reused against an existing table with the
-    // same streamId — reprocessing requires a NEW streamId, so warn.
-    epoch.foreach { case (sid, bid) =>
-      snap0.epochs.get(sid).filter(_ > bid).foreach { last =>
-        System.err.println(s"[graft] WARN epoch $bid for stream '$sid' is below the " +
-          s"committed high-water mark $last — skipping. If this is a checkpoint reset " +
-          s"meant to REPROCESS, use a new streamId (epochs are keyed by streamId).")
-      }
-    }
+    warnBelowMark(snap0, epoch)
     if (snap0.applied(epoch)) return skipped(snap0)
-
-    // --- schema evolution (ALTER-ADD semantics, SchemaEvolution rules) ---
-    val tableSchema0 = org.apache.spark.sql.types.DataType.fromJson(snap0.schemaJson).asInstanceOf[StructType]
-    val incoming = events0.schema("after").dataType.asInstanceOf[StructType]
-    val evolved0 = SchemaEvolution.merge(tableSchema0, incoming) match {
-      case Right(s) => s
-      case Left(reason) => throw new IllegalArgumentException(s"schema rejected: $reason")
-    }
-    // reference `auto.evolve=false` (JdbcSinkConfig.java:145-150 +
-    // DbStructure.amendIfNecessary): a batch whose records need an
-    // ALTER-ADD fails the task instead of evolving the table
-    if (!spec.autoEvolve && evolved0 != tableSchema0)
-      throw new IllegalStateException(
-        "auto.evolve=false: batch requires schema evolution (" +
-          evolved0.fieldNames.diff(tableSchema0.fieldNames).mkString(", ") +
-          ") — rejected, table schema unchanged")
-    // kafka-coordinate lineage columns (reference `coordinates.enabled`)
-    val evolved =
-      if (!spec.coordinates) evolved0
-      else StructType(evolved0.fields.filterNot(f => f.name == "_partition" || f.name == "_offset") ++ Seq(
-        org.apache.spark.sql.types.StructField("_partition", org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("_offset", org.apache.spark.sql.types.LongType)))
+    val schema = evolveSchema(snap0.schema, shaped, spec)
 
     // The scans of the header note re-read the batch source; caching the
     // tagged batch instead was measured SLOWER at bench scale (24M
@@ -186,179 +160,371 @@ object CdcApply {
     // to it explicitly, so every job below — planning and wipe
     // aggregates, the fold's window, the delta write — plans no exchange
     // (SinglePartition satisfies each clustered distribution).
-    val oneTask = MergeEngine.plansOneTask(events0)
-    val batch = if (oneTask) events0.coalesce(1) else events0
+    val oneTask = MergeEngine.plansOneTask(shaped)
+    val batch = if (oneTask) shaped.coalesce(1) else shaped
     val tagged = MergeEngine.tagErrors(batch, spec.deleteEnabled)
-    // Writes the quarantine and returns the rejected count to commit: an
-    // epoch batch's is read from the footers of the partition it just
-    // wrote — exact, where the observed count can over-count under a
-    // stage retry; any other batch's is the observed count (applyBatch).
-    def writeQuarantine(rejectedCount: Long): Long =
-      if (rejectedCount == 0L) 0L
-      else rejectedDir.fold(rejectedCount)(d => labelled(spark, "cdc: quarantine write") {
-        val rej = tagged.filter(col("_error").isNotNull)
-          .withColumn("_rejected_at_epoch", lit(epoch.map(_._2).getOrElse(-1L)))
-        epoch match {
-          case Some((_, bid)) =>
-            // dynamic partition overwrite: a re-run of the same epoch
-            // (crash between quarantine and commit) replaces its own
-            // partition instead of duplicating rows
-            rej.write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("_rejected_at_epoch").parquet(d)
-            val part = new org.apache.hadoop.fs.Path(s"$d/_rejected_at_epoch=$bid")
-            val fs = part.getFileSystem(spark.sessionState.newHadoopConf())
-            IceLite.footerRowCount(spark, fs.listStatus(part).toSeq.map(_.getPath)
-              .filter(_.getName.endsWith(".parquet")).map(_.toString))
-          case None =>
-            rej.write.mode("append")
-              .partitionBy("_rejected_at_epoch").parquet(d)
-            rejectedCount
-        }
-      })
+    // bucket alignment only shapes a multi-task fold's exchange; a
+    // one-task fold has none to align
+    val aligned = spec.foldAlignment == "bucket" && !oneTask
+    val nb = snap0.numBuckets // pinned for every re-stage (commitWithRestage)
 
-    // Normalize action rows to the (possibly evolved) table schema:
-    // missing columns → null, narrower types → up-cast. No-op when the
-    // fold's row struct already matches the table schema exactly (the
-    // steady state of every non-evolving stream): the per-row struct
-    // rebuild is measurable CPU at replay scale and Catalyst does not
-    // eliminate an identity CreateNamedStruct-over-GetStructField.
-    def normalize(actions: DataFrame): DataFrame = {
-      // exact match only (field names, types, nullability, metadata) —
-      // any mismatch falls through to the rebuilding projection
-      if (!spec.coordinates && actions.schema("row").dataType == evolved) return actions
-      val rowFields = actions.schema("row").dataType.asInstanceOf[StructType].fieldNames.toSet
-      val normRow = struct(evolved.fields.toSeq.map { f =>
-        (f.name match {
-          case "_partition" if spec.coordinates => col("src_partition").cast(f.dataType)
-          case "_offset" if spec.coordinates    => col("src_offset").cast(f.dataType)
-          case n if rowFields.contains(n)       => col(s"row.$n").cast(f.dataType)
-          case _                                => lit(null).cast(f.dataType)
-        }).as(f.name)
-      }: _*)
-      actions.withColumn("row", normRow)
-    }
+    // Submitted first: only the commit needs the lineage, so the planning
+    // scan runs behind the wipe count and the delta stage instead of
+    // serializing in front of them (per-epoch Amdahl region).
+    val planning = Future(planningAggregate(spark, batch))(ExecutionContext.global)
+    val wipes = wipeSet(spark, batch, spec)
+    val result = try {
+      val observed = Observation()
+      val deltas = foldDeltas(tagged, observed, wipes, schema, spec, nb, aligned)
+      def stage(seq: Long) = stageDeltas(spark, table, deltas, nb, oneTask, rebalance = !aligned && !oneTask, seq)
+      val staged = stage(snap0.version + 1)
+      val lineage = Await.result(planning, Duration.Inf)
+      val eventsSeen = lineage.map(_.getAs[Long]("n")).sum
+      // epoch batches quarantine before the CAS, ad-hoc ones after it (quarantine)
+      val observedRejected = rejectedCount(observed, tagged)
+      val rejected =
+        if (epoch.isDefined) quarantine(spark, tagged, rejectedDir, epoch, observedRejected) else observedRejected
+      val committed = commitWithRestage(table, snap0, schema, staged, stage, epoch, auditRef,
+        props = parent => offsetProps(parent, lineage) ++ extraProps,
+        metrics = Map("eventsApplied" -> eventsSeen, "rejected" -> rejected))
+      committed.fold(skipped(table.current)) { case (snap, rowsWritten) =>
+        if (epoch.isEmpty) quarantine(spark, tagged, rejectedDir, epoch, rejected)
+        BatchResult(snap, skipped = false, rowsWritten, eventsSeen, rejected)
+      }
+    } finally wipes.release()
+    compact(spark, table, spec)
+    result
+  }
 
-    // Planning and the delta write are independent jobs over the same
-    // batch — the COMMIT needs the lineage, the write does not (deltas
-    // append; no bucket set needed up front). Submit planning
-    // concurrently so its scan hides behind the write instead of
-    // serializing in front of it (per-epoch Amdahl region).
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    // NARROW planning aggregate (r06): per-log-partition lineage (offsets
-    // advance past errant records — quarantined, not retried,
-    // `.../sink/JdbcSinkTaskTest.java:324-492`) needs only (partition,
-    // max_off, n) — none of which touch _error, so the scan prunes to two
-    // envelope columns (the round-5 form aggregated `bad` here, whose
-    // _error reference dragged the FULL payload struct into this scan —
-    // measured ~39s of task time per 12M-event epoch decoding text the
-    // planning job never used). The rejected count rides the fold job's
-    // own full-width scan as an observed metric (below).
-    // Job descriptions are thread-local: label each concurrent job from
-    // its own thread so the UI/stage profile attributes them.
-    val planF = Future {
-      labelled(spark, "cdc: planning aggregate") {
-        batch.groupBy("partition")
-          .agg(max("offset").as("max_off"), count(lit(1)).as("n")).collect()
+  // ---------------------------------------------------------------------
+  // The phases of applyBatch, in order.
+  // ---------------------------------------------------------------------
+
+  /** A batch id BELOW the stream's high-water mark normally means
+    * re-delivery of an already-committed epoch (a no-op by contract); it
+    * can also mean a deleted or reset checkpoint reused against an
+    * existing table with the same streamId — reprocessing requires a NEW
+    * streamId, so warn.
+    */
+  private def warnBelowMark(snap: IceLite.Snapshot, epoch: Option[(String, Long)]): Unit =
+    epoch.foreach { case (sid, bid) =>
+      snap.epochs.get(sid).filter(_ > bid).foreach { last =>
+        System.err.println(s"[graft] WARN epoch $bid for stream '$sid' is below the " +
+          s"committed high-water mark $last — skipping. If this is a checkpoint reset " +
+          s"meant to REPROCESS, use a new streamId (epochs are keyed by streamId).")
       }
     }
-    // Rejected-record count: a TOTAL, not per-partition — observed on the
-    // fold's scan (the fold reads the batch exactly once: no extra job,
-    // no extra payload decode). Observed metrics follow accumulator
-    // semantics — a re-run shuffle stage after executor loss could
-    // overcount; the >0 quarantine gate is unaffected (zero stays zero),
-    // the quarantine WRITE derives its rows from `tagged`, not from this
-    // count, and an epoch batch commits its quarantine's footer count
-    // instead (writeQuarantine).
-    val obs = org.apache.spark.sql.Observation()
-    val foldInput = tagged
-      .observe(obs, sum(when(col("_error").isNotNull, 1L).otherwise(0L)).as("bad"))
-      .filter(col("_error").isNull).drop("_error")
-    // The metric can be LOST (not just zero): when the fold leg
-    // materializes empty (all-wipe / all-reject / empty batch), AQE's
-    // empty-relation propagation replaces the subtree and the
-    // CollectMetrics node leaves the final plan — Spark 4's
-    // ObservationManager then completes the observation with an EMPTY
-    // row. Fall back to a dedicated count for exactly those degenerate
-    // batches; steady-state epochs never pay it.
-    val rejectedCountF = () => obs.get.get("bad") match {
-      case Some(null) => 0L // observed node saw zero rows (empty batch)
-      case Some(n)    => n.asInstanceOf[Long]
-      case None       => tagged.filter(col("_error").isNotNull).count()
+
+  /** Schema evolution (ALTER-ADD semantics, [[SchemaEvolution]] rules) of
+    * `current` by the shaped batch's after-struct, plus the lineage
+    * columns under `coordinates`.
+    */
+  private def evolveSchema(current: StructType, shaped: DataFrame, spec: MergeSpec): StructType = {
+    val evolved = SchemaEvolution.evolve(current, afterStruct(shaped))
+    // reference `auto.evolve=false` (JdbcSinkConfig.java:145-150 +
+    // DbStructure.amendIfNecessary): a batch whose records need an
+    // ALTER-ADD fails the task instead of evolving the table
+    if (!spec.autoEvolve && evolved != current)
+      throw new IllegalStateException(
+        "auto.evolve=false: batch requires schema evolution (" +
+          evolved.fieldNames.diff(current.fieldNames).mkString(", ") +
+          ") — rejected, table schema unchanged")
+    // kafka-coordinate lineage columns (reference `coordinates.enabled`)
+    if (!spec.coordinates) evolved
+    else StructType(evolved.fields.filterNot(f => f.name == "_partition" || f.name == "_offset") ++ Seq(
+      StructField("_partition", IntegerType), StructField("_offset", LongType)))
+  }
+
+  /** NARROW planning aggregate (r06): per-log-partition lineage (offsets
+    * advance past errant records — quarantined, not retried,
+    * `.../sink/JdbcSinkTaskTest.java:324-492`) needs only (partition,
+    * max_off, n) — none of which touch _error, so the scan prunes to two
+    * envelope columns (the round-5 form aggregated `bad` here, whose
+    * _error reference dragged the FULL payload struct into this scan —
+    * measured ~39s of task time per 12M-event epoch decoding text the
+    * planning job never used). The rejected count rides the fold job's
+    * own full-width scan as an observed metric ([[foldDeltas]]). Runs on
+    * a pool thread: it labels its own job.
+    */
+  private def planningAggregate(spark: SparkSession, batch: DataFrame): Array[Row] =
+    labelled(spark, "cdc: planning aggregate") {
+      batch.groupBy("partition").agg(max("offset").as("max_off"), count(lit(1)).as("n")).collect()
     }
-    // The wipe-broadcast gate needs a count BEFORE the fold plan is built
-    // (an unhinted wipe join materializes the payload side into an extra
-    // shuffle even when AQE later converts it to broadcast — measured,
-    // that shuffle is the regression). Use a dedicated MINIMAL count:
-    // three narrow envelope columns, no `after` access, overlapped with
-    // the planning scan. A delete is a wipe candidate iff its key is
-    // sound, deletes are admitted and its payload extraction (when
-    // configured) did not fail — exactly tagErrors' rule for op=delete.
-    // Only the extraction check reads the payload, and only when
-    // configured.
+
+  /** The batch's series wipes, (conv_id, wipe_off) per deleted
+    * conversation, and how many there are.
+    */
+  private final case class WipeSet(rows: DataFrame, count: Long) {
+    /** The fold's join side: broadcast below [[WipeBroadcastMax]]. Only
+      * the join gets the hint — a hinted non-join frame (the wipe-marker
+      * projection) makes Spark log "broadcast ... not part of a join
+      * relation" every epoch.
+      */
+    def joinSide: DataFrame = if (count <= WipeBroadcastMax) broadcast(rows) else rows
+    def release(): Unit = if (count > 0L) rows.unpersist(blocking = false)
+  }
+
+  /** The wipe-broadcast gate needs a count BEFORE the fold plan is built
+    * (an unhinted wipe join materializes the payload side into an extra
+    * shuffle even when AQE later converts it to broadcast — measured,
+    * that shuffle is the regression). Use a dedicated MINIMAL count:
+    * three narrow envelope columns, no `after` access, overlapped with
+    * the planning scan. A delete is a wipe candidate iff its key is
+    * sound, deletes are admitted and its payload extraction (when
+    * configured) did not fail — exactly tagErrors' rule for op=delete.
+    * Only the extraction check reads the payload, and only when
+    * configured.
+    *
+    * The wipe aggregate has TWO consumers in the delta write: the fold's
+    * wipe join (broadcast build) and the wipe-marker union leg — without
+    * a persist each re-runs the scan+aggregate over the batch (measured
+    * as two low-concurrency stages per epoch). The small
+    * (deleted-conversations-sized) frame is persisted until
+    * [[WipeSet.release]], after the last re-stage.
+    */
+  private def wipeSet(spark: SparkSession, batch: DataFrame, spec: MergeSpec): WipeSet = {
     val wipeable =
       if (batch.columns.contains("_extract_error"))
         col("conv_id").isNotNull && col("_extract_error").isNull
       else col("conv_id").isNotNull
-    val nWipes =
+    val n =
       if (!spec.deleteEnabled) 0L
-      else Await.result(
-        Future {
-          labelled(spark, "cdc: wipe count") {
-            batch.filter(col("op") === "delete" && col("turn_idx").isNull && wipeable).count()
-          }
-        },
-        Duration.Inf)
-    // The wipe aggregate has TWO consumers in the delta-write action: the
-    // fold's wipe join (broadcast build) and the wipe-marker union leg —
-    // without a persist each re-runs the scan+aggregate over the batch
-    // (measured as two low-concurrency stages per epoch). Persist the
-    // small (deleted-conversations-sized) frame for the epoch; released
-    // in the finally below.
-    val wipes0 =
-      if (nWipes == 0L)
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          StructType(Seq(
-            org.apache.spark.sql.types.StructField("conv_id", org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("wipe_off", org.apache.spark.sql.types.LongType))))
-      else
-        // narrow equivalent of seriesWipes(valid): an op=delete row is
-        // valid iff it is `wipeable` (the after-null and turn-null rules
-        // never apply to deletes, and deletes are admitted on this path —
-        // nWipes > 0 implies deleteEnabled), so filtering the batch
-        // directly keeps the wipe scan off the payload struct
-        // (seriesWipes(valid) read it via _error). parts: see seriesWipes
-        // — the persisted frame otherwise pins a shuffle.partitions-wide
-        // layout whose near-empty cached partitions cost scheduling wall
-        // in every consumer.
-        MergeEngine.seriesWipes(batch.filter(wipeable),
-          parts = Some(MergeEngine.wipePartitions(nWipes)))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val result =
-      try {
-        // the broadcast hint goes ONLY to the join consumers (the fold);
-        // applyMor's wipe-marker projection is not a join, and a hinted
-        // non-join frame makes Spark log "broadcast ... not part of a
-        // join relation" every epoch
-        val wipes = if (nWipes <= WipeBroadcastMax) broadcast(wipes0) else wipes0
-        // bucket alignment only shapes a multi-task fold's exchange; a
-        // one-task fold has none to align
-        val aligned =
-          if (spec.foldAlignment == "bucket" && !oneTask) Some(snap0.numBuckets) else None
-        val actions = MergeEngine.netActions(foldInput, wipes, aligned)
-        applyMor(spark, table, snap0, normalize(actions), wipes0, evolved, epoch, planF,
-          rejectedCountF, writeQuarantine, preAligned = aligned.isDefined, oneTask = oneTask,
-          auditRef = auditRef, extraProps = extraProps)
-      } finally if (nWipes > 0L) wipes0.unpersist(blocking = false)
-    // amortized compaction: fold delta-heavy buckets back to base files
-    // (bounds read-time merge work; per-batch write cost stays
-    // O(changes + state/threshold) amortized). Budgeted: at most
-    // morCompactBudget buckets per epoch so a synchronized threshold
-    // crossing can never stall an epoch with a full-table rewrite.
-    // Threshold 0 compacts every bucket holding a delta; a negative one
-    // never compacts.
+      else labelled(spark, "cdc: wipe count") {
+        batch.filter(col("op") === "delete" && col("turn_idx").isNull && wipeable).count()
+      }
+    if (n == 0L)
+      WipeSet(spark.createDataFrame(new java.util.ArrayList[Row](),
+        StructType(Seq(StructField("conv_id", StringType), StructField("wipe_off", LongType)))), 0L)
+    else
+      // narrow equivalent of seriesWipes(valid): an op=delete row is
+      // valid iff it is `wipeable` (the after-null and turn-null rules
+      // never apply to deletes, and deletes are admitted on this path —
+      // n > 0 implies deleteEnabled), so filtering the batch directly
+      // keeps the wipe scan off the payload struct. parts: see
+      // seriesWipes — the persisted frame otherwise pins a
+      // shuffle.partitions-wide layout whose near-empty cached
+      // partitions cost scheduling wall in every consumer.
+      WipeSet(MergeEngine.seriesWipes(batch.filter(wipeable), parts = Some(MergeEngine.wipePartitions(n)))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), n)
+  }
+
+  /** The delta rows of the batch: its net actions (the per-key fold of
+    * the valid events, normalized to `schema`) and one wipe marker per
+    * wiped conversation, each with its `bucket` of `numBuckets`.
+    *
+    * The rejected count is observed on the fold's scan into `observed`
+    * (the fold reads the batch exactly once: no extra job, no extra
+    * payload decode); [[rejectedCount]] reads it after the stage.
+    *
+    * Bucket-aligned actions (`aligned`, MergeSpec.foldAlignment="bucket")
+    * arrive already exchanged + grouped on the bucket key and are written
+    * AS IS — each task holds exactly one bucket, so the write emits one
+    * delta file per touched bucket with no further exchange. Key-aligned
+    * actions get their bucket here and the write-side redistribution in
+    * [[stageDeltas]].
+    */
+  private def foldDeltas(tagged: DataFrame, observed: Observation, wipes: WipeSet, schema: StructType,
+                         spec: MergeSpec, numBuckets: Int, aligned: Boolean): DataFrame = {
+    val valid = tagged
+      .observe(observed, sum(when(col("_error").isNotNull, 1L).otherwise(0L)).as("bad"))
+      .filter(col("_error").isNull).drop("_error")
+    val actions = normalize(
+      MergeEngine.netActions(valid, wipes.joinSide, if (aligned) Some(numBuckets) else None), schema, spec)
+    val actionRows =
+      if (aligned) actions.select(col("bucket"), col("conv_id"), col("turn_idx"), col("action"), col("row"))
+      else actions.select(col("conv_id"), col("turn_idx"), col("action"), col("row"))
+        .withColumn("bucket", MergeEngine.bucketOf(col("conv_id"), numBuckets))
+    val wipeRows = wipes.rows.select(
+      col("conv_id"),
+      lit(null).cast("int").as("turn_idx"),
+      lit(NetAction.Wipe).as("action"),
+      lit(null).cast(schema).as("row"))
+      .withColumn("bucket", MergeEngine.bucketOf(col("conv_id"), numBuckets))
+    actionRows.unionByName(wipeRows)
+  }
+
+  /** Normalize action rows to the (possibly evolved) table schema:
+    * missing columns → null, narrower types → up-cast. No-op when the
+    * fold's row struct already matches the table schema exactly (the
+    * steady state of every non-evolving stream): the per-row struct
+    * rebuild is measurable CPU at replay scale and Catalyst does not
+    * eliminate an identity CreateNamedStruct-over-GetStructField.
+    */
+  private def normalize(actions: DataFrame, schema: StructType, spec: MergeSpec): DataFrame = {
+    // exact match only (field names, types, nullability, metadata) —
+    // any mismatch falls through to the rebuilding projection
+    if (!spec.coordinates && actions.schema("row").dataType == schema) return actions
+    val rowFields = actions.schema("row").dataType.asInstanceOf[StructType].fieldNames.toSet
+    val normRow = struct(schema.fields.toSeq.map { f =>
+      (f.name match {
+        case "_partition" if spec.coordinates => col("src_partition").cast(f.dataType)
+        case "_offset" if spec.coordinates    => col("src_offset").cast(f.dataType)
+        case n if rowFields.contains(n)       => col(s"row.$n").cast(f.dataType)
+        case _                                => lit(null).cast(f.dataType)
+      }).as(f.name)
+    }: _*)
+    actions.withColumn("row", normRow)
+  }
+
+  /** Stage the delta rows, stamped with `seq`, for the commit: ONE file
+    * for a one-task epoch, listed under every bucket its rows hash to
+    * (IceLiteTable.stage) — Spark's per-file write cost, not the rows,
+    * dominates a micro-batch's delta write; else one file per bucket,
+    * after the AQE rebalance when `rebalance` (hot buckets split, cold
+    * coalesce).
+    *
+    * Delta files are TRANSIENT (folded into zstd'd, sorted, bloom'd base
+    * files at compaction): write them LSM-L0 style — light compression,
+    * no sort, no bloom. MOR readers scan a touched bucket's deltas fully
+    * anyway (only the bucket= dir prunes), so row-group stats/sort order
+    * buy nothing here and the zstd+sort CPU was the largest block of the
+    * per-epoch profile. Rows are seq-stamped per attempt: the commit CAS
+    * rejects a stolen seq, and a retry re-stages under the new one.
+    */
+  private def stageDeltas(spark: SparkSession, table: IceLiteTable, deltas: DataFrame, numBuckets: Int,
+                          oneTask: Boolean, rebalance: Boolean, seq: Long): IceLite.Staged =
+    labelled(spark, s"cdc: fold + delta write (seq $seq)") {
+      val rows = deltas.withColumn("seq", lit(seq))
+      table.stage(spark, if (rebalance) rows.hint("rebalance", "bucket") else rows,
+        numBuckets, oneTask, Nil, Map("compression" -> "snappy"))
+    }
+
+  /** The rejected-record count observed on the fold's scan — a TOTAL, not
+    * per-partition. Observed metrics follow accumulator semantics: a
+    * re-run shuffle stage after executor loss could overcount; the >0
+    * quarantine gate is unaffected (zero stays zero), the quarantine
+    * WRITE derives its rows from `tagged`, not from this count, and an
+    * epoch batch commits its quarantine's footer count instead.
+    *
+    * The metric can be LOST (not just zero): when the fold leg
+    * materializes empty (all-wipe / all-reject / empty batch), AQE's
+    * empty-relation propagation replaces the subtree and the
+    * CollectMetrics node leaves the final plan — Spark 4's
+    * ObservationManager then completes the observation with an EMPTY
+    * row. Fall back to a dedicated count for exactly those degenerate
+    * batches; steady-state epochs never pay it.
+    */
+  private def rejectedCount(observed: Observation, tagged: DataFrame): Long =
+    observed.get.get("bad") match {
+      case Some(null) => 0L // observed node saw zero rows (empty batch)
+      case Some(n)    => n.asInstanceOf[Long]
+      case None       => tagged.filter(col("_error").isNotNull).count()
+    }
+
+  /** Writes the quarantine and returns the rejected count to commit: an
+    * epoch batch's is read from the footers of the partition it just
+    * wrote — exact, where the observed count can over-count under a
+    * stage retry; any other batch's is the observed count (applyBatch).
+    *
+    * Epoch-tagged batches quarantine BEFORE the commit: a crash between
+    * commit and a post-commit quarantine write would lose the rejects
+    * permanently (re-delivery is skipped by the epoch marker, so the
+    * dead-letter write never re-runs), and the epoch-partition dynamic
+    * overwrite makes a crash-between-quarantine-and-commit re-run
+    * idempotent. Ad-hoc batches (no epoch) APPEND their quarantine and
+    * have no re-delivery marker — pre-commit writes would duplicate
+    * rejects when a failed commit is re-applied, so they write after a
+    * successful commit (the caller owns the retry decision).
+    */
+  private def quarantine(spark: SparkSession, tagged: DataFrame, rejectedDir: Option[String],
+                         epoch: Option[(String, Long)], observed: Long): Long =
+    if (observed == 0L) 0L
+    else rejectedDir.fold(observed)(d => labelled(spark, "cdc: quarantine write") {
+      val rej = tagged.filter(col("_error").isNotNull)
+        .withColumn("_rejected_at_epoch", lit(epoch.map(_._2).getOrElse(-1L)))
+      epoch match {
+        case Some((_, bid)) =>
+          // dynamic partition overwrite: a re-run of the same epoch
+          // (crash between quarantine and commit) replaces its own
+          // partition instead of duplicating rows
+          rej.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("_rejected_at_epoch").parquet(d)
+          val part = new org.apache.hadoop.fs.Path(s"$d/_rejected_at_epoch=$bid")
+          val fs = part.getFileSystem(spark.sessionState.newHadoopConf())
+          IceLite.footerRowCount(spark, fs.listStatus(part).toSeq.map(_.getPath)
+            .filter(_.getName.endsWith(".parquet")).map(_.toString))
+        case None =>
+          rej.write.mode("append")
+            .partitionBy("_rejected_at_epoch").parquet(d)
+          observed
+      }
+    })
+
+  /** CAS-commit `staged`, which was staged under seq `parent0.version + 1`:
+    * the child carries `schema`, the staged deltas, `props(parent)` and
+    * `metrics`. Single-writer sequence: rows are stamped before the
+    * commit, so a racing writer (which would steal this version) fails
+    * the race check, and the batch re-merges its schema over the racer's
+    * and re-stages (`restage(seq)`) against the new parent, up to
+    * [[MorCommitRetries]] times. Every re-stage keeps the bucket layout
+    * of the first: if a rebucket landed meanwhile, the staged bucket
+    * assignment is stale and the commit fences it
+    * (IceLiteTable.commitStaged), never retried.
+    *
+    * Audit staging (B12) evaluates the SAME child-building callback —
+    * epoch-redelivery skip and race fences included — but writes the
+    * result under the audit name instead of the CAS pointer. A race
+    * during staging retries exactly like a commit race (the audit must
+    * describe current+batch at publish time).
+    *
+    * @return the committed snapshot and the rows it wrote; None when the
+    *         parent already holds the epoch
+    */
+  private def commitWithRestage(
+      table: IceLiteTable, parent0: IceLite.Snapshot, schema: StructType, staged: IceLite.Staged,
+      restage: Long => IceLite.Staged, epoch: Option[(String, Long)], auditRef: Option[String],
+      props: IceLite.Snapshot => Map[String, String],
+      metrics: Map[String, Long]): Option[(IceLite.Snapshot, Long)] = {
+    @scala.annotation.tailrec
+    def attempt(retry: Int, expected: IceLite.Snapshot, schemaNow: StructType,
+                staged: IceLite.Staged): Option[(IceLite.Snapshot, Long)] = {
+      val seq = expected.version + 1
+      val rowsWritten = staged.rows
+      val committed =
+        try Right(table.commitStaged(staged, epoch, auditRef) { parent =>
+          if (parent.version != expected.version || parent.lastDeltaSeq >= seq)
+            throw CommitRaced(
+              s"MOR commit raced on ${table.dir}: staged seq $seq vs parent " +
+                s"version ${parent.version} (lastDeltaSeq ${parent.lastDeltaSeq})")
+          parent.copy(
+            schemaJson = schemaNow.json,
+            deltas = staged.appendTo(parent.deltas),
+            lastDeltaSeq = seq,
+            properties = parent.properties ++ props(parent),
+            metrics = Map("rowsWritten" -> rowsWritten, "deltaFilesAdded" -> staged.paths.size.toLong) ++ metrics)
+        })
+        catch { case CommitRaced(msg) => Left(msg) }
+      committed match {
+        case Right(snap) => snap.map(_ -> rowsWritten)
+        case Left(msg) if retry == MorCommitRetries =>
+          throw new IllegalStateException(
+            s"$msg — still racing after $MorCommitRetries re-stage attempts; " +
+              "a concurrent writer is livelocking this table, re-apply the batch manually.")
+        case Left(_) =>
+          morRaceRetries.increment()
+          val parent = table.current
+          // the racer may have evolved the schema: merge ours over the
+          // committed one (delta rows keep THIS batch's struct — readers
+          // widen missing nested fields to null, ALTER-ADD semantics)
+          val merged = SchemaEvolution.evolve(parent.schema, schemaNow)
+          System.err.println(s"[graft] MOR commit race on ${table.dir} (attempt ${retry + 1}/" +
+            s"$MorCommitRetries): re-staging against parent v${parent.version}")
+          attempt(retry + 1, parent, merged, restage(parent.version + 1))
+      }
+    }
+    attempt(0, parent0, schema, staged)
+  }
+
+  /** Amortized compaction: fold delta-heavy buckets back to base files
+    * (bounds read-time merge work; per-batch write cost stays
+    * O(changes + state/threshold) amortized). Budgeted: at most
+    * morCompactBudget buckets per epoch so a synchronized threshold
+    * crossing can never stall an epoch with a full-table rewrite.
+    * Threshold 0 compacts every bucket holding a delta; a negative one
+    * never compacts.
+    */
+  private def compact(spark: SparkSession, table: IceLiteTable, spec: MergeSpec): Unit =
     if (spec.morCompactThreshold >= 0) {
       val budget =
         if (spec.morCompactBudget > 0) spec.morCompactBudget
@@ -373,150 +539,119 @@ object CdcApply {
           maxBuckets = budget, stagger = spec.morCompactStagger)
       }
     }
-    result
-  }
 
-  /** Merge-on-read write: net actions + wipe markers land as delta files
-    * partitioned by bucket, sequenced by the committing snapshot version.
+  private def offsetProps(parent: IceLite.Snapshot, lineage: Array[Row]): Map[String, String] =
+    lineage.map { r =>
+      val p = r.getAs[Int]("partition")
+      val prev = parent.properties.get(s"maxoff:$p").map(_.toLong).getOrElse(Long.MinValue)
+      s"maxoff:$p" -> math.max(prev, r.getAs[Long]("max_off")).toString
+    }.toMap
+
+  /** The change-event envelope [[applyBatch]] takes, built for a table
+    * derived from another table's state or change feed ([[Mirror]],
+    * [[IncrementalView]], [[Scd2History]]): log partition 0, the given
+    * offset, op and after-struct, the rows' own `conv_id` and `turn_idx`.
     */
-  private def applyMor(
-      spark: SparkSession,
-      table: IceLiteTable,
-      snap0: IceLite.Snapshot,
-      normActions: DataFrame,
-      wipes: DataFrame,
-      evolved: StructType,
-      epoch: Option[(String, Long)],
-      lineageF: scala.concurrent.Future[Array[org.apache.spark.sql.Row]],
-      rejectedCountF: () => Long,
-      quarantine: Long => Long,
-      preAligned: Boolean,
-      oneTask: Boolean,
-      auditRef: Option[String],
-      extraProps: Map[String, String]): BatchResult = {
+  private[operators] def changeEvents(rows: DataFrame, offset: Column, op: Column, after: Column,
+                                      ts: Column = lit(0L).cast("timestamp")): DataFrame =
+    rows.select(lit(0).as("partition"), offset.as("offset"), ts.as("ts"), op.as("op"),
+      col("conv_id"), col("turn_idx"), after.as("after"), lit(2).as("schemaV"))
 
-    // the bucket layout this batch stages under, pinned ONCE: the commit
-    // retry loop re-reads the parent, and if a rebucket landed meanwhile
-    // the staged bucket assignment is stale — the commit fences it
-    // (IceLiteTable.commitStaged), never retried
-    val nb0 = snap0.numBuckets
+  // ---------------------------------------------------------------------
+  // Payload shaping: whitelist → extract → rename. The one rule for which
+  // after-fields land and under which names.
+  // ---------------------------------------------------------------------
 
-    val wipeRows = wipes.select(
-      col("conv_id"),
-      lit(null).cast("int").as("turn_idx"),
-      lit(NetAction.Wipe).as("action"),
-      lit(null).cast(evolved).as("row"))
-      .withColumn("bucket", MergeEngine.bucketOf(col("conv_id"), nb0))
-    // Bucket-aligned actions (MergeSpec.foldAlignment="bucket", flagged
-    // explicitly by the caller) arrive already exchanged + grouped on
-    // the bucket key: write them AS IS — each task holds exactly one
-    // bucket, so the write emits one delta file per touched bucket with
-    // no further exchange. Key-aligned actions need the write-side
-    // redistribution (AQE rebalance: hot buckets split, cold coalesce).
-    // A one-task epoch writes actions and wipe markers from ONE task
-    // into ONE file, listed under every bucket its rows hash to
-    // (IceLiteTable.stage): Spark's per-file write cost, not the rows,
-    // dominates a micro-batch's delta write.
-    val actionRows =
-      if (preAligned)
-        normActions.select(col("bucket"), col("conv_id"), col("turn_idx"), col("action"), col("row"))
-      else normActions
-        .select(col("conv_id"), col("turn_idx"), col("action"), col("row"))
-        .withColumn("bucket", MergeEngine.bucketOf(col("conv_id"), nb0))
-    // Delta files are TRANSIENT (folded into zstd'd, sorted, bloom'd base
-    // files at compaction): write them LSM-L0 style — light compression,
-    // no sort, no bloom. MOR readers scan a touched bucket's deltas fully
-    // anyway (only the bucket= dir prunes), so row-group stats/sort order
-    // buy nothing here and the zstd+sort CPU was the largest block of the
-    // per-epoch profile. Rows are seq-stamped per attempt: the commit CAS
-    // rejects a stolen seq, and a retry re-stages under the new one.
-    def stageDeltas(seq: Long): IceLite.Staged = labelled(spark, s"cdc: fold + delta write (seq $seq)") {
-      val deltaRows = actionRows.unionByName(wipeRows).withColumn("seq", lit(seq))
-      table.stage(spark, if (preAligned || oneTask) deltaRows else deltaRows.hint("rebalance", "bucket"),
-        nb0, oneTask, Nil, Map("compression" -> "snappy"))
-    }
-    // single-writer sequence: rows are stamped before the commit, so a
-    // racing writer (which would steal this version) fails the CAS check
-    // and this batch re-stages against the new parent (bounded retries)
-    var parent0 = snap0
-    var schemaNow = evolved
-    var staged = stageDeltas(parent0.version + 1)
+  /** The shape phase: the value-field whitelist, ingest-time extraction,
+    * then the payload rename — pure struct re-projections inside the
+    * batch scan (no job).
+    */
+  private def shapePayload(events: DataFrame, spec: MergeSpec): DataFrame =
+    renamePayload(extractPayloadFields(whitelistFields(events, spec), spec), spec)
 
-    // planning ran concurrently with the delta write; join it here — the
-    // commit is the first consumer of the lineage
-    val lineage = scala.concurrent.Await.result(lineageF, scala.concurrent.duration.Duration.Inf)
-    val eventsSeen = lineage.map(_.getAs[Long]("n")).sum
-    // observed on the fold scan of the staging above (or, for a batch
-    // whose fold leg ran empty, a dedicated count) — ready by now
-    val observedRejected = rejectedCountF()
+  private def afterStruct(events: DataFrame): StructType = events.schema("after").dataType.asInstanceOf[StructType]
 
-    // Epoch-tagged batches quarantine BEFORE the commit: a crash between
-    // commit and a post-commit quarantine write would lose the rejects
-    // permanently (re-delivery is skipped by the epoch marker, so the
-    // dead-letter write never re-runs), and the epoch-partition dynamic
-    // overwrite makes a crash-between-quarantine-and-commit re-run
-    // idempotent. Ad-hoc batches (no epoch) APPEND their quarantine and
-    // have no re-delivery marker — pre-commit writes would duplicate
-    // rejects when a failed commit is re-applied, so they write after a
-    // successful commit (the caller owns the retry decision).
-    val rejectedCount = if (epoch.isDefined) quarantine(observedRejected) else observedRejected
+  private def afterField(n: String): Column = col(s"after.`$n`")
 
-    var attempt = 0
-    while (true) {
-      val seq = parent0.version + 1
-      val rowsWritten = staged.rows
-      try {
-        // Audit staging (B12) evaluates the SAME child-building callback —
-        // epoch-redelivery skip and race fences included — but writes the
-        // result under the audit name instead of the CAS pointer. A race
-        // during staging retries exactly like a commit race (the audit
-        // must describe current+batch at publish time).
-        val committed = table.commitStaged(staged, epoch, auditRef) { parent =>
-          if (parent.version != parent0.version || parent.lastDeltaSeq >= seq)
-            throw CommitRaced(
-              s"MOR commit raced on ${table.dir}: staged seq $seq vs parent " +
-                s"version ${parent.version} (lastDeltaSeq ${parent.lastDeltaSeq})")
-          parent.copy(
-            schemaJson = schemaNow.json,
-            deltas = staged.appendTo(parent.deltas),
-            lastDeltaSeq = seq,
-            properties = parent.properties ++ offsetProps(parent, lineage) ++ extraProps,
-            metrics = Map(
-              "rowsWritten" -> rowsWritten,
-              "deltaFilesAdded" -> staged.paths.size.toLong,
-              "eventsApplied" -> eventsSeen,
-              "rejected" -> rejectedCount))
-        }
-        return committed.fold(skipped(table.current)) { snap =>
-          if (epoch.isEmpty) quarantine(rejectedCount)
-          BatchResult(snap, skipped = false, rowsWritten, eventsSeen, rejectedCount)
-        }
-      } catch {
-        case CommitRaced(msg) =>
-          attempt += 1
-          if (attempt > MorCommitRetries)
-            throw new IllegalStateException(
-              s"$msg — still racing after $MorCommitRetries re-stage attempts; " +
-                "a concurrent writer is livelocking this table, re-apply the batch manually.")
-          morRaceRetries.increment()
-          parent0 = table.current
-          // the racer may have evolved the schema: merge ours over the
-          // committed one (delta rows keep THIS batch's struct — readers
-          // widen missing nested fields to null, ALTER-ADD semantics)
-          schemaNow = SchemaEvolution.merge(
-            org.apache.spark.sql.types.DataType.fromJson(parent0.schemaJson).asInstanceOf[StructType],
-            schemaNow) match {
-            case Right(s) => s
-            case Left(reason) => throw new IllegalStateException(
-              s"MOR race retry: concurrent writer's schema is incompatible: $reason")
-          }
-          System.err.println(s"[graft] MOR commit race on ${table.dir} (attempt $attempt/" +
-            s"$MorCommitRetries): re-staging against parent v${parent0.version}")
-          staged = stageDeltas(parent0.version + 1)
-      }
-    }
-    throw new IllegalStateException("unreachable")
+  /** `events` with its after-struct rebuilt from `fields`; a null
+    * after-struct (a tombstone) stays null.
+    */
+  private def projectAfter(events: DataFrame, fields: Seq[Column]): DataFrame =
+    events.withColumn("after", when(col("after").isNotNull, struct(fields: _*)))
+
+  /** `events` with its after-struct cut to the fields `keep` accepts
+    * (unchanged when it accepts all of them).
+    */
+  private def keepFields(events: DataFrame, keep: String => Boolean): DataFrame = {
+    val afterT = afterStruct(events)
+    val fields = afterT.fieldNames.toSeq.filter(keep)
+    if (fields.size == afterT.fields.length) events else projectAfter(events, fields.map(n => afterField(n).as(n)))
   }
+
+  /** True when the payload field lands under another name (reference
+    * `value.converter.payload.field.name`, README.md:97-102): the event's
+    * [[MergeSpec.extractSource]] field becomes [[MergeSpec.payloadTargetName]].
+    */
+  private def renames(spec: MergeSpec): Boolean =
+    spec.payloadTargetName.nonEmpty && spec.payloadTargetName != spec.extractSource
+
+  /** After-fields (event-side names) the spec itself reads, which survive
+    * every projection even when all-null: extraction reads
+    * after.<extractSource>, and the payload rename requires it.
+    */
+  private def specFields(spec: MergeSpec): Set[String] =
+    if (spec.extractFields.nonEmpty || spec.payloadSchemas.nonEmpty || renames(spec)) Set(spec.extractSource)
+    else Set.empty
+
+  /** The after-fields surviving the whitelist: the key columns (conv_id,
+    * turn_idx) ∪ whitelist ∪ spec-referenced columns (event-side names).
+    */
+  private def whitelisted(spec: MergeSpec)(n: String): Boolean =
+    n == "conv_id" || n == "turn_idx" || spec.fieldsWhitelist.contains(n) || specFields(spec)(n)
+
+  /** The after-struct SHAPE surviving [[whitelistFields]] — for
+    * first-sight creation of an event-log table, so it never carries
+    * non-whitelisted columns at all.
+    */
+  private[graft] def whitelistedStruct(afterT: StructType, spec: MergeSpec): StructType =
+    if (spec.fieldsWhitelist.isEmpty) afterT
+    else StructType(afterT.fields.filter(f => whitelisted(spec)(f.name)))
+
+  /** First-sight creation shape of a state table: the after-struct after
+    * the whitelist AND the payload rename — the same two transforms
+    * [[applyBatch]] performs on every event, so a created table starts
+    * with exactly the columns that will land.
+    */
+  private[graft] def tableStruct(afterT: StructType, spec: MergeSpec): StructType =
+    StructType(whitelistedStruct(afterT, spec).fields.map(f =>
+      if (renames(spec) && f.name == spec.extractSource) f.copy(name = spec.payloadTargetName) else f))
+
+  /** A table's column names as events name them: a table under a payload
+    * rename carries the TARGET name, events the source name.
+    */
+  private[graft] def eventSideNames(table: StructType, spec: MergeSpec): Set[String] =
+    table.fieldNames.map(n => if (renames(spec) && n == spec.payloadTargetName) spec.extractSource else n).toSet
+
+  /** A routed topic slice cut to the after-fields `keep` accepts plus the
+    * ones the spec reads — projecting the extraction source out of a
+    * first-sight slice would fail every retry of the epoch. A slice that
+    * would keep no field (an all-tombstone first-sight slice) passes
+    * unchanged: never an empty struct.
+    */
+  private[graft] def routedSlice(slice: DataFrame, keep: String => Boolean, spec: MergeSpec): DataFrame = {
+    val kept = (n: String) => keep(n) || specFields(spec)(n)
+    if (afterStruct(slice).fieldNames.exists(kept)) keepFields(slice, kept) else slice
+  }
+
+  /** Ingest-time value-field whitelist (reference `fields.whitelist`,
+    * `.../sink/metadata/FieldsMetadata.java:79-162`): project the
+    * after-struct down to keys ∪ whitelist ∪ spec-referenced columns.
+    * Runs BEFORE extraction (which reads [[MergeSpec.extractSource]])
+    * and before schema evolution, so dropped fields never become table
+    * columns. Catalyst prunes the dropped leaves out of the parquet scan.
+    */
+  private[operators] def whitelistFields(events: DataFrame, spec: MergeSpec): DataFrame =
+    if (spec.fieldsWhitelist.isEmpty) events else keepFields(events, whitelisted(spec))
 
   /** Ingest-time payload-field extraction + multi-schema classification:
     * widen the after-struct with `get_json_object(after.<extractSource>,
@@ -536,8 +671,8 @@ object CdcApply {
       "configure either extractFields (single-schema) or payloadSchemas (multi-schema), not both")
     if (spec.extractFields.isEmpty && spec.payloadSchemas.isEmpty) events
     else {
-      val afterT = events.schema("after").dataType.asInstanceOf[StructType]
-      val src = col(s"after.`${spec.extractSource}`")
+      val afterT = afterStruct(events)
+      val src = afterField(spec.extractSource)
 
       // union of target columns in first-seen order; each name must have
       // ONE type across schemas (it becomes one table column)
@@ -607,87 +742,25 @@ object CdcApply {
           acc.when(cond, msg)
         }
         .otherwise(null)
-      val keep = afterT.fieldNames.toSeq.map(n => col(s"after.`$n`").as(n))
-      events
-        .withColumn("after", when(col("after").isNotNull, struct(keep ++ extracted: _*)))
+      projectAfter(events, afterT.fieldNames.toSeq.map(n => afterField(n).as(n)) ++ extracted)
         .withColumn("_extract_error", extractError)
     }
   }
 
-  /** Field names of `afterT` surviving the whitelist projection: the
-    * key columns (conv_id, turn_idx) ∪ whitelist ∪ spec-referenced
-    * columns (event-side names).
-    */
-  private def whitelistKeep(afterT: StructType, spec: MergeSpec): Seq[String] = {
-    val specCols: Set[String] =
-      if (spec.extractFields.nonEmpty || spec.payloadSchemas.nonEmpty ||
-        (spec.payloadTargetName.nonEmpty && spec.payloadTargetName != spec.extractSource))
-        Set(spec.extractSource)
-      else Set.empty
-    afterT.fieldNames.toSeq.filter(n =>
-      n == "conv_id" || n == "turn_idx" ||
-        spec.fieldsWhitelist.contains(n) || specCols.contains(n))
-  }
-
-  /** The after-struct SHAPE surviving [[whitelistFields]] — for
-    * first-sight table creation (CdcStream), so a created state or
-    * event-log table never carries non-whitelisted columns at all.
-    */
-  private[graft] def whitelistedStruct(afterT: StructType, spec: MergeSpec): StructType =
-    if (spec.fieldsWhitelist.isEmpty) afterT
-    else {
-      val keep = whitelistKeep(afterT, spec).toSet
-      StructType(afterT.fields.filter(f => keep.contains(f.name)))
-    }
-
-  /** Ingest-time value-field whitelist (reference `fields.whitelist`,
-    * `.../sink/metadata/FieldsMetadata.java:79-162`): project the
-    * after-struct down to keys ∪ whitelist ∪ spec-referenced columns.
-    * Runs BEFORE extraction (which reads [[MergeSpec.extractSource]] —
-    * kept implicitly while extraction or the payload rename is
-    * configured, same rule as the routed-slice projection) and before
-    * schema evolution, so dropped fields never become table columns.
-    * Pure struct re-projection inside the batch scan — no job, and
-    * Catalyst prunes the dropped leaves out of the parquet scan.
-    */
-  private[operators] def whitelistFields(events: DataFrame, spec: MergeSpec): DataFrame =
-    if (spec.fieldsWhitelist.isEmpty) events
-    else {
-      val afterT = events.schema("after").dataType.asInstanceOf[StructType]
-      val keep = whitelistKeep(afterT, spec)
-      if (keep.size == afterT.fields.length) events
-      else events.withColumn("after",
-        when(col("after").isNotNull, struct(keep.map(n => col(s"after.`$n`").as(n)): _*)))
-    }
-
-  /** Payload target-column rename (reference
-    * `value.converter.payload.field.name`, README.md:97-102): the event's
-    * payload field ([[MergeSpec.extractSource]]) lands in the table under
-    * [[MergeSpec.payloadTargetName]]. Pure struct re-projection inside the
-    * batch scan (no job); runs AFTER extraction, which reads the
-    * event-side name. Field order is preserved so the rename is an
-    * in-place column retitle, not a layout change.
+  /** Payload target-column rename ([[renames]]). Runs AFTER extraction,
+    * which reads the event-side name. Field order is preserved so the
+    * rename is an in-place column retitle, not a layout change.
     */
   private def renamePayload(events: DataFrame, spec: MergeSpec): DataFrame =
-    if (spec.payloadTargetName.isEmpty || spec.payloadTargetName == spec.extractSource) events
+    if (!renames(spec)) events
     else {
-      val afterT = events.schema("after").dataType.asInstanceOf[StructType]
-      require(afterT.fieldNames.contains(spec.extractSource),
+      val names = afterStruct(events).fieldNames.toSeq
+      require(names.contains(spec.extractSource),
         s"payloadTargetName rename: source column '${spec.extractSource}' not in the after-struct " +
-          s"(${afterT.fieldNames.mkString(", ")})")
-      require(!afterT.fieldNames.contains(spec.payloadTargetName),
+          s"(${names.mkString(", ")})")
+      require(!names.contains(spec.payloadTargetName),
         s"payloadTargetName '${spec.payloadTargetName}' collides with an existing payload field")
-      val cols = afterT.fieldNames.toSeq.map { n =>
-        val target = if (n == spec.extractSource) spec.payloadTargetName else n
-        col(s"after.`$n`").as(target)
-      }
-      events.withColumn("after", when(col("after").isNotNull, struct(cols: _*)))
+      projectAfter(events, names.map(n =>
+        afterField(n).as(if (n == spec.extractSource) spec.payloadTargetName else n)))
     }
-
-  private def offsetProps(parent: IceLite.Snapshot, lineage: Array[org.apache.spark.sql.Row]): Map[String, String] =
-    lineage.map { r =>
-      val p = r.getAs[Int]("partition")
-      val prev = parent.properties.get(s"maxoff:$p").map(_.toLong).getOrElse(Long.MinValue)
-      s"maxoff:$p" -> math.max(prev, r.getAs[Long]("max_off")).toString
-    }.toMap
 }

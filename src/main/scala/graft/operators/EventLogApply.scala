@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.model.MergeSpec
-import graft.table.{IceLite, IceLiteTable}
+import graft.table.{IceLite, IceLiteTable, SchemaEvolution}
 
 /** The append-only event-log half of the event store (the reference's
   * plain INSERT mode, `/root/reference/src/main/java/io/confluent/connect/jdbc/sink/BufferedRecords.java:362-371`
@@ -58,15 +58,8 @@ object EventLogApply {
     // both drift adds and harmless nested-nullability differences).
     // Resolved against the commit-time parent (CAS-safe under retry).
     val incomingAfter = events0.schema("after").dataType.asInstanceOf[StructType]
-    def evolveFrom(parent: IceLite.Snapshot): StructType = {
-      val curAfter = org.apache.spark.sql.types.DataType
-        .fromJson(parent.schemaJson).asInstanceOf[StructType]("after")
-        .dataType.asInstanceOf[StructType]
-      graft.table.SchemaEvolution.merge(curAfter, incomingAfter) match {
-        case Right(s)     => logSchema(s)
-        case Left(reason) => throw new IllegalArgumentException(s"schema rejected: $reason")
-      }
-    }
+    def evolveFrom(parent: IceLite.Snapshot): StructType = logSchema(SchemaEvolution.evolve(
+      parent.schema("after").dataType.asInstanceOf[StructType], incomingAfter))
 
     val rows = events0.select(
       col("op"), col("conv_id"), col("turn_idx"), col("after"), col("ts"),

@@ -130,9 +130,7 @@ object IncrementalView {
       .distinct().collect().map(_.getInt(0)).toSet
     if (bk.isEmpty) return aggregate(emptyOf(spark, source), spec).limit(0)
     // schema as of the range end — what the feed's row structs carry
-    val sch = org.apache.spark.sql.types.DataType
-      .fromJson(source.snapshot(toVersion).schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val sch = source.snapshot(toVersion).schema
     def widen(df: DataFrame): DataFrame =
       df.select(sch.fields.toSeq.map(f =>
         if (df.columns.contains(f.name)) col(f.name)
@@ -202,18 +200,13 @@ object IncrementalView {
                 (coalesce(col(s"_cur_$n"), lit(0L)) + col(n)).as(n)): _*)
     }
     // dead groups (cnt back to 0) leave the view as deletes
-    val events = groups
-      .withColumn("conv_id", viewKey(spec)).withColumn("turn_idx", lit(0))
-      .select(
-        lit(0).as("partition"),
-        lit(to).as("offset"),
-        lit(0L).cast("timestamp").as("ts"),
-        when(col("cnt") === 0L, "delete").otherwise("upsert").as("op"),
-        col("conv_id"), col("turn_idx"),
-        when(col("cnt") =!= 0L,
-          struct(col("conv_id") +: col("turn_idx") +:
-            (spec.dims.map(d => col(d._1)) ++ spec.measureNames.map(col)): _*)).as("after"),
-        lit(2).as("schemaV"))
+    val events = CdcApply.changeEvents(
+      groups.withColumn("conv_id", viewKey(spec)).withColumn("turn_idx", lit(0)),
+      offset = lit(to),
+      op = when(col("cnt") === 0L, "delete").otherwise("upsert"),
+      after = when(col("cnt") =!= 0L,
+        struct(col("conv_id") +: col("turn_idx") +:
+          (spec.dims.map(d => col(d._1)) ++ spec.measureNames.map(col)): _*)))
     val res = CdcApply.applyBatch(spark, view, events, mergeSpec, epoch = Some((streamId(source), to)))
     RefreshResult(res, from, to)
   }

@@ -75,28 +75,17 @@ object Mirror {
   /** Net-action feed rows → change-event envelope for the apply path. */
   private def feedAsEvents(feed: DataFrame): DataFrame = {
     val rowLevel = col("action") =!= NetAction.Wipe
-    feed.select(
-      lit(0).as("partition"),
-      (col("_commit_version") * 2 + when(rowLevel, 1L).otherwise(0L)).as("offset"),
-      col("_commit_version").cast("timestamp").as("ts"),
-      when(col("action") === NetAction.Del || col("action") === NetAction.Wipe, "delete")
+    CdcApply.changeEvents(feed,
+      offset = col("_commit_version") * 2 + when(rowLevel, 1L).otherwise(0L),
+      op = when(col("action") === NetAction.Del || col("action") === NetAction.Wipe, "delete")
         .when(col("action") === NetAction.UpdateIfExists, "update")
-        .otherwise("upsert").as("op"),
-      col("conv_id"),
-      col("turn_idx"),
-      when(col("action").isin(NetAction.Put, NetAction.UpdateIfExists), col("row")).as("after"),
-      lit(2).as("schemaV"))
+        .otherwise("upsert"),
+      after = when(col("action").isin(NetAction.Put, NetAction.UpdateIfExists), col("row")),
+      ts = col("_commit_version").cast("timestamp"))
   }
 
   /** Full source state → insert events (bootstrap sync). */
   private def stateAsEvents(state: DataFrame): DataFrame =
-    state.select(
-      lit(0).as("partition"),
-      lit(0L).as("offset"),
-      lit(0L).cast("timestamp").as("ts"),
-      lit("upsert").as("op"),
-      col("conv_id"),
-      col("turn_idx"),
-      struct(state.schema.fieldNames.toSeq.map(col): _*).as("after"),
-      lit(2).as("schemaV"))
+    CdcApply.changeEvents(state, offset = lit(0L), op = lit("upsert"),
+      after = struct(state.schema.fieldNames.toSeq.map(col): _*))
 }

@@ -118,21 +118,14 @@ object Scd2History {
       s"scd2 history requires a keyed-state source: version range ($checkFrom, $to] " +
         s"of ${source.dir} contains append-only event-log commits")
 
-    val sch = DataType.fromJson(source.snapshot(to).schemaJson).asInstanceOf[StructType]
+    val sch = source.snapshot(to).schema
     val upserts = from match {
       case None    => bootstrapRows(spark, source, sch, to)
       case Some(f) => transitionRows(spark, source, history, sch, f, to)
     }
     val hNames = historySchema(sch).fieldNames.toSeq
-    val events = upserts.select(
-      lit(0).as("partition"),
-      lit(to).as("offset"),
-      lit(0L).cast("timestamp").as("ts"),
-      lit("upsert").as("op"),
-      col("conv_id"),
-      col("turn_idx"),
-      struct(hNames.map(n => col(s"`$n`")): _*).as("after"),
-      lit(2).as("schemaV"))
+    val events = CdcApply.changeEvents(upserts, offset = lit(to), op = lit("upsert"),
+      after = struct(hNames.map(n => col(s"`$n`")): _*))
     val res = CdcApply.applyBatch(spark, history, events, mergeSpec, epoch = Some((streamId(source), to)))
     RefreshResult(res, from, to)
   }

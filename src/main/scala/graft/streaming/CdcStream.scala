@@ -188,7 +188,7 @@ object CdcStream {
   def start(spark: SparkSession, cfg: StreamConfig): StreamingQuery = {
     val table: Option[IceLiteTable] =
       if (cfg.routing.isDefined) None // routed tables are created on first sight of their topic
-      else Some(loadOrCreate(cfg.tableDir, specShapedSchema(Schemas.transcript, cfg.spec), cfg.spec,
+      else Some(loadOrCreate(cfg.tableDir, CdcApply.tableStruct(Schemas.transcript, cfg.spec), cfg.spec,
         autoCreate = cfg.autoCreate))
     if (cfg.downstreamMirrors.nonEmpty || cfg.downstreamViews.nonEmpty ||
         cfg.downstreamHistories.nonEmpty)
@@ -204,8 +204,7 @@ object CdcStream {
     val routedTables = scala.collection.concurrent.TrieMap.empty[String, IceLiteTable]
     val logTable: Option[IceLiteTable] = cfg.eventLogTableDir.map { d =>
       loadOrCreate(d,
-        graft.operators.EventLogApply.logSchema(
-          graft.operators.CdcApply.whitelistedStruct(Schemas.transcript, cfg.spec)),
+        graft.operators.EventLogApply.logSchema(CdcApply.whitelistedStruct(Schemas.transcript, cfg.spec)),
         cfg.spec, autoCreate = cfg.autoCreate)
     }
 
@@ -269,20 +268,13 @@ object CdcStream {
             // aggregate over only the columns some routed table is missing
             // — no job at all once every table matches the union envelope.
             val afterT = batch.schema("after").dataType.asInstanceOf[StructType]
-            // a table under a payload target-column rename carries the
-            // TARGET name; slices carry the EVENT-side name — map the
-            // table's fields back so the source column counts as known
-            val renameOn = cfg.spec.payloadTargetName.nonEmpty &&
-              cfg.spec.payloadTargetName != cfg.spec.extractSource
-            def eventSideNames(names: Set[String]): Set[String] =
-              if (renameOn && names.contains(cfg.spec.payloadTargetName))
-                names - cfg.spec.payloadTargetName + cfg.spec.extractSource
-              else names
+            // known columns by their event-side names, so a renamed
+            // payload column counts as known
             val knownByGroup: Map[String, Option[Set[String]]] = groups.map { case (f, _) =>
               val dir = r.tableDirFor(f) // folding is idempotent on a folded name
               val handle = routedTables.get(dir).orElse(
                 if (IceLite.exists(dir)) Some(routedTables.getOrElseUpdate(dir, IceLite.load(dir))) else None)
-              f -> handle.map(t => eventSideNames(t.schema.fieldNames.toSet))
+              f -> handle.map(t => CdcApply.eventSideNames(t.schema, cfg.spec))
             }.toMap
             val candByGroup: Map[String, Seq[String]] = knownByGroup.map { case (f, ks) =>
               f -> afterT.fieldNames.toSeq.filterNot(ks.getOrElse(Set.empty).contains)
@@ -312,28 +304,10 @@ object CdcStream {
                   val dir = r.tableDirFor(folded)
                   val slice0 = batch.filter(col(r.topicColumn).isin(ts: _*)).drop(r.topicColumn)
                   val live = ts.flatMap(t => liveByTopic.getOrElse(t, Set.empty)).toSet
-                  // columns the MergeSpec itself references must survive the
-                  // projection even when all-null in this slice: extraction
-                  // reads after.<extractSource>, the payload rename requires
-                  // it, and projecting it out of a first-sight slice would
-                  // fail every retry of the epoch
-                  val specCols: Set[String] =
-                    if (cfg.spec.extractFields.nonEmpty || cfg.spec.payloadSchemas.nonEmpty ||
-                      renameOn)
-                      Set(cfg.spec.extractSource)
-                    else Set.empty
-                  val keep = afterT.fieldNames.toSeq.filter(n =>
-                    knownByGroup(folded).exists(_.contains(n)) || live.contains(n) || specCols.contains(n))
-                  // never project to an empty struct (all-tombstone
-                  // first-sight slice): fall back to the union envelope
-                  val slice =
-                    if (keep.isEmpty || keep.size == afterT.fields.length) slice0
-                    else projectAfter(slice0, keep)
-                  // first-sight creation under a payload rename uses the
-                  // TARGET-side schema (applyBatch renames every event's
-                  // payload field before evolution)
+                  val slice = CdcApply.routedSlice(slice0,
+                    n => knownByGroup(folded).exists(_.contains(n)) || live.contains(n), cfg.spec)
                   val tbl = routedTables.getOrElseUpdate(dir, loadOrCreate(dir,
-                    specShapedSchema(slice.schema("after").dataType.asInstanceOf[StructType], cfg.spec),
+                    CdcApply.tableStruct(slice.schema("after").dataType.asInstanceOf[StructType], cfg.spec),
                     cfg.spec, autoCreate = cfg.autoCreate))
                   CdcApply.applyBatch(
                     spark, tbl, slice, cfg.spec,
@@ -477,30 +451,6 @@ object CdcStream {
   private[graft] def pinnedKeep(base: Int, currentVersion: Long, cursors: Seq[Long]): Int =
     if (cursors.isEmpty) base
     else math.max(base, (currentVersion - cursors.min + 1).toInt)
-
-  /** Pure after-struct projection (no job): restrict the envelope to the
-    * given field names, preserving envelope order.
-    */
-  private[streaming] def projectAfter(slice: DataFrame, keep: Seq[String]): DataFrame =
-    slice.withColumn("after",
-      when(col("after").isNotNull, struct(keep.map(n => col(s"after.`$n`").as(n)): _*)))
-
-  /** The state-table shape under a payload target-column rename
-    * (MergeSpec.payloadTargetName): the event-side payload field name is
-    * replaced in place, everything else unchanged.
-    */
-  /** First-sight creation shape: the after-struct after the
-    * fields.whitelist projection AND the payload target-column rename —
-    * the same two transforms applyBatch performs on every event, so a
-    * created table starts with exactly the columns that will land.
-    */
-  private def specShapedSchema(s: StructType, spec: MergeSpec): StructType =
-    renamedSchema(graft.operators.CdcApply.whitelistedStruct(s, spec), spec)
-
-  private def renamedSchema(s: StructType, spec: MergeSpec): StructType =
-    if (spec.payloadTargetName.isEmpty || spec.payloadTargetName == spec.extractSource) s
-    else StructType(s.fields.map(f =>
-      if (f.name == spec.extractSource) f.copy(name = spec.payloadTargetName) else f))
 
   private def loadOrCreate(
       dir: String, schema: StructType, spec: MergeSpec, autoCreate: Boolean): IceLiteTable =

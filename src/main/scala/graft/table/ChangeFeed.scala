@@ -69,7 +69,7 @@ object ChangeFeed {
     val to = if (toVersion < 0) table.currentVersion else toVersion
     require(fromVersion >= 1 && fromVersion <= to,
       s"change-feed range ($fromVersion, $to] is invalid (need 1 <= from <= to)")
-    val sch = DataType.fromJson(table.snapshot(to).schemaJson).asInstanceOf[StructType]
+    val sch = table.snapshot(to).schema
 
     def flat(m: Map[Int, Seq[String]]): Set[String] = m.valuesIterator.flatten.toSet
     def abs(rel: Iterable[String]): Seq[String] =

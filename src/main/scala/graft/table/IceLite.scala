@@ -185,8 +185,7 @@ final class IceLiteTable(val dir: String) {
 
   def current: Snapshot = snapshot(currentVersion)
 
-  def schema: StructType =
-    org.apache.spark.sql.types.DataType.fromJson(current.schemaJson).asInstanceOf[StructType]
+  def schema: StructType = current.schema
 
   def numBuckets: Int = current.numBuckets
 
@@ -548,7 +547,7 @@ final class IceLiteTable(val dir: String) {
 
   private def readSnapshotState(
       spark: SparkSession, s: Snapshot, buckets: Option[Set[Int]]): DataFrame = {
-    val sch = schemaOf(s)
+    val sch = s.schema
     val base = bucketFiles(s, s.files, buckets).read(spark, sch)
     val deltas = bucketFiles(s, s.deltas, buckets)
     if (buckets.exists(_.size == 1)) MorRead.mergedInBucket(spark, sch, base, deltas)
@@ -559,9 +558,6 @@ final class IceLiteTable(val dir: String) {
     * explicit [[MorRead]] merge). */
   def readBase(spark: SparkSession, buckets: Option[Set[Int]] = None): DataFrame =
     baseScan(buckets).read(spark, schema)
-
-  private def schemaOf(s: Snapshot): StructType =
-    org.apache.spark.sql.types.DataType.fromJson(s.schemaJson).asInstanceOf[StructType]
 
   /** Fresh unique staging directory for one commit's data files. */
   private[graft] def newStageDir(): Path = {
@@ -973,7 +969,7 @@ final class IceLiteTable(val dir: String) {
     // the target buckets' small files, each read once, its rows kept only
     // for the target buckets listing it
     val staged = stage(spark,
-      bucketFiles(cur, targets, None).read(spark, schemaOf(cur))
+      bucketFiles(cur, targets, None).read(spark, cur.schema)
         .withColumn("bucket", IceLite.bucketOf(col("conv_id"), cur.numBuckets))
         .repartition(math.min(targets.size, math.max(1, spark.sparkContext.defaultParallelism)), col("bucket")),
       cur.numBuckets, oneTask = false, sortCols, BaseFileOptions)
@@ -1050,7 +1046,7 @@ final class IceLiteTable(val dir: String) {
       .take(math.max(0, maxBuckets))
       .map(_._1).toSet
     if (targets.isEmpty) return 0
-    val sch = schemaOf(cur)
+    val sch = cur.schema
     // one single-task job per bucket: the bucket's merge needs no
     // exchange (MorRead.mergedInBucket), and the jobs run side by side.
     // A union of per-bucket merges would run as ONE task (the union keeps
@@ -1298,6 +1294,9 @@ object IceLite {
       metrics: Map[String, Long],
       deltas: Map[Int, Seq[String]] = Map.empty,
       lastDeltaSeq: Long = 0L) {
+
+    /** The table schema this snapshot records. */
+    def schema: StructType = org.apache.spark.sql.types.DataType.fromJson(schemaJson).asInstanceOf[StructType]
 
     /** Every file listing, base then delta: a file shared by several
       * buckets appears once per bucket listing it.

@@ -27,8 +27,6 @@ object SchemaEvolution {
     (IntegerType, LongType),
     (FloatType, DoubleType))
 
-  final case class Rejected(reason: String) extends Exception(reason)
-
   /** Merge an incoming batch schema into the current table schema.
     * Returns the (possibly evolved) table schema, or Left(reason) when the
     * incoming schema is inadmissible (non-nullable add, incompatible type).
@@ -60,4 +58,12 @@ object SchemaEvolution {
     }
     Right(StructType(out))
   }
+
+  /** [[merge]], failing loudly on an inadmissible incoming schema: the one
+    * evolution step of every writer (a batch's schema, a commit-race
+    * retry's re-merge over the racer's schema, the event log's
+    * after-struct).
+    */
+  def evolve(table: StructType, incoming: StructType): StructType =
+    merge(table, incoming).fold(reason => throw new IllegalArgumentException(s"schema rejected: $reason"), identity)
 }

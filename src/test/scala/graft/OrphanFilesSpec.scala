@@ -50,7 +50,7 @@ class OrphanFilesSpec extends SparkSuite {
       seed: IceLiteTable => Unit, write: IceLiteTable => String, race: IceLiteTable => Unit,
       outcome: String, rows: Long)
 
-  private def rowsOf(tag: String, n: Int, turn: Int = 0) =
+  private def rowsOf(tag: String, n: Int, turn: Int) =
     eventsDF(spark, (0 until n).map(i => ins((turn * 1000 + i).toLong, f"$tag$i%03d", turn, s"$tag$turn-$i")))
   private def outcome(r: CdcApply.BatchResult): String = if (r.skipped) "skipped" else "committed"
   private def cdc(t: IceLiteTable, tag: String, n: Int, epoch: (String, Long), turn: Int = 0): String =

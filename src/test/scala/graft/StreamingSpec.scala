@@ -155,6 +155,30 @@ class StreamingSpec extends SparkSuite {
     val seen = labels.asScala.toSeq
     assert(seen.contains("cdc: quarantine write") && seen.contains("cdc: compaction"), seen.distinct)
     assert(seen.forall(_.startsWith("cdc:")), seen.filterNot(_.startsWith("cdc:")).distinct)
+
+    // the jobs each label starts per epoch (an epoch opens with its batch
+    // schema job): one planning aggregate and one fold + delta write under
+    // the epoch's seq, a quarantine write only in the epoch that holds the
+    // rejects, one compaction job per compacted bucket. An epoch with
+    // series deletes also runs its persisted, broadcast wipe aggregate
+    // under the fold's label: four jobs in all.
+    val perEpoch = seen.foldLeft(Vector.empty[Vector[String]]) { (acc, l) =>
+      if (l == "cdc: batch schema") acc :+ Vector(l) else acc.init :+ (acc.last :+ l)
+    }.map(_.groupMapReduce(identity)(_ => 1)(_ + _))
+    val applied = snaps.filter(_.metrics.contains("eventsApplied"))
+    assert(perEpoch.size == applied.size, perEpoch)
+    perEpoch.zip(applied).foreach { case (jobs, s) =>
+      val v = s.version
+      val wipes = spark.read.parquet(s.deltas.values.flatten.toSeq.distinct.map(f => s"${table.dir}/$f"): _*)
+        .filter(col("action") === graft.model.NetAction.Wipe).count() > 0
+      val want = Map(
+        "cdc: batch schema" -> 1, "cdc: wipe count" -> 1, "cdc: planning aggregate" -> 1,
+        s"cdc: fold + delta write (seq $v)" -> (if (wipes) 4 else 1),
+        "cdc: compaction" -> table.snapshot(v + 1).metrics("bucketsCompacted").toInt) ++
+        (if (s.metrics("rejected") > 0L) Map("cdc: quarantine write" -> 1) else Map.empty)
+      assert(jobs == want, s"epoch committing v$v")
+    }
+    assert(perEpoch.count(_.contains("cdc: quarantine write")) == 1)
   }
 
   test("one-file epochs fold, write deltas and append the event log with no shuffle; the decision runs no job") {

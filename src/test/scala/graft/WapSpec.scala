@@ -94,7 +94,7 @@ class WapSpec extends SparkSuite {
 
   test("concurrent audit writer vs direct writer: stale publishes are discarded+re-staged, final state equals oracle") {
     // One writer commits directly while another stages+publishes through
-    // the audit gate, truly concurrently. Staging reuses applyMor's race
+    // the audit gate, truly concurrently. Staging reuses applyBatch's race
     // fences (a commit landing mid-stage re-stages against the new
     // parent), and a commit landing between stage and publish makes the
     // publish fail loudly — the documented remedy (discard + re-stage +
