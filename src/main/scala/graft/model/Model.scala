@@ -158,7 +158,7 @@ final case class MergeSpec(
       * `IceLiteTable.compactDeltas` is called.
       *
       * Every batch reaches the table as merge-on-read: its net actions
-      * are APPENDED as per-bucket delta files (O(changes) per commit,
+      * are APPENDED as delta files (O(changes) per commit,
       * like the reference's row-level DML,
       * `.../sink/BufferedRecords.java:294-336`) and folded into the base
       * rows at read time — Iceberg's equality-delete/merge-on-read shape.

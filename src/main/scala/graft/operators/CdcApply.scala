@@ -1,13 +1,10 @@
 package graft.operators
 
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
-
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
-import graft.model.{MergeSpec, NetAction}
+import graft.model.MergeSpec
 import graft.table.{IceLite, IceLiteTable, SchemaEvolution}
 
 /** Applies one batch (micro-batch or whole-log replay) of change events to
@@ -27,11 +24,12 @@ import graft.table.{IceLite, IceLiteTable, SchemaEvolution}
   * `epoch:<streamId>` records the last applied batch id; a re-delivered
   * epoch is a no-op ([[graft.table.IceLiteTable.commitStaged]]).
   *
-  * Per epoch the batch source is scanned by (a) a NARROW planning
-  * aggregate (partition/offset only), (b) a narrow wipe count and, when
-  * the batch holds series deletes, a narrow wipe aggregate, (c) the fold
-  * + delta write — the one full-width scan, which also observes the
-  * rejected count — and (d) a quarantine write, only when rejects were
+  * Per epoch the batch source is scanned by (a) ONE narrow planning
+  * aggregate (per-partition offsets and counts, and the series-wipe
+  * total), (b) the fold + delta write — the one full-width scan, which
+  * also observes the rejected count and emits the wipe markers; when the
+  * batch holds series deletes, its narrow wipe aggregate is the fold's
+  * join side — and (c) a quarantine write, only when rejects were
   * observed. A streamed epoch with an event-log table scans it once more
   * for the append ([[EventLogApply]]). A batch whose scan plans to ONE
   * task runs each of these jobs in one task with no exchange
@@ -168,30 +166,24 @@ object CdcApply {
     val aligned = spec.foldAlignment == "bucket" && !oneTask
     val nb = snap0.numBuckets // pinned for every re-stage (commitWithRestage)
 
-    // Submitted first: only the commit needs the lineage, so the planning
-    // scan runs behind the wipe count and the delta stage instead of
-    // serializing in front of them (per-epoch Amdahl region).
-    val planning = Future(planningAggregate(spark, batch))(ExecutionContext.global)
-    val wipes = wipeSet(spark, batch, spec)
-    val result = try {
-      val observed = Observation()
-      val deltas = foldDeltas(tagged, observed, wipes, schema, spec, nb, aligned)
-      def stage(seq: Long) = stageDeltas(spark, table, deltas, nb, oneTask, rebalance = !aligned && !oneTask, seq)
-      val staged = stage(snap0.version + 1)
-      val lineage = Await.result(planning, Duration.Inf)
-      val eventsSeen = lineage.map(_.getAs[Long]("n")).sum
-      // epoch batches quarantine before the CAS, ad-hoc ones after it (quarantine)
-      val observedRejected = rejectedCount(observed, tagged)
-      val rejected =
-        if (epoch.isDefined) quarantine(spark, tagged, rejectedDir, epoch, observedRejected) else observedRejected
-      val committed = commitWithRestage(table, snap0, schema, staged, stage, epoch, auditRef,
-        props = parent => offsetProps(parent, lineage) ++ extraProps,
-        metrics = Map("eventsApplied" -> eventsSeen, "rejected" -> rejected))
-      committed.fold(skipped(table.current)) { case (snap, rowsWritten) =>
-        if (epoch.isEmpty) quarantine(spark, tagged, rejectedDir, epoch, rejected)
-        BatchResult(snap, skipped = false, rowsWritten, eventsSeen, rejected)
-      }
-    } finally wipes.release()
+    val lineage = planningAggregate(spark, batch, spec)
+    val eventsSeen = lineage.map(_.getAs[Long]("n")).sum
+    val wipes = wipeJoinSide(spark, batch, spec, lineage.map(_.getAs[Long]("wipes")).sum)
+    val observed = Observation()
+    val deltas = foldDeltas(tagged, observed, wipes, schema, spec, nb, aligned)
+    def stage(seq: Long) = stageDeltas(spark, table, deltas, nb, oneTask, rebalance = !aligned && !oneTask, seq)
+    val staged = stage(snap0.version + 1)
+    // epoch batches quarantine before the CAS, ad-hoc ones after it (quarantine)
+    val observedRejected = rejectedCount(observed, tagged)
+    val rejected =
+      if (epoch.isDefined) quarantine(spark, tagged, rejectedDir, epoch, observedRejected) else observedRejected
+    val committed = commitWithRestage(table, snap0, schema, staged, stage, epoch, auditRef,
+      props = parent => offsetProps(parent, lineage) ++ extraProps,
+      metrics = Map("eventsApplied" -> eventsSeen, "rejected" -> rejected))
+    val result = committed.fold(skipped(table.current)) { case (snap, rowsWritten) =>
+      if (epoch.isEmpty) quarantine(spark, tagged, rejectedDir, epoch, rejected)
+      BatchResult(snap, skipped = false, rowsWritten, eventsSeen, rejected)
+    }
     compact(spark, table, spec)
     result
   }
@@ -238,79 +230,56 @@ object CdcApply {
   /** NARROW planning aggregate (r06): per-log-partition lineage (offsets
     * advance past errant records — quarantined, not retried,
     * `.../sink/JdbcSinkTaskTest.java:324-492`) needs only (partition,
-    * max_off, n) — none of which touch _error, so the scan prunes to two
+    * max_off, n) — none of which touch _error, so the scan prunes to
     * envelope columns (the round-5 form aggregated `bad` here, whose
     * _error reference dragged the FULL payload struct into this scan —
     * measured ~39s of task time per 12M-event epoch decoding text the
     * planning job never used). The rejected count rides the fold job's
-    * own full-width scan as an observed metric ([[foldDeltas]]). Runs on
-    * a pool thread: it labels its own job.
+    * own full-width scan as an observed metric ([[foldDeltas]]).
+    *
+    * The third column, `wipes`, counts the batch's valid series deletes
+    * for [[wipeJoinSide]]'s gate. Only the [[wipeable]] extraction check
+    * reads the payload, and only when extraction is configured.
     */
-  private def planningAggregate(spark: SparkSession, batch: DataFrame): Array[Row] =
+  private def planningAggregate(spark: SparkSession, batch: DataFrame, spec: MergeSpec): Array[Row] =
     labelled(spark, "cdc: planning aggregate") {
-      batch.groupBy("partition").agg(max("offset").as("max_off"), count(lit(1)).as("n")).collect()
+      batch.groupBy("partition").agg(max("offset").as("max_off"), count(lit(1)).as("n"),
+        count(when(col("op") === "delete" && col("turn_idx").isNull && wipeable(batch, spec), true)).as("wipes"))
+        .collect()
     }
 
-  /** The batch's series wipes, (conv_id, wipe_off) per deleted
-    * conversation, and how many there are.
+  /** A delete is a series-wipe candidate iff deletes are admitted, its key
+    * is sound and its payload extraction (when configured) did not fail —
+    * exactly tagErrors' rule for op=delete (the after-null and turn-null
+    * rules never apply to deletes).
     */
-  private final case class WipeSet(rows: DataFrame, count: Long) {
-    /** The fold's join side: broadcast below [[WipeBroadcastMax]]. Only
-      * the join gets the hint — a hinted non-join frame (the wipe-marker
-      * projection) makes Spark log "broadcast ... not part of a join
-      * relation" every epoch.
-      */
-    def joinSide: DataFrame = if (count <= WipeBroadcastMax) broadcast(rows) else rows
-    def release(): Unit = if (count > 0L) rows.unpersist(blocking = false)
-  }
+  private def wipeable(batch: DataFrame, spec: MergeSpec): Column =
+    if (!spec.deleteEnabled) lit(false)
+    else if (batch.columns.contains("_extract_error")) col("conv_id").isNotNull && col("_extract_error").isNull
+    else col("conv_id").isNotNull
 
-  /** The wipe-broadcast gate needs a count BEFORE the fold plan is built
-    * (an unhinted wipe join materializes the payload side into an extra
-    * shuffle even when AQE later converts it to broadcast — measured,
-    * that shuffle is the regression). Use a dedicated MINIMAL count:
-    * three narrow envelope columns, no `after` access, overlapped with
-    * the planning scan. A delete is a wipe candidate iff its key is
-    * sound, deletes are admitted and its payload extraction (when
-    * configured) did not fail — exactly tagErrors' rule for op=delete.
-    * Only the extraction check reads the payload, and only when
-    * configured.
-    *
-    * The wipe aggregate has TWO consumers in the delta write: the fold's
-    * wipe join (broadcast build) and the wipe-marker union leg — without
-    * a persist each re-runs the scan+aggregate over the batch (measured
-    * as two low-concurrency stages per epoch). The small
-    * (deleted-conversations-sized) frame is persisted until
-    * [[WipeSet.release]], after the last re-stage.
+  /** The fold's wipe join side for a batch holding `n` series wipes:
+    * (conv_id, wipe_off) per deleted conversation. The gate needs the
+    * count BEFORE the fold plan is built (an unhinted wipe join
+    * materializes the payload side into an extra shuffle even when AQE
+    * later converts it to broadcast — measured, that shuffle is the
+    * regression): none at 0 (an empty relation, which the optimizer
+    * drops from the plan), broadcast up to [[WipeBroadcastMax]], else the
+    * planner's join. [[seriesWipes]] over the [[wipeable]] rows of the
+    * batch equals it over the valid events, and stays off the payload.
     */
-  private def wipeSet(spark: SparkSession, batch: DataFrame, spec: MergeSpec): WipeSet = {
-    val wipeable =
-      if (batch.columns.contains("_extract_error"))
-        col("conv_id").isNotNull && col("_extract_error").isNull
-      else col("conv_id").isNotNull
-    val n =
-      if (!spec.deleteEnabled) 0L
-      else labelled(spark, "cdc: wipe count") {
-        batch.filter(col("op") === "delete" && col("turn_idx").isNull && wipeable).count()
-      }
+  private def wipeJoinSide(spark: SparkSession, batch: DataFrame, spec: MergeSpec, n: Long): DataFrame =
     if (n == 0L)
-      WipeSet(spark.createDataFrame(new java.util.ArrayList[Row](),
-        StructType(Seq(StructField("conv_id", StringType), StructField("wipe_off", LongType)))), 0L)
-    else
-      // narrow equivalent of seriesWipes(valid): an op=delete row is
-      // valid iff it is `wipeable` (the after-null and turn-null rules
-      // never apply to deletes, and deletes are admitted on this path —
-      // n > 0 implies deleteEnabled), so filtering the batch directly
-      // keeps the wipe scan off the payload struct. parts: see
-      // seriesWipes — the persisted frame otherwise pins a
-      // shuffle.partitions-wide layout whose near-empty cached
-      // partitions cost scheduling wall in every consumer.
-      WipeSet(MergeEngine.seriesWipes(batch.filter(wipeable), parts = Some(MergeEngine.wipePartitions(n)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), n)
-  }
+      spark.createDataFrame(new java.util.ArrayList[Row](),
+        StructType(Seq(StructField("conv_id", StringType), StructField("wipe_off", LongType))))
+    else {
+      val wipes = MergeEngine.seriesWipes(batch.filter(wipeable(batch, spec)))
+      if (n <= WipeBroadcastMax) broadcast(wipes) else wipes
+    }
 
   /** The delta rows of the batch: its net actions (the per-key fold of
-    * the valid events, normalized to `schema`) and one wipe marker per
-    * wiped conversation, each with its `bucket` of `numBuckets`.
+    * the valid events, normalized to `schema`, with one wipe marker per
+    * wiped conversation), each with its `bucket` of `numBuckets`.
     *
     * The rejected count is observed on the fold's scan into `observed`
     * (the fold reads the batch exactly once: no extra job, no extra
@@ -323,24 +292,16 @@ object CdcApply {
     * actions get their bucket here and the write-side redistribution in
     * [[stageDeltas]].
     */
-  private def foldDeltas(tagged: DataFrame, observed: Observation, wipes: WipeSet, schema: StructType,
+  private def foldDeltas(tagged: DataFrame, observed: Observation, wipes: DataFrame, schema: StructType,
                          spec: MergeSpec, numBuckets: Int, aligned: Boolean): DataFrame = {
     val valid = tagged
       .observe(observed, sum(when(col("_error").isNotNull, 1L).otherwise(0L)).as("bad"))
       .filter(col("_error").isNull).drop("_error")
     val actions = normalize(
-      MergeEngine.netActions(valid, wipes.joinSide, if (aligned) Some(numBuckets) else None), schema, spec)
-    val actionRows =
-      if (aligned) actions.select(col("bucket"), col("conv_id"), col("turn_idx"), col("action"), col("row"))
-      else actions.select(col("conv_id"), col("turn_idx"), col("action"), col("row"))
-        .withColumn("bucket", MergeEngine.bucketOf(col("conv_id"), numBuckets))
-    val wipeRows = wipes.rows.select(
-      col("conv_id"),
-      lit(null).cast("int").as("turn_idx"),
-      lit(NetAction.Wipe).as("action"),
-      lit(null).cast(schema).as("row"))
+      MergeEngine.netActions(valid, wipes, if (aligned) Some(numBuckets) else None), schema, spec)
+    if (aligned) actions.select(col("bucket"), col("conv_id"), col("turn_idx"), col("action"), col("row"))
+    else actions.select(col("conv_id"), col("turn_idx"), col("action"), col("row"))
       .withColumn("bucket", MergeEngine.bucketOf(col("conv_id"), numBuckets))
-    actionRows.unionByName(wipeRows)
   }
 
   /** Normalize action rows to the (possibly evolved) table schema:
@@ -375,11 +336,13 @@ object CdcApply {
     *
     * Delta files are TRANSIENT (folded into zstd'd, sorted, bloom'd base
     * files at compaction): write them LSM-L0 style — light compression,
-    * no sort, no bloom. MOR readers scan a touched bucket's deltas fully
-    * anyway (only the bucket= dir prunes), so row-group stats/sort order
-    * buy nothing here and the zstd+sort CPU was the largest block of the
-    * per-epoch profile. Rows are seq-stamped per attempt: the commit CAS
-    * rejects a stolen seq, and a retry re-stages under the new one.
+    * no sort beyond the bucket order, no bloom. MOR readers scan a
+    * touched bucket's deltas fully anyway (a bucket= dir prunes by path,
+    * a one-task epoch file by its bucket column's page index), so key
+    * stats/sort order buy nothing here and the zstd+sort CPU was the
+    * largest block of the per-epoch profile. Rows are seq-stamped per
+    * attempt: the commit CAS rejects a stolen seq, and a retry re-stages
+    * under the new one.
     */
   private def stageDeltas(spark: SparkSession, table: IceLiteTable, deltas: DataFrame, numBuckets: Int,
                           oneTask: Boolean, rebalance: Boolean, seq: Long): IceLite.Staged =

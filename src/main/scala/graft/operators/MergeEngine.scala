@@ -7,8 +7,9 @@ import graft.model.NetAction
 
 /** The CDC merge engine: turns a micro-batch of change events into the
   * minimal set of per-key net effects. [[CdcApply]] appends them as
-  * per-bucket delta files; [[graft.table.MorRead]] applies them to the
-  * base rows at read time.
+  * delta files (one per epoch scanned in one task, else one per
+  * bucket); [[graft.table.MorRead]] applies them to the base rows at
+  * read time.
   *
   * Semantics reproduced from the reference connector (SURVEY.md §2.A):
   *  - per-key sequential application in offset order
@@ -89,23 +90,11 @@ object MergeEngine {
     * Only the max matters: a series delete at offset D makes every prior
     * event of the conversation irrelevant (state is known-Absent at D),
     * so intermediate wipes are subsumed. Tiny output — broadcastable.
-    *
-    * `parts`: narrow the aggregated output to this many partitions.
-    * The caller that PERSISTS this frame (CdcApply's MOR path) wants it:
-    * persist pins the plan's output partitioning (AQE coalescing is off
-    * under caching — `canChangeCachedPlanOutputPartitioning` defaults
-    * false), so the default `spark.sql.shuffle.partitions`-wide exchange
-    * materializes and is re-read as ~100 near-empty cached partitions —
-    * measured as three ~96-task/near-zero-work stages costing ~0.5-0.8s
-    * of pure scheduling wall EACH per epoch. The narrowing is a coalesce
-    * AFTER the aggregation, so the exchange still carries map-side
-    * partials; size it with [[wipePartitions]]. */
-  def seriesWipes(events: DataFrame, parts: Option[Int] = None): DataFrame = {
-    val wipes = events.filter(col("op") === "delete" && col("turn_idx").isNull)
+    */
+  def seriesWipes(events: DataFrame): DataFrame =
+    events.filter(col("op") === "delete" && col("turn_idx").isNull)
       .groupBy("conv_id")
       .agg(max("offset").as("wipe_off"))
-    parts.fold(wipes)(p => wipes.coalesce(p))
-  }
 
   /** True when `batch` plans to at most one task with no exchange: its
     * physical plan holds no exchange, no subquery and no adaptive node,
@@ -140,16 +129,6 @@ object MergeEngine {
     narrow && (plan.outputPartitioning == SinglePartition || leafTasks <= 1)
   }
 
-  /** Series wipes per partition of a persisted wipe set. */
-  val WipesPerPartition: Long = 50000L
-
-  /** Partitions for a batch of `nWipes` series deletes: one per
-    * [[WipesPerPartition]], at least one — the wipe set is
-    * deletion-sized, independent of corpus scale.
-    */
-  def wipePartitions(nWipes: Long): Int =
-    math.max(1L, (nWipes + WipesPerPartition - 1) / WipesPerPartition).toInt
-
   /** Per-(conv_id, turn_idx) net action of the batch.
     *
     * Derivation (provably order-equivalent to the sequential per-key fold,
@@ -164,15 +143,25 @@ object MergeEngine {
     *    is decided by the base rows at read time;
     *  - no anchor, wiped           ⇒ Del (state was known-Absent).
     *
-    * Output: (conv_id, turn_idx, action, row struct) — one row per touched key.
+    * Output: (conv_id, turn_idx, action, row struct, src_offset,
+    * src_partition) — one row per touched key, plus one [[NetAction.Wipe]]
+    * marker per wiped conversation (turn_idx and row null, lineage of its
+    * last series delete).
     */
   def netActions(events: DataFrame): DataFrame =
     netActions(events, broadcast(seriesWipes(events)))
 
-  /** As above, with a pre-computed (possibly cached) wipe set. The caller
-    * decides whether to broadcast it (CdcApply does, below its bulk-delete
-    * threshold); an unhinted wipe set joins by shuffle, and AQE still
-    * broadcasts it at runtime if it is actually small.
+  /** As above, with a pre-computed wipe set ([[seriesWipes]] of the same
+    * events). The caller decides whether to broadcast it (CdcApply does,
+    * below its bulk-delete threshold); an unhinted wipe set joins by
+    * shuffle, and AQE still broadcasts it at runtime if it is actually
+    * small.
+    *
+    * Series deletes ride the fold: they stay in the window stream (the
+    * wipe filter keeps every turn_idx-null row), so each wiped
+    * conversation's (conv_id, null) group folds like any key and its last
+    * row becomes the conversation's Wipe marker — the wipe set's only
+    * consumer is this join.
     *
     * Physical shape: ONE exchange on the grouping key, ONE sort of the
     * payload-bearing batch, one Window pass, no aggregation. In every
@@ -210,9 +199,9 @@ object MergeEngine {
                  bucketed: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val turnEvents0 = events
-      .filter(col("turn_idx").isNotNull)
+      .filter(col("turn_idx").isNotNull || col("op") === "delete")
       .join(wipes, Seq("conv_id"), "left")
-      .filter(col("offset") > coalesce(col("wipe_off"), lit(Long.MinValue)))
+      .filter(col("turn_idx").isNull || col("offset") > coalesce(col("wipe_off"), lit(Long.MinValue)))
     // repartition AFTER the wipe join: a bulk (non-broadcast) wipe join
     // exchanges on conv_id anyway; aligning before it would add a third
     // payload crossing instead of removing one
@@ -245,7 +234,8 @@ object MergeEngine {
         (bucketed.map(_ => col("bucket")).toSeq ++ Seq(
         col("conv_id"),
         col("turn_idx"),
-        when(col("_a").isNull && col("wipe_off").isNull, NetAction.UpdateIfExists)
+        when(col("turn_idx").isNull, NetAction.Wipe)
+          .when(col("_a").isNull && col("wipe_off").isNull, NetAction.UpdateIfExists)
           .when(col("_a").isNull, NetAction.Del)
           .when(col("_a.op") === "delete", NetAction.Del)
           .otherwise(NetAction.Put)

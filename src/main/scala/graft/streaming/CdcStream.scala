@@ -226,6 +226,20 @@ object CdcStream {
       .foreachBatch { (df: DataFrame, epochId: Long) =>
         val batch =
           resolveBatch(spark, cfg, epochId, df).drop("chunk")
+        // A routed batch's topics: one narrow aggregate over the topic
+        // column (topic count is bounded by the upstream subscription). An
+        // event with a null topic routes to no table, so it fails the epoch
+        // before anything commits instead of vanishing unapplied,
+        // unquarantined and uncounted. It runs ahead of the event-log
+        // append, so the log never records an epoch no table applied.
+        val topics: Seq[String] = cfg.routing.toSeq.flatMap { r =>
+          val perTopic = batch.groupBy(col(r.topicColumn).cast("string")).count().collect()
+          val unrouted = perTopic.filter(_.isNullAt(0)).map(_.getLong(1)).sum
+          if (unrouted > 0L)
+            throw new IllegalStateException(s"epoch $epochId: $unrouted event(s) have a null " +
+              s"'${r.topicColumn}' and route to no table — fix the topic column upstream")
+          perTopic.map(_.getString(0)).sorted.toSeq
+        }
         // The event-log append and the state merge are independent jobs
         // against different tables — submit the append concurrently so it
         // overlaps the merge's driver-side planning/commit (the Amdahl
@@ -251,14 +265,10 @@ object CdcStream {
               epoch = Some((cfg.streamId, epochId)),
               rejectedDir = cfg.rejectedDir)
           case Some(r) =>
-            // one narrow distinct over the batch (topic column only);
-            // topic count is bounded by the upstream subscription.
             // Topics whose FOLDED name coincides (tableNameCase) are one
             // table: group them and apply the union slice once — applying
             // them separately under the same (streamId, epochId) marker
             // would silently skip every slice after the first.
-            val topics = batch.select(col(r.topicColumn).cast("string"))
-              .na.drop().distinct().collect().map(_.getString(0)).sorted
             val groups: Seq[(String, Seq[String])] =
               topics.groupBy(r.foldTopic).toSeq.sortBy(_._1).map { case (f, ts) => (f, ts.toSeq.sorted) }
 

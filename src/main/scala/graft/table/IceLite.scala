@@ -375,7 +375,7 @@ final class IceLiteTable(val dir: String) {
     * checkpoint already committed. The restored epoch properties make a
     * REDELIVERED rolled-back epoch apply (not skip), so to re-ingest
     * the reverted range restart the stream from a fresh checkpoint (or
-    * a new streamId, per the high-water WARN in CdcApply.lastEpoch).
+    * a new streamId, per the high-water WARN in CdcApply.warnBelowMark).
     */
   def rollback(toVersion: Long): Snapshot = {
     // validate eagerly: commit's build callback may retry under CAS, and

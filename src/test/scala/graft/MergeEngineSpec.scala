@@ -144,13 +144,15 @@ class MergeEngineSpec extends SparkSuite {
       ins(0, "c1", 0, "a"), upd(1, "c1", 0, "b"),      // Put(b)
       upd(2, "c2", 0, "cond"),                          // UpdateIfExists
       ins(3, "c3", 0, "x"), del(4, "c3", Some(0)),      // Del
-      del(5, "c4", None), upd(6, "c4", 1, "ghost"))     // Del (wiped ⇒ known-absent)
-    val acts = MergeEngine.netActions(eventsDF(spark, evs))
-      .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getString(2)).toMap
-    assert(acts(("c1", 0)) == NetAction.Put)
-    assert(acts(("c2", 0)) == NetAction.UpdateIfExists)
-    assert(acts(("c3", 0)) == NetAction.Del)
-    assert(acts(("c4", 1)) == NetAction.Del)
+      del(5, "c4", None), upd(6, "c4", 1, "ghost"))     // Del (wiped ⇒ known-absent) + c4's Wipe
+    val rows = MergeEngine.netActions(eventsDF(spark, evs)).collect()
+    val acts = rows.map(r => (r.getString(0), Option(r.getAs[Integer](1)).map(_.intValue)) -> r.getString(2)).toMap
+    assert(acts(("c1", Some(0))) == NetAction.Put)
+    assert(acts(("c2", Some(0))) == NetAction.UpdateIfExists)
+    assert(acts(("c3", Some(0))) == NetAction.Del)
+    assert(acts(("c4", Some(1))) == NetAction.Del)
+    assert(acts(("c4", None)) == NetAction.Wipe)
+    assert(rows.length == 5, rows.mkString("\n"))
   }
 }
 

@@ -69,12 +69,23 @@ class PlanSpec extends SparkSuite {
     * one group per (conv_id, turn_idx) built from conditional `max_by`s —
     * the key's last event supplies value and lineage, the last non-update
     * its anchor, and a wipe with no later anchor turns updates into a
-    * delete.
+    * delete — plus a separate marker leg: one Wipe row per conversation
+    * of `wipes`, with the lineage of its last series delete.
     */
   private def aggFold(events: org.apache.spark.sql.DataFrame,
                       wipes: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     import graft.model.NetAction
     val anchorOff = when(col("op") =!= "update", col("offset"))
+    val markers = wipes
+      .join(events.filter(col("op") === "delete" && col("turn_idx").isNull)
+        .groupBy("conv_id").agg(max_by(col("partition"), col("offset")).as("src_partition")), Seq("conv_id"))
+      .select(
+        col("conv_id"),
+        lit(null).cast("int").as("turn_idx"),
+        lit(NetAction.Wipe).as("action"),
+        lit(null).cast(events.schema("after").dataType).as("row"),
+        col("wipe_off").as("src_offset"),
+        col("src_partition"))
     events
       .filter(col("turn_idx").isNotNull)
       .join(wipes, Seq("conv_id"), "left")
@@ -99,6 +110,7 @@ class PlanSpec extends SparkSuite {
           .as("row"),
         col("last_off").as("src_offset"),
         col("last.part").as("src_partition"))
+      .unionByName(markers)
   }
 
   test("fold=window equals fold=agg on net actions (both alignments)") {
@@ -142,7 +154,7 @@ class PlanSpec extends SparkSuite {
 
   test("bucket-aligned and key-aligned folds produce identical net actions") {
     import TestHelpers._
-    import graft.model.NetAction.{Del, Put, UpdateIfExists}
+    import graft.model.NetAction.{Del, Put, UpdateIfExists, Wipe}
     val evs = Seq(
       ins(0, "c1", 0, "a"), upd(1, "c1", 0, "b"), del(2, "c1", Some(0)),
       ins(3, "c2", 1, "x"), upd(4, "c2", 1, "y"), ins(5, "c3", 0, "z"),
@@ -151,19 +163,22 @@ class PlanSpec extends SparkSuite {
       // duplicate delivery of an identical row: either pick is the same row
       ins(3, "c2", 1, "x"))
     // (conv_id, turn_idx, action, row text, src_offset): the lineage is
-    // the key's last event; c3/0 precedes c3's wipe and has no action
+    // the key's last event; c3/0 precedes c3's wipe and has no action,
+    // and c3's wipe marker carries the series delete's offset
     val want = Seq(
-      ("c1", 0, Del, null, 2L),
-      ("c2", 1, Put, "y", 4L),
-      ("c3", 1, Put, "w", 7L),
-      ("c4", 2, UpdateIfExists, "u", 8L),
-      ("c5", 0, Del, null, 11L))
+      ("c1", Some(0), Del, null, 2L),
+      ("c2", Some(1), Put, "y", 4L),
+      ("c3", None, Wipe, null, 6L),
+      ("c3", Some(1), Put, "w", 7L),
+      ("c4", Some(2), UpdateIfExists, "u", 8L),
+      ("c5", Some(0), Del, null, 11L))
     val events = eventsDF(spark, evs)
     val wipes = broadcast(graft.operators.MergeEngine.seriesWipes(events))
     def actions(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("conv_id", "turn_idx")
         .select(col("conv_id"), col("turn_idx"), col("action"), col("row.text"), col("src_offset"))
-        .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getString(3), r.getLong(4)))
+        .collect().map(r => (r.getString(0), Option(r.getAs[Integer](1)).map(_.intValue), r.getString(2),
+          r.getString(3), r.getLong(4)))
         .toSeq
     val keyed = actions(graft.operators.MergeEngine.netActions(events, wipes))
     val bucketed = actions(graft.operators.MergeEngine.netActions(events, wipes, Some(8)))
@@ -209,8 +224,12 @@ class PlanSpec extends SparkSuite {
     val (one, oneFold, oneLog) = epochPlans(batchShapes.head)
     assert(oneFold == 0 && oneLog == 0,
       s"fold + delta write: $oneFold, event-log append: $oneLog shuffles\n${one.map(_._1).mkString("\n\n")}")
-    // planning aggregate and wipe count plan none either
+    // the planning aggregate plans none either
     assert(one.forall(_._2 == 0), one.filter(_._2 > 0).map(_._1).mkString("\n\n"))
+    // the epoch holds a series delete (c3): its wipe set reaches the fold
+    // uncached
+    val foldPlans = one.map(_._1).filter(_.contains("/state/"))
+    assert(foldPlans.nonEmpty && !foldPlans.exists(_.contains("InMemoryTableScan")), foldPlans.mkString("\n\n"))
     // the multi-task shape keeps its exchange plan
     val (_, multiFold, multiLog) = epochPlans(batchShapes.last)
     assert(multiFold > 0 && multiLog > 0, s"multi-task fold: $multiFold, append: $multiLog")
@@ -430,24 +449,60 @@ class PlanSpec extends SparkSuite {
 
   test("events parquet scan prunes to envelope columns used by the planning aggregate") {
     import TestHelpers._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import scala.jdk.CollectionConverters._
     val d = tmpDir("planspec-scan")
-    eventsDF(spark, Seq(ins(0, "c1", 0, "a"))).write.parquet(s"$d/ev")
-    val fromDisk = spark.read.parquet(s"$d/ev")
-    // the exact MOR-path narrow planning aggregate (r06): no _error
-    // reference anywhere — an aggregate touching _error reads the WHOLE
-    // after struct (IsNull over a struct defeats nested-schema pruning),
-    // which is why the rejected count moved to an observed metric on the
-    // fold's own scan
-    val plan = planOf(
-      fromDisk.groupBy("partition").agg(max("offset").as("max_off"), count(lit(1)).as("n")))
-    val readSchema = plan.linesIterator.find(_.trim.startsWith("ReadSchema")).getOrElse("")
-    assert(!readSchema.contains("after"),
-      s"narrow planning scan must not read the after struct at all: $readSchema")
-    // and the narrow wipe aggregate stays off the payload too
-    val wipePlan = planOf(graft.operators.MergeEngine.seriesWipes(
-      fromDisk.filter(col("conv_id").isNotNull)))
-    val wipeRead = wipePlan.linesIterator.find(_.trim.startsWith("ReadSchema")).getOrElse("")
-    assert(!wipeRead.contains("after"),
-      s"wipe aggregate scan must not read the after struct: $wipeRead")
+    // a series delete, so the aggregate's wipe column counts one
+    eventsDF(spark, Seq(ins(0, "c1", 0, "a"), del(1, "c2", None))).write.parquet(s"$d/ev")
+    val t = graft.table.IceLite.create(s"$d/t", turnSchema, 4)
+    // the physical plan of each query the engine runs, by its job label
+    val plans = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          plans.merge(s.description, s.physicalPlanDescription, _ + "\n" + _)
+        case _ =>
+      }
+    }
+    def foldPlan = plans.asScala.collectFirst { case (l, p) if l.startsWith("cdc: fold + delta write") => p }
+    // no size-based broadcast: only the engine's own hint broadcasts the
+    // wipe set
+    val broadcastKeys = Seq("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    broadcastKeys.foreach(spark.conf.set(_, "-1"))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      graft.operators.CdcApply.applyBatch(spark, t, spark.read.parquet(s"$d/ev"),
+        spec = graft.model.MergeSpec(morCompactThreshold = 1000))
+      val deadline = System.currentTimeMillis() + 20000 // listener bus drain
+      while (!(plans.containsKey("cdc: planning aggregate") && foldPlan.nonEmpty) &&
+        System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      broadcastKeys.foreach(spark.conf.unset)
+    }
+    // the engine's narrow planning aggregate (r06), its wipe column
+    // included: no _error reference anywhere — an aggregate touching
+    // _error reads the WHOLE after struct (IsNull over a struct defeats
+    // nested-schema pruning), which is why the rejected count moved to
+    // an observed metric on the fold's own scan
+    val plan = Option(plans.get("cdc: planning aggregate")).getOrElse("")
+    val readSchemas = plan.linesIterator.filter(_.trim.startsWith("ReadSchema")).toSeq
+    assert(readSchemas.nonEmpty && readSchemas.forall(!_.contains("after")),
+      s"narrow planning scan must not read the after struct at all:\n$plan")
+    // and the fold's wipe aggregate, the scan under its broadcast join
+    // side, stays off the payload too
+    val fold = foldPlan.getOrElse("")
+    val tree = fold.linesIterator.drop(1).takeWhile(_.nonEmpty).toSeq
+    val bx = tree.indexWhere(_.contains("BroadcastExchange"))
+    assert(bx >= 0, s"the fold of a series-delete batch must broadcast its wipe set:\n$fold")
+    val wipeScans = tree.drop(bx + 1).takeWhile(_.indexOf("- ") > tree(bx).indexOf("- "))
+      .filter(_.contains("Scan parquet")).map(l => l.substring(l.lastIndexOf("(")).trim)
+    val wipeReads = wipeScans.flatMap(n => fold.split("\n\n").find(_.startsWith(s"$n Scan parquet")))
+      .flatMap(_.linesIterator.find(_.startsWith("ReadSchema")))
+    assert(wipeReads.nonEmpty && wipeReads.size == wipeScans.size && wipeReads.forall(!_.contains("after")),
+      s"wipe aggregate scan must not read the after struct:\n$fold")
+    assert(t.read(spark).count() == 1L)
   }
 }

@@ -160,24 +160,27 @@ class StreamingSpec extends SparkSuite {
     // schema job): one planning aggregate and one fold + delta write under
     // the epoch's seq, a quarantine write only in the epoch that holds the
     // rejects, one compaction job per compacted bucket. An epoch with
-    // series deletes also runs its persisted, broadcast wipe aggregate
-    // under the fold's label: four jobs in all.
+    // series deletes also runs its broadcast wipe aggregate under the
+    // fold's label: two jobs (one would mean an unhinted wipe join, which
+    // shuffles the payload).
     val perEpoch = seen.foldLeft(Vector.empty[Vector[String]]) { (acc, l) =>
       if (l == "cdc: batch schema") acc :+ Vector(l) else acc.init :+ (acc.last :+ l)
     }.map(_.groupMapReduce(identity)(_ => 1)(_ + _))
     val applied = snaps.filter(_.metrics.contains("eventsApplied"))
     assert(perEpoch.size == applied.size, perEpoch)
-    perEpoch.zip(applied).foreach { case (jobs, s) =>
+    val wiped = perEpoch.zip(applied).map { case (jobs, s) =>
       val v = s.version
       val wipes = spark.read.parquet(s.deltas.values.flatten.toSeq.distinct.map(f => s"${table.dir}/$f"): _*)
         .filter(col("action") === graft.model.NetAction.Wipe).count() > 0
       val want = Map(
-        "cdc: batch schema" -> 1, "cdc: wipe count" -> 1, "cdc: planning aggregate" -> 1,
-        s"cdc: fold + delta write (seq $v)" -> (if (wipes) 4 else 1),
+        "cdc: batch schema" -> 1, "cdc: planning aggregate" -> 1,
+        s"cdc: fold + delta write (seq $v)" -> (if (wipes) 2 else 1),
         "cdc: compaction" -> table.snapshot(v + 1).metrics("bucketsCompacted").toInt) ++
         (if (s.metrics("rejected") > 0L) Map("cdc: quarantine write" -> 1) else Map.empty)
       assert(jobs == want, s"epoch committing v$v")
+      wipes
     }
+    assert(wiped.contains(true), "no epoch held a series wipe")
     assert(perEpoch.count(_.contains("cdc: quarantine write")) == 1)
   }
 
@@ -493,6 +496,27 @@ class StreamingSpec extends SparkSuite {
     }
     val a = IceLite.load(s"$root/tables/alpha").read(spark).select("event").collect()
     assert(a.map(_.getString(0)).toSeq == Seq("hello"))
+  }
+
+  test("routing: null-topic events fail the epoch before any table commits") {
+    val root = tmpDir("stream-route-nulltopic")
+    val evs = Seq(ins(0L, "cA", 0, "a0"), ins(1L, "cB", 0, "b0"), ins(2L, "cC", 0, "c0"))
+    eventsDF(spark, evs)
+      .withColumn("schema_v", lit(2)).drop("schemaV")
+      .withColumn("topic", when(col("conv_id") === "cA", lit("alpha")))
+      .write.parquet(s"$root/log/chunk=0")
+    val sc = CdcStream.StreamConfig(
+      s"$root/log", tableDir = s"$root/unused", checkpointDir = s"$root/ckpt",
+      eventLogTableDir = Some(s"$root/logtbl"),
+      routing = Some(CdcStream.Routing(s"$root/tables/" + "${topic}")))
+    val e = intercept[Exception](CdcStream.start(spark, sc).awaitTermination())
+    def root0(t: Throwable): Throwable = if (t.getCause == null) t else root0(t.getCause)
+    val msg = root0(e).getMessage
+    assert(msg.contains("2 event(s)") && msg.contains("'topic'"), msg)
+    // neither the routed table nor the event log holds the failed epoch
+    assert(!Files.exists(Paths.get(s"$root/tables/alpha")), "a routed table committed the failed epoch")
+    assert(!IceLite.load(s"$root/logtbl").current.properties.contains("epoch:cdc"),
+      "the event log recorded the failed epoch")
   }
 
   test("automatic maintenance: snapshot chain stays bounded across a long streamed replay") {

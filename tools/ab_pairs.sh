@@ -9,10 +9,14 @@
 # The parent is extracted with `git archive` into a temporary directory,
 # removed on exit. Each side builds from its own sources and runs through
 # its own perfbench/run.py with `--seconds 9 --trace 0`; nothing under
-# perfbench/ or BENCHMARK.json is touched. Prints one line per pair and
-# the medians of task_cpu_s, shuffle_bytes and setup_s, with how many
-# pairs the change is lower in, and flags any run that was not correct or
-# had a failed operation. AB_KEEP=<dir> keeps every run's output there.
+# perfbench/ or BENCHMARK.json is touched. Prints one line per pair and,
+# for task_cpu_s, shuffle_bytes and setup_s, both sides' medians and
+# quartiles, the parent's interquartile range, and in how many pairs the
+# change is lower and tied; flags any run that was not correct or had a
+# failed operation. A gain holds when the change is lower in at least
+# nine tenths of the pairs (ties count for neither side) and the medians
+# differ by more than the parent's IQR. AB_KEEP=<dir> keeps every run's
+# output there.
 set -euo pipefail
 if [ $# -lt 3 ]; then
   echo "usage: $0 <parent-sha> <workload> <seed>..." >&2
@@ -69,11 +73,20 @@ for s in seeds:
     ok = all(r["correct"] and r["failed"] == 0 for r in (p, c))
     pairs.append((pv, cv))
     print(f"{s:<5} " + "  ".join(f"{pv[k]:>12.6g} -> {cv[k]:<12.6g}" for k in keys) + f"  {'yes' if ok else 'NO'}")
+def quartiles(xs):
+    # (q1, median, q3); one run has no spread
+    return tuple(statistics.quantiles(xs, n=4, method="inclusive")) if len(xs) > 1 else (xs[0],) * 3
+
 if pairs:
-    print(f"median of {len(pairs)} pairs, parent -> change (change lower in k of n):")
+    n = len(pairs)
+    print(f"{n} pairs, parent -> change: median [q1, q3]; parent IQR; change lower in k, tied t, of n:")
     for k in keys:
-        pm = statistics.median(p[k] for p, _ in pairs)
-        cm = statistics.median(c[k] for _, c in pairs)
+        pq = quartiles([p[k] for p, _ in pairs])
+        cq = quartiles([c[k] for _, c in pairs])
         lower = sum(c[k] < p[k] for p, c in pairs)
-        print(f"  {k}: {pm:.6g} -> {cm:.6g} ({(cm - pm) / pm * 100 if pm else 0.0:+.1f}%), lower in {lower}/{len(pairs)}")
+        tied = sum(c[k] == p[k] for p, c in pairs)
+        pct = (cq[1] - pq[1]) / pq[1] * 100 if pq[1] else 0.0
+        print(f"  {k}: {pq[1]:.6g} [{pq[0]:.6g}, {pq[2]:.6g}] -> {cq[1]:.6g} [{cq[0]:.6g}, {cq[2]:.6g}]"
+              f" ({pct:+.1f}%); parent IQR {pq[2] - pq[0]:.6g}, |median diff| {abs(cq[1] - pq[1]):.6g};"
+              f" lower in {lower}, tied {tied}, of {n}")
 EOF
