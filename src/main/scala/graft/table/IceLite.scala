@@ -240,12 +240,14 @@ final class IceLiteTable(val dir: String) {
     * reader) — merged at read time with any outstanding MOR delta files
     * (a no-op pass-through when there are none). Every read takes the
     * same fold ([[MorRead]]): the deltas fold once per key and the base
-    * rows stream past that fold in one outer join. A read that names
-    * exactly one bucket runs the join inside a single task with no
-    * exchange ([[MorRead.mergedInBucket]]); any other read lets the
-    * planner place it ([[MorRead.merged]]): one exchange for the fold,
-    * the fold broadcast while it is small. Files are scanned from the
-    * snapshot's list, with no listing job ([[IceLite.readFiles]]).
+    * rows stream past that fold in one outer join, in one of three
+    * placements: a read that names exactly one bucket runs in a single
+    * task with no exchange ([[MorRead.mergedInBucket]]); a multi-bucket
+    * read whose delta files total at most the broadcast threshold folds
+    * its deltas in one task and broadcasts the fold, with no exchange
+    * ([[MorRead.merged]]); any other read folds behind one exchange on
+    * `conv_id` and lets the planner place the join. Files are scanned
+    * from the snapshot's list, with no listing job ([[IceLite.readFiles]]).
     */
   def read(spark: SparkSession, buckets: Option[Set[Int]] = None): DataFrame =
     readSnapshotState(spark, current, buckets)

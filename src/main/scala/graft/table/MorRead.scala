@@ -36,21 +36,31 @@ import graft.model.NetAction
   * past that fold in one outer join, never sorted, aggregated or
   * shuffled, and the anchor Puts are unioned in from the fold. Read
   * amplification is O(deltas) sorted plus one scan of the base, NOT
-  * O(touched bucket) sorted. Only where the join runs differs:
+  * O(touched bucket) sorted. Only where the fold and the join run
+  * differs ([[Placement]]):
   *
   *  - in one task — a read that names exactly ONE bucket (point lookups,
   *    per-bucket compaction; [[mergedInBucket]]). A bucket holds every
   *    row of its keys, so the base and delta scans are coalesced to one
   *    partition and the join is a hash join built on the fold — no
   *    exchange, no broadcast job. That build cannot spill, so above
-  *    [[InTaskMaxDeltaBytes]] of deltas the read takes the placement
-  *    below instead;
-  *  - wherever the planner puts it — multi-bucket reads ([[merged]]),
-  *    the feed roll-forward ([[foldState]]) and the over-gate one-bucket
-  *    read. The fold's exchange on `conv_id` is the only exchange (the
-  *    anchor Puts reuse it); the planner broadcasts the fold when its
-  *    estimated size is under the broadcast threshold, and otherwise
-  *    picks a spillable join from that size.
+  *    [[InTaskMaxDeltaBytes]] of deltas the read takes the exchange
+  *    placement instead;
+  *  - the fold in one task, broadcast — a multi-bucket read ([[merged]])
+  *    whose delta files total at most the session's broadcast threshold
+  *    (`spark.sql.autoBroadcastJoinThreshold`; ≤ 0 disables it), the
+  *    size under which the planner would broadcast the fold anyway. The
+  *    delta scan is coalesced to one partition and folded there with no
+  *    exchange; the base rows stream multi-task past its broadcast. The
+  *    anchor Puts re-scan and re-fold the deltas in one more task, since
+  *    no exchange is left for them to reuse;
+  *  - on an exchange — any other multi-bucket read, the feed
+  *    roll-forward ([[foldState]]) and the over-gate one-bucket read,
+  *    the join placed by the planner. The fold's exchange on `conv_id`
+  *    is the only exchange over the deltas (the anchor Puts reuse it);
+  *    the planner broadcasts the fold when its estimated size is under
+  *    the broadcast threshold, and otherwise picks a spillable join from
+  *    that size, which exchanges the base rows too.
   *
   * A delta file may be shared: a one-task epoch writes one file listed
   * under every bucket its rows hash to, and compaction drops a bucket's
@@ -89,9 +99,10 @@ object MorRead {
     StructField("seq", LongType)))
 
   /** Current state of a bucket subset of the table: `base` rows merged
-    * with the net actions in `deltas`, the join placed by the planner.
-    * Serves reads that span several buckets; a one-bucket read takes
-    * [[mergedInBucket]].
+    * with the net actions in `deltas`. Serves reads that span several
+    * buckets; a one-bucket read takes [[mergedInBucket]]. Delta files
+    * totalling at most the session's broadcast threshold are folded in
+    * one task and broadcast; larger ones take the exchange placement.
     */
   def merged(
       spark: SparkSession,
@@ -99,15 +110,20 @@ object MorRead {
       base: DataFrame,
       deltas: IceLite.BucketFiles): DataFrame =
     if (deltas.paths.isEmpty) base
-    else fold(base, deltas.read(spark, deltaSchema(tableSchema)), tableSchema.fieldNames.toSeq, inTask = false)
+    else {
+      val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+      fold(base, deltas.read(spark, deltaSchema(tableSchema)), tableSchema.fieldNames.toSeq,
+        if (threshold > 0 && deltaBytes(deltas.paths) <= threshold) Placement.BroadcastFold
+        else Placement.Exchange)
+    }
 
   /** Current state of ONE bucket, merged inside a single task: `base`
     * must hold only that bucket's base rows and `deltas` only its delta
     * rows — a delta file shared with other buckets is filtered to this
     * bucket's rows by `deltas`, below the coalesce. An IceLite
     * bucket holds every row of its conversations, so nothing needs
-    * redistributing. Above `maxInTaskDeltaBytes` of delta files the join
-    * is placed by the planner, as in [[merged]].
+    * redistributing. Above `maxInTaskDeltaBytes` of delta files the read
+    * takes the exchange placement.
     */
   def mergedInBucket(
       spark: SparkSession,
@@ -117,7 +133,7 @@ object MorRead {
       maxInTaskDeltaBytes: Long = InTaskMaxDeltaBytes): DataFrame =
     if (deltas.paths.isEmpty) base
     else fold(base, deltas.read(spark, deltaSchema(tableSchema)), tableSchema.fieldNames.toSeq,
-      inTask = deltaBytes(deltas.paths) <= maxInTaskDeltaBytes)
+      if (deltaBytes(deltas.paths) <= maxInTaskDeltaBytes) Placement.InTask else Placement.Exchange)
 
   /** Roll an explicit base state forward over explicit delta actions —
     * the feed consumer's primitive: given keyed state at version A and
@@ -130,7 +146,7 @@ object MorRead {
     * per (conv_id, turn_idx)) — not applicable to append-only tables.
     */
   def foldState(base: DataFrame, deltas: DataFrame, tableSchema: StructType): DataFrame =
-    fold(base, deltas, tableSchema.fieldNames.toSeq, inTask = false)
+    fold(base, deltas, tableSchema.fieldNames.toSeq, Placement.Exchange)
 
   /** The merge of every read: base rows (one per key, seq 0) with the
     * delta actions. The deltas fold once ([[foldActions]]): one row per
@@ -142,22 +158,23 @@ object MorRead {
     * where only updates touched it. The keys whose anchor is a Put come
     * straight from the fold, whatever the base held.
     *
-    * `inTask` places the join in one task: both sides coalesced to one
-    * partition and the fold hinted `shuffle_hash`, so the planner adds no
-    * exchange and broadcasts nothing. Otherwise the planner places it:
-    * the fold's exchange on `conv_id` is the only one — the join's build
-    * and the anchor Puts reuse it — and the fold is broadcast while it is
-    * small.
+    * `placement` says where the fold and the join run ([[Placement]]).
     */
-  private def fold(base: DataFrame, deltas: DataFrame, cols: Seq[String], inTask: Boolean): DataFrame = {
-    def place(df: DataFrame): DataFrame = if (inTask) df.coalesce(1) else df
-    val folded = foldActions(place(deltas))
+  private def fold(base: DataFrame, deltas: DataFrame, cols: Seq[String], placement: Placement): DataFrame = {
+    val inTask = placement == Placement.InTask
+    def oneTask(df: DataFrame, yes: Boolean): DataFrame = if (yes) df.coalesce(1) else df
+    val folded = foldActions(oneTask(deltas, placement != Placement.Exchange))
     // an outer join + null tests, not a semi/anti join: the optimizer
     // pushes those below the base's coalesce, which would leave the
     // in-task base side multi-partition and bring exchanges back. The
     // turn test is a residual condition, so a wipe row (null turn) matches.
-    val onBase = place(base)
-      .join(if (inTask) folded.hint("shuffle_hash") else folded,
+    val build = placement match {
+      case Placement.InTask        => folded.hint("shuffle_hash")
+      case Placement.BroadcastFold => broadcast(folded)
+      case Placement.Exchange      => folded
+    }
+    val onBase = oneTask(base, inTask)
+      .join(build,
         col("conv_id") === col("_f_conv") && (col("_f_turn").isNull || col("_f_turn") === col("turn_idx")),
         "left")
       .filter(col("_f_conv").isNull || (col("_f_turn").isNotNull && !col("_wiped") && col("_a_seq").isNull))
@@ -169,7 +186,18 @@ object MorRead {
         if (c == "conv_id") col("_f_conv").as(c)
         else if (c == "turn_idx") col("_f_turn").as(c)
         else col(s"_v_row.$c").as(c)): _*)
-    place(onBase.union(anchored))
+    oneTask(onBase.union(anchored), inTask)
+  }
+
+  /** Where a read's fold and join run (the object scaladoc's three cases). */
+  private sealed trait Placement
+  private object Placement {
+    /** Base and deltas in one task, the join a hash join built on the fold. */
+    case object InTask extends Placement
+    /** The deltas folded in one task and broadcast; the base multi-task. */
+    case object BroadcastFold extends Placement
+    /** The fold behind its exchange on `conv_id`, the join the planner's. */
+    case object Exchange extends Placement
   }
 
   /** The read-side fold of `actions` ([[deltaSchema]] rows): one row per
@@ -217,7 +245,7 @@ object MorRead {
   }
 
   /** Total size of the delta files — driver-side metadata, runs no job. */
-  private def deltaBytes(deltaPaths: Seq[String]): Long =
+  private[graft] def deltaBytes(deltaPaths: Seq[String]): Long =
     deltaPaths.iterator.map { p =>
       val f = Paths.get(p)
       if (Files.exists(f)) Files.size(f) else 0L

@@ -14,7 +14,9 @@ import graft.table.{IceLite, MorRead}
   * version and at pinned earlier versions, the one-bucket read (in-task
   * merge), the multi-bucket read restricted to that bucket and the
   * oracle must hold the same rows — and so must multi-bucket reads of 2-
-  * and 3-bucket subsets and of the whole table, point lookups (a missing
+  * and 3-bucket subsets and of the whole table in both of their
+  * placements (the small deltas folded in one task and broadcast, and
+  * with broadcasts disabled the fold's exchange), point lookups (a missing
   * key included), the roll-forward of each pinned state over the change
   * feed to the next (`MorRead.foldState`, IncrementalView's after-state)
   * and the over-gate reads (in-task builds gated off, broadcasts
@@ -87,20 +89,6 @@ class BucketReadEquivalenceSpec extends SparkSuite {
     }: _*).collect()
       .map(r => (r.getString(0), r.getInt(1), r.getString(2), Option(r.getString(3)), Option(r.getString(4))))
       .toSeq.sorted
-
-  /** `body` with every broadcast join disabled, static and adaptive: the
-    * planner must then place the merge's joins without one.
-    */
-  private def withoutBroadcast[T](body: => T): T = {
-    val keys = Seq("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold")
-    val before = keys.map(k => k -> spark.conf.getOption(k))
-    keys.foreach(spark.conf.set(_, "-1"))
-    try body
-    finally before.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
 
   /** `df` as a one-partition RDD-backed batch: the one-task epoch, which
     * writes one delta file listed under every bucket its rows hash to.
@@ -175,19 +163,30 @@ class BucketReadEquivalenceSpec extends SparkSuite {
     }
     versions.foreach { case (v, n) =>
       val want = oracle(n)
-      val all = t.readAt(spark, v)
-      assert(rows(all) == want, s"seed=$seed v$v: whole-table read != oracle")
-      Seq(Set(0, 1), Set(1, 3), Set(0, 1, 2), Set(1, 2, 3)).foreach { sub =>
-        assert(rows(t.readAt(spark, v, Some(sub))) == want.filter(r => sub(bucketOf(r._1))),
-          s"seed=$seed v$v: read of buckets $sub != oracle")
+      // both multi-bucket placements: these deltas are small, so they fold
+      // in one task and are broadcast; with no broadcast the fold takes
+      // its exchange on conv_id
+      def multiReads(exchange: Boolean): Unit = {
+        val clue = s"seed=$seed v$v ${if (exchange) "exchange" else "one-task fold"}"
+        val all = t.readAt(spark, v)
+        if (t.snapshot(v).deltas.values.exists(_.nonEmpty))
+          assert(all.queryExecution.executedPlan.toString.contains("Exchange hashpartitioning") == exchange,
+            s"$clue: placement\n${all.queryExecution.executedPlan}")
+        assert(rows(all) == want, s"$clue: whole-table read != oracle")
+        Seq(Set(0, 1), Set(1, 3), Set(0, 1, 2), Set(1, 2, 3)).foreach { sub =>
+          assert(rows(t.readAt(spark, v, Some(sub))) == want.filter(r => sub(bucketOf(r._1))),
+            s"$clue: read of buckets $sub != oracle")
+        }
+        (0 until NumBuckets).foreach { b =>
+          assert(rows(all.filter(MergeEngine.bucketOf(col("conv_id"), NumBuckets) === b)) ==
+            want.filter(r => bucketOf(r._1) == b), s"$clue bucket=$b: multi-bucket read != oracle")
+        }
       }
+      multiReads(exchange = false)
+      withBroadcastThreshold(spark, -1)(multiReads(exchange = true))
       (0 until NumBuckets).foreach { b =>
-        val clue = s"seed=$seed v$v bucket=$b"
-        val oracle = want.filter(r => bucketOf(r._1) == b)
-        val one = rows(t.readAt(spark, v, Some(Set(b))))
-        val multi = rows(all.filter(MergeEngine.bucketOf(col("conv_id"), NumBuckets) === b))
-        assert(one == oracle, s"$clue: one-bucket read != oracle")
-        assert(multi == oracle, s"$clue: multi-bucket read != oracle")
+        assert(rows(t.readAt(spark, v, Some(Set(b)))) == want.filter(r => bucketOf(r._1) == b),
+          s"seed=$seed v$v bucket=$b: one-bucket read != oracle")
       }
       // point lookups: a wiped-and-reinserted conv, random convs, a missing key
       val probe = (convs.filterNot(_ == "c_missing").sorted.take(3) :+ "c_ghost" :+ "c_missing").distinct
@@ -216,7 +215,7 @@ class BucketReadEquivalenceSpec extends SparkSuite {
     // over the in-task gate, and with no join broadcast anywhere
     val want = oracle(batches.size)
     assert(!want.exists(_._1 == "c_gone") && t.dataFiles().nonEmpty)
-    withoutBroadcast {
+    withBroadcastThreshold(spark, -1) {
       assert(rows(MorRead.merged(spark, t.schema, t.readBase(spark), t.deltaScan())) == want,
         s"seed=$seed: multi-bucket read without broadcast != oracle")
       (0 until NumBuckets).foreach { b =>

@@ -213,6 +213,20 @@ object TestHelpers {
     df
   }
 
+  /** `body` with both size-based broadcast thresholds, static and
+    * adaptive, set to `bytes` (-1 disables them), then restored.
+    */
+  def withBroadcastThreshold[T](spark: SparkSession, bytes: Long)(body: => T): T = {
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val before = keys.map(k => k -> spark.conf.getOption(k))
+    keys.foreach(spark.conf.set(_, bytes.toString))
+    try body
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
   /** Full-stack replay: create a fresh IceLite table, apply each batch via
     * CdcApply, read back sorted rows. Without a `shape` the batches are
     * local relations, one partition per event up to the core count.

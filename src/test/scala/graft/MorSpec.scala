@@ -129,44 +129,55 @@ class MorSpec extends SparkSuite {
       spec = MergeSpec(morCompactThreshold = 1000), epoch = Some(("p", 1L)))
     assert(t.deltaFiles().nonEmpty)
 
-    val pruned = t.read(spark)
-    val plan = pruned.queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    // base rows stream past the broadcast fold and wipe set in outer joins
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftOuter"), plan.take(3000))
-
-    // shuffled volume is O(deltas + touched rows), not O(bucket): with AQE
-    // off (deterministic plan), total shuffle-written records stay far
-    // below the 2000-row base
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val shuffled = try {
-      val df = t.read(spark)
-      df.collect()
-      df.queryExecution.executedPlan.collect {
-        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
-          // metric KEY is camel-case ("shuffleRecordsWritten"); match it
-          // case/format-insensitively
-          e.metrics.collect {
-            case (n, m) if n.toLowerCase.replaceAll("[^a-z]", "").contains("recordswritten") => m.value
-          }.sum
-      }.sum
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-    assert(shuffled > 0 && shuffled < 500,
-      s"pruned mor read shuffled $shuffled records for ~44 delta rows over a 2000-row base")
-
+    def planOf(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     def key(df: org.apache.spark.sql.DataFrame) =
       df.select("conv_id", "turn_idx", "text").collect()
         .map(r => (r.getString(0), r.getInt(1), r.getString(2))).sortBy(x => (x._1, x._2)).toSeq
+    val pruned = t.read(spark)
+    val plan = planOf(pruned)
+    // base rows stream past the broadcast fold and wipe set in outer joins
+    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftOuter"), plan.take(3000))
+
+    // shuffle-written records of one run of `df`, with AQE off
+    // (deterministic plan)
+    def shuffled(df: => org.apache.spark.sql.DataFrame): Long = {
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      try {
+        val d = df
+        d.collect()
+        d.queryExecution.executedPlan.collect {
+          case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
+            // metric KEY is camel-case ("shuffleRecordsWritten"); match it
+            // case/format-insensitively
+            e.metrics.collect {
+              case (n, m) if n.toLowerCase.replaceAll("[^a-z]", "").contains("recordswritten") => m.value
+            }.sum
+        }.sum
+      } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
+    // deltas this small fold in one task and are broadcast: nothing shuffles
+    val small = shuffled(t.read(spark))
+    assert(small == 0L, s"small-delta mor read shuffled $small records")
+    // just over the gate the fold takes its exchange on conv_id (the
+    // planner still broadcasts it): shuffled volume is O(deltas + touched
+    // rows), not O(bucket) — far below the 2000-row base
+    val gated = withBroadcastThreshold(spark, graft.table.MorRead.deltaBytes(t.deltaFiles()) - 1) {
+      val df = t.read(spark)
+      assert(planOf(df).contains("BroadcastHashJoin"), planOf(df).take(3000))
+      assert(key(df) == key(pruned))
+      shuffled(t.read(spark))
+    }
+    assert(gated > 0 && gated < 500,
+      s"pruned mor read shuffled $gated records for ~44 delta rows over a 2000-row base")
+
     // the fallback when nothing may be broadcast (deltas too big for it):
     // the planner picks another join for the same fold, with the same rows
-    val broadcastKeys = Seq("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold")
-    broadcastKeys.foreach(spark.conf.set(_, "-1"))
-    try {
+    withBroadcastThreshold(spark, -1) {
       val full = t.read(spark)
-      assert(!full.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted")).contains("Broadcast"))
+      assert(!planOf(full).contains("Broadcast"))
       assert(key(pruned) == key(full))
-    } finally broadcastKeys.foreach(spark.conf.unset)
+    }
     // and both match the sequential oracle
     val want = OracleFold.rows(OracleFold.finalState(seed ++ touch))
       .map(x => (x.conv_id, x.turn_idx, x.text))

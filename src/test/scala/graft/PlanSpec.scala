@@ -294,20 +294,27 @@ class PlanSpec extends SparkSuite {
     assert(!all.exists(_.isInstanceOf[org.apache.spark.sql.execution.exchange.BroadcastExchangeExec]),
       df.queryExecution.executedPlan.toString)
     assertKeyInScans(df)
-    // the multi-bucket (two-pass broadcast) merge keys its fold output on
-    // the grouping columns too, so the predicate reaches its scans as well
-    val multi = t.read(spark, Some(Set(b, (b + 1) % 4))).filter(col("conv_id") === "c07")
-    assert(multi.select("turn_idx", "text").collect().map(r => (r.getInt(0), r.getString(1))).toSet ==
-      Set((1, "u"), (5, "n")))
-    assertKeyInScans(multi)
+    // a multi-bucket merge keys its fold output on the grouping columns
+    // too, so the predicate reaches its scans as well, in both placements:
+    // the small read's one-task fold and, one byte over the gate, the
+    // fold's exchange
+    val pair = Some(Set(b, (b + 1) % 4))
+    def checkMulti(): Unit = {
+      val df = t.read(spark, pair).filter(col("conv_id") === "c07")
+      assert(df.select("turn_idx", "text").collect().map(r => (r.getInt(0), r.getString(1))).toSet ==
+        Set((1, "u"), (5, "n")))
+      assertKeyInScans(df)
+    }
+    checkMulti()
+    TestHelpers.withBroadcastThreshold(spark, graft.table.MorRead.deltaBytes(t.deltaFiles(pair)) - 1)(checkMulti())
   }
 
-  test("multi-bucket MOR read: one payload base scan, one delta exchange, one fold") {
+  /** A 4-bucket table: 40 rows compacted into base files, then one
+    * merge-on-read commit (an update, an insert, a series wipe, an upsert)
+    * whose one delta file spans several buckets. */
+  private def multiBucketFixture(name: String): graft.table.IceLiteTable = {
     import TestHelpers._
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.aggregate.SortAggregateExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    val t = graft.table.IceLite.create(tmpDir("planspec-mor-multi") + "/t", turnSchema, 4)
+    val t = graft.table.IceLite.create(tmpDir(name) + "/t", turnSchema, 4)
     val mor = graft.model.MergeSpec(morCompactThreshold = 1000)
     graft.operators.CdcApply.applyBatch(spark, t,
       eventsDF(spark, (0 until 40).map(i => ins(i.toLong, f"c$i%02d", i % 3, s"v$i"))), spec = mor)
@@ -316,28 +323,66 @@ class PlanSpec extends SparkSuite {
       upd(100, "c07", 1, "u"), ins(101, "c07", 5, "n"), del(102, "c11", None), ups(103, "c20", 2, "w"))),
       spec = mor)
     assert(t.dataFiles().nonEmpty && t.deltaFiles().nonEmpty)
+    t
+  }
+
+  /** A full read of `t`, checked against the fixture's state and run:
+    * its executed nodes, its base and delta scans and its plan text. */
+  private def fixtureRead(t: graft.table.IceLiteTable) = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
     val df = t.read(spark)
     assert(df.count() == 40 - 1 + 1, "the fixture's state")
     assert(df.filter(col("conv_id") === "c07").select("turn_idx", "text").collect()
       .map(r => (r.getInt(0), r.getString(1))).toSet == Set((1, "u"), (5, "n")))
-    df.collect()
-    // a reused stage is a leaf, so its exchange is counted once
-    def isDelta(f: FileSourceScanExec) = f.relation.dataSchema.fieldNames.contains("action")
-    val plan = df.queryExecution.executedPlan
-    val all = flat(plan)
-    val shown = plan.toString
-    val scans = all.collect { case f: FileSourceScanExec => f }
-    val baseScans = scans.filterNot(isDelta)
+    val all = executedNodes(df)
+    val (deltaScans, baseScans) = all.collect { case f: FileSourceScanExec => f }
+      .partition(_.relation.dataSchema.fieldNames.contains("action"))
+    (all, deltaScans, baseScans, df.queryExecution.executedPlan.toString)
+  }
+
+  /** Whether a delta or base scan sits under `p`. */
+  private def scans(p: SparkPlan, delta: Boolean): Boolean = flat(p).exists {
+    case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+      f.relation.dataSchema.fieldNames.contains("action") == delta
+    case _ => false
+  }
+
+  test("small multi-bucket MOR read: deltas folded in one task, fold broadcast, no exchange") {
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    val t = multiBucketFixture("planspec-mor-small")
+    val (all, deltaScans, baseScans, shown) = fixtureRead(t)
+    assert(graft.table.MorRead.deltaBytes(t.deltaFiles()) <= spark.sessionState.conf.autoBroadcastJoinThreshold,
+      "the fixture's deltas are under the broadcast threshold")
+    assert(!all.exists(_.isInstanceOf[ShuffleExchangeExec]), shown)
+    // the fold is broadcast; the base streams past it, never broadcast
+    val broadcasts = all.collect { case b: BroadcastExchangeExec => b }
+    assert(broadcasts.nonEmpty && broadcasts.forall(b => scans(b, delta = true) && !scans(b, delta = false)),
+      shown)
     assert(baseScans.size == 1 && baseScans.head.requiredSchema.fieldNames.contains("text"), shown)
+    // the fold's scan and the anchor Puts' re-fold
+    assert(deltaScans.size == 2, shown)
+  }
+
+  test("multi-bucket MOR read: one payload base scan, one delta exchange, one fold") {
+    import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val t = multiBucketFixture("planspec-mor-multi")
+    // deltas one byte over the broadcast threshold take the exchange
+    // placement; the planner still broadcasts the fold, whose estimate is
+    // smaller than its files
+    val (all, _, baseScans, shown) =
+      TestHelpers.withBroadcastThreshold(spark, graft.table.MorRead.deltaBytes(t.deltaFiles()) - 1) {
+        fixtureRead(t)
+      }
+    assert(baseScans.size == 1 && baseScans.head.requiredSchema.fieldNames.contains("text"), shown)
+    // a reused stage is a leaf, so its exchange is counted once
     val shuffles = all.collect { case e: ShuffleExchangeExec => e }
     // base rows never cross an exchange
-    assert(shuffles.forall(e => !flat(e).exists {
-      case f: FileSourceScanExec => !isDelta(f)
-      case _                     => false
-    }), shown)
+    assert(shuffles.forall(!scans(_, delta = false)), shown)
     val payload = shuffles.filter(e => flat(e).exists {
-      case f: FileSourceScanExec => isDelta(f) && f.requiredSchema.fieldNames.contains("row")
-      case _                     => false
+      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+        f.relation.dataSchema.fieldNames.contains("action") && f.requiredSchema.fieldNames.contains("row")
+      case _ => false
     })
     assert(payload.size == 1, shown)
     assert(!flat(payload.head).exists(_.isInstanceOf[SortAggregateExec]),
@@ -451,7 +496,6 @@ class PlanSpec extends SparkSuite {
     import TestHelpers._
     import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
     import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-    import scala.jdk.CollectionConverters._
     val d = tmpDir("planspec-scan")
     // a series delete, so the aggregate's wipe column counts one
     eventsDF(spark, Seq(ins(0, "c1", 0, "a"), del(1, "c2", None))).write.parquet(s"$d/ev")
@@ -465,23 +509,20 @@ class PlanSpec extends SparkSuite {
         case _ =>
       }
     }
-    def foldPlan = plans.asScala.collectFirst { case (l, p) if l.startsWith("cdc: fold + delta write") => p }
+    // the batch's fold job, labelled with the seq of the commit it stages
+    val foldLabel = s"cdc: fold + delta write (seq ${t.current.version + 1})"
+    def foldPlan = Option(plans.get(foldLabel))
+    spark.sparkContext.addSparkListener(listener)
     // no size-based broadcast: only the engine's own hint broadcasts the
     // wipe set
-    val broadcastKeys = Seq("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold")
-    broadcastKeys.foreach(spark.conf.set(_, "-1"))
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    try withBroadcastThreshold(spark, -1) {
       graft.operators.CdcApply.applyBatch(spark, t, spark.read.parquet(s"$d/ev"),
         spec = graft.model.MergeSpec(morCompactThreshold = 1000))
       val deadline = System.currentTimeMillis() + 20000 // listener bus drain
       while (!(plans.containsKey("cdc: planning aggregate") && foldPlan.nonEmpty) &&
         System.currentTimeMillis() < deadline)
         Thread.sleep(50)
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      broadcastKeys.foreach(spark.conf.unset)
-    }
+    } finally spark.sparkContext.removeSparkListener(listener)
     // the engine's narrow planning aggregate (r06), its wipe column
     // included: no _error reference anywhere — an aggregate touching
     // _error reads the WHOLE after struct (IsNull over a struct defeats
@@ -493,7 +534,7 @@ class PlanSpec extends SparkSuite {
       s"narrow planning scan must not read the after struct at all:\n$plan")
     // and the fold's wipe aggregate, the scan under its broadcast join
     // side, stays off the payload too
-    val fold = foldPlan.getOrElse("")
+    val fold = foldPlan.getOrElse(fail(s"no plan recorded under '$foldLabel': ${plans.keySet}"))
     val tree = fold.linesIterator.drop(1).takeWhile(_.nonEmpty).toSeq
     val bx = tree.indexWhere(_.contains("BroadcastExchange"))
     assert(bx >= 0, s"the fold of a series-delete batch must broadcast its wipe set:\n$fold")

@@ -8,7 +8,8 @@
 #
 # The parent is extracted with `git archive` into a temporary directory,
 # removed on exit. Each side builds from its own sources and runs through
-# its own perfbench/run.py with `--seconds 9 --trace 0`; nothing under
+# its own perfbench/run.py with `--seconds 9 --trace 0` (`--trace 1`
+# under AB_TRACE=1, below); nothing under
 # perfbench/ or BENCHMARK.json is touched. Prints one line per pair and,
 # for task_cpu_s, shuffle_bytes and setup_s, both sides' medians and
 # quartiles, the parent's interquartile range, and in how many pairs the
@@ -17,6 +18,13 @@
 # nine tenths of the pairs (ties count for neither side) and the medians
 # differ by more than the parent's IQR. AB_KEEP=<dir> keeps every run's
 # output there.
+#
+# AB_TRACE=1 runs `--trace 1` pairs instead and reports, the same way,
+# the per-layer metrics named in AB_LAYERS (space-separated; default
+# below), to show in which layer a change in the end-to-end figures
+# appears:
+#
+#   AB_TRACE=1 tools/ab_pairs.sh HEAD stream_read 1 2
 set -euo pipefail
 if [ $# -lt 3 ]; then
   echo "usage: $0 <parent-sha> <workload> <seed>..." >&2
@@ -31,10 +39,13 @@ mkdir "$tmp/parent"
 git -C "$repo" archive "$parent" | tar -x -C "$tmp/parent"
 out=${AB_KEEP:-$tmp/out}
 mkdir -p "$out"
+trace=${AB_TRACE:-0}
+export AB_TRACE=$trace
+export AB_LAYERS=${AB_LAYERS:-table.scan_shuffle_bytes table.scan_task_ms table.read_task_ms spark.jobs spark.tasks}
 
 run() { # <tree> <side> <seed>
   echo "$(date +%H:%M:%S) $2 seed $3" >&2
-  (cd "$1" && python3 perfbench/run.py --workload "$workload" --seed "$3" --seconds 9 --trace 0) \
+  (cd "$1" && python3 perfbench/run.py --workload "$workload" --seed "$3" --seconds 9 --trace "$trace") \
     > "$out/$2-$3.txt" 2>&1 || echo "$2 seed $3 exited non-zero (see $out/$2-$3.txt)" >&2
 }
 
@@ -49,10 +60,11 @@ for s in "$@"; do
 done
 
 python3 - "$out" "$@" <<'EOF'
-import json, statistics, sys
+import json, os, statistics, sys
 
 out, seeds = sys.argv[1], sys.argv[2:]
-keys = ["task_cpu_s", "shuffle_bytes", "setup_s"]
+# a traced run's JSON holds its per-layer metrics, an untraced one's the end-to-end ones
+keys = os.environ["AB_LAYERS"].split() if os.environ["AB_TRACE"] == "1" else ["task_cpu_s", "shuffle_bytes", "setup_s"]
 
 def result(side, seed):
     try:
